@@ -20,7 +20,7 @@ import graft.ops.AudioOps
   *     (Haitsma–Kalker-style) → position-salted chunk hashes, plus a
   *     bounded RMS-normalized PCM head sketch for verification;
   *  2. candidates: chunk-hash bucket join via the shared
-  *     [[CandidateStage.bucketJoinPairs]] kernel (hot buckets capped AND
+  *     [[CandidateStage.bucketJoin]] kernel (hot buckets capped AND
   *     counted; P5-style frame-count window folded into the join);
   *  3. verify: mean-centered Pearson correlation of the PCM head sketches
   *     ≥ `minCorr` (byte-identical dups score 1.0; amplitude-scaled copies
@@ -214,11 +214,11 @@ object AudioDedup {
     val fpsP = fps.persist()
     val entries = fpsP.flatMap { f =>
       val mx = (f.n_frames * (1.0 + frameWindow)).toInt
-      f.chunks.iterator.map(h => CandidateStage.BucketEntry(h, f.clip_id, f.n_frames, mx))
-    }
+      f.chunks.iterator.map(h => (h, f.clip_id, f.n_frames, mx))
+    }.toDF("sh", "id", "n", "mx")
     val cands = CandidateStage
-      .bucketJoinPairs(entries, bucketCap, cappedBuckets, None)
-      .dropDuplicates("p", "c").as[CandPair]
+      .bucketPairs(entries, None, CandidateStage.selfWindow, bucketCap, cappedBuckets)
+      .select("p", "c").dropDuplicates("p", "c").as[CandPair]
 
     val a = fpsP.select(col("clip_id").as("p"), col("head").as("a_head"), col("env").as("a_env"))
     val b = fpsP.select(col("clip_id").as("c"), col("head").as("b_head"), col("env").as("b_env"))

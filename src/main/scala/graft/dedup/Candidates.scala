@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 import graft.kernel.{EditCosts, Hashing, SuffixIndex}
@@ -32,21 +32,20 @@ final case class CandPair(p: String, c: String)
   *     the reference's unigram/short-pattern semantics
   *     (/root/reference/src/fuzzy_match.cc:484-493).
   *
-  * Channels A and B share one Tungsten-native formulation: hash entries →
-  * per-bucket df (partial-agg), anti-join away hot buckets, then an equi
-  * self-join on the bucket hash with the P5 length window folded in as
-  * integer join conditions (whole-stage codegen end to end — no typed
+  * Every bucketed channel runs through ONE untyped kernel, [[bucketJoin]]:
+  * two cold entry sides (sh, id, n, window columns) equi-joined on the
+  * bucket hash with a length predicate as integer join conditions, emitting
+  * (p, c, p_n, c_n) with ids in whatever type the entries carry. The self
+  * join is its R ⋈ R case — the same cold exchange on both sides, predicate
+  * [[selfWindow]] (orientation + the pattern's P5 upper bound); the cross
+  * join is Q ⋈ C with [[crossWindow]] (the query's two-sided P5 window).
+  * Before the join, [[dropHotBuckets]] anti-joins away (and counts) hot
+  * buckets on each side. Whole-stage codegen end to end — no typed
   * groupByKey, no per-group object arrays; measured ~4× faster than the
-  * flatMapGroups formulation at 120k rows and strictly more AQE-friendly:
-  * skew-join splitting applies to the bucket join itself).
+  * flatMapGroups formulation at 120k rows and AQE can skew-split the join.
+  * The pair-only forms are projections of the kernel's output.
   */
 object CandidateStage {
-
-  /** Inverted-index entry: bucket hash, member id + token count, and the
-    * member's precomputed P5 window upper bound (`mx` = max candidate
-    * n_tokens this pattern could still match — lengths are capped by P3 at
-    * `maxTokensInPattern`, so the window is a 300-entry driver table). */
-  final case class BucketEntry(sh: Long, id: String, n: Int, mx: Int)
 
   /** P5 length-window rejection, sound in BOTH match orientations: with
     * asymmetric insert/delete costs the bound depends on which side is the
@@ -75,6 +74,30 @@ object CandidateStage {
       n += 1
     }
     t
+  }
+
+  /** `(minAccept(n), maxAccept(n))` per pattern length n — the two-sided P5
+    * window for the fixed pattern-is-query direction. */
+  def acceptWindowTable(ec: EditCosts, fuzzy: Float, maxN: Int): (Array[Int], Array[Int]) = {
+    val mn = new Array[Int](maxN + 1)
+    val mx = new Array[Int](maxN + 1)
+    var n = 1
+    while (n <= maxN) {
+      var lo = n
+      var hi = n
+      var m = 1
+      while (m <= maxN) {
+        if (!SuffixIndex.theoreticalRejection(n, m, ec, fuzzy)) {
+          if (m < lo) lo = m
+          if (m > hi) hi = m
+        }
+        m += 1
+      }
+      mn(n) = lo
+      mx(n) = hi
+      n += 1
+    }
+    (mn, mx)
   }
 
   /** Largest hot-key set worth collecting + broadcasting (1M longs ≈ tens of
@@ -120,7 +143,7 @@ object CandidateStage {
     * unbounded (cardinality = distinct df values: small in practice, no
     * hard bound on a pathological corpus). The single-partition window is
     * over histogram rows, not entries. */
-  private def autoCap(entries: org.apache.spark.sql.DataFrame, workFactor: Long): Int = {
+  private def autoCap(entries: DataFrame, workFactor: Long): Int = {
     import org.apache.spark.sql.expressions.Window
     val wCum = Window.orderBy("df").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.orderBy("df")
@@ -168,12 +191,12 @@ object CandidateStage {
     * accumulators) by [[batchedHotStats]] — the per-invocation stats job is
     * then skipped entirely. */
   private[graft] def dropHotBuckets(
-      entries: org.apache.spark.sql.DataFrame,
+      entries: DataFrame,
       cap: Int,
       cappedBuckets: LongAccumulator,
       cappedPairsLost: Option[LongAccumulator],
       broadcastBound: Int = hotKeyBroadcastBound,
-      precomputedHot: Option[Array[Long]] = None): org.apache.spark.sql.DataFrame = {
+      precomputedHot: Option[Array[Long]] = None): DataFrame = {
     val spark = entries.sparkSession
     import spark.implicits._
     precomputedHot match {
@@ -231,7 +254,7 @@ object CandidateStage {
     * shuffled-anti-join path with exact metrics). Sets with AUTO caps
     * (cap ≤ 0) must not be passed here — they need the per-set histogram. */
   private[graft] def batchedHotStats(
-      specs: Seq[(org.apache.spark.sql.DataFrame, Int, LongAccumulator, Option[LongAccumulator])],
+      specs: Seq[(DataFrame, Int, LongAccumulator, Option[LongAccumulator])],
       broadcastBound: Int = hotKeyBroadcastBound): Seq[Option[Array[Long]]] = {
     require(specs.nonEmpty && specs.forall(_._2 > 0), "batchedHotStats needs fixed caps")
     val spark = specs.head._1.sparkSession
@@ -259,153 +282,127 @@ object CandidateStage {
     }
   }
 
-  /** Shared bucket→pairs kernel for channels A and B (and the simhash
-    * query): [[dropHotBuckets]] valve, then an equi-SELF-join of the cold
-    * entries on the bucket hash, orienting each pair (shorter side =
-    * pattern) and applying the P5 window (`b.n ≤ a.mx`) inside the join
-    * condition — whole-stage codegen end to end, AQE-skew-splittable. */
-  def bucketJoinPairs(
-      entries: Dataset[BucketEntry],
+  /** THE orientation rule: side 1 is the pattern iff it is shorter, ties by
+    * id (strict — a member never pairs with itself). Column form. */
+  def shorterFirst(n1: Column, id1: Column, n2: Column, id2: Column): Column =
+    n1 < n2 || (n1 === n2 && id1 < id2)
+
+  /** Scalar form of the orientation rule. */
+  @inline def shorterFirst(n1: Int, id1: String, n2: Int, id2: String): Boolean =
+    n1 < n2 || (n1 == n2 && id1 < id2)
+
+  /** (p, c, p_n, c_n) pairs re-oriented by [[shorterFirst]] (cross pairs
+    * joining self pairs, as in the incremental path). */
+  def oriented(pairs: DataFrame): DataFrame = {
+    val keep = shorterFirst(col("p_n"), col("p"), col("c_n"), col("c"))
+    val pick = (x: String, y: String) => when(keep, col(x)).otherwise(col(y))
+    pairs.select(pick("p", "c").as("p"), pick("c", "p").as("c"),
+      pick("p_n", "c_n").as("p_n"), pick("c_n", "p_n").as("c_n"))
+  }
+
+  /** Self-join predicate (R ⋈ R): orientation plus the pattern's P5 upper
+    * bound `mx` (the orientation supplies the lower one). */
+  val selfWindow: Column =
+    shorterFirst(col("a_n"), col("a_id"), col("b_n"), col("b_id")) && col("b_n") <= col("a_mx")
+
+  /** Cross-join predicate (Q ⋈ C): the query's two-sided P5 window. The
+    * pattern side is FIXED (the query), so pairs are not length-oriented. */
+  val crossWindow: Column = col("b_n") >= col("a_mn") && col("b_n") <= col("a_mx")
+
+  /** THE bucket join: cold side `a` (the pattern side) ⋈ cold side `b` on
+    * the bucket hash, with `pred` over the sides' columns prefixed `a_` /
+    * `b_` as further join conditions. Returns (p, c, p_n, c_n). */
+  def bucketJoin(a: DataFrame, b: DataFrame, pred: Column): DataFrame = {
+    val side = (e: DataFrame, pre: String) => e.select(e.columns.map(c => col(c).as(pre + c)).toSeq: _*)
+    side(a, "a_").join(side(b, "b_"), col("a_sh") === col("b_sh") && pred)
+      .select(col("a_id").as("p"), col("b_id").as("c"), col("a_n").as("p_n"), col("b_n").as("c_n"))
+  }
+
+  /** [[dropHotBuckets]] per side, then [[bucketJoin]]. `b = None` is the
+    * self-join: both join sides read the SAME cold exchange, so the plan
+    * shuffles the entries once. `aHot`/`bHot`: the sides' hot keys already
+    * computed by [[batchedHotStats]]. */
+  def bucketPairs(
+      a: DataFrame,
+      b: Option[DataFrame],
+      pred: Column,
       cap: Int,
       cappedBuckets: LongAccumulator,
-      cappedPairsLost: Option[LongAccumulator],
-      precomputedHot: Option[Array[Long]] = None): Dataset[CandPair] = {
-    val spark = entries.sparkSession
-    import spark.implicits._
-    val cold = dropHotBuckets(entries.toDF(), cap, cappedBuckets, cappedPairsLost,
-      precomputedHot = precomputedHot)
-
-    val a = cold.select($"sh", $"id".as("a_id"), $"n".as("a_n"), $"mx".as("a_mx"))
-    val b = cold.select($"sh".as("b_sh"), $"id".as("b_id"), $"n".as("b_n"))
-    a.join(b,
-        $"sh" === $"b_sh" &&
-        ($"a_n" < $"b_n" || ($"a_n" === $"b_n" && $"a_id" < $"b_id")) &&
-        $"b_n" <= $"a_mx")
-      .select($"a_id".as("p"), $"b_id".as("c"))
-      .as[CandPair]
+      cappedPairsLost: Option[LongAccumulator] = None,
+      aHot: Option[Array[Long]] = None,
+      bHot: Option[Array[Long]] = None): DataFrame = {
+    val aCold = dropHotBuckets(a, cap, cappedBuckets, cappedPairsLost, precomputedHot = aHot)
+    val bCold = b.fold(aCold)(dropHotBuckets(_, cap, cappedBuckets, None, precomputedHot = bHot))
+    bucketJoin(aCold, bCold, pred)
   }
 
-  /** [[BucketEntry]] with a NUMERIC member id. The embedding channels' ids
-    * are vec_id longs; routing them through the string kernel cost a
-    * 19-char zero-padded encode per entry, string comparisons inside the
-    * join's orientation predicate (evaluated once per join-probe row — the
-    * df² hot loop) and string hashing in the pair dedup exchange (r6,
-    * guide §2.3 "narrower types": 8-byte keys through the hot shuffle).
-    * Join shape, valve and orientation semantics are IDENTICAL to
-    * [[bucketJoinPairs]]; with all-equal `n` the orientation is numeric
-    * a_id < b_id, which is exactly the output invariant the string path
-    * had to re-impose after decoding. */
-  final case class BucketEntryL(sh: Long, id: Long, n: Int, mx: Int)
-
-  /** [[bucketJoinPairs]] over numeric-id entries: emits (a_id, b_id) pair
-    * rows, oriented shorter-side-first (ties numerically by id). */
-  def bucketJoinPairsLong(
-      entries: Dataset[BucketEntryL],
-      cap: Int,
-      cappedBuckets: LongAccumulator,
-      cappedPairsLost: Option[LongAccumulator]): DataFrame = {
-    val spark = entries.sparkSession
+  /** Entry rows (sh, id, n) — one per bucket key `f` yields for a row — plus
+    * the P5 window columns `window` names, looked up per token count:
+    * `mx` for a self-join side, `mn` + `mx` for a cross query side, none
+    * for a corpus side. */
+  private def entries[T](rows: Dataset[T], window: Seq[(String, Array[Int])])(
+      f: T => (String, Int, Iterator[Long])): DataFrame = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    val cold = dropHotBuckets(entries.toDF(), cap, cappedBuckets, cappedPairsLost)
-    val a = cold.select($"sh", $"id".as("a_id"), $"n".as("a_n"), $"mx".as("a_mx"))
-    val b = cold.select($"sh".as("b_sh"), $"id".as("b_id"), $"n".as("b_n"))
-    a.join(b,
-        $"sh" === $"b_sh" &&
-        ($"a_n" < $"b_n" || ($"a_n" === $"b_n" && $"a_id" < $"b_id")) &&
-        $"b_n" <= $"a_mx")
-      .select($"a_id", $"b_id")
+    val tabs = window.map(_._2).padTo(2, null: Array[Int])
+    val (w0, w1) = (tabs(0), tabs(1))
+    rows.flatMap { r =>
+      val (id, n, keys) = f(r)
+      val a = if (w0 == null) 0 else w0(n)
+      val b = if (w1 == null) 0 else w1(n)
+      keys.map(h => (h, id, n, a, b))
+    }.toDF("sh", "id", "n", "w0", "w1")
+      .select(Seq(col("sh"), col("id"), col("n")) ++
+        window.indices.map(i => col(s"w$i").as(window(i)._1)): _*)
   }
 
-  /** Channel A's inverted-index entries (shared with [[batchedHotStats]]). */
-  private[dedup] def ngramEntries(toks: Dataset[TokRow], cfg: DedupConfig): Dataset[BucketEntry] = {
-    val spark = toks.sparkSession
-    import spark.implicits._
-    val k = cfg.shingleK
-    val mx = maxAcceptTable(cfg.editCosts, cfg.threshold, cfg.maxTokensInPattern)
-    toks
-      .filter(_.n_tokens >= k) // shorter rows go through the tiny channel
-      .flatMap(t => Hashing.distinctShingles(t.ids, k).iterator
-        .map(h => BucketEntry(h, t.clip_id, t.n_tokens, mx(t.n_tokens))))
-  }
+  /** Channel A entries: one per distinct k-shingle of each row with ≥ k
+    * tokens (shorter rows go through the tiny channel). */
+  def shingleEntries(toks: Dataset[TokRow], k: Int,
+      window: Seq[(String, Array[Int])] = Nil): DataFrame =
+    entries(toks.filter(_.n_tokens >= k), window)(t =>
+      (t.clip_id, t.n_tokens, Hashing.distinctShingles(t.ids, k).iterator))
 
-  /** Channel B's band-bucket entries (shared with [[batchedHotStats]]). */
-  private[dedup] def bandEntries(sigs: Dataset[SigRow], cfg: DedupConfig): Dataset[BucketEntry] = {
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    val mx = maxAcceptTable(cfg.editCosts, cfg.threshold, cfg.maxTokensInPattern)
-    sigs.flatMap(s => s.band_hashes.iterator.zipWithIndex
-      .map { case (h, bd) =>
-        BucketEntry(Hashing.mix64(h ^ (bd * 0x9e3779b97f4a7c15L)), s.clip_id, s.n_tokens,
-          mx(s.n_tokens))
-      })
-  }
+  /** Channel B entries: one per MinHash band (band index folded into the key). */
+  def bandEntries(sigs: Dataset[SigRow], window: Seq[(String, Array[Int])] = Nil): DataFrame =
+    entries(sigs, window)(s => (s.clip_id, s.n_tokens, s.band_hashes.iterator.zipWithIndex
+      .map { case (h, bd) => Hashing.mix64(h ^ (bd * 0x9e3779b97f4a7c15L)) }))
 
-  /** Channel A: exact shingle join. */
-  def ngramChannel(
-      toks: Dataset[TokRow],
+  /** THE keyed-channel union: channels A and B of `qToks` against `corpus`
+    * (None = the self-join over `qToks`), one (p, c, p_n, c_n) frame per
+    * enabled channel, not deduplicated. With both channels on fixed caps,
+    * every side valve shares ONE [[batchedHotStats]] job. */
+  private[graft] def keyedPairs(
+      qToks: Dataset[TokRow],
+      qSigs: => Dataset[SigRow],
+      corpus: Option[(Dataset[TokRow], () => Dataset[SigRow])],
       cfg: DedupConfig,
-      cappedBuckets: LongAccumulator,
-      cappedPairsLost: LongAccumulator,
-      precomputedHot: Option[Array[Long]] = None): Dataset[CandPair] =
-    bucketJoinPairs(ngramEntries(toks, cfg), cfg.shingleDfCap, cappedBuckets,
-      Some(cappedPairsLost), precomputedHot)
-
-  /** Channel B: MinHash band buckets. */
-  def minhashChannel(
-      sigs: Dataset[SigRow],
-      cfg: DedupConfig,
-      cappedBuckets: LongAccumulator,
-      precomputedHot: Option[Array[Long]] = None): Dataset[CandPair] =
-    bucketJoinPairs(bandEntries(sigs, cfg), cfg.bandDfCap, cappedBuckets, None,
-      precomputedHot)
-
-  /** Channel C: tiny patterns (fewer than shingleK tokens). A tiny pattern
-    * can only match sentences containing its FULL token sequence as a
-    * contiguous substring (its clamped min-subsequence length equals its own
-    * length). Two formulations, auto-selected by tiny-set size:
-    *  - ≤ tinyPatternBroadcastCap: broadcast the tiny set and scan (exact,
-    *    cheapest — the common case: tiny transcripts are rare);
-    *  - beyond the cap: [[tinyChannelJoin]] — the set is no longer a valve
-    *    that throws, it degrades to an equi-join that scales. */
-  def tinyChannel(
-      toks: Dataset[TokRow],
-      cfg: DedupConfig,
-      cappedBuckets: LongAccumulator,
-      knownTinyCount: Long = -1L): Dataset[CandPair] = {
-    val spark = toks.sparkSession
-    import spark.implicits._
-    val k = cfg.shingleK
-    val fuzzy = cfg.threshold
-    val ec = cfg.editCosts
-
-    // count-first (r6): take(cap+1) on a corpus with NO tiny rows — the
-    // common case — pays up to 4 escalating limit-scan jobs (1, 4, 16, …
-    // partitions) before concluding empty; one count() job settles both the
-    // emptiness and the broadcast-envelope decision, and the collect runs
-    // only when tiny rows exist and fit. `knownTinyCount` skips even that
-    // job when the caller already counted this table's tiny rows.
-    val tinyRows = toks.filter(_.n_tokens < k)
-    val nTiny = if (knownTinyCount >= 0) knownTinyCount else tinyRows.count()
-    if (nTiny == 0) return spark.emptyDataset[CandPair]
-    if (nTiny > cfg.tinyPatternBroadcastCap)
-      return tinyChannelJoin(toks, cfg, cappedBuckets)
-    val tiny: Array[(String, Array[Long], Int)] =
-      tinyRows.map(t => (t.clip_id, t.ids, t.n_tokens)).collect()
-    val bc = spark.sparkContext.broadcast(tiny)
-
-    toks.flatMap { row =>
-      val out = new scala.collection.mutable.ArrayBuffer[CandPair]
-      val tinies = bc.value
-      var t = 0
-      while (t < tinies.length) {
-        val (tid, tids, tn) = tinies(t)
-        if (tid != row.clip_id &&
-            !lengthReject(tn, row.n_tokens, ec, fuzzy) &&
-            containsSubsequence(row.ids, tids))
-          out += orientPair(tid, tn, row.clip_id, row.n_tokens)
-        t += 1
-      }
-      out.iterator
+      cappedShingleBuckets: LongAccumulator,
+      cappedShinglePairs: Option[LongAccumulator],
+      cappedBandBuckets: LongAccumulator): Seq[DataFrame] = {
+    val (ec, fuzzy, maxN) = (cfg.editCosts, cfg.threshold, cfg.maxTokensInPattern)
+    val (window, pred) = corpus match {
+      case None => (Seq("mx" -> maxAcceptTable(ec, fuzzy, maxN)), selfWindow)
+      case Some(_) =>
+        val (mn, mx) = acceptWindowTable(ec, fuzzy, maxN)
+        (Seq("mn" -> mn, "mx" -> mx), crossWindow)
+    }
+    // per channel: query side, corpus side (None = self-join), cap, accumulators
+    type Channel = (DataFrame, Option[DataFrame], Int, LongAccumulator, Option[LongAccumulator])
+    val channels =
+      (if (!cfg.useNgramChannel) Nil else Seq[Channel]((shingleEntries(qToks, cfg.shingleK, window),
+        corpus.map(c => shingleEntries(c._1, cfg.shingleK)),
+        cfg.shingleDfCap, cappedShingleBuckets, cappedShinglePairs))) ++
+      (if (!cfg.useMinhashChannel) Nil else Seq[Channel]((bandEntries(qSigs, window),
+        corpus.map(c => bandEntries(c._2())), cfg.bandDfCap, cappedBandBuckets, None)))
+    val sides = channels.flatMap { case (q, c, cap, acc, lost) =>
+      (q, cap, acc, lost) +: c.map(e => (e, cap, acc, Option.empty[LongAccumulator])).toSeq
+    }
+    val hots = (if (channels.size == 2 && channels.forall(_._3 > 0)) batchedHotStats(sides)
+      else sides.map(_ => None)).iterator
+    channels.map { case (q, c, cap, acc, lost) =>
+      val qHot = hots.next()
+      bucketPairs(q, c, pred, cap, acc, lost, qHot, c.flatMap(_ => hots.next()))
     }
   }
 
@@ -414,261 +411,103 @@ object CandidateStage {
   @inline private def gramKey(ids: Array[Long], start: Int, n: Int): Long =
     Hashing.mix64(Hashing.shingleHash(ids, start, n) ^ (n.toLong * 0x9e3779b97f4a7c15L))
 
-  /** Channel C beyond the broadcast valve: the tiny pattern's full-sequence
-    * hash equi-joins the corpus's exploded (n < k)-gram position hashes.
-    * Containment becomes hash equality (64-bit — the same probabilistic
-    * envelope as every other hash channel), and the P5 window restricts the
-    * exploded corpus side to rows short enough to match ANY tiny length
-    * (at sane thresholds only near-tiny rows), so the explosion is bounded.
-    * Hot gram buckets are capped AND counted via the shared join kernel.
-    * Unlike the oriented self-join kernel, equal-length pairs here must
-    * keep the canonical orientation, so the join is inlined with both
-    * lengths retained. */
-  def tinyChannelJoin(
-      toks: Dataset[TokRow],
-      cfg: DedupConfig,
-      cappedBuckets: LongAccumulator): Dataset[CandPair] = {
-    val spark = toks.sparkSession
-    import spark.implicits._
-    tinyJoinCore(toks, toks, cfg, cappedBuckets, selfDedup = true).select("p", "c").as[CandPair]
-  }
-
-  /** Shared core of the tiny-pattern equi-join: `selfDedup` excludes
-    * same-id pairs and orients (shorter = pattern); the cross-table form
-    * keeps self pairs and the fixed (query, corpus) direction. The window
-    * table matches each caller's broadcast-path semantics: both-orientation
-    * [[lengthReject]] for self-dedup, one-sided pattern-is-query rejection
-    * for retrieval (they differ only under asymmetric insert/delete costs). */
-  private def tinyJoinCore(
+  /** Channel C: tiny patterns (fewer than shingleK tokens) of `tinySide`
+    * against the rows of `corpusSide`, as (p, c, p_n, c_n). A tiny pattern
+    * can only match rows containing its FULL token sequence as a contiguous
+    * substring (its clamped min-subsequence length equals its own length).
+    * `selfDedup` (the two sides are one table): same-id pairs are excluded,
+    * pairs are oriented by [[shorterFirst]] and the length check is the
+    * both-orientation [[lengthReject]]; otherwise the direction is fixed
+    * (p = tiny side) with the one-sided pattern-is-query rejection (they
+    * differ only under asymmetric insert/delete costs).
+    *
+    * Count-first (r6): take(cap+1) on a side with NO tiny rows — the common
+    * case — pays up to 4 escalating limit-scan jobs before concluding
+    * empty; one count() settles both the emptiness and the broadcast
+    * decision. `knownTinyCount` skips even that job when the caller already
+    * counted the tiny side's tiny rows. Two formulations by tiny-set size:
+    *  - ≤ tinyPatternBroadcastCap: broadcast the tiny set and scan (exact,
+    *    cheapest — tiny transcripts are rare);
+    *  - beyond it: the tiny pattern's full-sequence hash equi-joins the
+    *    corpus side's exploded (n < k)-gram position hashes through
+    *    [[bucketJoin]]. Containment becomes hash equality (64-bit — the same
+    *    probabilistic envelope as every other hash channel), and the P5
+    *    window restricts the exploded side to rows short enough to match ANY
+    *    tiny length, so the explosion is bounded. */
+  def tinyPairs(
       tinySide: Dataset[TokRow],
       corpusSide: Dataset[TokRow],
       cfg: DedupConfig,
       cappedBuckets: LongAccumulator,
       selfDedup: Boolean,
-      withLens: Boolean = false): DataFrame = {
+      knownTinyCount: Long = -1L): DataFrame = {
     val spark = tinySide.sparkSession
     import spark.implicits._
     val k = cfg.shingleK
-    val mx =
-      if (selfDedup) maxAcceptTable(cfg.editCosts, cfg.threshold, cfg.maxTokensInPattern)
-      else acceptWindowTable(cfg.editCosts, cfg.threshold, cfg.maxTokensInPattern)._2
-    val maxCand = (1 until k).map(n => mx(n)).max
-    val cap = cfg.shingleDfCap
+    val fuzzy = cfg.threshold
+    val ec = cfg.editCosts
 
-    val tinyE = tinySide.filter(t => t.n_tokens < k && t.n_tokens > 0)
-      .map(t => (gramKey(t.ids, 0, t.n_tokens), t.clip_id, t.n_tokens, mx(t.n_tokens)))
-      .toDF("sh", "a_id", "a_n", "a_mx")
-    val gramE = corpusSide.filter(_.n_tokens <= maxCand).flatMap { r =>
-      val seen = new java.util.HashSet[Long]()
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, String, Int)]
-      var n = 1
-      while (n < k) {
-        var p = 0
-        while (p + n <= r.n_tokens) {
-          val key = gramKey(r.ids, p, n)
-          if (seen.add(key)) out += ((key, r.clip_id, r.n_tokens))
-          p += 1
+    val tinyRows = tinySide.filter(_.n_tokens < k)
+    val nTiny = if (knownTinyCount >= 0) knownTinyCount else tinyRows.count()
+    if (nTiny == 0)
+      spark.emptyDataset[(String, String, Int, Int)].toDF("p", "c", "p_n", "c_n")
+    else if (nTiny <= cfg.tinyPatternBroadcastCap) {
+      val tiny: Array[(String, Array[Long], Int)] =
+        tinyRows.map(t => (t.clip_id, t.ids, t.n_tokens)).collect()
+      val bc = spark.sparkContext.broadcast(tiny)
+      corpusSide.flatMap { row =>
+        val out = new scala.collection.mutable.ArrayBuffer[(String, String, Int, Int)]
+        val tinies = bc.value
+        var t = 0
+        while (t < tinies.length) {
+          val (tid, tids, tn) = tinies(t)
+          val n = row.n_tokens
+          val rejected =
+            if (selfDedup) tid == row.clip_id || lengthReject(tn, n, ec, fuzzy)
+            else SuffixIndex.theoreticalRejection(tn, n, ec, fuzzy)
+          if (!rejected && containsSubsequence(row.ids, tids))
+            out += (if (!selfDedup || shorterFirst(tn, tid, n, row.clip_id)) (tid, row.clip_id, tn, n)
+              else (row.clip_id, tid, n, tn))
+          t += 1
         }
-        n += 1
-      }
-      out.iterator
-    }.toDF("sh", "b_id", "b_n")
-
-    // hot-gram valve on the gram side only (the tiny side has one entry per
-    // row — its buckets ARE the gram side's). RECOVERY BOUNDARY, documented
-    // honestly: a dropped hot gram loses its (tiny ⊂ near-tiny) containment
-    // pairs — the MinHash channel recovers only EXACT tiny duplicates
-    // (identical tiny rows share their clamped full-sequence shingle and so
-    // co-bucket in bands; a tiny row never shares k-shingles with a longer
-    // row). The loss is visible in the caller's dedicated tiny-gram
-    // accumulator, never lumped into the shingle channel's.
-    val gCold = dropHotBuckets(gramE, cap, cappedBuckets, None)
-
-    val idCond =
-      if (selfDedup) tinyE("a_id") =!= gCold("b_id") else lit(true)
-    val joined = tinyE.join(gCold,
-      tinyE("sh") === gCold("sh") && idCond && gCold("b_n") <= tinyE("a_mx"))
-    if (selfDedup)
-      joined.select(
-        when($"a_n" < $"b_n" || ($"a_n" === $"b_n" && $"a_id" <= $"b_id"), $"a_id")
-          .otherwise($"b_id").as("p"),
-        when($"a_n" < $"b_n" || ($"a_n" === $"b_n" && $"a_id" <= $"b_id"), $"b_id")
-          .otherwise($"a_id").as("c"))
-    else if (withLens)
-      joined.select($"a_id".as("p"), $"b_id".as("c"), $"a_n".as("p_n"), $"b_n".as("c_n"))
-    else
-      joined.select($"a_id".as("p"), $"b_id".as("c"))
-  }
-
-  /** Orient a pair (pattern = shorter side). */
-  @inline def orientPair(id1: String, n1: Int, id2: String, n2: Int): CandPair =
-    if (n1 < n2 || (n1 == n2 && id1 <= id2)) CandPair(id1, id2) else CandPair(id2, id1)
-
-  // ------------------------------------------------------------------
-  // Cross-table candidate generation (query table vs corpus table) — the
-  // shuffle-path retrieval's generator (FuzzyRetrieval.topkShuffle). The
-  // pattern side is FIXED (the query), so pairs are not length-oriented and
-  // the P5 window needs BOTH bounds per query length.
-  // ------------------------------------------------------------------
-
-  /** Query-side inverted-index entry: bucket hash, query id + token count,
-    * and the P5 window [mn, mx] of admissible candidate lengths. */
-  final case class QueryEntry(sh: Long, id: String, n: Int, mn: Int, mx: Int)
-
-  /** `(minAccept(n), maxAccept(n))` per pattern length n — the two-sided P5
-    * window for the fixed pattern-is-query direction. */
-  def acceptWindowTable(ec: EditCosts, fuzzy: Float, maxN: Int): (Array[Int], Array[Int]) = {
-    val mn = new Array[Int](maxN + 1)
-    val mx = new Array[Int](maxN + 1)
-    var n = 1
-    while (n <= maxN) {
-      var lo = n
-      var hi = n
-      var m = 1
-      while (m <= maxN) {
-        if (!SuffixIndex.theoreticalRejection(n, m, ec, fuzzy)) {
-          if (m < lo) lo = m
-          if (m > hi) hi = m
+        out.iterator
+      }.toDF("p", "c", "p_n", "c_n")
+    } else {
+      val mx =
+        if (selfDedup) maxAcceptTable(ec, fuzzy, cfg.maxTokensInPattern)
+        else acceptWindowTable(ec, fuzzy, cfg.maxTokensInPattern)._2
+      val maxCand = (1 until k).map(n => mx(n)).max
+      val tinyE = tinySide.filter(t => t.n_tokens < k && t.n_tokens > 0)
+        .map(t => (gramKey(t.ids, 0, t.n_tokens), t.clip_id, t.n_tokens, mx(t.n_tokens)))
+        .toDF("sh", "id", "n", "mx")
+      val gramE = corpusSide.filter(_.n_tokens <= maxCand).flatMap { r =>
+        val seen = new java.util.HashSet[Long]()
+        val out = new scala.collection.mutable.ArrayBuffer[(Long, String, Int)]
+        var n = 1
+        while (n < k) {
+          var p = 0
+          while (p + n <= r.n_tokens) {
+            val key = gramKey(r.ids, p, n)
+            if (seen.add(key)) out += ((key, r.clip_id, r.n_tokens))
+            p += 1
+          }
+          n += 1
         }
-        m += 1
-      }
-      mn(n) = lo
-      mx(n) = hi
-      n += 1
+        out.iterator
+      }.toDF("sh", "id", "n")
+      // hot-gram valve on the gram side only (the tiny side has one entry
+      // per row — its buckets ARE the gram side's). RECOVERY BOUNDARY: a
+      // dropped hot gram loses its (tiny ⊂ near-tiny) containment pairs —
+      // the MinHash channel recovers only EXACT tiny duplicates (identical
+      // tiny rows share their clamped full-sequence shingle and so co-bucket
+      // in bands; a tiny row never shares k-shingles with a longer row). The
+      // loss is visible in the caller's dedicated tiny-gram accumulator.
+      val gCold = dropHotBuckets(gramE, cfg.shingleDfCap, cappedBuckets, None)
+      val idCond = if (selfDedup) col("a_id") =!= col("b_id") else lit(true)
+      val pairs = bucketJoin(tinyE, gCold, idCond && col("b_n") <= col("a_mx"))
+      if (selfDedup) oriented(pairs) else pairs
     }
-    (mn, mx)
   }
-
-  /** Cross-side bucket join: query entries ⋈ corpus entries on the bucket
-    * hash with the two-sided P5 window as integer join conditions. Hot
-    * buckets are dropped per SIDE above `cap` and counted (a hot corpus
-    * bucket multiplies into every query probing it — the same quadratic
-    * wall as the self-join case; the MinHash channel recovers
-    * probabilistically). Both exchanges are reused across the df-aggregate,
-    * the anti-join and the join side (same discipline as
-    * [[bucketJoinPairs]]). Emitted pairs: p = query id, c = corpus id
-    * (self pairs KEPT — a query present in the corpus legitimately matches
-    * itself, as in the reference). */
-  def crossBucketJoinPairs(
-      qEntries: Dataset[QueryEntry],
-      cEntries: Dataset[BucketEntry],
-      cap: Int,
-      cappedBuckets: LongAccumulator,
-      qHot: Option[Array[Long]] = None,
-      cHot: Option[Array[Long]] = None): Dataset[CandPair] = {
-    val spark = qEntries.sparkSession
-    import spark.implicits._
-    crossBucketJoinPairsLens(qEntries, cEntries, cap, cappedBuckets, qHot, cHot)
-      .select($"p", $"c").as[CandPair]
-  }
-
-  /** [[crossBucketJoinPairs]] RETAINING both sides' token counts
-    * (p, c, p_n, c_n) — lets a caller orient pairs without re-joining a
-    * length table (r6: the incremental path's oriented step previously
-    * joined a (clip_id, n) union of the full old+new token tables twice,
-    * two extra old-corpus scans and exchanges per increment). */
-  def crossBucketJoinPairsLens(
-      qEntries: Dataset[QueryEntry],
-      cEntries: Dataset[BucketEntry],
-      cap: Int,
-      cappedBuckets: LongAccumulator,
-      qHot: Option[Array[Long]] = None,
-      cHot: Option[Array[Long]] = None): DataFrame = {
-    val spark = qEntries.sparkSession
-    import spark.implicits._
-
-    val q = dropHotBuckets(qEntries.toDF(), cap, cappedBuckets, None, precomputedHot = qHot)
-      .select($"sh", $"id".as("q_id"), $"n".as("q_n"), $"mn".as("q_mn"), $"mx".as("q_mx"))
-    val c = dropHotBuckets(cEntries.toDF(), cap, cappedBuckets, None, precomputedHot = cHot)
-      .select($"sh".as("c_sh"), $"id".as("c_id"), $"n".as("c_n"))
-    q.join(c, $"sh" === $"c_sh" && $"c_n" >= $"q_mn" && $"c_n" <= $"q_mx")
-      .select($"q_id".as("p"), $"c_id".as("c"), $"q_n".as("p_n"), $"c_n")
-  }
-
-  /** Cross-table channel A: exact shingle join (queries with ≥ k tokens —
-    * the reference registers no ranges shorter than the clamped min-subseq
-    * length, so a ≥ k-token pattern's candidates always share a k-gram). */
-  private[dedup] def crossNgramQEntries(qToks: Dataset[TokRow], cfg: DedupConfig): Dataset[QueryEntry] = {
-    val spark = qToks.sparkSession
-    import spark.implicits._
-    val k = cfg.shingleK
-    val (mn, mx) = acceptWindowTable(cfg.editCosts, cfg.threshold, cfg.maxTokensInPattern)
-    qToks
-      .filter(_.n_tokens >= k)
-      .flatMap(t => Hashing.distinctShingles(t.ids, k).iterator
-        .map(h => QueryEntry(h, t.clip_id, t.n_tokens, mn(t.n_tokens), mx(t.n_tokens))))
-  }
-
-  private[dedup] def crossNgramCEntries(cToks: Dataset[TokRow], cfg: DedupConfig): Dataset[BucketEntry] = {
-    val spark = cToks.sparkSession
-    import spark.implicits._
-    val k = cfg.shingleK
-    cToks
-      .filter(_.n_tokens >= k)
-      .flatMap(t => Hashing.distinctShingles(t.ids, k).iterator
-        .map(h => BucketEntry(h, t.clip_id, t.n_tokens, 0)))
-  }
-
-  def crossNgramChannel(
-      qToks: Dataset[TokRow],
-      cToks: Dataset[TokRow],
-      cfg: DedupConfig,
-      cappedBuckets: LongAccumulator,
-      qHot: Option[Array[Long]] = None,
-      cHot: Option[Array[Long]] = None): Dataset[CandPair] =
-    crossBucketJoinPairs(crossNgramQEntries(qToks, cfg), crossNgramCEntries(cToks, cfg),
-      cfg.shingleDfCap, cappedBuckets, qHot, cHot)
-
-  /** [[crossNgramChannel]] with both sides' token counts retained. */
-  private[dedup] def crossNgramChannelLens(
-      qToks: Dataset[TokRow],
-      cToks: Dataset[TokRow],
-      cfg: DedupConfig,
-      cappedBuckets: LongAccumulator,
-      qHot: Option[Array[Long]] = None,
-      cHot: Option[Array[Long]] = None): DataFrame =
-    crossBucketJoinPairsLens(crossNgramQEntries(qToks, cfg), crossNgramCEntries(cToks, cfg),
-      cfg.shingleDfCap, cappedBuckets, qHot, cHot)
-
-  /** Cross-table channel B: MinHash band buckets (the probabilistic
-    * recovery path for pairs whose shared shingles are all hot). */
-  private[dedup] def crossBandQEntries(qSigs: Dataset[SigRow], cfg: DedupConfig): Dataset[QueryEntry] = {
-    val spark = qSigs.sparkSession
-    import spark.implicits._
-    val (mn, mx) = acceptWindowTable(cfg.editCosts, cfg.threshold, cfg.maxTokensInPattern)
-    qSigs.flatMap(s => s.band_hashes.iterator.zipWithIndex
-      .map { case (h, bd) => QueryEntry(Hashing.mix64(h ^ (bd * 0x9e3779b97f4a7c15L)),
-        s.clip_id, s.n_tokens, mn(s.n_tokens), mx(s.n_tokens)) })
-  }
-
-  private[dedup] def crossBandCEntries(cSigs: Dataset[SigRow], cfg: DedupConfig): Dataset[BucketEntry] = {
-    val spark = cSigs.sparkSession
-    import spark.implicits._
-    cSigs.flatMap(s => s.band_hashes.iterator.zipWithIndex
-      .map { case (h, bd) => BucketEntry(Hashing.mix64(h ^ (bd * 0x9e3779b97f4a7c15L)),
-        s.clip_id, s.n_tokens, 0) })
-  }
-
-  def crossMinhashChannel(
-      qSigs: Dataset[SigRow],
-      cSigs: Dataset[SigRow],
-      cfg: DedupConfig,
-      cappedBuckets: LongAccumulator,
-      qHot: Option[Array[Long]] = None,
-      cHot: Option[Array[Long]] = None): Dataset[CandPair] =
-    crossBucketJoinPairs(crossBandQEntries(qSigs, cfg), crossBandCEntries(cSigs, cfg),
-      cfg.bandDfCap, cappedBuckets, qHot, cHot)
-
-  /** [[crossMinhashChannel]] with both sides' token counts retained. */
-  private[dedup] def crossMinhashChannelLens(
-      qSigs: Dataset[SigRow],
-      cSigs: Dataset[SigRow],
-      cfg: DedupConfig,
-      cappedBuckets: LongAccumulator,
-      qHot: Option[Array[Long]] = None,
-      cHot: Option[Array[Long]] = None): DataFrame =
-    crossBucketJoinPairsLens(crossBandQEntries(qSigs, cfg), crossBandCEntries(cSigs, cfg),
-      cfg.bandDfCap, cappedBuckets, qHot, cHot)
 
   /** Cross-table CONTAINMENT gram channel — the candidate generator for
     * beyond-memory subsequence retrieval (J4,
@@ -695,128 +534,25 @@ object CandidateStage {
     val g = math.min(cfg.shingleK, math.max(1, cfg.minSubseqLength))
     val msl0 = cfg.minSubseqLength
     val ratio = cfg.minSubseqRatio
-    val qEntries = qToks
-      .filter { t =>
-        var msl = msl0
-        if ((ratio * t.n_tokens).toInt > msl) msl = (ratio * t.n_tokens).toInt
-        t.n_tokens >= msl && t.n_tokens >= g
-      }
-      // [1, MaxValue] disables the window entirely — hosts may even exceed
-      // maxTokensInPattern (decontamination tokenizes its corpus unfiltered)
-      .flatMap(t => Hashing.distinctShingles(t.ids, g).iterator
-        .map(h => QueryEntry(h, t.clip_id, t.n_tokens, 1, Int.MaxValue)))
-    val cEntries = cToks
-      .filter(_.n_tokens >= g)
-      .flatMap(t => Hashing.distinctShingles(t.ids, g).iterator
-        .map(h => BucketEntry(h, t.clip_id, t.n_tokens, 0)))
+    val qEntries = shingleEntries(qToks.filter { t =>
+      var msl = msl0
+      if ((ratio * t.n_tokens).toInt > msl) msl = (ratio * t.n_tokens).toInt
+      t.n_tokens >= msl
+    }, g)
+    val cEntries = shingleEntries(cToks, g)
     // both side valves share one batched stats job (r6) for fixed caps
     val hots =
       if (cap > 0) batchedHotStats(Seq(
-        (qEntries.toDF(), cap, cappedBuckets, None),
-        (cEntries.toDF(), cap, cappedBuckets, None)))
+        (qEntries, cap, cappedBuckets, None),
+        (cEntries, cap, cappedBuckets, None)))
       else Seq(None, None)
-    // deduplicated like CandidateStage.cross: a pair sharing m grams must
-    // reach the verify group ONCE — duplicate group members would consume
-    // the J4 kernel's numberOfMatches scan budget and change which
-    // candidates get verified (observed: self-matches lost behind
-    // double-counted siblings)
-    crossBucketJoinPairs(qEntries, cEntries, cap, cappedBuckets, hots(0), hots(1))
-      .dropDuplicates("p", "c")
-      .as[CandPair]
-  }
-
-  /** Cross-table channel C: tiny queries (< k tokens). A tiny pattern's
-    * clamped min-subsequence equals its own length, so its candidates must
-    * contain the FULL query token sequence contiguously — broadcast the
-    * tiny query set and scan the corpus. */
-  def crossTinyChannel(
-      qToks: Dataset[TokRow],
-      cToks: Dataset[TokRow],
-      cfg: DedupConfig,
-      cappedBuckets: LongAccumulator): Dataset[CandPair] = {
-    val spark = qToks.sparkSession
-    import spark.implicits._
-    crossTinyChannelLens(qToks, cToks, cfg, cappedBuckets)
-      .select("p", "c").as[CandPair]
-  }
-
-  /** [[crossTinyChannel]] with both sides' token counts retained
-    * (p, c, p_n, c_n) — see [[crossBucketJoinPairsLens]]. */
-  private[dedup] def crossTinyChannelLens(
-      qToks: Dataset[TokRow],
-      cToks: Dataset[TokRow],
-      cfg: DedupConfig,
-      cappedBuckets: LongAccumulator,
-      knownTinyCount: Long = -1L): DataFrame = {
-    val spark = qToks.sparkSession
-    import spark.implicits._
-    val k = cfg.shingleK
-    val fuzzy = cfg.threshold
-    val ec = cfg.editCosts
-
-    def empty = spark.emptyDataset[(String, String, Int, Int)]
-      .toDF("p", "c", "p_n", "c_n")
-
-    // count-first — see tinyChannel (one job for the common no-tiny case)
-    val tinyRows = qToks.filter(_.n_tokens < k)
-    val nTiny = if (knownTinyCount >= 0) knownTinyCount else tinyRows.count()
-    if (nTiny == 0) return empty
-    if (nTiny > cfg.tinyPatternBroadcastCap)
-      return tinyJoinCore(qToks, cToks, cfg, cappedBuckets, selfDedup = false,
-        withLens = true)
-    val tiny: Array[(String, Array[Long], Int)] =
-      tinyRows.map(t => (t.clip_id, t.ids, t.n_tokens)).collect()
-    val bc = spark.sparkContext.broadcast(tiny)
-
-    cToks.flatMap { row =>
-      val out = new scala.collection.mutable.ArrayBuffer[(String, String, Int, Int)]
-      val tinies = bc.value
-      var t = 0
-      while (t < tinies.length) {
-        val (tid, tids, tn) = tinies(t)
-        if (!SuffixIndex.theoreticalRejection(tn, row.n_tokens, ec, fuzzy) &&
-            containsSubsequence(row.ids, tids))
-          out += ((tid, row.clip_id, tn, row.n_tokens))
-        t += 1
-      }
-      out.iterator
-    }.toDF("p", "c", "p_n", "c_n")
-  }
-
-  /** Union of cross-table channels (queries vs corpus), deduplicated. With
-    * both keyed channels on fixed caps, all FOUR side valves (q/c per
-    * channel) share ONE batched hot-key stats job ([[batchedHotStats]]). */
-  def cross(
-      qToks: Dataset[TokRow],
-      cToks: Dataset[TokRow],
-      qSigs: => Dataset[SigRow],
-      cSigs: => Dataset[SigRow],
-      cfg: DedupConfig,
-      cappedShingleBuckets: LongAccumulator,
-      cappedBandBuckets: LongAccumulator,
-      cappedTinyGramBuckets: LongAccumulator): Dataset[CandPair] = {
-    val spark = qToks.sparkSession
-    import spark.implicits._
-    var cands = spark.emptyDataset[CandPair]
-    val batchable = cfg.useNgramChannel && cfg.useMinhashChannel &&
-      cfg.shingleDfCap > 0 && cfg.bandDfCap > 0
-    if (batchable) {
-      val hots = batchedHotStats(Seq(
-        (crossNgramQEntries(qToks, cfg).toDF(), cfg.shingleDfCap, cappedShingleBuckets, None),
-        (crossNgramCEntries(cToks, cfg).toDF(), cfg.shingleDfCap, cappedShingleBuckets, None),
-        (crossBandQEntries(qSigs, cfg).toDF(), cfg.bandDfCap, cappedBandBuckets, None),
-        (crossBandCEntries(cSigs, cfg).toDF(), cfg.bandDfCap, cappedBandBuckets, None)))
-      cands = cands
-        .union(crossNgramChannel(qToks, cToks, cfg, cappedShingleBuckets, hots(0), hots(1)))
-        .union(crossMinhashChannel(qSigs, cSigs, cfg, cappedBandBuckets, hots(2), hots(3)))
-    } else {
-      if (cfg.useNgramChannel)
-        cands = cands.union(crossNgramChannel(qToks, cToks, cfg, cappedShingleBuckets))
-      if (cfg.useMinhashChannel)
-        cands = cands.union(crossMinhashChannel(qSigs, cSigs, cfg, cappedBandBuckets))
-    }
-    cands = cands.union(crossTinyChannel(qToks, cToks, cfg, cappedTinyGramBuckets))
-    cands.dropDuplicates("p", "c").as[CandPair]
+    // deduplicated like `cross`: a pair sharing m grams must reach the
+    // verify group ONCE — duplicate group members would consume the J4
+    // kernel's numberOfMatches scan budget and change which candidates get
+    // verified (observed: self-matches lost behind double-counted siblings)
+    bucketPairs(qEntries, Some(cEntries), lit(true), cap, cappedBuckets,
+        aHot = hots(0), bHot = hots(1))
+      .select("p", "c").dropDuplicates("p", "c").as[CandPair]
   }
 
   /** Contiguous-substring containment of `needle` in `hay`. */
@@ -833,12 +569,8 @@ object CandidateStage {
     false
   }
 
-  /** Union of enabled channels, deduplicated. When both keyed channels run
-    * with fixed caps, their hot-key stats are computed in ONE batched job
-    * ([[batchedHotStats]]) instead of one eager action per channel.
-    * `precomputedHots`: (ngram, band) hot keys a caller has already
-    * computed in its own (larger) batched stats job — the incremental path
-    * folds these two specs into its six-set job. */
+  /** Self candidates: union of the enabled channels over `toks`,
+    * deduplicated. */
   def apply(
       toks: Dataset[TokRow],
       sigs: => Dataset[SigRow],
@@ -847,31 +579,34 @@ object CandidateStage {
       cappedShinglePairs: LongAccumulator,
       cappedBandBuckets: LongAccumulator,
       cappedTinyGramBuckets: LongAccumulator,
-      precomputedHots: Option[(Option[Array[Long]], Option[Array[Long]])] = None,
       knownTinyCount: Long = -1L): Dataset[CandPair] = {
     val spark = toks.sparkSession
     import spark.implicits._
-    var cands = spark.emptyDataset[CandPair]
-    val batchable = cfg.useNgramChannel && cfg.useMinhashChannel &&
-      cfg.shingleDfCap > 0 && cfg.bandDfCap > 0
-    if (batchable) {
-      val hots = precomputedHots match {
-        case Some((ngramHot, bandHot)) => Seq(ngramHot, bandHot)
-        case None => batchedHotStats(Seq(
-          (ngramEntries(toks, cfg).toDF(), cfg.shingleDfCap,
-            cappedShingleBuckets, Some(cappedShinglePairs)),
-          (bandEntries(sigs, cfg).toDF(), cfg.bandDfCap, cappedBandBuckets, None)))
-      }
-      cands = cands
-        .union(ngramChannel(toks, cfg, cappedShingleBuckets, cappedShinglePairs, hots(0)))
-        .union(minhashChannel(sigs, cfg, cappedBandBuckets, hots(1)))
-    } else {
-      if (cfg.useNgramChannel)
-        cands = cands.union(ngramChannel(toks, cfg, cappedShingleBuckets, cappedShinglePairs))
-      if (cfg.useMinhashChannel)
-        cands = cands.union(minhashChannel(sigs, cfg, cappedBandBuckets))
-    }
-    cands = cands.union(tinyChannel(toks, cfg, cappedTinyGramBuckets, knownTinyCount))
-    cands.dropDuplicates("p", "c").as[CandPair]
+    (keyedPairs(toks, sigs, None, cfg, cappedShingleBuckets, Some(cappedShinglePairs),
+      cappedBandBuckets) :+
+      tinyPairs(toks, toks, cfg, cappedTinyGramBuckets, selfDedup = true, knownTinyCount))
+      .map(_.select("p", "c")).reduce(_ union _).dropDuplicates("p", "c").as[CandPair]
+  }
+
+  /** Cross candidates (queries vs corpus — the shuffle-path retrieval's
+    * generator, FuzzyRetrieval.topkShuffle): union of the enabled channels,
+    * deduplicated; p = query id, c = corpus id (self pairs KEPT — a query
+    * present in the corpus legitimately matches itself, as in the
+    * reference). */
+  def cross(
+      qToks: Dataset[TokRow],
+      cToks: Dataset[TokRow],
+      qSigs: => Dataset[SigRow],
+      cSigs: => Dataset[SigRow],
+      cfg: DedupConfig,
+      cappedShingleBuckets: LongAccumulator,
+      cappedBandBuckets: LongAccumulator,
+      cappedTinyGramBuckets: LongAccumulator): Dataset[CandPair] = {
+    val spark = qToks.sparkSession
+    import spark.implicits._
+    (keyedPairs(qToks, qSigs, Some((cToks, () => cSigs)), cfg, cappedShingleBuckets, None,
+      cappedBandBuckets) :+
+      tinyPairs(qToks, cToks, cfg, cappedTinyGramBuckets, selfDedup = false))
+      .map(_.select("p", "c")).reduce(_ union _).dropDuplicates("p", "c").as[CandPair]
   }
 }

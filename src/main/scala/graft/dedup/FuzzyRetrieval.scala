@@ -730,7 +730,7 @@ object FuzzyRetrieval {
       : (Dataset[Clip], Dataset[Clip]) = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit}
 
     val nEval = evalSet.count()
     val evalToks = TokenizeStage(evalSet, cfg).persist()
@@ -759,22 +759,12 @@ object FuzzyRetrieval {
         val acc = cappedContainmentBuckets.getOrElse(
           spark.sparkContext.longAccumulator("deconCappedContainmentBuckets"))
         val evalE = evalToks.filter(_.n_tokens >= gc)
-          .map(t => CandidateStage.QueryEntry(
-            Hashing.shingleHash(t.ids, 0, gc), t.clip_id, t.n_tokens, 1, Int.MaxValue))
-        val hostE = cNoMax.filter(_.n_tokens >= gc).flatMap { t =>
-          val seen = new java.util.HashSet[Long]()
-          val out = new scala.collection.mutable.ArrayBuffer[CandidateStage.BucketEntry]
-          var p = 0
-          while (p + gc <= t.n_tokens) {
-            val h = Hashing.shingleHash(t.ids, p, gc)
-            if (seen.add(h)) out += CandidateStage.BucketEntry(h, t.clip_id, t.n_tokens, 0)
-            p += 1
-          }
-          out.iterator
-        }
+          .map(t => (Hashing.shingleHash(t.ids, 0, gc), t.clip_id, t.n_tokens))
+          .toDF("sh", "id", "n")
         val pairs = CandidateStage
-          .crossBucketJoinPairs(evalE, hostE, containmentGramDfCap, acc)
-          .dropDuplicates("p", "c").as[CandPair]
+          .bucketPairs(evalE, Some(CandidateStage.shingleEntries(cNoMax, gc)), lit(true),
+            containmentGramDfCap, acc)
+          .select("p", "c").dropDuplicates("p", "c").as[CandPair]
         val withEval = pairs
           .joinWith(evalToks, pairs("p") === evalToks("clip_id"))
           .map { case (cp, e) => (cp.c, e.ids) }

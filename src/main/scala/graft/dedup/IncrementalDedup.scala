@@ -314,8 +314,7 @@ object IncrementalDedup {
     }
 
     // the batch's tiny-row count, computed ONCE and shared by the self tiny
-    // channel and the new→old cross tiny channel (r6 — each counted it
-    // separately)
+    // channel and the new→old cross tiny channel
     val k2 = cfg.shingleK
     val nTinyNew = phased("inc_candidates")(newToks.filter(_.n_tokens < k2).count())
 
@@ -327,57 +326,24 @@ object IncrementalDedup {
 
     // new↔new: the pipeline's own self-join channels, restricted to the batch
     val selfCands = CandidateStage(newToks, newSigs, cfg, cappedShingleBuckets,
-      cappedShinglePairs, cappedBandBuckets, cappedTinyGramBuckets)
-    // new↔old: cross channels; the keyed ones probe only the frontier, the
-    // tiny containment scans run against the FULL old side (both directions —
-    // a tiny host shares no k-shingle or band with its containee). With
-    // fixed caps all four side valves share ONE batched hot-key stats job
-    // (r6 — was four eager stats actions per increment).
-    // every cross channel retains BOTH sides' token counts in its join
-    // output (the Lens variants, r6), so orientation below is a pure
-    // projection — the previous formulation re-joined a (clip_id, n) union
-    // of the full old+new token tables twice per increment just to recover
-    // lengths the channels had already seen
-    var crossLens = spark.emptyDataset[(String, String, Int, Int)]
-      .toDF("p", "c", "p_n", "c_n")
-    val crossBatchable = cfg.useNgramChannel && cfg.useMinhashChannel &&
-      cfg.shingleDfCap > 0 && cfg.bandDfCap > 0
-    if (crossBatchable) {
-      val hots = phased("inc_candidates")(CandidateStage.batchedHotStats(Seq(
-        (CandidateStage.crossNgramQEntries(newToks, cfg).toDF(), cfg.shingleDfCap,
-          cappedShingleBuckets, None),
-        (CandidateStage.crossNgramCEntries(frontierToks, cfg).toDF(), cfg.shingleDfCap,
-          cappedShingleBuckets, None),
-        (CandidateStage.crossBandQEntries(newSigs, cfg).toDF(), cfg.bandDfCap,
-          cappedBandBuckets, None),
-        (CandidateStage.crossBandCEntries(frontierSigs, cfg).toDF(), cfg.bandDfCap,
-          cappedBandBuckets, None))))
-      crossLens = crossLens
-        .union(CandidateStage.crossNgramChannelLens(newToks, frontierToks, cfg,
-          cappedShingleBuckets, hots(0), hots(1)))
-        .union(CandidateStage.crossMinhashChannelLens(newSigs, frontierSigs, cfg,
-          cappedBandBuckets, hots(2), hots(3)))
-    } else {
-      if (cfg.useNgramChannel)
-        crossLens = crossLens.union(
-          CandidateStage.crossNgramChannelLens(newToks, frontierToks, cfg, cappedShingleBuckets))
-      if (cfg.useMinhashChannel)
-        crossLens = crossLens.union(
-          CandidateStage.crossMinhashChannelLens(newSigs, frontierSigs, cfg, cappedBandBuckets))
-    }
-    crossLens = crossLens
-      .union(CandidateStage.crossTinyChannelLens(newToks, oldToks, cfg, cappedTinyGramBuckets,
-        knownTinyCount = nTinyNew))
-      .union(CandidateStage.crossTinyChannelLens(oldToks, newToks, cfg, cappedTinyGramBuckets))
-
-    // orient cross pairs like the self-join channels (pattern = shorter side
-    // — the laxer min-subsequence requirement; the symmetric-cost dup
-    // decision is direction-free only under this orientation), then dedup
-    val oriented = crossLens
-      .select(
-        when($"p_n" < $"c_n" || ($"p_n" === $"c_n" && $"p" <= $"c"), $"p").otherwise($"c").as("p"),
-        when($"p_n" < $"c_n" || ($"p_n" === $"c_n" && $"p" <= $"c"), $"c").otherwise($"p").as("c"))
-      .as[CandPair]
+      cappedShinglePairs, cappedBandBuckets, cappedTinyGramBuckets, knownTinyCount = nTinyNew)
+    // new↔old: cross channels; the keyed ones probe only the frontier (with
+    // fixed caps all four side valves share ONE batched hot-key stats job),
+    // the tiny containment scans run against the FULL old side (both
+    // directions — a tiny host shares no k-shingle or band with its
+    // containee). Every channel's output carries both sides' token counts,
+    // so orienting the pairs like the self-join channels (pattern = shorter
+    // side — the laxer min-subsequence requirement; the symmetric-cost dup
+    // decision is direction-free only under this orientation) is a pure
+    // projection.
+    val crossPairs = phased("inc_candidates")(CandidateStage.keyedPairs(newToks, newSigs,
+      Some((frontierToks, () => frontierSigs)), cfg, cappedShingleBuckets, None,
+      cappedBandBuckets)) ++ Seq(
+      CandidateStage.tinyPairs(newToks, oldToks, cfg, cappedTinyGramBuckets,
+        selfDedup = false, knownTinyCount = nTinyNew),
+      CandidateStage.tinyPairs(oldToks, newToks, cfg, cappedTinyGramBuckets, selfDedup = false))
+    val oriented = CandidateStage.oriented(crossPairs.reduce(_ union _))
+      .select("p", "c").as[CandPair]
     var cands: Dataset[CandPair] = null
     val nCands = timed("inc_candidates", nNewToks, Map(
       "prefilter" -> (if (shKeys.isDefined && bandKeys.isDefined) "on" else "off"),

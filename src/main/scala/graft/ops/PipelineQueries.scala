@@ -69,7 +69,7 @@ object PipelineQueries {
     * The chunk key space is FIXED (≈2^10 + 6·2^9 buckets), so bucket
     * occupancy grows linearly with the corpus and an uncapped within-bucket
     * self-join is quadratic at 100×: the buckets therefore go through the
-    * shared [[CandidateStage.bucketJoinPairs]] kernel — hot buckets above
+    * shared [[CandidateStage.bucketJoin]] kernel — hot buckets above
     * `bucketCap` are dropped AND counted (accumulator), identical discipline
     * to the dedup candidate stage; a dropped chunk's pairs can still meet in
     * any of their 6 other chunks, so recall degrades gracefully under the
@@ -97,12 +97,12 @@ object PipelineQueries {
         val width = offsets(c + 1) - offsets(c)
         val chunk = (sh >>> offsets(c)) & ((1L << width) - 1)
         // all entries same length ⇒ the kernel orients pairs purely by id
-        CandidateStage.BucketEntry(chunk | (c.toLong << 32), id, 1, Int.MaxValue)
+        (chunk | (c.toLong << 32), id, 1, Int.MaxValue)
       }
-    }
+    }.toDF("sh", "id", "n", "mx")
     val capped = spark.sparkContext.longAccumulator("simhashCappedBuckets")
-    val pairs = CandidateStage.bucketJoinPairs(entries, bucketCap, capped, None)
-      .toDF("a_id", "b_id")
+    val pairs = CandidateStage.bucketPairs(entries, None, CandidateStage.selfWindow, bucketCap, capped)
+      .select(col("p").as("a_id"), col("c").as("b_id"))
       .dropDuplicates("a_id", "b_id")
     val a = sigs.toDF("a_id", "a_sh")
     val b = sigs.toDF("b_id", "b_sh")
@@ -127,7 +127,7 @@ object PipelineQueries {
     *
     * Physical shape (the r3 verdict's one remaining scale-killer, fixed):
     * the bucket join ships (bucket, id)-ONLY entries through the shared
-    * [[CandidateStage.bucketJoinPairs]] codegen equi-join — the embedding
+    * [[CandidateStage.bucketJoin]] codegen equi-join — the embedding
     * vector never enters the bucket shuffle (the old typed groupByKey
     * formulation replicated every embedding ×`bands` through the exchange
     * and fenced whole-stage codegen) — then the deduplicated id pairs make
@@ -187,11 +187,13 @@ object PipelineQueries {
             b += 1
           }
           // equal `n` on every entry ⇒ the kernel orients purely by id
-          CandidateStage.BucketEntryL((band.toLong << 32) | sketch, id, 1, Int.MaxValue)
+          ((band.toLong << 32) | sketch, id, 1, Int.MaxValue)
         }
       }
-    }.persist()
-    val pairs = CandidateStage.bucketJoinPairsLong(entries, bucketCap, cappedBuckets, None)
+    }.toDF("sh", "id", "n", "mx").persist()
+    val pairs = CandidateStage.bucketPairs(entries, None, CandidateStage.selfWindow, bucketCap,
+        cappedBuckets)
+      .select(col("p").as("a_id"), col("c").as("b_id"))
       .dropDuplicates("a_id", "b_id")
 
     // ONE re-join of the deduplicated id pairs to the embeddings for the

@@ -4,8 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.data.SynthCorpus
 import graft.dedup._
-import graft.dedup.CandidateStage.BucketEntry
-import graft.kernel.Hashing
 
 /** Bucket-df histogram probe for the AUTO df-cap work-factor derivation
   * (BASELINE.md round 5): builds the EXACT shingle- and band-channel entry
@@ -25,25 +23,17 @@ object HistProbe {
     val spark = DedupPipeline.sessionBuilder("graft-hist",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     val cfg = DedupConfig()
     val clips = SynthCorpus.generate(spark, nClips, partitions = 64)
     val toks = TokenizeStage(clips, cfg).persist()
-    val k = cfg.shingleK
 
-    val shingle = toks.filter(_.n_tokens >= k)
-      .flatMap(t => Hashing.distinctShingles(t.ids, k).iterator
-        .map(h => BucketEntry(h, t.clip_id, t.n_tokens, 0)))
-    val sigs = SignatureStage(toks, cfg)
-    val band = sigs.flatMap(s => s.band_hashes.iterator.zipWithIndex
-      .map { case (h, bd) =>
-        BucketEntry(Hashing.mix64(h ^ (bd * 0x9e3779b97f4a7c15L)), s.clip_id, s.n_tokens, 0)
-      })
+    val shingle = CandidateStage.shingleEntries(toks, cfg.shingleK)
+    val band = CandidateStage.bandEntries(SignatureStage(toks, cfg))
 
     for ((name, entries, knownCaps) <- Seq(
         ("shingle", shingle, Seq(24, 64)), ("band", band, Seq(96, 256)))) {
-      val hist = entries.toDF().groupBy("sh").agg(count(lit(1)).as("df"))
+      val hist = entries.groupBy("sh").agg(count(lit(1)).as("df"))
         .groupBy("df").agg(count(lit(1)).as("buckets")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
       val n = hist.map { case (df, b) => df * b }.sum

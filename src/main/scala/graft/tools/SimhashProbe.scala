@@ -39,17 +39,18 @@ object SimhashProbe {
       (0 until 7).map { c =>
         val width = offsets(c + 1) - offsets(c)
         val chunk = (sh >>> offsets(c)) & ((1L << width) - 1)
-        CandidateStage.BucketEntry(chunk | (c.toLong << 32), id, 1, Int.MaxValue)
+        (chunk | (c.toLong << 32), id, 1, Int.MaxValue)
       }
-    }
+    }.toDF("sh", "id", "n", "mx")
     timed("entries")(println("entries=" + entries.count()))
     // bucket occupancy histogram
     val occ = entries.groupBy("sh").count().select(max("count"), avg("count"), count(lit(1))).head()
     println(s"bucket max=${occ.get(0)} avg=${occ.get(1)} n=${occ.get(2)}")
 
     val capped = spark.sparkContext.longAccumulator("capped")
-    val pairs = timed("bucketJoinPairs_plan") {
-      CandidateStage.bucketJoinPairs(entries, 1024, capped, None).toDF("a_id", "b_id")
+    val pairs = timed("bucketPairs_plan") {
+      CandidateStage.bucketPairs(entries, None, CandidateStage.selfWindow, 1024, capped)
+        .select(col("p").as("a_id"), col("c").as("b_id"))
     }
     timed("raw_pairs")(println("raw=" + pairs.count()))
     val dd = pairs.dropDuplicates("a_id", "b_id")

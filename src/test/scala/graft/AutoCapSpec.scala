@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.dedup.CandidateStage
-import graft.dedup.CandidateStage.BucketEntry
 
 /** The AUTO df-cap (cap ≤ 0): chosen from the measured bucket-df histogram
   * so kept quadratic join work stays ≤ workFactor × entries — the r4
@@ -17,16 +16,17 @@ class AutoCapSpec extends AnyFunSuite {
     .appName("auto-cap-spec")
     .getOrCreate()
 
-  private def pairsOf(entries: Seq[BucketEntry], cap: Int): (Set[(String, String)], Long) = {
+  private def pairsOf(entries: Seq[(Long, String, Int, Int)], cap: Int): (Set[(String, String)], Long) = {
     import spark.implicits._
     val acc = spark.sparkContext.longAccumulator
-    val got = CandidateStage.bucketJoinPairs(entries.toDS(), cap, acc, None)
-      .collect().map(p => (p.p, p.c)).toSet
+    val got = CandidateStage.bucketPairs(entries.toDF("sh", "id", "n", "mx"), None,
+        CandidateStage.selfWindow, cap, acc)
+      .collect().map(p => (p.getString(0), p.getString(1))).toSet
     (got, acc.value)
   }
 
   // every entry same length ⇒ orientation purely by id
-  private def e(sh: Long, id: String) = BucketEntry(sh, id, 5, Int.MaxValue)
+  private def e(sh: Long, id: String) = (sh, id, 5, Int.MaxValue)
 
   test("skewed head is cut: the hot bucket alone blows the work budget and is dropped+counted") {
     // one bucket of df=100 (work 10,000) + 50 buckets of df=2 (work 200);

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.dedup.{CandidateStage, DedupConfig, DedupPipeline, TokenizeStage}
+import graft.dedup.{CandidateStage, DedupConfig, DedupPipeline, SignatureStage, TokenizeStage, TokRow}
 import graft.kernel.EditCosts
 
 /** The candidate bucket join (codegen equi-join formulation) must emit
@@ -29,6 +29,26 @@ class CandidateJoinPropertySpec extends AnyFunSuite {
     }.toSet
   }
 
+  /** The shingle channel alone through the keyed-channel union: the self
+    * join over `q` (corpus = None) or the cross join `q` ⋈ corpus. */
+  private def ngramPairs(
+      q: org.apache.spark.sql.Dataset[TokRow],
+      corpus: Option[org.apache.spark.sql.Dataset[TokRow]],
+      cfg: DedupConfig,
+      cappedBuckets: org.apache.spark.util.LongAccumulator,
+      cappedPairs: Option[org.apache.spark.util.LongAccumulator]): Set[(String, String)] = {
+    val acc = spark.sparkContext.longAccumulator
+    CandidateStage.keyedPairs(q, SignatureStage(q, cfg),
+        corpus.map(c => (c, () => SignatureStage(c, cfg))),
+        cfg.copy(useMinhashChannel = false), cappedBuckets, cappedPairs, acc)
+      .flatMap(_.collect()).map(r => (r.getString(0), r.getString(1))).toSet
+  }
+
+  private def selfTiny(toks: org.apache.spark.sql.Dataset[TokRow], cfg: DedupConfig,
+      acc: org.apache.spark.util.LongAccumulator): Set[(String, String)] =
+    CandidateStage.tinyPairs(toks, toks, cfg, acc, selfDedup = true)
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+
   test("ngram channel pair set equals driver brute force (random corpora, caps active)") {
     import spark.implicits._
     val rng = new scala.util.Random(2026)
@@ -54,8 +74,7 @@ class CandidateJoinPropertySpec extends AnyFunSuite {
 
       val acc1 = spark.sparkContext.longAccumulator
       val acc2 = spark.sparkContext.longAccumulator
-      val got = CandidateStage.ngramChannel(TokenizeStage(clips, cfg), cfg, acc1, acc2)
-        .collect().map(cp => (cp.p, cp.c)).toSet
+      val got = ngramPairs(TokenizeStage(clips, cfg), None, cfg, acc1, Some(acc2))
       assert(got == want,
         s"trial $trial: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
       val hotBuckets = entries.groupBy(_._1).values.count(_.size > cfg.shingleDfCap)
@@ -67,13 +86,13 @@ class CandidateJoinPropertySpec extends AnyFunSuite {
     import spark.implicits._
     val rng = new scala.util.Random(99)
     val entries = (0 until 400).map { i =>
-      CandidateStage.BucketEntry((rng.nextInt(40) + 1).toLong, f"d_$i%04d", 3, 300)
-    }.toDS()
+      ((rng.nextInt(40) + 1).toLong, f"d_$i%04d", 3, 300)
+    }.toDF("sh", "id", "n", "mx")
     val cap = 8
     def run(bound: Int): (Set[(Long, String)], Long, Long) = {
       val buckets = spark.sparkContext.longAccumulator
       val pairs = spark.sparkContext.longAccumulator
-      val cold = CandidateStage.dropHotBuckets(entries.toDF(), cap, buckets, Some(pairs), bound)
+      val cold = CandidateStage.dropHotBuckets(entries, cap, buckets, Some(pairs), bound)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       (cold, buckets.value, pairs.value)
     }
@@ -82,13 +101,14 @@ class CandidateJoinPropertySpec extends AnyFunSuite {
     assert(coldB == coldS, s"cold sets diverge: ${(coldB -- coldS).take(3)} / ${(coldS -- coldB).take(3)}")
     assert(bB == bS && pB == pS, s"metrics diverge: ($bB,$pB) vs ($bS,$pS)")
     // exact against a driver recount
-    val byBucket = entries.collect().groupBy(_.sh)
+    val rows = entries.as[(Long, String, Int, Int)].collect()
+    val byBucket = rows.groupBy(_._1)
     val wantHot = byBucket.count(_._2.length > cap)
     val wantPairs = byBucket.values.filter(_.length > cap)
       .map(g => g.length.toLong * (g.length - 1) / 2).sum
     assert(bB == wantHot && pB == wantPairs, s"($bB,$pB) != ($wantHot,$wantPairs)")
-    assert(coldB == entries.collect().filter(e => byBucket(e.sh).length <= cap)
-      .map(e => (e.sh, e.id)).toSet)
+    assert(coldB == rows.filter(e => byBucket(e._1).length <= cap)
+      .map(e => (e._1, e._2)).toSet)
   }
 
   test("asymmetric costs: window uses both orientations in the join table") {
@@ -108,9 +128,8 @@ class CandidateJoinPropertySpec extends AnyFunSuite {
         .map(h => (h, t.clip_id, t.n_tokens))
     }
     val want = bruteForce(entries, cfg.shingleDfCap, ec, cfg.threshold)
-    val got = CandidateStage.ngramChannel(TokenizeStage(clips, cfg), cfg,
-      spark.sparkContext.longAccumulator, spark.sparkContext.longAccumulator)
-      .collect().map(cp => (cp.p, cp.c)).toSet
+    val got = ngramPairs(TokenizeStage(clips, cfg), None, cfg,
+      spark.sparkContext.longAccumulator, Some(spark.sparkContext.longAccumulator))
     assert(got == want, s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
   }
 
@@ -148,10 +167,8 @@ class CandidateJoinPropertySpec extends AnyFunSuite {
         if !SuffixIndex.theoreticalRejection(q._3, c._3, cfg.editCosts, cfg.threshold)
       } yield (q._2, c._2)).toSet
 
-      val got = CandidateStage.crossNgramChannel(
-          TokenizeStage(qClips, cfg), TokenizeStage(cClips, cfg), cfg,
-          spark.sparkContext.longAccumulator)
-        .collect().map(cp => (cp.p, cp.c)).toSet
+      val got = ngramPairs(TokenizeStage(qClips, cfg), Some(TokenizeStage(cClips, cfg)), cfg,
+        spark.sparkContext.longAccumulator, None)
       assert(got == want,
         s"trial $trial: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
     }
@@ -170,24 +187,96 @@ class CandidateJoinPropertySpec extends AnyFunSuite {
     val clips = rows.map { case (id, t) =>
       graft.data.Clip(id, Array[Byte](), 16000, 1, "pcm_s16le", t) }.toDS()
     val toks = TokenizeStage(clips, cfg)
-    val bcast = CandidateStage.tinyChannel(toks, cfg, spark.sparkContext.longAccumulator)
-      .collect().map(cp => (cp.p, cp.c)).toSet
+    val bcast = selfTiny(toks, cfg, spark.sparkContext.longAccumulator)
     assert(bcast.nonEmpty, "vacuous tiny-channel fixture")
-    val joined = CandidateStage.tinyChannelJoin(toks, cfg, spark.sparkContext.longAccumulator)
-      .collect().map(cp => (cp.p, cp.c)).toSet
+    val joined = selfTiny(toks, cfg.copy(tinyPatternBroadcastCap = 0),
+      spark.sparkContext.longAccumulator)
     assert(joined == bcast,
       s"missing=${(bcast -- joined).take(5)} extra=${(joined -- bcast).take(5)}")
     // past the broadcast cap the channel must degrade to the join, not throw
-    val auto = CandidateStage.tinyChannel(toks, cfg.copy(tinyPatternBroadcastCap = 1),
-        spark.sparkContext.longAccumulator)
-      .collect().map(cp => (cp.p, cp.c)).toSet
+    val auto = selfTiny(toks, cfg.copy(tinyPatternBroadcastCap = 1),
+      spark.sparkContext.longAccumulator)
     assert(auto == bcast)
     // forced-low gram cap: the valve fires, is COUNTED, and only ever drops
     // pairs (subset of the uncapped truth — never inventions)
     val acc = spark.sparkContext.longAccumulator
-    val capped = CandidateStage.tinyChannelJoin(toks, cfg.copy(shingleDfCap = 1), acc)
-      .collect().map(cp => (cp.p, cp.c)).toSet
+    val capped = selfTiny(toks, cfg.copy(shingleDfCap = 1, tinyPatternBroadcastCap = 0), acc)
     assert(acc.value > 0, "gram cap=1 never triggered — tiny valve dead")
     assert((capped -- bcast).isEmpty, s"capped run invented pairs: ${(capped -- bcast).take(5)}")
+  }
+
+  test("cross pairs over a Q/C split, oriented, equal the self pairs across the split") {
+    import spark.implicits._
+    val rng = new scala.util.Random(4242)
+    // lengths from 1 token: tiny rows (< k) exercise the tiny channel too
+    val rows = (0 until 240).map { i =>
+      val len = 1 + rng.nextInt(14)
+      (f"r_$i%04d", Array.fill(len)(s"w${rng.nextInt(14)}").mkString(" "))
+    }
+    // default symmetric costs; caps no bucket reaches (a self bucket's df
+    // spans Q ∪ C, a cross side's only one table — they agree uncapped)
+    val cfg = DedupConfig(shingleDfCap = 100000, bandDfCap = 100000)
+    def toksOf(rs: Seq[(String, String)]) = TokenizeStage(rs.map { case (id, t) =>
+      graft.data.Clip(id, Array[Byte](), 16000, 1, "pcm_s16le", t) }.toDS(), cfg)
+    val (qRows, cRows) = rows.partition(_ => rng.nextInt(3) == 0)
+    val qIds = qRows.map(_._1).toSet
+    def acc = spark.sparkContext.longAccumulator
+
+    val all = toksOf(rows)
+    val selfAcross = CandidateStage(all, SignatureStage(all, cfg), cfg, acc, acc, acc, acc)
+      .collect().map(cp => (cp.p, cp.c)).filter { case (p, c) => qIds(p) != qIds(c) }.toSet
+    assert(selfAcross.nonEmpty, "vacuous fixture: no self pair crosses the split")
+
+    val (q, c) = (toksOf(qRows), toksOf(cRows))
+    val crossPairs = (CandidateStage.keyedPairs(q, SignatureStage(q, cfg),
+        Some((c, () => SignatureStage(c, cfg))), cfg, acc, None, acc) ++ Seq(
+        CandidateStage.tinyPairs(q, c, cfg, acc, selfDedup = false),
+        CandidateStage.tinyPairs(c, q, cfg, acc, selfDedup = false)))
+      .reduce(_ union _)
+    // the returned lengths are the tokenized lengths of p and c
+    val lens = all.collect().map(t => t.clip_id -> t.n_tokens).toMap
+    val wrongLens = crossPairs.as[(String, String, Int, Int)].collect()
+      .filter { case (p, c, pn, cn) => lens(p) != pn || lens(c) != cn }
+    assert(wrongLens.isEmpty, s"p_n/c_n differ from the tokenized lengths: ${wrongLens.take(5).toSeq}")
+    val got = CandidateStage.oriented(crossPairs).select("p", "c").as[(String, String)]
+      .collect().toSet
+    assert(got.exists { case (p, c) => lens(p) < cfg.shingleK || lens(c) < cfg.shingleK },
+      "vacuous fixture: no tiny-row pair crosses the split")
+    assert(got == selfAcross,
+      s"missing=${(selfAcross -- got).take(5)} extra=${(got -- selfAcross).take(5)}")
+  }
+
+  test("tiny routine with knownTinyCount = 0 starts no Spark job (self and cross forms)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val cfg = DedupConfig()
+    val toks = TokenizeStage(Seq(graft.data.Clip("a", Array[Byte](), 16000, 1, "pcm_s16le",
+      "w1 w2 w3 w4")).toDS(), cfg)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(started.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription("tiny-known-zero")
+      for (self <- Seq(true, false))
+        CandidateStage.tinyPairs(toks, toks, cfg, sc.longAccumulator, selfDedup = self,
+          knownTinyCount = 0L)
+      sc.setJobDescription("tiny-sentinel")
+      spark.range(1).count()
+      // the listener bus delivers in order: once the sentinel job is seen,
+      // every job started before it has been seen too
+      val deadline = System.nanoTime() + 10000000000L
+      while (!started.contains("tiny-sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    assert(started.contains("tiny-sentinel"), "sentinel job never seen — the gate counts nothing")
+    val n = started.toArray.count(_ == "tiny-known-zero")
+    assert(n == 0, s"tiny routine with a known zero tiny count started $n Spark jobs")
   }
 }

@@ -99,8 +99,9 @@ class PlanQualitySpec extends AnyFunSuite {
     val toks = graft.dedup.TokenizeStage(clips, cfg)
     val acc1 = spark.sparkContext.longAccumulator
     val acc2 = spark.sparkContext.longAccumulator
-    val ch = graft.dedup.CandidateStage.ngramChannel(toks, cfg, acc1, acc2)
-    val p = planOf(ch.toDF())
+    val Seq(ch) = graft.dedup.CandidateStage.keyedPairs(toks, graft.dedup.SignatureStage(toks, cfg),
+      None, cfg.copy(useMinhashChannel = false), acc1, Some(acc2), spark.sparkContext.longAccumulator)
+    val p = planOf(ch)
     assert(!p.contains("CartesianProduct"), p.take(2000))
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(2000))
     // the P5 window + orientation live INSIDE an equi-join on sh (codegen),
@@ -134,9 +135,10 @@ class PlanQualitySpec extends AnyFunSuite {
     val cfg = graft.dedup.DedupConfig()
     val qt = graft.dedup.TokenizeStage(queries, cfg)
     val ct = graft.dedup.TokenizeStage(corpus, cfg)
-    val ch = graft.dedup.CandidateStage.crossNgramChannel(qt, ct, cfg,
-      spark.sparkContext.longAccumulator)
-    val p = planOf(ch.toDF())
+    val Seq(ch) = graft.dedup.CandidateStage.keyedPairs(qt, graft.dedup.SignatureStage(qt, cfg),
+      Some((ct, () => graft.dedup.SignatureStage(ct, cfg))), cfg.copy(useMinhashChannel = false),
+      spark.sparkContext.longAccumulator, None, spark.sparkContext.longAccumulator)
+    val p = planOf(ch)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       p.take(2000))
     assert(p.contains("HashJoin") || p.contains("SortMergeJoin"), p.take(2000))
