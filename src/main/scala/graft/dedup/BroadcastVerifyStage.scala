@@ -17,51 +17,61 @@ import graft.kernel.{Doc, Matcher, SuffixIndex}
   */
 object BroadcastVerifyStage {
 
+  /** One cached build: the sorted suffix-array index over a broadcast's
+    * rows, and the per-word document frequency (A3 sfreq, for the IDF
+    * penalty vector), built on the first call that needs it — one broadcast
+    * may serve an idf-free top-k job and then a subsequence job that needs
+    * df. */
+  private final class Built(val index: SuffixIndex, val docs: Array[Doc], val rows: Array[TokRow]) {
+    var df: scala.collection.mutable.LongMap[Int] = null
+  }
+
   /** Executor-side per-JVM index cache, keyed by broadcast id. Bounded
     * LRU with capacity TWO: one slot for a long-lived index (e.g. a
-    * streaming retrieval query reusing its corpus every micro-batch) plus
-    * one for a concurrently running batch job — interleaved tasks of two
-    * different broadcasts each build once instead of thrashing, while a
-    * long-lived JVM (the bench loop) still never accumulates more than two
-    * (index + docs + rows) graphs. Concurrent tasks of the SAME run
-    * serialize on the monitor and reuse the first build. */
+    * streaming retrieval query reusing its corpus every micro-batch, or a
+    * caller-cached corpus served to many match jobs) plus one for a
+    * concurrently running batch job — interleaved tasks of two different
+    * broadcasts each build once instead of thrashing, while a long-lived
+    * JVM (the bench loop) still never accumulates more than two (index +
+    * docs + rows) graphs. Concurrent tasks of the SAME run serialize on the
+    * monitor and reuse the first build. */
   private val cache =
-    new java.util.LinkedHashMap[
-      Long, (SuffixIndex, Array[Doc], Array[TokRow], scala.collection.mutable.LongMap[Int])](
-      16, 0.75f, /* accessOrder = */ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Long, (SuffixIndex, Array[Doc], Array[TokRow], scala.collection.mutable.LongMap[Int])]): Boolean =
-        size() > 2
+    new java.util.LinkedHashMap[Long, Built](16, 0.75f, /* accessOrder = */ true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Long, Built]): Boolean = size() > 2
     }
 
+  /** `(index, docs, rows, df)` for a broadcast; `df` is empty unless
+    * `needDf`. */
   private[dedup] def indexFor(bcId: Long, rows: Array[TokRow], needDf: Boolean)
       : (SuffixIndex, Array[Doc], Array[TokRow], scala.collection.mutable.LongMap[Int]) =
     cache.synchronized {
-      val hit = cache.get(bcId)
-      if (hit != null) hit
-      else {
+      var built = cache.get(bcId)
+      if (built == null) {
         val index = new SuffixIndex
         val docs = new Array[Doc](rows.length)
-        // per-word document frequency (A3 sfreq) for the IDF penalty vector
-        val df = scala.collection.mutable.LongMap.empty[Int]
-        val seen = new java.util.HashSet[java.lang.Long]()
         var i = 0
         while (i < rows.length) {
           index.add(rows(i).ids)
           docs(i) = Doc(rows(i).ids, rows(i).reals, rows(i).itoks)
-          if (needDf) {
-            seen.clear()
-            rows(i).ids.foreach { id =>
-              if (seen.add(id)) df(id) = df.getOrElse(id, 0) + 1
-            }
-          }
           i += 1
         }
         index.sort() // eagerly, before publication — lookups are then read-only
-        val built = (index, docs, rows, df)
+        built = new Built(index, docs, rows)
         cache.put(bcId, built) // LRU bound (capacity 2) evicts the eldest
-        built
       }
+      if (needDf && built.df == null) {
+        val df = scala.collection.mutable.LongMap.empty[Int]
+        val seen = new java.util.HashSet[java.lang.Long]()
+        built.rows.foreach { r =>
+          seen.clear()
+          r.ids.foreach { id =>
+            if (seen.add(id)) df(id) = df.getOrElse(id, 0) + 1
+          }
+        }
+        built.df = df
+      }
+      (built.index, built.docs, built.rows,
+        if (built.df == null) scala.collection.mutable.LongMap.empty[Int] else built.df)
     }
 
   def apply(toks: Dataset[TokRow], cfg: DedupConfig): Dataset[Edge] = {

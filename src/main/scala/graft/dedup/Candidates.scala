@@ -36,9 +36,14 @@ final case class CandPair(p: String, c: String)
   * two cold entry sides (sh, id, n, window columns) equi-joined on the
   * bucket hash with a length predicate as integer join conditions, emitting
   * (p, c, p_n, c_n) with ids in whatever type the entries carry. The self
-  * join is its R ⋈ R case — the same cold exchange on both sides, predicate
+  * join is its R ⋈ R case — the same cold entries on both sides, predicate
   * [[selfWindow]] (orientation + the pattern's P5 upper bound); the cross
   * join is Q ⋈ C with [[crossWindow]] (the query's two-sided P5 window).
+  * The self-join plan does NOT share one exchange between its sides (Spark
+  * 4.1.2): the predicate reads `mx` only from the a side, so the b side's
+  * projection prunes it, the two sides' exchanges differ and no
+  * ReusedExchange happens — each channel builds two exchanges, and AQE then
+  * broadcasts the b side.
   * Before the join, [[dropHotBuckets]] anti-joins away (and counts) hot
   * buckets on each side. Whole-stage codegen end to end — no typed
   * groupByKey, no per-group object arrays; measured ~4× faster than the
@@ -319,9 +324,9 @@ object CandidateStage {
   }
 
   /** [[dropHotBuckets]] per side, then [[bucketJoin]]. `b = None` is the
-    * self-join: both join sides read the SAME cold exchange, so the plan
-    * shuffles the entries once. `aHot`/`bHot`: the sides' hot keys already
-    * computed by [[batchedHotStats]]. */
+    * self-join: both join sides read the same cold entries (the plan still
+    * builds one exchange per side — see the object doc). `aHot`/`bHot`: the
+    * sides' hot keys already computed by [[batchedHotStats]]. */
   def bucketPairs(
       a: DataFrame,
       b: Option[DataFrame],

@@ -1,6 +1,9 @@
 package graft.dedup
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.CachedData
+import org.apache.spark.storage.StorageLevel
 import graft.data.Clip
 import graft.kernel.{Doc, Hashing, Matcher}
 import graft.text.Tokenizer
@@ -31,7 +34,9 @@ final case class SubseqRow(
   * the query table — embarrassingly parallel, no shuffle at all; the only
   * exchange in the whole plan is the corpus collect+broadcast). The corpus
   * index is built once per executor JVM and cached by broadcast id
-  * (2-entry LRU, shared with [[BroadcastVerifyStage]]).
+  * (2-entry LRU, shared with [[BroadcastVerifyStage]]); a caller-cached
+  * corpus keeps one broadcast for as long as it stays cached (see
+  * [[topkIndexed]]).
   *
   * Scale envelope: the corpus must fit in executor memory (the same
   * condition as the reference's in-RAM `.fmi` index and as
@@ -57,19 +62,73 @@ object FuzzyRetrieval {
     // a caller-cached index (loadIndex(...).cache() serving many match jobs)
     // must stay cached — Spark unpersist is not refcounted, so only a cache
     // WE created here may be released in the finally
-    val callerCached = corpusToks.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val callerCached = corpusToks.storageLevel != StorageLevel.NONE
     val toks = if (callerCached) corpusToks else corpusToks.persist()
     try {
       // rows + exact estimated bytes in ONE job (r6 — was count + sample)
       val (n, estBytes) = DedupPipeline.tokStats(toks)
-      require(n <= cfg.broadcastMaxRows,
-        s"corpus has $n indexable rows > broadcastMaxRows ${cfg.broadcastMaxRows}: " +
-          "use FuzzyRetrieval.topkShuffle (the beyond-memory path)")
-      require(estBytes <= cfg.broadcastMaxBytes,
-        s"corpus estimated at $estBytes tokenized bytes > broadcastMaxBytes " +
-          s"${cfg.broadcastMaxBytes}: use FuzzyRetrieval.topkShuffle (the beyond-memory path)")
+      requireEnvelope(n, estBytes, cfg)
       toks.collect()
     } finally if (!callerCached) toks.unpersist()
+  }
+
+  private def requireEnvelope(n: Long, estBytes: Long, cfg: DedupConfig): Unit = {
+    require(n <= cfg.broadcastMaxRows,
+      s"corpus has $n indexable rows > broadcastMaxRows ${cfg.broadcastMaxRows}: " +
+        "use FuzzyRetrieval.topkShuffle (the beyond-memory path)")
+    require(estBytes <= cfg.broadcastMaxBytes,
+      s"corpus estimated at $estBytes tokenized bytes > broadcastMaxBytes " +
+        s"${cfg.broadcastMaxBytes}: use FuzzyRetrieval.topkShuffle (the beyond-memory path)")
+  }
+
+  /** Served broadcast indexes: one `(rows, estimated bytes, broadcast)` per
+    * caller-cached corpus, keyed on the IDENTITY of the corpus's Spark cache
+    * entry (the CachedData whose InMemoryRelation `Dataset.storageLevel`
+    * reads) and held weakly. `unpersist`, or a re-`cache()` of changed data,
+    * removes or replaces that entry, so it always misses; an entry whose
+    * cache entry is gone is dropped on the next call and its broadcast is
+    * left to the ContextCleaner. */
+  private final case class Served(cacheEntry: java.lang.ref.WeakReference[CachedData], n: Long,
+      estBytes: Long, bc: Broadcast[Array[TokRow]])
+  private val served = scala.collection.mutable.ArrayBuffer.empty[Served]
+
+  /** The broadcast index of `corpusToks` for the broadcast-path match jobs.
+    * A caller-cached corpus is a snapshot: the first call collects and
+    * broadcasts it, and every later call on the same cache entry reuses
+    * that broadcast (and the executors' suffix-array index built from it),
+    * so a repeated match job runs only its query scan. An uncached corpus
+    * is guarded, collected and broadcast on every call. The envelope guard
+    * is re-checked against each call's `cfg`, memo hit or not. */
+  private def servedIndex(corpusToks: Dataset[TokRow], cfg: DedupConfig): Broadcast[Array[TokRow]] = {
+    val sc = corpusToks.sparkSession.sparkContext
+    val cached = corpusToks match {
+      case ds: org.apache.spark.sql.classic.Dataset[_] =>
+        ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+          .filter(_.cachedRepresentation.cacheBuilder.storageLevel != StorageLevel.NONE)
+          .map(cd => (ds.sparkSession, cd))
+      case _ => None
+    }
+    cached match {
+      case None => sc.broadcast(collectGuarded(corpusToks, cfg))
+      case Some((session, entry)) =>
+        def live(cd: CachedData) =
+          session.sharedState.cacheManager.lookupCachedData(session, cd.plan).exists(_ eq cd)
+        val hit = served.synchronized {
+          served.filterInPlace(s => Option(s.cacheEntry.get).exists(live))
+          served.find(_.cacheEntry.get eq entry)
+        }
+        hit match {
+          case Some(h) =>
+            requireEnvelope(h.n, h.estBytes, cfg)
+            h.bc
+          case None =>
+            val (n, estBytes) = DedupPipeline.tokStats(corpusToks)
+            requireEnvelope(n, estBytes, cfg)
+            val bc = sc.broadcast(corpusToks.collect())
+            served.synchronized(served += Served(new java.lang.ref.WeakReference(entry), n, estBytes, bc))
+            bc
+        }
+    }
   }
 
   /** Top-k fuzzy match of every query row against the corpus.
@@ -94,7 +153,15 @@ object FuzzyRetrieval {
 
   /** [[topk]] against a PREBUILT tokenized index (from [[loadIndex]] or any
     * TokRow dataset) — repeated match jobs skip the corpus TokenizeStage,
-    * the reference's index/match job split. */
+    * the reference's index/match job split.
+    *
+    * Served-index contract: a caller-cached `corpusToks`
+    * (`loadIndex(...).cache()`) is served as a SNAPSHOT — the first call
+    * collects and broadcasts it, and every later broadcast-path call on the
+    * same cache entry reuses that broadcast and the executors' index, so it
+    * runs only the query scan. `unpersist` releases the snapshot: the next
+    * call on a re-cached corpus (e.g. after [[appendIndex]]) indexes the
+    * new data. An uncached corpus is collected and broadcast per call. */
   def topkIndexed(
       queries: Dataset[Clip],
       corpusToks: Dataset[TokRow],
@@ -107,8 +174,7 @@ object FuzzyRetrieval {
     val spark = queries.sparkSession
     import spark.implicits._
 
-    val corpusRows = collectGuarded(corpusToks, cfg)
-    val bc = spark.sparkContext.broadcast(corpusRows)
+    val bc = servedIndex(corpusToks, cfg)
     val bcId = bc.id
 
     val params = Matcher.Params(
@@ -381,7 +447,9 @@ object FuzzyRetrieval {
       noPerfect, idfWeighting)
 
   /** [[subsequence]] against a PREBUILT tokenized index — see
-    * [[topkIndexed]]. */
+    * [[topkIndexed]], whose served-index contract applies here too (a
+    * cached corpus is a snapshot shared by both operations; `unpersist`
+    * releases it). */
   def subsequenceIndexed(
       queries: Dataset[Clip],
       corpusToks: Dataset[TokRow],
@@ -392,8 +460,7 @@ object FuzzyRetrieval {
     val spark = queries.sparkSession
     import spark.implicits._
 
-    val corpusRows = collectGuarded(corpusToks, cfg)
-    val bc = spark.sparkContext.broadcast(corpusRows)
+    val bc = servedIndex(corpusToks, cfg)
     val bcId = bc.id
     val pt = cfg.pt
     val minSubseqLength = cfg.minSubseqLength
@@ -812,7 +879,11 @@ object FuzzyRetrieval {
   // configs to agree (README.md:18), enforced loudly at load.
   // ------------------------------------------------------------------
 
-  private val indexMetaVersion = 2
+  /** Meta layout version: 1 = count-based segments, 2 = named segments +
+    * `next`, 3 = adds `retired` (segments kept for the grace window). A
+    * binary reads every version up to its own and rejects newer ones, so a
+    * v2 binary cannot compact a v3 index and sweep its retired segments. */
+  private val indexMetaVersion = 3
 
   /** Parsed `index_meta.json`. `names` = the committed token-table segments
     * in commit order — the meta is the atomic commit pointer for appends

@@ -196,17 +196,19 @@ object IncrementalDedup {
       rowsOut
     }
 
-    val priorClusters = {
+    // the prior-state table reads start Spark jobs (parquet schema
+    // inference), so they carry a phase label too
+    val (priorClusters, oldToks, oldAudioFps, oldCtFps) = phased("prior_state") {
       val last = priorDirs.last
-      readIf(spark, last, "clusters").getOrElse(
+      val clusters = readIf(spark, last, "clusters").getOrElse(
         sys.error(s"no committed clusters table under $last — prior state incomplete")).as[ClusterRow]
+      // constructing these validates the chain EAGERLY (readIf checks table
+      // existence per dir), so a chain bootstrapped without the audio
+      // channels fails here — before any batch work — not after verify
+      (clusters, accumulatedToks(spark, priorDirs),
+        if (cfg.useAudioChannel) Some(accumulatedAudioFps(spark, priorDirs)) else None,
+        if (cfg.useAudioContainment) Some(accumulatedAudioCtFps(spark, priorDirs)) else None)
     }
-    val oldToks = accumulatedToks(spark, priorDirs)
-    // constructing these validates the chain EAGERLY (readIf checks table
-    // existence per dir), so a chain bootstrapped without the audio
-    // channels fails here — before any batch work — not after verify
-    val oldAudioFps = if (cfg.useAudioChannel) Some(accumulatedAudioFps(spark, priorDirs)) else None
-    val oldCtFps = if (cfg.useAudioContainment) Some(accumulatedAudioCtFps(spark, priorDirs)) else None
 
     val newIds = newClips.select($"clip_id")
     // count(lit(1)) counts every row while count/count_distinct(col) skip
@@ -325,8 +327,10 @@ object IncrementalDedup {
     val cappedTinyGramBuckets = sc.longAccumulator("incCappedTinyGramBuckets")
 
     // new↔new: the pipeline's own self-join channels, restricted to the batch
-    val selfCands = CandidateStage(newToks, newSigs, cfg, cappedShingleBuckets,
-      cappedShinglePairs, cappedBandBuckets, cappedTinyGramBuckets, knownTinyCount = nTinyNew)
+    // (the batched hot-bucket stats job runs eagerly, inside this call)
+    val selfCands = phased("inc_candidates")(CandidateStage(newToks, newSigs, cfg,
+      cappedShingleBuckets, cappedShinglePairs, cappedBandBuckets, cappedTinyGramBuckets,
+      knownTinyCount = nTinyNew))
     // new↔old: cross channels; the keyed ones probe only the frontier (with
     // fixed caps all four side valves share ONE batched hot-key stats job),
     // the tiny containment scans run against the FULL old side (both
@@ -335,13 +339,14 @@ object IncrementalDedup {
     // so orienting the pairs like the self-join channels (pattern = shorter
     // side — the laxer min-subsequence requirement; the symmetric-cost dup
     // decision is direction-free only under this orientation) is a pure
-    // projection.
+    // projection. The old→new tiny channel counts the old side eagerly, so
+    // the whole construction runs under the phase label.
     val crossPairs = phased("inc_candidates")(CandidateStage.keyedPairs(newToks, newSigs,
       Some((frontierToks, () => frontierSigs)), cfg, cappedShingleBuckets, None,
-      cappedBandBuckets)) ++ Seq(
+      cappedBandBuckets) ++ Seq(
       CandidateStage.tinyPairs(newToks, oldToks, cfg, cappedTinyGramBuckets,
         selfDedup = false, knownTinyCount = nTinyNew),
-      CandidateStage.tinyPairs(oldToks, newToks, cfg, cappedTinyGramBuckets, selfDedup = false))
+      CandidateStage.tinyPairs(oldToks, newToks, cfg, cappedTinyGramBuckets, selfDedup = false)))
     val oriented = CandidateStage.oriented(crossPairs.reduce(_ union _))
       .select("p", "c").as[CandPair]
     var cands: Dataset[CandPair] = null
@@ -488,7 +493,7 @@ object IncrementalDedup {
     val clusters = updatedOld.union(newAssignments)
 
     // ---- commit (immutable increment dir; clusters written LAST) ----
-    outDir.foreach { dir =>
+    outDir.foreach(dir => phased("commit") {
       graft.data.TableIO.write(newToks.toDF(), s"$dir/new_tokens")
       graft.data.TableIO.write(newSigs.toDF(), s"$dir/new_signatures")
       if (newFps != null)
@@ -500,7 +505,7 @@ object IncrementalDedup {
       metrics ++= Metrics.perPartition("new_edges", newEdges)
       graft.data.TableIO.write(metrics.toSeq.toDS().toDF(), s"$dir/metrics")
       graft.data.TableIO.write(clusters.toDF(), s"$dir/clusters")
-    }
+    })
     // no unpersists: the checkpointed blocks back the returned datasets and
     // are batch-sized; the ContextCleaner reclaims them once unreferenced
     IncrementalResult(clusters, newEdges, mergedLabelsCk, metrics.toSeq)

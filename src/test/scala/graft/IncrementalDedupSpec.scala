@@ -217,6 +217,18 @@ class IncrementalDedupSpec extends AnyFunSuite {
         "discipline (eager localCheckpoint per O(new) intermediate) has regressed")
   }
 
+  test("every Spark job an increment starts carries an inc: phase label, commit included") {
+    import spark.implicits._
+    val base = freshDir("label-base")
+    DedupPipeline.run(oldClips.toDS(), cfg, Some(base))
+    val (_, jobs) = JobLog.of(spark)(
+      IncrementalDedup.run(newClips.toDS(), Seq(base), cfg, Some(freshDir("label-inc"))))
+    assert(jobs.size > 10, s"only ${jobs.size} jobs seen — the gate counts nothing")
+    val unlabeled = jobs.filterNot(_._1.startsWith("inc:"))
+    assert(unlabeled.isEmpty,
+      s"${unlabeled.size} of ${jobs.size} increment jobs carry no inc: label: ${unlabeled.mkString("; ")}")
+  }
+
   test("audio channels incremental == full: committed fingerprints carry the audio state") {
     import spark.implicits._
     def structured(seed: Long, n: Int): Array[Short] =

@@ -31,6 +31,13 @@ class RetrievalIndexSpec extends AnyFunSuite {
   private def rows(ds: org.apache.spark.sql.Dataset[graft.dedup.RetrievalRow]) =
     ds.collect().map(r => (r.query_id, r.rank, r.s_id, r.score, r.max_subseq)).toSet
 
+  private def subRows(ds: org.apache.spark.sql.Dataset[graft.dedup.SubseqRow]) =
+    ds.collect().map(r => (r.query_id, r.s_id, r.score, r.max_subseq, r.subseq_surface)).toSet
+
+  private def clipsOf(ss: Seq[String]): Seq[Clip] = ss.zipWithIndex.map { case (s, i) =>
+    Clip((i + 1).toString, Array.emptyByteArray, 16000, 0, "pcm_s16le", s)
+  }
+
   test("index round-trip: match from the saved index, corpus deleted, results identical") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("retr-idx").toString
@@ -245,5 +252,105 @@ class RetrievalIndexSpec extends AnyFunSuite {
     assert(idx.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
       "shuffle-path match job evicted the caller's index cache")
     idx.unpersist()
+  }
+
+  test("served index: a cached index answers its second topkIndexed with ONE job, same rows") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("retr-idx-served").toString
+    FuzzyRetrieval.saveIndex(clipsOf(sents).toDS(), cfg, tmp)
+    val idx = FuzzyRetrieval.loadIndex(spark, tmp, cfg).cache()
+    idx.count()
+    val queries = Seq(Clip("q", Array.emptyByteArray, 16000, 0, "pcm_s16le", "aa bb cc dd")).toDS()
+    val first = rows(FuzzyRetrieval.topkIndexed(queries, idx, cfg, 5))
+    val (second, jobs) = JobLog.of(spark)(rows(FuzzyRetrieval.topkIndexed(queries, idx, cfg, 5)))
+    assert(first.nonEmpty && second == first, s"reused index diverged: $second vs $first")
+    assert(jobs.size == 1,
+      s"second call on a cached index started ${jobs.size} jobs, want 1 (the query scan): $jobs")
+    idx.unpersist()
+  }
+
+  test("served index: an uncached index is guarded, collected and broadcast on every call") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("retr-idx-uncached").toString
+    FuzzyRetrieval.saveIndex(clipsOf(sents).toDS(), cfg, tmp)
+    val idx = FuzzyRetrieval.loadIndex(spark, tmp, cfg)
+    val queries = Seq(Clip("q", Array.emptyByteArray, 16000, 0, "pcm_s16le", "aa bb cc dd")).toDS()
+    // the guard's own persist (materialized as a table-cache query stage
+    // under AQE), tokStats (2 jobs), collect, query scan
+    for (i <- 1 to 2) {
+      val (_, jobs) = JobLog.of(spark)(rows(FuzzyRetrieval.topkIndexed(queries, idx, cfg, 5)))
+      assert(jobs.size == 5, s"call $i on an uncached index started ${jobs.size} jobs, want 5")
+    }
+    assert(idx.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
+  test("served index: topkIndexed then subsequenceIndexed on one cached index builds df on need") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("retr-idx-df").toString
+    val clips = clipsOf(sents)
+    FuzzyRetrieval.saveIndex(clips.toDS(), cfg, tmp)
+    val idx = FuzzyRetrieval.loadIndex(spark, tmp, cfg).cache()
+    val queries = Seq(Clip("q", Array.emptyByteArray, 16000, 0, "pcm_s16le", "aa bb cc dd")).toDS()
+    assert(cfg.vocabIdfPenalty == 0f) // the top-k call builds the index without df
+    assert(rows(FuzzyRetrieval.topkIndexed(queries, idx, cfg, 5)).nonEmpty)
+    val want = subRows(FuzzyRetrieval.subsequence(queries, clips.toDS(), cfg, 5))
+    val got = subRows(FuzzyRetrieval.subsequenceIndexed(queries, idx, cfg, 5))
+    assert(want.nonEmpty && got == want, s"subsequence on the served index: $got vs $want")
+    idx.unpersist()
+  }
+
+  test("served index: unpersist releases the snapshot; a re-cached appended index is served") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("retr-idx-recache").toString
+    FuzzyRetrieval.saveIndex(
+      Seq(Clip("1", Array.emptyByteArray, 16000, 0, "pcm_s16le", "aa bb cc dd")).toDS(), cfg, tmp)
+    val queries = Seq(Clip("q", Array.emptyByteArray, 16000, 0, "pcm_s16le", "aa bb cc dd")).toDS()
+    val idx = FuzzyRetrieval.loadIndex(spark, tmp, cfg).cache()
+    assert(rows(FuzzyRetrieval.topkIndexed(queries, idx, cfg, 5)).map(_._3) == Set("1"))
+    idx.unpersist()
+    FuzzyRetrieval.appendIndex(
+      Seq(Clip("9", Array.emptyByteArray, 16000, 0, "pcm_s16le", "aa bb cc ee")).toDS(), cfg, tmp)
+    val idx2 = FuzzyRetrieval.loadIndex(spark, tmp, cfg).cache()
+    assert(rows(FuzzyRetrieval.topkIndexed(queries, idx2, cfg, 5)).map(_._3) == Set("1", "9"),
+      "a re-cached index after an append served the stale snapshot")
+    idx2.unpersist()
+  }
+
+  test("served index: a memo hit re-checks the envelope against the call's cfg") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("retr-idx-guard").toString
+    FuzzyRetrieval.saveIndex(clipsOf(sents).toDS(), cfg, tmp)
+    val idx = FuzzyRetrieval.loadIndex(spark, tmp, cfg).cache()
+    val n = idx.count()
+    val queries = Seq(Clip("q", Array.emptyByteArray, 16000, 0, "pcm_s16le", "aa bb cc dd")).toDS()
+    assert(rows(FuzzyRetrieval.topkIndexed(queries, idx, cfg, 5)).nonEmpty)
+    val (e, jobs) = JobLog.of(spark)(intercept[IllegalArgumentException] {
+      FuzzyRetrieval.topkIndexed(queries, idx, cfg.copy(broadcastMaxRows = n - 1), 5)
+    })
+    assert(e.getMessage.contains("use FuzzyRetrieval.topkShuffle"), e.getMessage)
+    assert(jobs.isEmpty, s"the guard on a memo hit started ${jobs.size} jobs — not a memo hit")
+    idx.unpersist()
+  }
+
+  test("index meta: a v2 meta without 'retired' loads; a newer version is rejected") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("retr-idx-meta").toString
+    FuzzyRetrieval.saveIndex(clipsOf(sents).toDS(), cfg, tmp)
+    val queries = Seq(Clip("q", Array.emptyByteArray, 16000, 0, "pcm_s16le", "aa bb cc dd")).toDS()
+    val want = rows(FuzzyRetrieval.topkIndexed(queries, FuzzyRetrieval.loadIndex(spark, tmp, cfg), cfg, 5))
+    def writeMeta(version: Int, retired: String): Unit = {
+      java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "index_meta.json"),
+        (s"""{"version":$version,"pt":${cfg.pt},"maxTokensInPattern":${cfg.maxTokensInPattern},""" +
+          s""""segments":1,"names":["toks"],"next":1$retired}""")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      new java.io.File(tmp, ".index_meta.json.crc").delete() // stale local-fs checksum
+    }
+    writeMeta(2, "")
+    val m = FuzzyRetrieval.readIndexMeta(spark, tmp)
+    assert(m.version == 2 && m.retired.isEmpty && m.names == Seq("toks"))
+    assert(rows(FuzzyRetrieval.topkIndexed(queries, FuzzyRetrieval.loadIndex(spark, tmp, cfg), cfg, 5)) == want)
+    writeMeta(4, ""","retired":[]""")
+    val e = intercept[IllegalArgumentException](FuzzyRetrieval.loadIndex(spark, tmp, cfg))
+    assert(e.getMessage.contains("this engine reads <= 3"), e.getMessage)
   }
 }
