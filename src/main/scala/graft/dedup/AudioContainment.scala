@@ -70,6 +70,11 @@ object AudioContainment {
       clip_id: String, n_frames: Int, head: Array[Float], renv: Array[Float],
       keys: Array[Long], poss: Array[Int])
 
+  /** Estimated bytes of one [[AudioCtRow]], the broadcast envelope's byte measure. */
+  def fpBytes: org.apache.spark.sql.Column =
+    size(col("renv")) * 4 + size(col("head")) * 4 + size(col("keys")) * 8 +
+      size(col("poss")) * 4 + 64
+
   /** Narrow fingerprint pass (defaults sized like [[AudioDedup]]: 1 ms
     * frames for the 10–50 ms synth clips; real speech would use 20–30 ms
     * frames, where 2048 envelope frames cover ~50 s of audio). */

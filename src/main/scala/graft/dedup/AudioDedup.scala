@@ -1,7 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, size}
 import org.apache.spark.util.LongAccumulator
 import graft.data.Clip
 import graft.kernel.Hashing
@@ -54,6 +54,10 @@ object AudioDedup {
     * matter the clip duration. */
   final case class AudioFpRow(
       clip_id: String, n_frames: Int, head: Array[Float], env: Array[Float], chunks: Array[Long])
+
+  /** Estimated bytes of one [[AudioFpRow]], the broadcast envelope's byte measure. */
+  def fpBytes: org.apache.spark.sql.Column =
+    size(col("head")) * 4 + size(col("env")) * 4 + size(col("chunks")) * 8 + 64
 
   /** Bins of the whole-clip envelope sketch. */
   val envBins = 64
@@ -234,34 +238,6 @@ object AudioDedup {
       .localCheckpoint(true)
     fpsP.unpersist()
     edges
-  }
-
-  /** Driver-built chunk inverted index over fingerprint rows, keyed by ROW
-    * POSITION (duplicate clip_ids stay distinct — TM semantics); hot chunk
-    * buckets dropped AND counted (the shared valve discipline). Returns
-    * (index, cappedBucketCount). Shared by the stream-static edge operator
-    * (index = corpus, probe = arriving clips) and incremental dedup
-    * (index = the NEW batch, probe = a narrow scan of the stored old
-    * fingerprints — the scalable orientation: the broadcast side is always
-    * the bounded one). */
-  def buildChunkIndex(rows: Array[AudioFpRow], bucketCap: Int): (java.util.HashMap[Long, Array[Int]], Long) = {
-    val chunkMap = new java.util.HashMap[Long, Array[Int]](rows.length * 2)
-    var capped = 0L
-    val builder = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Int]]()
-    var i = 0
-    while (i < rows.length) {
-      rows(i).chunks.foreach { h =>
-        var buf = builder.get(h)
-        if (buf == null) { buf = new scala.collection.mutable.ArrayBuffer[Int]; builder.put(h, buf) }
-        buf += i
-      }
-      i += 1
-    }
-    builder.forEach { (key, buf) =>
-      if (buf.length > bucketCap) capped += 1
-      else chunkMap.put(key, buf.toArray)
-    }
-    (chunkMap, capped)
   }
 
   /** Probe ONE fingerprint against a chunk index: chunk-hash candidate

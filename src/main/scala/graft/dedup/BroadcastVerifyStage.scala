@@ -1,7 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.Dataset
-import graft.kernel.{Doc, Matcher, SuffixIndex}
+import graft.kernel.{Doc, Matcher}
 
 /** Broadcast fast path: the reference's own architecture — ONE global
   * suffix-array index shared read-only by every worker, rows matched
@@ -10,101 +10,36 @@ import graft.kernel.{Doc, Matcher, SuffixIndex}
   * the reference's (the global index IS the candidate generator), so no LSH
   * approximation is involved.
   *
-  * Used when the tokenized corpus fits in executor memory
-  * (DedupConfig.broadcastMaxRows); the three-stage LSH pipeline is the
-  * beyond-memory path. The index is built once per executor JVM and cached
-  * by broadcast id.
+  * Used when the tokenized corpus fits in executor memory (the pipeline's
+  * [[BroadcastCorpus.fits]] decision); the three-stage LSH pipeline is the
+  * beyond-memory path. [[BroadcastCorpus]] owns the broadcast and the
+  * executor index, built once per executor JVM and cached by broadcast id.
   */
 object BroadcastVerifyStage {
-
-  /** One cached build: the sorted suffix-array index over a broadcast's
-    * rows, and the per-word document frequency (A3 sfreq, for the IDF
-    * penalty vector), built on the first call that needs it — one broadcast
-    * may serve an idf-free top-k job and then a subsequence job that needs
-    * df. */
-  private final class Built(val index: SuffixIndex, val docs: Array[Doc], val rows: Array[TokRow]) {
-    var df: scala.collection.mutable.LongMap[Int] = null
-  }
-
-  /** Executor-side per-JVM index cache, keyed by broadcast id. Bounded
-    * LRU with capacity TWO: one slot for a long-lived index (e.g. a
-    * streaming retrieval query reusing its corpus every micro-batch, or a
-    * caller-cached corpus served to many match jobs) plus one for a
-    * concurrently running batch job — interleaved tasks of two different
-    * broadcasts each build once instead of thrashing, while a long-lived
-    * JVM (the bench loop) still never accumulates more than two (index +
-    * docs + rows) graphs. Concurrent tasks of the SAME run serialize on the
-    * monitor and reuse the first build. */
-  private val cache =
-    new java.util.LinkedHashMap[Long, Built](16, 0.75f, /* accessOrder = */ true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[Long, Built]): Boolean = size() > 2
-    }
-
-  /** `(index, docs, rows, df)` for a broadcast; `df` is empty unless
-    * `needDf`. */
-  private[dedup] def indexFor(bcId: Long, rows: Array[TokRow], needDf: Boolean)
-      : (SuffixIndex, Array[Doc], Array[TokRow], scala.collection.mutable.LongMap[Int]) =
-    cache.synchronized {
-      var built = cache.get(bcId)
-      if (built == null) {
-        val index = new SuffixIndex
-        val docs = new Array[Doc](rows.length)
-        var i = 0
-        while (i < rows.length) {
-          index.add(rows(i).ids)
-          docs(i) = Doc(rows(i).ids, rows(i).reals, rows(i).itoks)
-          i += 1
-        }
-        index.sort() // eagerly, before publication — lookups are then read-only
-        built = new Built(index, docs, rows)
-        cache.put(bcId, built) // LRU bound (capacity 2) evicts the eldest
-      }
-      if (needDf && built.df == null) {
-        val df = scala.collection.mutable.LongMap.empty[Int]
-        val seen = new java.util.HashSet[java.lang.Long]()
-        built.rows.foreach { r =>
-          seen.clear()
-          r.ids.foreach { id =>
-            if (seen.add(id)) df(id) = df.getOrElse(id, 0) + 1
-          }
-        }
-        built.df = df
-      }
-      (built.index, built.docs, built.rows,
-        if (built.df == null) scala.collection.mutable.LongMap.empty[Int] else built.df)
-    }
 
   def apply(toks: Dataset[TokRow], cfg: DedupConfig): Dataset[Edge] = {
     val spark = toks.sparkSession
     import spark.implicits._
 
-    val corpus = toks.collect()
     // DEDUP id-uniqueness contract, enforced once on the driver before
     // broadcasting (cluster identity IS the clip_id — a duplicate would
     // silently merge two rows' identities). The cogroup strategy enforces
     // the same contract in its salted groups, so both dedup paths fail
     // loudly on identical input. Deliberately NOT enforced for retrieval
-    // (FuzzyRetrieval shares the index builder below): the reference TM
+    // (FuzzyRetrieval shares the executor index): the reference TM
     // tolerates duplicate external ids — both rows are indexed and both can
-    // match.
-    val ids = new java.util.HashSet[String](corpus.length * 2)
-    corpus.foreach { r =>
-      if (!ids.add(r.clip_id))
-        throw new IllegalStateException(
-          s"duplicate clip_id '${r.clip_id}' in the corpus — clip ids must be unique")
+    // match. No envelope job: the pipeline has already decided.
+    val bc = BroadcastCorpus.broadcastUnguarded(toks) { corpus =>
+      val ids = new java.util.HashSet[String](corpus.length * 2)
+      corpus.foreach { r =>
+        if (!ids.add(r.clip_id))
+          throw new IllegalStateException(
+            s"duplicate clip_id '${r.clip_id}' in the corpus — clip ids must be unique")
+      }
+      corpus
     }
-    val bc = spark.sparkContext.broadcast(corpus)
-    val bcId = bc.id
 
-    val params = Matcher.Params(
-      fuzzy = cfg.threshold,
-      numberOfMatches = 0,
-      noPerfect = false,
-      minSubseqLength = cfg.minSubseqLength,
-      minSubseqRatio = cfg.minSubseqRatio,
-      vocabIdfPenalty = cfg.vocabIdfPenalty,
-      editCosts = cfg.editCosts,
-      maxTokensInPattern = cfg.maxTokensInPattern)
+    val params = cfg.matchParams(numberOfMatches = 0, noPerfect = false)
     val useIdf = cfg.vocabIdfPenalty != 0f
 
     // with symmetric insert/delete costs and no idf the pair decision is
@@ -116,7 +51,7 @@ object BroadcastVerifyStage {
     val asym = cfg.editCosts.insert != cfg.editCosts.delete || useIdf
 
     toks.mapPartitions { it =>
-      val (index, docs, rows, df) = indexFor(bcId, bc.value, useIdf)
+      val (index, docs, rows, df) = BroadcastCorpus.indexFor(bc, useIdf)
       val n = rows.length
       val idfMax = if (useIdf) math.log(n.toDouble).toFloat else 0.01f
       it.flatMap { p =>

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.kernel.EditCosts
+import graft.kernel.{EditCosts, Matcher}
 import graft.text.PT
 
 /** Pipeline configuration. Match-semantics fields pin the reference CLI
@@ -98,4 +98,12 @@ final case class DedupConfig(
     /** edge count under which connected components run as a driver
       * union-find + broadcast label map (edges ≪ corpus: dup pairs only). */
     ccLocalEdgeCap: Long = 10000000L,
-    seed: Long = 42L)
+    seed: Long = 42L) {
+
+  /** The matcher kernel's parameters under this config's match semantics. */
+  def matchParams(numberOfMatches: Int, noPerfect: Boolean): Matcher.Params =
+    Matcher.Params(fuzzy = threshold, numberOfMatches = numberOfMatches, noPerfect = noPerfect,
+      minSubseqLength = minSubseqLength, minSubseqRatio = minSubseqRatio,
+      vocabIdfPenalty = vocabIdfPenalty, editCosts = editCosts,
+      maxTokensInPattern = maxTokensInPattern)
+}

@@ -81,21 +81,6 @@ object DedupPipeline {
 
   private def stagePath(dir: String, name: String) = s"$dir/$name"
 
-  /** Row count + estimated in-memory bytes of the tokenized corpus in ONE
-    * exact aggregation job (JVM-ish accounting per row: object headers +
-    * char/long payloads). Replaces the count() + take(1024)-sample pair
-    * (two actions, and an extrapolated estimate) that every broadcast-gate
-    * check previously paid (r6). Drives the byte-based broadcast gate. */
-  def tokStats(toks: Dataset[TokRow]): (Long, Long) = {
-    import org.apache.spark.sql.functions._
-    val perRow = lit(64L) + length(col("clip_id")).cast("long") * 2L +
-      size(col("ids")).cast("long") * 8L +
-      expr("aggregate(reals, 0L, (a, x) -> a + 40L + 2L * length(x))") +
-      expr("aggregate(itoks, 0L, (a, x) -> a + 40L + 2L * length(x))")
-    val r = toks.toDF().agg(count(lit(1)), coalesce(sum(perRow), lit(0L))).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
   private def exists(spark: SparkSession, path: String): Boolean =
     graft.data.TableIO.exists(spark, path)
 
@@ -158,7 +143,7 @@ object DedupPipeline {
     val nToks = timed("tokenize", nClips) {
       if (cfg.strategy == "broadcast" || cfg.strategy == "shuffle") toks.count()
       else {
-        val (n, b) = tokStats(toks)
+        val (n, b) = BroadcastCorpus.stats(toks, TokenizeStage.rowBytes())
         estBytes = b
         n
       }
@@ -168,7 +153,7 @@ object DedupPipeline {
       case "broadcast" => true
       case "shuffle" => false
       case _ =>
-        nToks <= cfg.broadcastMaxRows && estBytes <= cfg.broadcastMaxBytes
+        BroadcastCorpus.fits(nToks, estBytes, cfg)
     }
 
     var edgesV: Dataset[Edge] = null

@@ -1,9 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.execution.CachedData
-import org.apache.spark.storage.StorageLevel
 import graft.data.Clip
 import graft.kernel.{Doc, Hashing, Matcher}
 import graft.text.Tokenizer
@@ -32,15 +29,14 @@ final case class SubseqRow(
   * corpus, shared read-only by every worker, queries processed independently
   * (FuzzyMatch-cli.cc:82-193's thread pool becomes Spark map partitions over
   * the query table — embarrassingly parallel, no shuffle at all; the only
-  * exchange in the whole plan is the corpus collect+broadcast). The corpus
-  * index is built once per executor JVM and cached by broadcast id
-  * (2-entry LRU, shared with [[BroadcastVerifyStage]]); a caller-cached
-  * corpus keeps one broadcast for as long as it stays cached (see
-  * [[topkIndexed]]).
+  * exchange in the whole plan is the corpus collect+broadcast).
+  * [[BroadcastCorpus]] owns the envelope guard, the broadcast (one per
+  * caller-cached corpus for as long as it stays cached, see [[topkIndexed]])
+  * and the executor index, built once per executor JVM by broadcast id.
   *
   * Scale envelope: the corpus must fit in executor memory (the same
-  * condition as the reference's in-RAM `.fmi` index and as
-  * [[DedupConfig.broadcastMaxRows]]/`broadcastMaxBytes` — a translation
+  * condition as the reference's in-RAM `.fmi` index and as the dedup
+  * pipeline's broadcast decision, [[BroadcastCorpus.fits]] — a translation
   * memory of millions of segments fits comfortably). The QUERY side is
   * unbounded — 10^12 query rows stream through partition-parallel with zero
   * shuffle, which is the axis that actually grows in a training-data
@@ -52,84 +48,8 @@ final case class SubseqRow(
   */
 object FuzzyRetrieval {
 
-  /** Collect the tokenized corpus for the broadcast-index path, enforcing
-    * BOTH envelope gates of the pipeline's own broadcast decision
-    * (DedupPipeline rows + estimated bytes) with an actionable error
-    * pointing at the beyond-memory path. The row count is pre-checked with
-    * a cheap count() BEFORE collecting (a too-large corpus must not OOM the
-    * driver just to produce the error message). */
-  private def collectGuarded(corpusToks: Dataset[TokRow], cfg: DedupConfig): Array[TokRow] = {
-    // a caller-cached index (loadIndex(...).cache() serving many match jobs)
-    // must stay cached — Spark unpersist is not refcounted, so only a cache
-    // WE created here may be released in the finally
-    val callerCached = corpusToks.storageLevel != StorageLevel.NONE
-    val toks = if (callerCached) corpusToks else corpusToks.persist()
-    try {
-      // rows + exact estimated bytes in ONE job (r6 — was count + sample)
-      val (n, estBytes) = DedupPipeline.tokStats(toks)
-      requireEnvelope(n, estBytes, cfg)
-      toks.collect()
-    } finally if (!callerCached) toks.unpersist()
-  }
-
-  private def requireEnvelope(n: Long, estBytes: Long, cfg: DedupConfig): Unit = {
-    require(n <= cfg.broadcastMaxRows,
-      s"corpus has $n indexable rows > broadcastMaxRows ${cfg.broadcastMaxRows}: " +
-        "use FuzzyRetrieval.topkShuffle (the beyond-memory path)")
-    require(estBytes <= cfg.broadcastMaxBytes,
-      s"corpus estimated at $estBytes tokenized bytes > broadcastMaxBytes " +
-        s"${cfg.broadcastMaxBytes}: use FuzzyRetrieval.topkShuffle (the beyond-memory path)")
-  }
-
-  /** Served broadcast indexes: one `(rows, estimated bytes, broadcast)` per
-    * caller-cached corpus, keyed on the IDENTITY of the corpus's Spark cache
-    * entry (the CachedData whose InMemoryRelation `Dataset.storageLevel`
-    * reads) and held weakly. `unpersist`, or a re-`cache()` of changed data,
-    * removes or replaces that entry, so it always misses; an entry whose
-    * cache entry is gone is dropped on the next call and its broadcast is
-    * left to the ContextCleaner. */
-  private final case class Served(cacheEntry: java.lang.ref.WeakReference[CachedData], n: Long,
-      estBytes: Long, bc: Broadcast[Array[TokRow]])
-  private val served = scala.collection.mutable.ArrayBuffer.empty[Served]
-
-  /** The broadcast index of `corpusToks` for the broadcast-path match jobs.
-    * A caller-cached corpus is a snapshot: the first call collects and
-    * broadcasts it, and every later call on the same cache entry reuses
-    * that broadcast (and the executors' suffix-array index built from it),
-    * so a repeated match job runs only its query scan. An uncached corpus
-    * is guarded, collected and broadcast on every call. The envelope guard
-    * is re-checked against each call's `cfg`, memo hit or not. */
-  private def servedIndex(corpusToks: Dataset[TokRow], cfg: DedupConfig): Broadcast[Array[TokRow]] = {
-    val sc = corpusToks.sparkSession.sparkContext
-    val cached = corpusToks match {
-      case ds: org.apache.spark.sql.classic.Dataset[_] =>
-        ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
-          .filter(_.cachedRepresentation.cacheBuilder.storageLevel != StorageLevel.NONE)
-          .map(cd => (ds.sparkSession, cd))
-      case _ => None
-    }
-    cached match {
-      case None => sc.broadcast(collectGuarded(corpusToks, cfg))
-      case Some((session, entry)) =>
-        def live(cd: CachedData) =
-          session.sharedState.cacheManager.lookupCachedData(session, cd.plan).exists(_ eq cd)
-        val hit = served.synchronized {
-          served.filterInPlace(s => Option(s.cacheEntry.get).exists(live))
-          served.find(_.cacheEntry.get eq entry)
-        }
-        hit match {
-          case Some(h) =>
-            requireEnvelope(h.n, h.estBytes, cfg)
-            h.bc
-          case None =>
-            val (n, estBytes) = DedupPipeline.tokStats(corpusToks)
-            requireEnvelope(n, estBytes, cfg)
-            val bc = sc.broadcast(corpusToks.collect())
-            served.synchronized(served += Served(new java.lang.ref.WeakReference(entry), n, estBytes, bc))
-            bc
-        }
-    }
-  }
+  /** The shuffle alternative the broadcast-path envelope error names. */
+  private val beyondMemory = "FuzzyRetrieval.topkShuffle (the beyond-memory path)"
 
   /** Top-k fuzzy match of every query row against the corpus.
     *
@@ -174,26 +94,16 @@ object FuzzyRetrieval {
     val spark = queries.sparkSession
     import spark.implicits._
 
-    val bc = servedIndex(corpusToks, cfg)
-    val bcId = bc.id
-
-    val params = Matcher.Params(
-      fuzzy = cfg.threshold,
-      numberOfMatches = numberOfMatches,
-      noPerfect = noPerfect,
-      minSubseqLength = cfg.minSubseqLength,
-      minSubseqRatio = cfg.minSubseqRatio,
-      vocabIdfPenalty = cfg.vocabIdfPenalty,
-      editCosts = cfg.editCosts,
+    val bc = BroadcastCorpus.served(corpusToks, cfg, "corpus", beyondMemory)
+    val params = cfg.matchParams(numberOfMatches, noPerfect).copy(
       contrastiveFactor = contrastiveFactor,
       contrastReduce = contrastReduce,
-      contrastBuffer = contrastBuffer,
-      maxTokensInPattern = cfg.maxTokensInPattern)
+      contrastBuffer = contrastBuffer)
     val useIdf = cfg.vocabIdfPenalty != 0f
     val pt = cfg.pt
 
     queries.mapPartitions { it =>
-      val (index, docs, rows, df) = BroadcastVerifyStage.indexFor(bcId, bc.value, useIdf)
+      val (index, docs, rows, df) = BroadcastCorpus.indexFor(bc, useIdf)
       val n = rows.length
       val idfMax = if (useIdf) math.log(n.toDouble).toFloat else 0.01f
       it.flatMap { q =>
@@ -204,11 +114,7 @@ object FuzzyRetrieval {
           val pattern = Doc(pids, ts.real, ts.itoks)
           // query tokens absent from the corpus carry 0 idf penalty, the
           // reference's unknown-word default (fuzzy_match.cc:367-390)
-          val idf =
-            if (useIdf) pids.map { id =>
-              val d = df.getOrElse(id, 0)
-              if (d > 0) math.log((n.toFloat / d.toFloat).toDouble).toFloat else 0f
-            } else null
+          val idf = if (useIdf) BroadcastCorpus.idf(pids, df, n, unknown = 0f) else null
           Matcher.matchPattern(index, docs(_), pattern, params, idf, idfMax)
             .iterator.zipWithIndex.map { case (m, r) =>
               RetrievalRow(q.clip_id, r + 1, rows(m.sIdx).clip_id, m.score, m.maxSubseq)
@@ -291,8 +197,8 @@ object FuzzyRetrieval {
       }
 
     val qToks = TokenizeStage(queries, cfg).persist()
-    // as in collectGuarded: never evict a cache the caller owns (a cached
-    // prebuilt index serving many match jobs)
+    // never evict a cache the caller owns (a cached prebuilt index serving
+    // many match jobs)
     val cTokCallerCached =
       corpusToks.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val cToks = if (cTokCallerCached) corpusToks else corpusToks.persist()
@@ -307,15 +213,8 @@ object FuzzyRetrieval {
         sc.longAccumulator("retrievalCappedTinyGramBuckets")))(_.as[CandPair])
 
     // verify: patterns = queries with ≥1 candidate; candidates = corpus rows
-    val params = Matcher.Params(
-      fuzzy = cfg.threshold,
-      numberOfMatches = 0, // all above-threshold; ranked below
-      noPerfect = noPerfect,
-      minSubseqLength = cfg.minSubseqLength,
-      minSubseqRatio = cfg.minSubseqRatio,
-      vocabIdfPenalty = cfg.vocabIdfPenalty,
-      editCosts = cfg.editCosts,
-      maxTokensInPattern = cfg.maxTokensInPattern)
+    // all above-threshold matches; ranked below
+    val params = cfg.matchParams(numberOfMatches = 0, noPerfect)
     val useIdf = cfg.vocabIdfPenalty != 0f
     val corpusSize = if (useIdf) cToks.count() else 0L
     val idfMax = if (useIdf) math.log(corpusSize.toDouble).toFloat else 0.01f
@@ -460,8 +359,7 @@ object FuzzyRetrieval {
     val spark = queries.sparkSession
     import spark.implicits._
 
-    val bc = servedIndex(corpusToks, cfg)
-    val bcId = bc.id
+    val bc = BroadcastCorpus.served(corpusToks, cfg, "corpus", beyondMemory)
     val pt = cfg.pt
     val minSubseqLength = cfg.minSubseqLength
     val minSubseqRatio = cfg.minSubseqRatio
@@ -469,7 +367,7 @@ object FuzzyRetrieval {
     queries.mapPartitions { it =>
       // df always needed: the -1 idf sentinel marks corpus-unknown query
       // words as subsequence breakers (fuzzy_match.cc:281-291)
-      val (index, docs, rows, df) = BroadcastVerifyStage.indexFor(bcId, bc.value, true)
+      val (index, docs, rows, df) = BroadcastCorpus.indexFor(bc, true)
       val n = rows.length
       it.flatMap { q =>
         val ts = Tokenizer.tokenize(q.transcript, pt)
@@ -477,10 +375,7 @@ object FuzzyRetrieval {
         else {
           val pids = Hashing.tokenIds(ts.norm)
           val pattern = Doc(pids, ts.real, ts.itoks)
-          val idf = pids.map { id =>
-            val d = df.getOrElse(id, 0)
-            if (d > 0) math.log((n.toFloat / d.toFloat).toDouble).toFloat else -1f
-          }
+          val idf = BroadcastCorpus.idf(pids, df, n, unknown = -1f)
           Matcher.subsequence(index, docs(_), pattern, numberOfMatches, noPerfect,
               minSubseqLength, minSubseqRatio, idfWeighting, idf)
             .map { case (m, pos, len) =>
@@ -636,33 +531,26 @@ object FuzzyRetrieval {
       fuzzySkippedOverLength: Option[org.apache.spark.util.LongAccumulator])
       : (Iterator[Clip] => Iterator[(Clip, Boolean)],
          org.apache.spark.broadcast.Broadcast[Array[TokRow]]) = {
-    val spark = evalSet.sparkSession
     val nEval = evalSet.count()
-    val evalRows = collectGuarded(TokenizeStage(evalSet, cfg), cfg)
-    require(evalRows.length == nEval,
-      s"${nEval - evalRows.length} of $nEval eval rows were dropped by the tokenize " +
-        s"filters (empty transcript, or > maxTokensInPattern=${cfg.maxTokensInPattern} " +
-        "tokens) — decontamination must not silently unprotect benchmark rows; raise " +
-        "cfg.maxTokensInPattern or clean the eval table first")
-    val bc = spark.sparkContext.broadcast(evalRows)
-    val bcId = bc.id
+    val evalToks = TokenizeStage(evalSet, cfg).persist()
+    val bc = try BroadcastCorpus.broadcast(evalToks, TokenizeStage.rowBytes(), cfg, "eval set",
+        beyondMemory) { evalRows =>
+      require(evalRows.length == nEval,
+        s"${nEval - evalRows.length} of $nEval eval rows were dropped by the tokenize " +
+          s"filters (empty transcript, or > maxTokensInPattern=${cfg.maxTokensInPattern} " +
+          "tokens) — decontamination must not silently unprotect benchmark rows; raise " +
+          "cfg.maxTokensInPattern or clean the eval table first")
+      evalRows
+    } finally evalToks.unpersist()
 
-    val params = Matcher.Params(
-      fuzzy = cfg.threshold,
-      numberOfMatches = 1, // any hit flags the row
-      noPerfect = false,
-      minSubseqLength = cfg.minSubseqLength,
-      minSubseqRatio = cfg.minSubseqRatio,
-      vocabIdfPenalty = cfg.vocabIdfPenalty,
-      editCosts = cfg.editCosts,
-      maxTokensInPattern = cfg.maxTokensInPattern)
+    val params = cfg.matchParams(numberOfMatches = 1, noPerfect = false) // any hit flags the row
     val useIdf = cfg.vocabIdfPenalty != 0f
     val pt = cfg.pt
     val withContained = alsoContained
     val maxTok = cfg.maxTokensInPattern
 
     val fn = (it: Iterator[Clip]) => {
-      val (index, docs, rows, df) = BroadcastVerifyStage.indexFor(bcId, bc.value, useIdf)
+      val (index, docs, rows, df) = BroadcastCorpus.indexFor(bc, useIdf)
       val n = rows.length
       val idfMax = if (useIdf) math.log(n.toDouble).toFloat else 0.01f
       val minEvalLen =
@@ -673,11 +561,7 @@ object FuzzyRetrieval {
         else {
           val pids = Hashing.tokenIds(ts.norm)
           val pattern = Doc(pids, ts.real, ts.itoks)
-          val idf =
-            if (useIdf) pids.map { id =>
-              val d = df.getOrElse(id, 0)
-              if (d > 0) math.log((n.toFloat / d.toFloat).toDouble).toFloat else 0f
-            } else null
+          val idf = if (useIdf) BroadcastCorpus.idf(pids, df, n, unknown = 0f) else null
           if (pids.length > maxTok) fuzzySkippedOverLength.foreach(_.add(1))
           val hit =
             Matcher.matchPattern(index, docs(_), pattern, params, idf, idfMax).nonEmpty || {

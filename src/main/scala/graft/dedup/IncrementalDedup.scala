@@ -385,33 +385,24 @@ object IncrementalDedup {
     var newFps: Dataset[AudioDedup.AudioFpRow] = null
     var newCtFps: Dataset[AudioContainment.AudioCtRow] = null
     if (cfg.useAudioChannel || cfg.useAudioContainment) {
-      def guardIndex(what: String, n: Long, bytes: Long): Unit = {
-        require(n <= cfg.broadcastMaxRows && bytes <= cfg.broadcastMaxBytes,
-          s"$what: batch has $n fingerprints / ~$bytes bytes, past the broadcast " +
-            s"envelope (${cfg.broadcastMaxRows} rows / ${cfg.broadcastMaxBytes} bytes) — " +
-            "split the ingest batch, or run the full pipeline with audio on")
-      }
+      // the broadcast side is the batch: guarded before collect (one
+      // distributed size agg), so an oversized batch never reaches the driver
+      val remedy = "a smaller ingest batch, or the full pipeline with audio on"
       var audioE = spark.emptyDataset[Edge]
       val audioCapped = sc.longAccumulator("incAudioCappedBuckets")
       if (cfg.useAudioChannel) {
         newFps = phased("inc_audio")(AudioDedup.fingerprints(newClips).localCheckpoint(false))
         audioE = audioE.union(AudioDedup.pairs(newFps, cfg.audioMinCorr, cappedBuckets = audioCapped))
-        // guard BEFORE collect (distributed size agg) — the guard exists to
-        // keep an oversized batch off the driver, so it must not need it there
-        phased("inc_audio") {
-          val est = newFps.select(coalesce(sum(
-            size($"head") * 4 + size($"env") * 4 + size($"chunks") * 8 + 64), lit(0L)),
-            count(lit(1))).head()
-          guardIndex("incremental audio channel", est.getLong(1), est.getLong(0))
-        }
-        val rows = phased("inc_audio")(newFps.collect())
-        val (idxMap, capped) = AudioDedup.buildChunkIndex(rows, AudioDedup.defaultBucketCap)
-        audioCapped.add(capped)
-        val bcR = sc.broadcast(rows)
-        val bcI = sc.broadcast(idxMap)
+        val bc = phased("inc_audio")(BroadcastCorpus.broadcast(newFps, AudioDedup.fpBytes, cfg,
+            "incremental audio channel batch", remedy) { rows =>
+          val (idxMap, capped) =
+            BroadcastCorpus.postings(rows.map(_.chunks), AudioDedup.defaultBucketCap)
+          audioCapped.add(capped)
+          (rows, idxMap)
+        })
         val minCorr = cfg.audioMinCorr
         audioE = audioE.union(oldAudioFps.get.mapPartitions { it =>
-          val rs = bcR.value; val ix = bcI.value
+          val (rs, ix) = bc.value
           it.flatMap(f => AudioDedup.probeChunkIndex(f, rs, ix, minCorr, AudioDedup.defaultFrameWindow)
             .map { case (i, corr) => Edge(f.clip_id, rs(i).clip_id, corr, 0, "audio") })
         })
@@ -423,21 +414,15 @@ object IncrementalDedup {
               cappedBuckets = audioCapped)
             .select($"inner".as("a"), $"outer".as("b"), $"corr".as("score"),
               lit(0).as("lcs"), lit("audio_contain").as("kind")).as[Edge])
-        phased("inc_audio") {
-          val est = newCtFps.select(coalesce(sum(
-            size($"head") * 4 + size($"renv") * 4 + size($"keys") * 8 +
-              size($"poss") * 4 + 64), lit(0L)),
-            count(lit(1))).head()
-          guardIndex("incremental audio containment channel", est.getLong(1), est.getLong(0))
-        }
-        val rows = phased("inc_audio")(newCtFps.collect())
-        val (idxMap, capped) = AudioContainment.buildPosIndex(rows, AudioContainment.defaultBucketCap)
-        audioCapped.add(capped)
-        val bcR = sc.broadcast(rows)
-        val bcI = sc.broadcast(idxMap)
+        val bc = phased("inc_audio")(BroadcastCorpus.broadcast(newCtFps, AudioContainment.fpBytes,
+            cfg, "incremental audio containment batch", remedy) { rows =>
+          val (idxMap, capped) = AudioContainment.buildPosIndex(rows, AudioContainment.defaultBucketCap)
+          audioCapped.add(capped)
+          (rows, idxMap)
+        })
         val minCorr = cfg.audioContainMinCorr
         audioE = audioE.union(oldCtFps.get.mapPartitions { it =>
-          val rs = bcR.value; val ix = bcI.value
+          val (rs, ix) = bc.value
           it.flatMap(f => AudioContainment.probePosIndex(f, rs, ix,
               AudioContainment.defaultMinVotes, AudioContainment.defaultInnerStride, minCorr)
             .map { case (ri, off, corr) => Edge(f.clip_id, rs(ri).clip_id, corr, off, "audio_contain") })

@@ -1,6 +1,7 @@
 package graft.dedup
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Column, Dataset}
+import org.apache.spark.sql.functions.{aggregate, col, length, lit, size}
 import graft.data.Clip
 import graft.kernel.Hashing
 import graft.text.Tokenizer
@@ -45,6 +46,16 @@ object TokenizeStage {
           TokRow(c.clip_id, ts.norm.length, Hashing.tokenIds(ts.norm), ts.real, ts.itoks))
       }
     }
+  }
+
+  /** Estimated in-memory bytes of one [[TokRow]] (JVM-ish accounting: object
+    * headers + char/long payloads), the broadcast envelope's byte measure.
+    * `prefix` addresses a TokRow nested in a struct column (e.g. `"_1."`). */
+  def rowBytes(prefix: String = ""): Column = {
+    def strings(name: String) =
+      aggregate(col(prefix + name), lit(0L), (a, x) => a + 40L + length(x) * 2L)
+    lit(64L) + length(col(prefix + "clip_id")).cast("long") * 2L +
+      size(col(prefix + "ids")).cast("long") * 8L + strings("reals") + strings("itoks")
   }
 }
 

@@ -33,15 +33,8 @@ object VerifyStage {
     val spark = toks.sparkSession
     import spark.implicits._
 
-    val params = Matcher.Params(
-      fuzzy = cfg.threshold,
-      numberOfMatches = 0, // unlimited: dedup wants every pair over threshold
-      noPerfect = false,
-      minSubseqLength = cfg.minSubseqLength,
-      minSubseqRatio = cfg.minSubseqRatio,
-      vocabIdfPenalty = cfg.vocabIdfPenalty,
-      editCosts = cfg.editCosts,
-      maxTokensInPattern = cfg.maxTokensInPattern)
+    // unlimited matches: dedup wants every pair over threshold
+    val params = cfg.matchParams(numberOfMatches = 0, noPerfect = false)
     val useIdf = cfg.vocabIdfPenalty != 0f
     val corpusSize: Long =
       if (!useIdf) 0L else if (nRows >= 0) nRows else toks.count()

@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.data.Clip
-import graft.dedup.{DedupConfig, Edge, SignatureStage, SigRow, TokRow, TokenizeStage}
+import graft.dedup.{BroadcastCorpus, DedupConfig, Edge, SignatureStage, SigRow, TokenizeStage}
 import graft.kernel.{Hashing, Matcher}
 import graft.text.Tokenizer
+import scala.collection.mutable.LongMap
 
 /** Streaming facets of the dedup engine (Structured Streaming).
   *
@@ -16,7 +17,10 @@ import graft.text.Tokenizer
   * extraction on arrival, candidate generation against the existing corpus
   * via a stream-static band join, VERIFIED near-dup edges in-stream
   * ([[edgesAgainstCorpus]]), stateful exact dedup within the stream, and
-  * streaming top-k retrieval against a static index.
+  * streaming top-k retrieval against a static index. Every stream-static
+  * operator serves its static side from ONE broadcast built by
+  * [[graft.dedup.BroadcastCorpus]] (envelope guard, collect, the rows and
+  * their driver-built index in one broadcast).
   */
 object StreamingDedup {
 
@@ -98,6 +102,10 @@ object StreamingDedup {
       .groupBy(window(col("ts"), "1 minute"), col("codec"))
       .agg(count(lit(1)).as("n_clips"), sum(length(col("transcript"))).as("chars"))
 
+  /** MinHash band hashes salted by band position: the band index keys. */
+  private def bandKeys(bh: Array[Long]): Array[Long] =
+    Array.tabulate(bh.length)(bd => Hashing.mix64(bh(bd) ^ (bd * 0x9e3779b97f4a7c15L)))
+
   /** Stream-static near-dup EDGE stream — the candidates channel
     * ([[candidatesAgainstCorpus]]) COMPLETED with in-stream verification:
     * arriving clips' MinHash band buckets probe the corpus band index (the
@@ -125,98 +133,47 @@ object StreamingDedup {
     import spark.implicits._
 
     // static side, built once: tokenize + signatures run DISTRIBUTED
-    // (SignatureStage, the batch stage-1 kernel); only the collected results
-    // land on the driver, where the band inverted index is assembled
-    val corpusToks = TokenizeStage(corpus, cfg).persist()
-    // rows + exact estimated bytes in ONE job (r6 — was count + sample)
-    val (n, estBytes) = graft.dedup.DedupPipeline.tokStats(corpusToks)
-    require(n <= cfg.broadcastMaxRows,
-      s"corpus has $n indexable rows > broadcastMaxRows ${cfg.broadcastMaxRows}: " +
-        "stream-static edge verification needs a broadcastable corpus — " +
-        "run the batch FuzzyRetrieval.topkShuffle path instead")
-    require(estBytes <= cfg.broadcastMaxBytes,
-      s"corpus estimated at $estBytes tokenized bytes > broadcastMaxBytes " +
-        s"${cfg.broadcastMaxBytes}: stream-static edge verification needs a " +
-        "broadcastable corpus — run the batch FuzzyRetrieval.topkShuffle path instead")
+    // (SignatureStage, the batch stage-1 kernel) in ONE aligned pass of
+    // (token row, signature) pairs; only those land on the driver, where the
+    // band inverted index is assembled. The band index is keyed by ROW
+    // POSITION, so duplicate clip_ids stay distinct index rows — both rows
+    // indexed, both can match (the TM semantics of the batch broadcast
+    // matcher; a clip_id-keyed map here would collapse duplicates and
+    // silently drop their edges)
     val k = cfg.shingleK
     val perms = cfg.minhashPerms
     val bands = cfg.minhashBands
     val seed = cfg.seed
-    // ONE aligned distributed pass collecting (token row, signature) pairs:
-    // the band index is keyed by ROW POSITION, so duplicate clip_ids stay
-    // distinct index rows — both rows indexed, both can match (the TM
-    // semantics of the batch broadcast matcher; a clip_id-keyed map here
-    // would collapse duplicates and silently drop their edges)
-    val collected = corpusToks
+    val useIdf = cfg.vocabIdfPenalty != 0f
+    val corpusPairs = TokenizeStage(corpus, cfg)
       .mapPartitions(it => it.map(t => (t, SignatureStage.one(t, k, perms, bands, seed))))
-      .collect()
-    corpusToks.unpersist()
-    val rows = collected.map(_._1)
-    val bandDfCap = cfg.bandDfCap
-    val bandMap = new java.util.HashMap[Long, Array[Int]](rows.length * 2)
-    var capped = 0L
-    locally {
-      val builder = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Int]]()
-      var i = 0
-      while (i < collected.length) {
-        val s = collected(i)._2
-        var bd = 0
-        while (bd < s.band_hashes.length) {
-          val key = Hashing.mix64(s.band_hashes(bd) ^ (bd * 0x9e3779b97f4a7c15L))
-          var buf = builder.get(key)
-          if (buf == null) { buf = new scala.collection.mutable.ArrayBuffer[Int]; builder.put(key, buf) }
-          buf += i
-          bd += 1
-        }
-        i += 1
-      }
+      .persist()
+    val bc = BroadcastCorpus.broadcast(corpusPairs, TokenizeStage.rowBytes("_1."), cfg,
+        "corpus", "FuzzyRetrieval.topkShuffle (the batch beyond-memory path)") { collected =>
+      val rows = collected.map(_._1)
       // hot-bucket valve, same discipline as every bucketed channel: a band
       // bucket above bandDfCap is dropped AND counted, never a linear scan
       // of the corpus per arriving clip
-      builder.forEach { (key, buf) =>
-        if (buf.length > bandDfCap) capped += 1
-        else bandMap.put(key, buf.toArray)
-      }
+      val (bandMap, capped) =
+        BroadcastCorpus.postings(collected.map(p => bandKeys(p._2.band_hashes)), cfg.bandDfCap)
+      cappedBuckets.foreach(_.add(capped))
+      // idf penalty (A4): per-word corpus doc frequencies, built once on the
+      // driver — pattern-side idf vectors are then per-arriving-clip
+      // lookups, exactly FuzzyRetrieval.topk's semantics
+      (rows, bandMap, if (useIdf) BroadcastCorpus.docFreq(rows) else LongMap.empty[Int])
     }
-    cappedBuckets.foreach(_.add(capped))
-    // idf penalty (A4): per-word corpus doc frequencies, computed once from
-    // the collected rows and broadcast — pattern-side idf vectors are then
-    // per-arriving-clip lookups, exactly FuzzyRetrieval.topk's semantics
-    val useIdf = cfg.vocabIdfPenalty != 0f
-    val dfMap: scala.collection.mutable.LongMap[Int] =
-      if (!useIdf) scala.collection.mutable.LongMap.empty[Int]
-      else {
-        val m = scala.collection.mutable.LongMap.empty[Int]
-        val seen = new java.util.HashSet[java.lang.Long]()
-        rows.foreach { r =>
-          seen.clear()
-          r.ids.foreach(id => if (seen.add(id)) m(id) = m.getOrElse(id, 0) + 1)
-        }
-        m
-      }
-    val idfMax = if (useIdf) math.log(rows.length.toDouble).toFloat else 0.01f
-    val bcRows = spark.sparkContext.broadcast(rows)
-    val bcBands = spark.sparkContext.broadcast(bandMap)
-    val bcDf = spark.sparkContext.broadcast(dfMap)
+    corpusPairs.unpersist()
 
-    val params = Matcher.Params(
-      fuzzy = cfg.threshold,
-      numberOfMatches = 0,
-      noPerfect = false,
-      minSubseqLength = cfg.minSubseqLength,
-      minSubseqRatio = cfg.minSubseqRatio,
-      vocabIdfPenalty = cfg.vocabIdfPenalty,
-      editCosts = cfg.editCosts,
-      maxTokensInPattern = cfg.maxTokensInPattern)
+    val params = cfg.matchParams(numberOfMatches = 0, noPerfect = false)
     val pt = cfg.pt
     val fuzzy = cfg.threshold
     val ec = cfg.editCosts
     val maxTok = cfg.maxTokensInPattern
-    val nCorpus = rows.length
+    val nCorpus = bc.value._1.length
+    val idfMax = if (useIdf) math.log(nCorpus.toDouble).toFloat else 0.01f
 
     streamClips.mapPartitions { it =>
-      val corpusRows = bcRows.value
-      val bandIdx = bcBands.value
+      val (corpusRows, bandIdx, df) = bc.value
       it.flatMap { c =>
         val ts = Tokenizer.tokenize(c.transcript, pt)
         if (ts.norm.isEmpty || ts.norm.length > maxTok) Iterator.empty
@@ -224,13 +181,10 @@ object StreamingDedup {
           val pids = Hashing.tokenIds(ts.norm)
           val pn = pids.length
           val sig = Hashing.minhash(Hashing.distinctShingles(pids, k), perms, seed)
-          val bh = Hashing.bandHashes(sig, bands)
           val cand = new java.util.LinkedHashSet[Integer]()
-          var bd = 0
-          while (bd < bh.length) {
-            val hit = bandIdx.get(Hashing.mix64(bh(bd) ^ (bd * 0x9e3779b97f4a7c15L)))
+          bandKeys(Hashing.bandHashes(sig, bands)).foreach { key =>
+            val hit = bandIdx.get(key)
             if (hit != null) { var j = 0; while (j < hit.length) { cand.add(hit(j)); j += 1 } }
-            bd += 1
           }
           if (cand.isEmpty) Iterator.empty
           else {
@@ -257,11 +211,7 @@ object StreamingDedup {
               val pattern = graft.kernel.Doc(pids, ts.real, ts.itoks)
               // corpus-unknown pattern words carry 0 idf, the reference's
               // unknown-word default (fuzzy_match.cc:367-390)
-              val idf =
-                if (useIdf) pids.map { id =>
-                  val d = bcDf.value.getOrElse(id, 0)
-                  if (d > 0) math.log((nCorpus.toFloat / d.toFloat).toDouble).toFloat else 0f
-                } else null
+              val idf = if (useIdf) BroadcastCorpus.idf(pids, df, nCorpus, unknown = 0f) else null
               Matcher.matchPattern(index, docs(_), pattern, params, idf, idfMax).iterator.map { m =>
                 val kind = if (m.maxSubseq >= pn) "substring" else "edit"
                 Edge(c.clip_id, corpusRows(kept(m.sIdx)).clip_id, m.score, m.maxSubseq, kind)
@@ -299,40 +249,23 @@ object StreamingDedup {
     import spark.implicits._
 
     // static side, built once: fingerprints run DISTRIBUTED (the batch
-    // stage-1 kernel); only the bounded sketches land on the driver
-    val fps = graft.dedup.AudioDedup.fingerprints(corpus).persist()
-    val n = fps.count()
-    require(n <= cfg.broadcastMaxRows,
-      s"corpus has $n clips > broadcastMaxRows ${cfg.broadcastMaxRows}: " +
-        "stream-static audio edges need a broadcastable corpus — run the " +
-        "batch AudioDedup.pairs channel instead")
-    val estBytes = fps.select(
-      org.apache.spark.sql.functions.coalesce(
-        org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.size($"head") * 4 +
-            org.apache.spark.sql.functions.size($"env") * 4 +
-            org.apache.spark.sql.functions.size($"chunks") * 8 + 64),
-        org.apache.spark.sql.functions.lit(0L))).as[Long].head()
-    require(estBytes <= cfg.broadcastMaxBytes,
-      s"corpus fingerprints estimated at $estBytes bytes > broadcastMaxBytes " +
-        s"${cfg.broadcastMaxBytes}: stream-static audio edges need a " +
-        "broadcastable corpus — run the batch AudioDedup.pairs channel instead")
-    val rows = fps.collect()
-    fps.unpersist()
-
-    // driver-built chunk inverted index, keyed by ROW POSITION; hot chunk
+    // stage-1 kernel); only the bounded sketches land on the driver, where
+    // the chunk inverted index is built, keyed by ROW POSITION; hot chunk
     // buckets dropped AND counted, never a linear corpus scan per clip
     // (shared kernel with IncrementalDedup's audio cross channel)
-    val (chunkMap, capped) = graft.dedup.AudioDedup.buildChunkIndex(rows, bucketCap)
-    cappedBuckets.foreach(_.add(capped))
-    val bcRows = spark.sparkContext.broadcast(rows)
-    val bcChunks = spark.sparkContext.broadcast(chunkMap)
+    val fps = graft.dedup.AudioDedup.fingerprints(corpus).persist()
+    val bc = BroadcastCorpus.broadcast(fps, graft.dedup.AudioDedup.fpBytes, cfg,
+        "corpus", "the batch AudioDedup.pairs channel") { rows =>
+      val (chunkMap, capped) = BroadcastCorpus.postings(rows.map(_.chunks), bucketCap)
+      cappedBuckets.foreach(_.add(capped))
+      (rows, chunkMap)
+    }
+    fps.unpersist()
     val minCorr = cfg.audioMinCorr
     val fw = frameWindow
 
     streamClips.mapPartitions { it =>
-      val corpusRows = bcRows.value
-      val idx = bcChunks.value
+      val (corpusRows, idx) = bc.value
       it.flatMap { c =>
         val f = graft.dedup.AudioDedup.fingerprintOne(c)
         graft.dedup.AudioDedup.probeChunkIndex(f, corpusRows, idx, minCorr, fw)
@@ -372,40 +305,21 @@ object StreamingDedup {
     import graft.dedup.AudioContainment
 
     // static side, built once: fingerprints run DISTRIBUTED; only the
-    // bounded sketches land on the driver
+    // bounded sketches land on the driver, where the chunk inverted index
+    // carrying (row, position) is built; hot chunk keys dropped AND counted
+    // — shared kernel with IncrementalDedup's audio containment cross channel
     val fps = AudioContainment.fingerprints(corpus).persist()
-    val n = fps.count()
-    require(n <= cfg.broadcastMaxRows,
-      s"corpus has $n clips > broadcastMaxRows ${cfg.broadcastMaxRows}: " +
-        "stream-static audio containment needs a broadcastable corpus — run " +
-        "the batch AudioContainment.pairs channel instead")
-    val estBytes = fps.select(
-      org.apache.spark.sql.functions.coalesce(
-        org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.size($"renv") * 4 +
-            org.apache.spark.sql.functions.size($"head") * 4 +
-            org.apache.spark.sql.functions.size($"keys") * 8 +
-            org.apache.spark.sql.functions.size($"poss") * 4 + 64),
-        org.apache.spark.sql.functions.lit(0L))).as[Long].head()
-    require(estBytes <= cfg.broadcastMaxBytes,
-      s"corpus containment fingerprints estimated at $estBytes bytes > " +
-        s"broadcastMaxBytes ${cfg.broadcastMaxBytes}: stream-static audio " +
-        "containment needs a broadcastable corpus — run the batch channel instead")
-    val rows = fps.collect()
+    val bc = BroadcastCorpus.broadcast(fps, AudioContainment.fpBytes, cfg,
+        "corpus", "the batch AudioContainment.pairs channel") { rows =>
+      val (chunkMap, capped) = AudioContainment.buildPosIndex(rows, bucketCap)
+      cappedBuckets.foreach(_.add(capped))
+      (rows, chunkMap)
+    }
     fps.unpersist()
-
-    // driver-built chunk inverted index carrying (row, position); hot chunk
-    // keys dropped AND counted — shared kernel with IncrementalDedup's
-    // audio containment cross channel
-    val (chunkMap, capped) = AudioContainment.buildPosIndex(rows, bucketCap)
-    cappedBuckets.foreach(_.add(capped))
-    val bcRows = spark.sparkContext.broadcast(rows)
-    val bcChunks = spark.sparkContext.broadcast(chunkMap)
     val minCorr = cfg.audioContainMinCorr
 
     streamClips.mapPartitions { it =>
-      val corpusRows = bcRows.value
-      val idx = bcChunks.value
+      val (corpusRows, idx) = bc.value
       it.flatMap { c =>
         val f = AudioContainment.one(c)
         AudioContainment.probePosIndex(f, corpusRows, idx, minVotes, innerStride, minCorr)

@@ -229,18 +229,20 @@ class IncrementalDedupSpec extends AnyFunSuite {
       s"${unlabeled.size} of ${jobs.size} increment jobs carry no inc: label: ${unlabeled.mkString("; ")}")
   }
 
+  private def structured(seed: Long, n: Int): Array[Short] =
+    Array.tabulate(n)(i =>
+      (500 + (graft.kernel.Hashing.mix64(seed * 1000003L + i) >>> 40) % 1500).toShort)
+
+  private def awrap(id: String, samples: Array[Short], text: String) = {
+    val buf = java.nio.ByteBuffer.allocate(samples.length * 2)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    samples.foreach(buf.putShort)
+    Clip(id, graft.ops.AudioOps.wavWrap(buf.array(), 16000), 16000,
+      (samples.length * 1000L / 16000).toInt, "pcm_s16le", text)
+  }
+
   test("audio channels incremental == full: committed fingerprints carry the audio state") {
     import spark.implicits._
-    def structured(seed: Long, n: Int): Array[Short] =
-      Array.tabulate(n)(i =>
-        (500 + (graft.kernel.Hashing.mix64(seed * 1000003L + i) >>> 40) % 1500).toShort)
-    def awrap(id: String, samples: Array[Short], text: String) = {
-      val buf = java.nio.ByteBuffer.allocate(samples.length * 2)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      samples.foreach(buf.putShort)
-      Clip(id, graft.ops.AudioOps.wavWrap(buf.array(), 16000), 16000,
-        (samples.length * 1000L / 16000).toInt, "pcm_s16le", text)
-    }
     val audA = structured(11L, 1600)
     val audE = structured(55L, 1600)
     // transcripts all mutually non-dup — every edge below is AUDIO-made
@@ -287,6 +289,28 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val kinds2 = inc2.newEdges.collect().map(e => (Set(e.a, e.b), e.kind)).toSet
     assert(kinds2.contains((Set("m1", "n3"), "audio")) || kinds2.contains((Set("m1", "n4"), "audio")),
       kinds2.toString)
+  }
+
+  test("incremental audio envelope guards: each channel refuses a batch past either bound") {
+    import spark.implicits._
+    val acfg = cfg.copy(useAudioChannel = true, useAudioContainment = true)
+    val dir = freshDir("inc-audio-guard-base")
+    DedupPipeline.run(Seq(awrap("a1", structured(11L, 1600), W.mkString(" ")),
+      awrap("a2", structured(22L, 1600), X.mkString(" "))).toDS(), acfg, Some(dir))
+    val batch = Seq(awrap("n1", structured(33L, 1600), V.mkString(" ")),
+      awrap("n2", structured(44L, 1600), Y.mkString(" "))).toDS()
+    val sites = Seq(
+      ("useAudioChannel", acfg.copy(useAudioContainment = false), "incremental audio channel batch"),
+      ("useAudioContainment", acfg.copy(useAudioChannel = false),
+        "incremental audio containment batch"))
+    for ((site, scfg, what) <- sites;
+         (bound, tight) <- Seq("broadcastMaxRows = 1" -> scfg.copy(broadcastMaxRows = 1),
+           "broadcastMaxBytes = 1" -> scfg.copy(broadcastMaxBytes = 1))) {
+      val e = intercept[IllegalArgumentException](IncrementalDedup.run(batch, Seq(dir), tight))
+      assert(e.getMessage.contains(s"$what has 2 rows") &&
+        e.getMessage.contains("past the broadcast envelope") &&
+        e.getMessage.contains("use a smaller ingest batch"), s"$site under $bound: ${e.getMessage}")
+    }
   }
 
   test("loud guards: id collision, idf, audio channels, incomplete prior state") {

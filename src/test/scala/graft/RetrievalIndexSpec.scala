@@ -276,7 +276,7 @@ class RetrievalIndexSpec extends AnyFunSuite {
     val idx = FuzzyRetrieval.loadIndex(spark, tmp, cfg)
     val queries = Seq(Clip("q", Array.emptyByteArray, 16000, 0, "pcm_s16le", "aa bb cc dd")).toDS()
     // the guard's own persist (materialized as a table-cache query stage
-    // under AQE), tokStats (2 jobs), collect, query scan
+    // under AQE), the envelope stats job (2 jobs), collect, query scan
     for (i <- 1 to 2) {
       val (_, jobs) = JobLog.of(spark)(rows(FuzzyRetrieval.topkIndexed(queries, idx, cfg, 5)))
       assert(jobs.size == 5, s"call $i on an uncached index started ${jobs.size} jobs, want 5")

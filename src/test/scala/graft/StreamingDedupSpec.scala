@@ -288,6 +288,39 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(acc.value > 0, "cap=2 never triggered on 16 identical corpus clips")
   }
 
+  test("stream-static envelope guards: each site refuses a corpus past either bound, naming its batch path") {
+    import spark.implicits._
+    val tone = graft.data.AudioPcm.synthWav(5L, 480, 16000)
+    val words = (0 until 20).map(i => "w" + ("abcdefghijklmnopqrst" * 2)(i).toString * 3)
+    val corpus = (0 until 3).map(i => graft.data.Clip(s"c$i", tone, 16000, 30, "pcm_s16le",
+      (words.drop(i) :+ s"e$i").mkString(" "))).toDS()
+    val probe = corpus.limit(1)
+    val sites: Seq[(String, DedupConfig => Any, String)] = Seq(
+      ("edgesAgainstCorpus",
+        c => StreamingDedup.edgesAgainstCorpus(probe, corpus, c), "use FuzzyRetrieval.topkShuffle"),
+      ("audioEdgesAgainstCorpus",
+        c => StreamingDedup.audioEdgesAgainstCorpus(probe, corpus, c), "use the batch AudioDedup.pairs"),
+      ("audioContainmentAgainstCorpus",
+        c => StreamingDedup.audioContainmentAgainstCorpus(probe, corpus, c),
+        "use the batch AudioContainment.pairs"))
+    for ((site, run, alternative) <- sites) {
+      run(cfg) // inside the envelope: the operator is defined
+      for ((bound, tight) <- Seq("broadcastMaxRows = 1" -> cfg.copy(broadcastMaxRows = 1),
+          "broadcastMaxBytes = 1" -> cfg.copy(broadcastMaxBytes = 1))) {
+        val e = intercept[IllegalArgumentException](run(tight))
+        assert(e.getMessage.contains("past the broadcast envelope") &&
+          e.getMessage.contains(alternative), s"$site under $bound: ${e.getMessage}")
+      }
+    }
+    // rows and estimated bytes come from ONE aggregation action, checked
+    // before anything is collected: under AQE that is 3 Spark jobs (the
+    // persisted fingerprints' table-cache stage, the aggregation's map stage
+    // and its result stage)
+    val (_, jobs) = JobLog.of(spark)(intercept[IllegalArgumentException](
+      StreamingDedup.audioEdgesAgainstCorpus(probe, corpus, cfg.copy(broadcastMaxBytes = 1))))
+    assert(jobs.size == 3, s"the audio guard started ${jobs.size} jobs: $jobs")
+  }
+
   test("duplicate corpus clip_ids both stay in the stream-static band index (TM semantics)") {
     import spark.implicits._
     def clip(id: String, text: String) =
