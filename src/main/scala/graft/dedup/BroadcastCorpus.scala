@@ -5,7 +5,6 @@ import scala.reflect.ClassTag
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.execution.CachedData
-import org.apache.spark.sql.functions.{coalesce, count, lit, sum}
 import org.apache.spark.storage.StorageLevel
 import graft.kernel.{Doc, SuffixIndex}
 
@@ -13,7 +12,7 @@ import graft.kernel.{Doc, SuffixIndex}
   * read-only by every worker (cli/src/FuzzyMatch-cli.cc:82-193)
   * as a Spark broadcast. Every consumer that collects a corpus to the driver
   * and broadcasts it — retrieval, decontamination, broadcast verify, the
-  * stream-static probes and the incremental audio probes — goes through here:
+  * stream-static probes and the incremental probes — goes through here:
   *  - [[fits]]: the envelope (`broadcastMaxRows` / `broadcastMaxBytes`), also
   *    the pipeline's auto-strategy decision;
   *  - [[broadcast]]: one job for rows + estimated bytes, the envelope check,
@@ -28,13 +27,17 @@ private[graft] object BroadcastCorpus {
   def fits(n: Long, bytes: Long, cfg: DedupConfig): Boolean =
     n <= cfg.broadcastMaxRows && bytes <= cfg.broadcastMaxBytes
 
-  /** Row count and summed per-row byte estimate of `ds` in ONE aggregation job. */
-  def stats(ds: Dataset[_], rowBytes: Column): (Long, Long) = {
-    val r = ds.toDF().agg(count(lit(1)), coalesce(sum(rowBytes), lit(0L))).head()
-    (r.getLong(0), r.getLong(1))
-  }
+  /** Row count and summed per-row byte estimate of `ds` in ONE Spark job:
+    * per-partition partials folded on the driver (a global `agg` runs as
+    * two jobs under AQE — its exchange's map stage, then the final one). */
+  def stats(ds: Dataset[_], rowBytes: Column): (Long, Long) =
+    ds.toDF().select(rowBytes.cast("long")).rdd.mapPartitions { it =>
+      var n, bytes = 0L
+      it.foreach { r => n += 1; if (!r.isNullAt(0)) bytes += r.getLong(0) }
+      Iterator.single((n, bytes))
+    }.fold((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
 
-  private def requireFits(n: Long, bytes: Long, cfg: DedupConfig, what: String,
+  def requireFits(n: Long, bytes: Long, cfg: DedupConfig, what: String,
       alternative: String): Unit =
     require(fits(n, bytes, cfg),
       s"$what has $n rows / ~$bytes estimated bytes, past the broadcast envelope " +
@@ -113,7 +116,7 @@ private[graft] object BroadcastCorpus {
     * rows carrying it, so duplicate ids stay distinct rows (TM semantics).
     * A bucket past `cap` is dropped AND counted, never a linear scan per
     * probe. Returns (index, capped bucket count). Shared by the stream-static
-    * band and audio chunk probes and the incremental audio cross channel. */
+    * band and audio chunk probes and the incremental probes. */
   def postings(keys: Array[Array[Long]], cap: Int): (java.util.HashMap[Long, Array[Int]], Long) = {
     val buckets = new java.util.HashMap[Long, ArrayBuffer[Int]]()
     var i = 0
@@ -168,11 +171,16 @@ private[graft] object BroadcastCorpus {
 
   /** `(index, docs, rows, df)` for a broadcast; `df` is empty unless `needDf`. */
   def indexFor(bc: Broadcast[Array[TokRow]], needDf: Boolean)
+      : (SuffixIndex, Array[Doc], Array[TokRow], LongMap[Int]) = indexFor(bc, needDf, identity[Array[TokRow]])
+
+  /** [[indexFor]] over the rows `rowsOf` finds in a broadcast that also
+    * carries a driver-built index over them. */
+  def indexFor[V](bc: Broadcast[V], needDf: Boolean, rowsOf: V => Array[TokRow])
       : (SuffixIndex, Array[Doc], Array[TokRow], LongMap[Int]) =
     builds.synchronized {
       var built = builds.get(bc.id)
       if (built == null) {
-        val rows = bc.value
+        val rows = rowsOf(bc.value)
         val index = new SuffixIndex
         val docs = new Array[Doc](rows.length)
         var i = 0

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Dataset
 import graft.kernel.{Doc, Matcher}
 
@@ -18,9 +19,6 @@ import graft.kernel.{Doc, Matcher}
 object BroadcastVerifyStage {
 
   def apply(toks: Dataset[TokRow], cfg: DedupConfig): Dataset[Edge] = {
-    val spark = toks.sparkSession
-    import spark.implicits._
-
     // DEDUP id-uniqueness contract, enforced once on the driver before
     // broadcasting (cluster identity IS the clip_id — a duplicate would
     // silently merge two rows' identities). The cogroup strategy enforces
@@ -38,7 +36,16 @@ object BroadcastVerifyStage {
       }
       corpus
     }
+    edges(toks, bc, identity[Array[TokRow]], cfg)
+  }
 
+  /** Every `patterns` row matched against the corpus rows (`rowsOf`) of the
+    * broadcast `bc` through the executor index; a pattern present in the
+    * corpus never pairs with itself. */
+  def edges[V](patterns: Dataset[TokRow], bc: Broadcast[V], rowsOf: V => Array[TokRow],
+      cfg: DedupConfig): Dataset[Edge] = {
+    val spark = patterns.sparkSession
+    import spark.implicits._
     val params = cfg.matchParams(numberOfMatches = 0, noPerfect = false)
     val useIdf = cfg.vocabIdfPenalty != 0f
 
@@ -50,8 +57,8 @@ object BroadcastVerifyStage {
     // duplicate edges are harmless to CC)
     val asym = cfg.editCosts.insert != cfg.editCosts.delete || useIdf
 
-    toks.mapPartitions { it =>
-      val (index, docs, rows, df) = BroadcastCorpus.indexFor(bc, useIdf)
+    patterns.mapPartitions { it =>
+      val (index, docs, rows, df) = BroadcastCorpus.indexFor(bc, useIdf, rowsOf)
       val n = rows.length
       val idfMax = if (useIdf) math.log(n.toDouble).toFloat else 0.01f
       it.flatMap { p =>

@@ -296,8 +296,7 @@ object CandidateStage {
   @inline def shorterFirst(n1: Int, id1: String, n2: Int, id2: String): Boolean =
     n1 < n2 || (n1 == n2 && id1 < id2)
 
-  /** (p, c, p_n, c_n) pairs re-oriented by [[shorterFirst]] (cross pairs
-    * joining self pairs, as in the incremental path). */
+  /** (p, c, p_n, c_n) pairs re-oriented by [[shorterFirst]]. */
   def oriented(pairs: DataFrame): DataFrame = {
     val keep = shorterFirst(col("p_n"), col("p"), col("c_n"), col("c"))
     val pick = (x: String, y: String) => when(keep, col(x)).otherwise(col(y))

@@ -15,8 +15,8 @@ final case class ClusterRow(clip_id: String, cluster_id: String)
   *  - **distributed**: iterative min-label propagation (hash-min) via
   *    DataFrame self-joins with `localCheckpoint` per iteration and a
   *    convergence count — the 10^12-row path. Dup clusters are near-cliques,
-  *    so propagation converges in a handful of iterations; the cap guards
-  *    pathological chains.
+  *    so propagation converges in a handful of iterations; a graph still
+  *    changing at the iteration cap (a long dup chain) fails loudly.
   *
   * Cluster id = min clip_id in the component either way.
   */
@@ -99,6 +99,11 @@ object ConnectedComponents {
       labels = updated.select($"v", $"label")
       iter += 1
     }
+    // unmerged labels past the cap are a wrong answer, never a result
+    if (changed > 0)
+      throw new IllegalStateException(s"distributed connected components did not converge: " +
+        s"$changed labels still changed after maxIterations = $maxIterations — raise " +
+        "ccMaxIterations (a chain of n dup edges needs up to n rounds)")
 
     allIds.select($"clip_id")
       .join(labels, allIds("clip_id") === labels("v"), "left")

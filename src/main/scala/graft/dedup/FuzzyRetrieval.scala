@@ -534,7 +534,7 @@ object FuzzyRetrieval {
     val nEval = evalSet.count()
     val evalToks = TokenizeStage(evalSet, cfg).persist()
     val bc = try BroadcastCorpus.broadcast(evalToks, TokenizeStage.rowBytes(), cfg, "eval set",
-        beyondMemory) { evalRows =>
+        "FuzzyRetrieval.decontaminateShuffle (the beyond-memory path)") { evalRows =>
       require(evalRows.length == nEval,
         s"${nEval - evalRows.length} of $nEval eval rows were dropped by the tokenize " +
           s"filters (empty transcript, or > maxTokensInPattern=${cfg.maxTokensInPattern} " +

@@ -2,8 +2,9 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.data.Clip
-import graft.kernel.Hashing
+import graft.kernel.{Doc, Hashing, MatchResult, Matcher, SuffixIndex}
 
 /** Result of one dedup increment. `clusters` is the FULL updated assignment
   * (prior corpus ∪ new batch); `newEdges` are the verified dup edges incident
@@ -35,36 +36,30 @@ final case class IncrementalResult(
   * cause. No old↔old work is ever repeated.
   *
   * Work accounting per increment (the 10^12-row case):
-  *  - new batch: tokenize + signatures (narrow), candidate shuffles O(new
-  *    entries);
-  *  - old corpus: ONE narrow scan of the accumulated token/signature
-  *    checkpoints — the bucket-key prefilter (below) keeps old rows out of
-  *    every shuffle unless they share a shingle or band key with the batch;
-  *  - verify runs ONLY on new-incident pairs; CC runs on the contracted
-  *    touched subgraph (new ids + touched old labels);
-  *  - the updated assignment is an O(old) narrow rewrite (broadcast remap
-  *    join — merges are tiny), the same column-stitch cost the full pipeline
-  *    pays to write its clusters table.
-  *
-  * Bucket-key prefilter: the batch's shingle and band keys are collected
-  * (bounded by `prefilterMaxKeys`, sorted-array binary search on executors)
-  * and old rows sharing none of them are dropped BEFORE entry generation —
-  * a pair surfaced by the ngram/band channels shares a bucket key by
-  * definition, so the filter loses nothing on those channels. The tiny
-  * channels scan the full old token set narrowly (a containment host need
-  * not share any k-shingle). Past the key bound the prefilter switches off
-  * (full cross join, still correct) and says so in the metrics.
+  *  - new batch: tokenize (narrow, one job that also sizes it), then ONE
+  *    collect + broadcast of its token rows with their shingle, band and
+  *    tiny-row postings — the reference's shared read-only index
+  *    (cli/src/FuzzyMatch-cli.cc:82-193), batch-sized. A batch past the
+  *    broadcast envelope fails loudly (ingest smaller batches);
+  *  - new↔new: each batch row queries the executor index, as the
+  *    broadcast full pipeline does;
+  *  - new↔old: ONE narrow scan of the accumulated old token rows, each row
+  *    matched against the batch in both orientations ([[probeOld]]) — no
+  *    candidate or verify shuffle, no old row ever leaves its partition;
+  *  - CC runs on the contracted touched subgraph (new ids + touched old
+  *    labels); the updated assignment is an O(old) narrow rewrite
+  *    (broadcast remap join — merges are tiny), the same column-stitch cost
+  *    the full pipeline pays to write its clusters table.
   *
   * Equality caveats, stated honestly:
-  *  - hot-bucket caps see per-increment bucket views, not the accumulated
-  *    corpus dfs, so capping decisions can differ from the full run in BOTH
-  *    directions: a bucket the full run capped may survive here (extra
-  *    recall), and a cross-channel bucket whose old-frontier side is hot may
-  *    cap where the full run's smaller per-bucket df did not (lost recall).
-  *    Measured at 120k+12k with default caps: 33,711 clusters incremental
-  *    vs 33,709 full — 0.006% divergence, and the capped-bucket counters
-  *    report every such decision. With caps inactive the results are
-  *    IDENTICAL (pinned by IncrementalDedupSpec);
+  *  - only BATCH-side buckets are capped (`shingleDfCap` / `bandDfCap` over
+  *    the batch's own dfs), and only for candidates whose pattern is the
+  *    batch row; an old row touching a capped shingle bucket falls back to
+  *    the batch's uncapped band buckets. The old side is never capped and
+  *    an old-row pattern is matched exactly, so every edge the shuffle
+  *    channels would find is found, the `capped_*` metric extras count
+  *    every capped bucket, and with caps inactive the new-incident edges
+  *    equal the exact broadcast full run's (pinned by IncrementalDedupSpec);
   *  - idf weighting and asymmetric insert/delete costs need corpus-global
   *    state this path does not maintain — rejected loudly;
   *  - the audio channels work incrementally through COMMITTED fingerprints
@@ -85,11 +80,6 @@ final case class IncrementalResult(
   * its outDir; compaction = re-running the full pipeline into a fresh head.
   */
 object IncrementalDedup {
-
-  /** Keys above this bound skip the prefilter (a sorted Array[Long] of 4M
-    * keys ≈ 32 MB broadcast — past that, filtering costs more than it
-    * saves and the plain cross join takes over). */
-  val defaultPrefilterMaxKeys = 4000000
 
   private def readIf(spark: SparkSession, dir: String, names: String*): Option[DataFrame] =
     names.collectFirst {
@@ -152,6 +142,96 @@ object IncrementalDedup {
       .map(_.as[AudioContainment.AudioCtRow]).reduce(_ union _)
   }
 
+  /** The batch broadcast's key postings (positions into the batch rows):
+    * every k-shingle bucket, the MinHash band buckets (channel on) and the
+    * tiny rows (fewer than k tokens). A bucket past its cap — `shCap` /
+    * `bandCap`, AUTO caps resolved over the batch's own bucket dfs — gives
+    * no batch-pattern candidates; a capped shingle bucket still passes the
+    * key test. */
+  private final case class BatchKeys(shingles: java.util.HashMap[Long, Array[Int]], shCap: Int,
+      bands: java.util.HashMap[Long, Array[Int]], bandCap: Int, tiny: Array[Int],
+      cappedShingle: Long, cappedBand: Long)
+
+  private def batchKeys(rows: Array[TokRow], cfg: DedupConfig): BatchKeys = {
+    val k = cfg.shingleK
+    val (sh, shCap, nSh) = buckets(rows.map(r =>
+      if (r.n_tokens >= k) Hashing.distinctShingles(r.ids, k) else Array.emptyLongArray), cfg.shingleDfCap)
+    val (bd, bandCap, nBd) =
+      buckets(if (cfg.useMinhashChannel) rows.map(bandKeys(_, cfg)) else Array.empty, cfg.bandDfCap)
+    BatchKeys(sh, shCap, bd, bandCap, rows.indices.filter(rows(_).n_tokens < k).toArray, nSh, nBd)
+  }
+
+  /** Uncapped postings of `keys`, the resolved cap (AUTO, `cap` ≤ 0: the
+    * knee rule of [[CandidateStage.dropHotBuckets]] over these buckets) and
+    * the number of buckets past it. */
+  private def buckets(keys: Array[Array[Long]], cap: Int): (java.util.HashMap[Long, Array[Int]], Int, Long) = {
+    val post = BroadcastCorpus.postings(keys, Int.MaxValue)._1
+    val dfs = post.values.asScala.map(_.length.toLong).toSeq
+    val eff = if (cap > 0) cap.toLong else {
+      val budget = dfs.sum * (if (cap == 0) CandidateStage.autoCapDefaultWorkFactor else -cap.toLong)
+      var work = 0L
+      val fit = dfs.groupBy(identity).toSeq.sortBy(_._1)
+        .takeWhile { case (df, b) => work += df * df * b.size; work <= budget }
+      math.max(fit.lastOption.fold(0L)(_._1), CandidateStage.autoCapFloor.toLong)
+    }
+    (post, eff.min(Int.MaxValue).toInt, dfs.count(_ > eff).toLong)
+  }
+
+  private def bandKeys(t: TokRow, cfg: DedupConfig): Array[Long] = Hashing.bandKeys(
+    SignatureStage.one(t, cfg.shingleK, cfg.minhashPerms, cfg.minhashBands, cfg.seed).band_hashes)
+
+  /** The new↔old edges of one old row `o`, in both orientations
+    * ([[CandidateStage.shorterFirst]] picks the pattern, as everywhere):
+    *  - `o` the pattern: the matcher over the batch index — exact, the
+    *    matcher is its own candidate filter — run when `o` is tiny or shares
+    *    a batch shingle key (a dup of a pattern with ≥ k tokens shares a
+    *    k-gram: msl ≥ minSubseqLength ≥ shingleK);
+    *  - a batch row `s` the pattern: the rows sharing an uncapped shingle
+    *    bucket with `o`, the tiny rows `o` contains and, when `o` touches a
+    *    capped bucket, the rows sharing an uncapped band bucket with it, each
+    *    verified against a one-row index over `o`. */
+  private def probeOld(o: TokRow, index: SuffixIndex, docs: Array[Doc], rows: Array[TokRow],
+      keys: BatchKeys, cfg: DedupConfig, params: Matcher.Params): Iterator[Edge] = {
+    def edge(p: TokRow, c: String, m: MatchResult) =
+      Edge(p.clip_id, c, m.score, m.maxSubseq, if (m.maxSubseq >= p.n_tokens) "substring" else "edit")
+    val (k, ec, fuzzy) = (cfg.shingleK, cfg.editCosts, cfg.threshold)
+    var keyHit = o.n_tokens < k
+    var touchesCapped = false
+    val cands = scala.collection.mutable.BitSet.empty
+    if (!keyHit) Hashing.distinctShingles(o.ids, k).foreach { h =>
+      val post = keys.shingles.get(h)
+      if (post != null) {
+        keyHit = true
+        if (post.length > keys.shCap) touchesCapped = true else cands ++= post
+      }
+    }
+    keys.tiny.foreach { t =>
+      if (!SuffixIndex.theoreticalRejection(rows(t).n_tokens, o.n_tokens, ec, fuzzy) &&
+          CandidateStage.containsSubsequence(o.ids, rows(t).ids)) cands += t
+    }
+    if (touchesCapped && !keys.bands.isEmpty) bandKeys(o, cfg).foreach { h =>
+      val post = keys.bands.get(h)
+      if (post != null && post.length <= keys.bandCap) cands ++= post
+    }
+    val oDoc = Doc(o.ids, o.reals, o.itoks)
+    val asPattern = if (!keyHit) Nil else
+      Matcher.matchPattern(index, docs, oDoc, params).collect {
+        case m if CandidateStage.shorterFirst(o.n_tokens, o.clip_id,
+            rows(m.sIdx).n_tokens, rows(m.sIdx).clip_id) => edge(o, rows(m.sIdx).clip_id, m)
+      }
+    val patterns = cands.toSeq.map(rows(_)).filter(s =>
+      CandidateStage.shorterFirst(s.n_tokens, s.clip_id, o.n_tokens, o.clip_id) &&
+        !SuffixIndex.theoreticalRejection(s.n_tokens, o.n_tokens, ec, fuzzy))
+    val asCandidate = if (patterns.isEmpty) Nil else {
+      val oIndex = new SuffixIndex
+      oIndex.add(o.ids)
+      oIndex.sort()
+      patterns.flatMap(s => Matcher.matchPattern(oIndex, _ => oDoc, Doc(s.ids, s.reals, s.itoks), params)
+        .map(edge(s, o.clip_id, _)))
+    }
+    (asPattern ++ asCandidate).iterator
+  }
+
   /** Run one increment. `priorDirs`: the lineage chain (see object doc);
     * the LAST dir's `clusters` table is the current assignment. `outDir`:
     * where to commit this increment's state (None = return results without
@@ -160,8 +240,7 @@ object IncrementalDedup {
       newClips: Dataset[Clip],
       priorDirs: Seq[String],
       cfg: DedupConfig,
-      outDir: Option[String] = None,
-      prefilterMaxKeys: Int = defaultPrefilterMaxKeys): IncrementalResult = {
+      outDir: Option[String] = None): IncrementalResult = {
     val spark = newClips.sparkSession
     import spark.implicits._
     require(priorDirs.nonEmpty, "priorDirs must name at least the initial pipeline checkpoint")
@@ -170,17 +249,13 @@ object IncrementalDedup {
         "corpus-global document frequencies this path does not maintain — run the " +
         "full pipeline, or turn vocabIdfPenalty off")
     require(cfg.editCosts.insert == cfg.editCosts.delete,
-      "incremental dedup requires symmetric insert/delete costs (the cross-table " +
-        "candidate channels pre-reject one-sidedly) — run the full pipeline")
-    // (audio channels supported since round 5 via committed fingerprints —
-    // accumulatedAudioFps fails loudly when the chain lacks them)
+      "incremental dedup requires symmetric insert/delete costs (the probe verifies " +
+        "each pair in one orientation) — run the full pipeline")
 
     val metrics = scala.collection.mutable.ListBuffer.empty[MetricRow]
     val sc = spark.sparkContext
     // phase markers: every Spark job an increment fires carries its phase in
-    // spark.job.description (Spark UI / listener attribution — an increment
-    // is ~15 actions and the fixed per-job cost is its toy-scale floor, so
-    // per-phase job accounting is the first thing a regression hunt needs)
+    // spark.job.description (Spark UI / listener per-phase job accounting)
     def phased[A](name: String)(body: => A): A = {
       val prev = sc.getLocalProperty("spark.job.description")
       sc.setJobDescription(s"inc:$name")
@@ -215,9 +290,7 @@ object IncrementalDedup {
     // nulls — comparing all three keeps BOTH guards: a null clip_id and a
     // duplicate clip_id each fail loudly (a null key would otherwise flow
     // through the stages and silently vanish from the semi-joined assignment)
-    // both prechecks in ONE action (r6 job-floor cut): the batch-id stats
-    // agg and the prior-assignment collision count are independent one-row
-    // aggregates, cross-joined so a single head() materializes both
+    // both one-row prechecks cross-joined into ONE action
     val (nNew, nNewNonNull, nNewDistinct, collisions) = phased("precheck") {
       val stats = newIds.agg(count(lit(1)), count($"clip_id"), count_distinct($"clip_id"))
       val coll = priorClusters.join(newIds, Seq("clip_id"), "left_semi")
@@ -233,149 +306,25 @@ object IncrementalDedup {
       s"$collisions new clip_ids already exist in the prior assignment — an increment " +
         "adds NEW rows; re-ingesting an id would leave two assignment rows for it")
 
-    // ---- stage 1: tokenize + signatures on the batch (narrow) ----
-    // Every O(new)-sized intermediate is localCheckpoint'ed (LAZILY — the
-    // action that immediately follows each checkpoint materializes it, so
-    // the eager variant's dedicated materialization job would be pure
-    // overhead; r6), not
-    // persist'ed: a persist keeps the full logical plan alive, and the
-    // increment's plan unions channel trees over the whole lineage chain —
-    // with AQE re-optimizing that tree once per query stage per action,
-    // driver planning time dwarfed execution (measured: 343 jobs / 821 s of
-    // single-threaded Catalyst CPU for a 300-clip batch). Checkpointing
-    // truncates each stage's plan to a scan of the materialized rows; the
-    // blocks are batch-sized, and the committed outDir tables are the
-    // durable copy a production cluster would recover from.
-    // batch-side partitioning sized to the BATCH, not the session default:
-    // an O(new) path whose input arrives in cluster-sized partitioning
-    // (e.g. a 2,400-row drop in 64 splits) otherwise schedules ~90 jobs of
-    // near-empty tasks; ~4k rows per partition keeps checkpoint blocks
-    // small while capping task churn. The resize is a repartition of the
-    // TOKENIZE OUTPUT (token rows only), never a coalesce of the source:
-    // coalesce is narrow and would fuse upstream, funneling the whole
-    // source read — audio payload included — through batchParts tasks.
+    // ---- stage 1: tokenize the batch (narrow) ----
+    // O(new) intermediates are localCheckpoint'ed (lazily: the next action
+    // materializes them), never persist'ed: a persisted plan over the whole
+    // chain was re-optimized per query stage per action (measured 343 jobs /
+    // 821 s of Catalyst CPU for a 300-clip batch). Partitioning is sized to
+    // the BATCH (~4k rows each) by repartitioning the tokenize OUTPUT — a
+    // coalesce would fuse upstream and funnel the source read through it.
     val batchParts = math.max(1L, math.min(nNew / 4096 + 1, newClips.rdd.getNumPartitions.toLong)).toInt
     var newToks: Dataset[TokRow] = null
+    var batchBytes = 0L
+    // one job: the row count and the batch broadcast's byte estimate
     val nNewToks = timed("inc_tokenize", nNew) {
       newToks = TokenizeStage(newClips, cfg).repartition(batchParts).localCheckpoint(false)
-      newToks.count()
-    }
-    val newSigs = phased("signatures")(SignatureStage(newToks, cfg).localCheckpoint(false))
-
-    // ---- bucket-key prefilter: the batch's shingle + band key sets ----
-    val k = cfg.shingleK
-    val seed = cfg.seed
-    val perms = cfg.minhashPerms
-    val bands = cfg.minhashBands
-    // ONE tagged job for both key sets (was two actions — r6 job-floor cut):
-    // shingle keys tagged 0, band keys tagged 1, distinct'd together. The
-    // limit bounds the driver; a collect that HITS the limit may have
-    // dropped keys of either side, so both sides then report incomplete
-    // (prefilter off — always sound, the filter is an optimization).
-    val (shKeys, bandKeys) = phased("prefilter_keys") {
-      val keyLimit = 2 * (prefilterMaxKeys + 1)
-      val tagged = newToks.filter(_.n_tokens >= k)
-        .flatMap(t => Hashing.distinctShingles(t.ids, k).iterator.map(h => (0, h)))
-        .union(newSigs.flatMap(s => s.band_hashes.iterator.zipWithIndex
-          .map { case (h, bd) => (1, Hashing.mix64(h ^ (bd * 0x9e3779b97f4a7c15L))) }))
-        .distinct().limit(keyLimit).collect()
-      def side(tag: Int): Option[Array[Long]] = {
-        if (tagged.length >= keyLimit) return None // possibly truncated
-        val arr = tagged.collect { case (t, h) if t == tag => h }
-        if (arr.length > prefilterMaxKeys) None
-        else { java.util.Arrays.sort(arr); Some(arr) }
-      }
-      (side(0), side(1))
-    }
-
-    // frontier = old rows that can possibly pair with the batch through the
-    // keyed channels; past the key bound the frontier is the whole old side.
-    // PERSISTED (r6): the batched hot-key stats job and the channel's main
-    // exchange each read the frontier — uncached, each read re-ran the full
-    // old-side scan WITH the anyShingleIn sweep (the r5-measured dominant
-    // candidate cost); the cache is frontier-sized (batch-incident old rows
-    // only) and released after the candidate set materializes.
-    val frontierToks = (shKeys match {
-      case Some(keys) =>
-        val bc = sc.broadcast(keys)
-        oldToks.filter(t => t.n_tokens >= k && Hashing.anyShingleIn(t.ids, k, bc.value))
-      case None => oldToks
-    }).persist()
-    lazy val oldSigs = accumulatedSigs(spark, priorDirs, cfg)
-    var frontierSigsForced = false
-    lazy val frontierSigs = {
-      frontierSigsForced = true
-      (bandKeys match {
-        case Some(keys) =>
-          val bc = sc.broadcast(keys)
-          oldSigs.filter(_.band_hashes.iterator.zipWithIndex.exists { case (h, bd) =>
-            java.util.Arrays.binarySearch(bc.value, Hashing.mix64(h ^ (bd * 0x9e3779b97f4a7c15L))) >= 0
-          })
-        case None => oldSigs
-      }).persist()
-    }
-
-    // the batch's tiny-row count, computed ONCE and shared by the self tiny
-    // channel and the new→old cross tiny channel
-    val k2 = cfg.shingleK
-    val nTinyNew = phased("inc_candidates")(newToks.filter(_.n_tokens < k2).count())
-
-    // ---- stage 2a: new-incident candidates ----
-    val cappedShingleBuckets = sc.longAccumulator("incCappedShingleBuckets")
-    val cappedShinglePairs = sc.longAccumulator("incCappedShinglePairsLost")
-    val cappedBandBuckets = sc.longAccumulator("incCappedBandBuckets")
-    val cappedTinyGramBuckets = sc.longAccumulator("incCappedTinyGramBuckets")
-
-    // new↔new: the pipeline's own self-join channels, restricted to the batch
-    // (the batched hot-bucket stats job runs eagerly, inside this call)
-    val selfCands = phased("inc_candidates")(CandidateStage(newToks, newSigs, cfg,
-      cappedShingleBuckets, cappedShinglePairs, cappedBandBuckets, cappedTinyGramBuckets,
-      knownTinyCount = nTinyNew))
-    // new↔old: cross channels; the keyed ones probe only the frontier (with
-    // fixed caps all four side valves share ONE batched hot-key stats job),
-    // the tiny containment scans run against the FULL old side (both
-    // directions — a tiny host shares no k-shingle or band with its
-    // containee). Every channel's output carries both sides' token counts,
-    // so orienting the pairs like the self-join channels (pattern = shorter
-    // side — the laxer min-subsequence requirement; the symmetric-cost dup
-    // decision is direction-free only under this orientation) is a pure
-    // projection. The old→new tiny channel counts the old side eagerly, so
-    // the whole construction runs under the phase label.
-    val crossPairs = phased("inc_candidates")(CandidateStage.keyedPairs(newToks, newSigs,
-      Some((frontierToks, () => frontierSigs)), cfg, cappedShingleBuckets, None,
-      cappedBandBuckets) ++ Seq(
-      CandidateStage.tinyPairs(newToks, oldToks, cfg, cappedTinyGramBuckets,
-        selfDedup = false, knownTinyCount = nTinyNew),
-      CandidateStage.tinyPairs(oldToks, newToks, cfg, cappedTinyGramBuckets, selfDedup = false)))
-    val oriented = CandidateStage.oriented(crossPairs.reduce(_ union _))
-      .select("p", "c").as[CandPair]
-    var cands: Dataset[CandPair] = null
-    val nCands = timed("inc_candidates", nNewToks, Map(
-      "prefilter" -> (if (shKeys.isDefined && bandKeys.isDefined) "on" else "off"),
-      "capped_shingle_buckets" -> cappedShingleBuckets.value.toString,
-      "capped_band_buckets" -> cappedBandBuckets.value.toString,
-      "capped_tiny_gram_buckets" -> cappedTinyGramBuckets.value.toString)) {
-      cands = selfCands.union(oriented).dropDuplicates("p", "c").as[CandPair].localCheckpoint(false)
-      val n = cands.count()
-      // the checkpointed candidate set is the only consumer — release the
-      // frontier caches rather than pinning one copy per increment
-      frontierToks.unpersist()
-      if (frontierSigsForced) frontierSigs.unpersist()
+      val (n, bytes) = BroadcastCorpus.stats(newToks, TokenizeStage.rowBytes())
+      batchBytes = bytes
       n
     }
 
-    // ---- stage 2b: verify — only the token rows the pairs touch shuffle ----
-    val candIds = cands.select($"p".as("clip_id")).union(cands.select($"c".as("clip_id"))).distinct()
-    val verifyToks = newToks.union(
-      oldToks.join(candIds, Seq("clip_id"), "left_semi").as[TokRow])
-    var newEdges: Dataset[Edge] = null
-    var nNewEdges = 0L
-    nNewEdges += timed("inc_verify", nCands) {
-      newEdges = VerifyStage(verifyToks, cands, cfg).localCheckpoint(false)
-      newEdges.count()
-    }
-
-    // ---- stage 2c: audio channels (optional) — new-incident audio edges.
+    // ---- stage 2: audio channels (optional) — new-incident audio edges.
     // new↔new runs the batch operators verbatim on the batch; new↔old
     // probes the stored old fingerprints against a BATCH-SIZED broadcast
     // index (the scalable orientation: the broadcast side is the bounded
@@ -384,6 +333,8 @@ object IncrementalDedup {
     // chunk dfs, not the union's — two-sided divergence, capped + counted.
     var newFps: Dataset[AudioDedup.AudioFpRow] = null
     var newCtFps: Dataset[AudioContainment.AudioCtRow] = null
+    var audioCk: Dataset[Edge] = null
+    var nNewEdges = 0L
     if (cfg.useAudioChannel || cfg.useAudioContainment) {
       // the broadcast side is the batch: guarded before collect (one
       // distributed size agg), so an oversized batch never reaches the driver
@@ -428,15 +379,36 @@ object IncrementalDedup {
             .map { case (ri, off, corr) => Edge(f.clip_id, rs(ri).clip_id, corr, off, "audio_contain") })
         })
       }
-      var audioCk: Dataset[Edge] = null
       nNewEdges += timed("inc_audio", nNew, Map("capped_audio_buckets" -> audioCapped.value.toString)) {
         audioCk = audioE.localCheckpoint(false)
         audioCk.count()
       }
-      newEdges = newEdges.union(audioCk)
     }
 
-    // ---- stage 3: CC over the label-contracted touched subgraph ----
+    // ---- stage 3: transcript edges — ONE narrow probe against a broadcast
+    // of the batch (see the object doc), guarded by stage 1's stats; audio
+    // runs first, so an audio batch past the envelope names its channel.
+    BroadcastCorpus.requireFits(nNewToks, batchBytes, cfg, "incremental batch",
+      "a smaller ingest batch, or the full pipeline")
+    val bc = phased("inc_probe")(
+      BroadcastCorpus.broadcastUnguarded(newToks)(rows => (rows, batchKeys(rows, cfg))))
+    val rowsOf = (v: (Array[TokRow], BatchKeys)) => v._1
+    val keys = bc.value._2
+    val params = cfg.matchParams(numberOfMatches = 0, noPerfect = false)
+    val newOld = oldToks.mapPartitions { it =>
+      val (index, docs, rows, _) = BroadcastCorpus.indexFor(bc, needDf = false, rowsOf)
+      it.flatMap(probeOld(_, index, docs, rows, bc.value._2, cfg, params))
+    }
+    var newEdges: Dataset[Edge] = null
+    nNewEdges += timed("inc_probe", nNewToks, Map(
+        "capped_shingle_buckets" -> keys.cappedShingle.toString,
+        "capped_band_buckets" -> keys.cappedBand.toString)) {
+      newEdges = BroadcastVerifyStage.edges(newToks, bc, rowsOf, cfg).union(newOld).localCheckpoint(false)
+      newEdges.count()
+    }
+    if (audioCk != null) newEdges = newEdges.union(audioCk)
+
+    // ---- stage 4: CC over the label-contracted touched subgraph ----
     // old endpoints collapse to their existing labels (label = the old
     // component's min clip_id, so min-id naming survives contraction)
     val endpoints = newEdges.select($"a".as("clip_id")).union(newEdges.select($"b".as("clip_id"))).distinct()
@@ -480,12 +452,12 @@ object IncrementalDedup {
     // ---- commit (immutable increment dir; clusters written LAST) ----
     outDir.foreach(dir => phased("commit") {
       graft.data.TableIO.write(newToks.toDF(), s"$dir/new_tokens")
-      graft.data.TableIO.write(newSigs.toDF(), s"$dir/new_signatures")
+      graft.data.TableIO.write(SignatureStage(newToks, cfg).toDF(), s"$dir/new_signatures")
       if (newFps != null)
         graft.data.TableIO.write(newFps.toDF(), s"$dir/new_audio_fps")
       if (newCtFps != null)
         graft.data.TableIO.write(newCtFps.toDF(), s"$dir/new_audio_ct_fps")
-      graft.data.TableIO.write(newEdges.toDF(), s"$dir/new_edges")
+      graft.data.TableIO.write(newEdges.coalesce(batchParts).toDF(), s"$dir/new_edges")
       metrics ++= Metrics.perPartition("new_tokens", newToks)
       metrics ++= Metrics.perPartition("new_edges", newEdges)
       graft.data.TableIO.write(metrics.toSeq.toDS().toDF(), s"$dir/metrics")
@@ -530,25 +502,51 @@ object IncrementalDedup {
   private def chainPathOf(stateDir: String) =
     new org.apache.hadoop.fs.Path(stateDir, "chain.json")
 
-  /** Parse the chain meta: the ordered increment-dir names (relative to the
-    * state dir) plus the config fingerprint they were built with. */
-  def readChain(spark: SparkSession, stateDir: String): Option[(Seq[String], Int)] = {
+  /** The chain meta's (dir names, cfg hash), or None unless `raw` is a
+    * COMPLETE meta (a torn write lacks the closing `]}`). */
+  private def parseChain(raw: String): Option[(Seq[String], Int)] =
+    for {
+      dirs <- "\"dirs\":\\[([^\\]]*)\\]\\}\\s*$".r.findFirstMatchIn(raw)
+      hash <- "\"cfg_hash\":(-?\\d+)".r.findFirstMatchIn(raw)
+    } yield (dirs.group(1).split(',').toSeq.filter(_.nonEmpty)
+      .map(_.trim.stripPrefix("\"").stripSuffix("\"")), hash.group(1).toInt)
+
+  /** The committed pointer. [[writeChain]] deletes `chain.json` before it
+    * renames the tmp over it, so a crash between the two leaves only a
+    * complete tmp: that tmp IS the commit, and the rename is finished here. */
+  private def pointer(spark: SparkSession, stateDir: String): Option[(Seq[String], Int)] = {
     val p = chainPathOf(stateDir)
+    val tmp = p.suffix(".tmp")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val raw =
-        try scala.io.Source.fromInputStream(in)(scala.io.Codec.UTF8).mkString
-        finally in.close()
-      val names = "\"dirs\":\\[([^\\]]*)\\]".r.findFirstMatchIn(raw)
-        .getOrElse(sys.error(s"malformed chain meta at $p: $raw"))
-        .group(1).split(',').toSeq.filter(_.nonEmpty).map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      val cfgHash = "\"cfg_hash\":(-?\\d+)".r.findFirstMatchIn(raw)
-        .getOrElse(sys.error(s"malformed chain meta at $p: $raw")).group(1).toInt
-      Some((names, cfgHash))
+    def parsed(f: org.apache.hadoop.fs.Path) = if (!fs.exists(f)) None else {
+      val in = fs.open(f)
+      try parseChain(scala.io.Source.fromInputStream(in)(scala.io.Codec.UTF8).mkString)
+      finally in.close()
+    }
+    if (fs.exists(p)) Some(parsed(p).getOrElse(sys.error(s"malformed chain meta at $p")))
+    else parsed(tmp).map { chain =>
+      require(fs.rename(tmp, p), s"could not roll the chain meta forward from $tmp")
+      chain
     }
   }
+
+  /** The chain meta: ordered increment-dir names (relative to the state
+    * dir) and the config fingerprint they were built with. A pointer lost
+    * over committed dirs fails loudly instead of reading as "no state". */
+  def readChain(spark: SparkSession, stateDir: String): Option[(Seq[String], Int)] =
+    pointer(spark, stateDir).orElse {
+      val dir = new org.apache.hadoop.fs.Path(stateDir)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val orphans = if (!fs.exists(dir)) Nil else fs.listStatus(dir).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.matches("(full|inc|compact)_.*"))
+        .map(_.getPath.getName)
+      if (orphans.nonEmpty)
+        throw new IllegalStateException(s"chain state at $stateDir holds committed dirs " +
+          s"(${orphans.sorted.mkString(", ")}) but no chain.json — the pointer is lost; " +
+          "restore it (or clear the state dir to re-bootstrap) rather than silently " +
+          "restarting the chain from one batch")
+      None
+    }
 
   /** Commit the chain pointer via temp + atomic rename. `expectPrev` is a
     * best-effort lost-update guard for the documented single-writer
@@ -562,12 +560,12 @@ object IncrementalDedup {
       cfg: DedupConfig, expectPrev: Option[Seq[String]]): Unit = {
     val p = chainPathOf(stateDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val now = readChain(spark, stateDir).map(_._1)
+    val now = pointer(spark, stateDir).map(_._1)
     require(now == expectPrev,
       s"chain meta at $p changed underneath this writer (found $now, based on " +
         s"$expectPrev) — two ingest queries are sharing one state dir; " +
         "clusterIngest state is single-writer")
-    val tmp = new org.apache.hadoop.fs.Path(stateDir, "chain.json.tmp")
+    val tmp = p.suffix(".tmp")
     val meta = s"""{"version":1,"cfg_hash":${cfgFingerprint(cfg)},""" +
       s""""dirs":[${names.map(n => "\"" + n + "\"").mkString(",")}]}"""
     val out = fs.create(tmp, true)

@@ -63,25 +63,6 @@ object Hashing {
     out.toArray
   }
 
-  /** True iff ANY k-shingle of `ids` is in `sortedKeys` (binary search).
-    * Allocation-free, short-circuiting — the incremental-dedup frontier
-    * filter runs this over EVERY old corpus row per increment, and this
-    * host (like a busy executor) punishes per-row HashSet/ArrayBuffer
-    * churn far more than the hash computation itself. Duplicate shingles
-    * are probed twice rather than deduplicated: membership is idempotent,
-    * so skipping the dedup set is pure savings. */
-  def anyShingleIn(ids: Array[Long], k: Int, sortedKeys: Array[Long]): Boolean = {
-    if (ids.length == 0) return false
-    val kk = math.min(k, ids.length)
-    val n = ids.length - kk + 1
-    var i = 0
-    while (i < n) {
-      if (java.util.Arrays.binarySearch(sortedKeys, shingleHash(ids, i, kk)) >= 0) return true
-      i += 1
-    }
-    false
-  }
-
   /** MinHash signature over shingle hashes using the 2-universal trick
     * h_i(x) = mix(a_i * x + b_i); returns `perms` minima. */
   def minhash(shingles: Array[Long], perms: Int, seed: Long): Array[Long] = {
@@ -102,6 +83,10 @@ object Hashing {
     }
     sig
   }
+
+  /** MinHash band hashes salted by band position: the band bucket keys. */
+  def bandKeys(bh: Array[Long]): Array[Long] =
+    Array.tabulate(bh.length)(bd => mix64(bh(bd) ^ (bd * 0x9e3779b97f4a7c15L)))
 
   /** Band hashes: split the signature into `bands` equal groups, hash each
     * with the band index baked in so buckets from different bands never mix. */

@@ -102,10 +102,6 @@ object StreamingDedup {
       .groupBy(window(col("ts"), "1 minute"), col("codec"))
       .agg(count(lit(1)).as("n_clips"), sum(length(col("transcript"))).as("chars"))
 
-  /** MinHash band hashes salted by band position: the band index keys. */
-  private def bandKeys(bh: Array[Long]): Array[Long] =
-    Array.tabulate(bh.length)(bd => Hashing.mix64(bh(bd) ^ (bd * 0x9e3779b97f4a7c15L)))
-
   /** Stream-static near-dup EDGE stream — the candidates channel
     * ([[candidatesAgainstCorpus]]) COMPLETED with in-stream verification:
     * arriving clips' MinHash band buckets probe the corpus band index (the
@@ -155,7 +151,7 @@ object StreamingDedup {
       // bucket above bandDfCap is dropped AND counted, never a linear scan
       // of the corpus per arriving clip
       val (bandMap, capped) =
-        BroadcastCorpus.postings(collected.map(p => bandKeys(p._2.band_hashes)), cfg.bandDfCap)
+        BroadcastCorpus.postings(collected.map(p => Hashing.bandKeys(p._2.band_hashes)), cfg.bandDfCap)
       cappedBuckets.foreach(_.add(capped))
       // idf penalty (A4): per-word corpus doc frequencies, built once on the
       // driver — pattern-side idf vectors are then per-arriving-clip
@@ -182,7 +178,7 @@ object StreamingDedup {
           val pn = pids.length
           val sig = Hashing.minhash(Hashing.distinctShingles(pids, k), perms, seed)
           val cand = new java.util.LinkedHashSet[Integer]()
-          bandKeys(Hashing.bandHashes(sig, bands)).foreach { key =>
+          Hashing.bandKeys(Hashing.bandHashes(sig, bands)).foreach { key =>
             val hit = bandIdx.get(key)
             if (hit != null) { var j = 0; while (j < hit.length) { cand.add(hit(j)); j += 1 } }
           }

@@ -144,6 +144,32 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(local.sameElements(dist))
   }
 
+  test("BroadcastCorpus.stats counts rows and estimated bytes in one Spark job") {
+    import org.apache.spark.sql.functions.sum
+    val toks = TokenizeStage(SynthCorpus.generate(spark, 120, partitions = 4), cfg).persist()
+    try {
+      val rows = toks.count()
+      val ((n, bytes), jobs) = JobLog.of(spark)(BroadcastCorpus.stats(toks, TokenizeStage.rowBytes()))
+      assert(jobs.size == 1, jobs.mkString("; "))
+      assert(n == rows && bytes == toks.agg(sum(TokenizeStage.rowBytes())).head().getLong(0))
+    } finally toks.unpersist()
+  }
+
+  test("distributed CC fails loudly when it has not converged at maxIterations") {
+    import spark.implicits._
+    // a 12-vertex path needs ~11 propagation rounds; 4 leave labels unmerged
+    val ids = (0 until 12).map(i => f"v$i%02d")
+    val path = ids.zip(ids.tail).map { case (a, b) => graft.dedup.Edge(a, b, 1.0, 0, "edit") }.toDS()
+    val e = intercept[IllegalStateException](graft.dedup.ConnectedComponents
+      .distributed(path, ids.toDF("clip_id"), 4).collect())
+    assert(e.getMessage.contains("did not converge") && e.getMessage.contains("maxIterations = 4"),
+      e.getMessage)
+    // with room to converge the same path is one component
+    val ok = graft.dedup.ConnectedComponents.distributed(path, ids.toDF("clip_id"), 50)
+      .collect().map(_.cluster_id).toSet
+    assert(ok == Set("v00"))
+  }
+
   test("verify-stage salting leaves the edge set unchanged") {
     val clips = SynthCorpus.generate(spark, 240)
     val plain = DedupPipeline.run(clips, cfg.copy(strategy = "shuffle")).edges.collect()

@@ -407,7 +407,7 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException] {
       FuzzyRetrieval.decontaminate(corpus, evalSet, tiny, alsoContained = true)
     }
-    assert(e.getMessage.contains("topkShuffle"), e.getMessage)
+    assert(e.getMessage.contains("decontaminateShuffle"), e.getMessage)
     assert(ids(FuzzyRetrieval.decontaminateShuffle(corpus, evalSet, tiny,
       alsoContained = true)) == bc)
   }

@@ -122,13 +122,49 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(m("n3") == "a1" && m("n4") == "n4")
   }
 
-  test("prefilter off (key bound exceeded) produces the identical assignment") {
+  test("a hot batch bucket is capped and counted; uncapped shingles still pair, all edges exact") {
     import spark.implicits._
-    val dir0 = freshDir("inc-base3")
+    // five batch rows share the trigram "hota hotb hotc" (df 5 > cap 3), and
+    // two old rows share it too; h1/h2 also share uncapped W trigrams with
+    // each other, with the old a1/a2 cluster and with the longer old wl
+    // (where the batch row is the pattern)
+    val hot = Seq("hota", "hotb", "hotc")
+    val hcfg = cfg.copy(shingleDfCap = 3)
+    val old = oldClips ++ Seq(clip("ohot", (hot ++ words("z").drop(3)).mkString(" ")),
+      clip("wl", (hot ++ W.drop(3) :+ "wextra").mkString(" ")))
+    val batch = Seq(
+      clip("h1", (hot ++ W.drop(3)).mkString(" ")),
+      clip("h2", (hot ++ W.drop(3).dropRight(1) :+ "hedit").mkString(" ")),
+      clip("h3", (hot ++ words("p").drop(3)).mkString(" ")),
+      clip("h4", (hot ++ words("r").drop(3)).mkString(" ")),
+      clip("h5", (hot ++ words("u").drop(3)).mkString(" ")))
+    val dir0 = freshDir("inc-hot-base")
+    DedupPipeline.run(old.toDS(), hcfg, Some(dir0))
+    val res = IncrementalDedup.run(batch.toDS(), Seq(dir0), hcfg)
+    val probe = res.metrics.find(_.stage == "inc_probe").get
+    assert(probe.extra("capped_shingle_buckets") == "1", probe.toString)
+
+    val got = res.newEdges.collect().toSet
+    val exact = DedupPipeline.run((old ++ batch).toDS(), hcfg.copy(strategy = "broadcast"))
+      .edges.collect().toSet
+    assert(got.subsetOf(exact), s"non-exact edges: ${got -- exact}")
+    val pairs = got.map(e => Set(e.a, e.b))
+    assert(Seq(Set("h1", "h2"), Set("h1", "a1"), Set("h1", "wl")).forall(pairs.contains), pairs.toString)
+    val ids = batch.map(_.clip_id).toSet
+    assert(exact.filter(e => ids(e.a) || ids(e.b)) == got)
+  }
+
+  test("a batch past the broadcast envelope fails at the guard and starts no probe job") {
+    import spark.implicits._
+    val dir0 = freshDir("inc-guard-base")
     DedupPipeline.run(oldClips.toDS(), cfg, Some(dir0))
-    val on = IncrementalDedup.run(newClips.toDS(), Seq(dir0), cfg)
-    val off = IncrementalDedup.run(newClips.toDS(), Seq(dir0), cfg, prefilterMaxKeys = 0)
-    assert(clusterSet(on.clusters.collect()) == clusterSet(off.clusters.collect()))
+    val (e, jobs) = JobLog.of(spark)(intercept[IllegalArgumentException](
+      IncrementalDedup.run(newClips.toDS(), Seq(dir0), cfg.copy(broadcastMaxRows = 2))))
+    assert(e.getMessage.contains("incremental batch has 6 rows") &&
+      e.getMessage.contains("use a smaller ingest batch, or the full pipeline"), e.getMessage)
+    assert(jobs.nonEmpty && jobs.last._1 == "inc:inc_tokenize", jobs.mkString("; "))
+    assert(jobs.map(_._1).toSet.subsetOf(Set("inc:prior_state", "inc:precheck", "inc:inc_tokenize")),
+      jobs.mkString("; "))
   }
 
   test("compact merges a chain into one head; increments over it are unchanged") {
@@ -187,10 +223,10 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // Regression gate for the round-5 finding: persisted (not checkpointed)
     // intermediates kept the full lineage plan alive and AQE re-optimized it
     // per query stage per action — a 300-clip increment fired 343 jobs and
-    // spent 821 s of driver CPU in Catalyst. With eager localCheckpoint
-    // truncation an increment is ~90 jobs regardless of batch size; the cap
-    // below is that plus slack for Spark-version drift. Job WALLS are host
-    // lottery, job COUNT is deterministic — so the count is the tripwire.
+    // spent 821 s of driver CPU in Catalyst. With the broadcast-batch probe
+    // an increment on this fixture is 23 jobs (59 with the candidate and
+    // verify shuffles it replaced); the cap is that plus 5. Job WALLS are
+    // host lottery, job COUNT is deterministic — so the count is the tripwire.
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import spark.implicits._
     val base = freshDir("jobcount-base")
@@ -212,9 +248,33 @@ class IncrementalDedupSpec extends AnyFunSuite {
       Thread.sleep(500) // listener bus drain (private API in Spark 4)
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(nJobs.get() > 0, "phase markers missing — the gate is counting nothing")
-    assert(nJobs.get() < 120,
-      s"one increment fired ${nJobs.get()} phased Spark jobs — the lineage-truncation " +
-        "discipline (eager localCheckpoint per O(new) intermediate) has regressed")
+    assert(nJobs.get() <= 28,
+      s"one increment fired ${nJobs.get()} phased Spark jobs (23 expected) — a job-per-phase " +
+        "regression, or the lineage-truncation discipline (localCheckpoint per O(new) " +
+        "intermediate) has regressed")
+  }
+
+  test("a chain.json lost in writeChain's delete-rename window rolls forward from the tmp") {
+    import spark.implicits._
+    val state = freshDir("crash-state")
+    IncrementalDedup.ingestStep(oldClips.toDS(), 0L, cfg, state)
+    IncrementalDedup.ingestStep(newClips.toDS(), 1L, cfg, state)
+    // the window: the complete tmp written, chain.json (and its checksum) deleted
+    val dir = java.nio.file.Paths.get(state)
+    def lose(): Unit = Seq("chain.json", ".chain.json.crc")
+      .foreach(f => java.nio.file.Files.deleteIfExists(dir.resolve(f)))
+    java.nio.file.Files.copy(dir.resolve("chain.json"), dir.resolve("chain.json.tmp"))
+    lose()
+    val batch2 = Seq(clip("n3", words("r").mkString(" ")), clip("n4", words("u").mkString(" ")))
+    IncrementalDedup.ingestStep(batch2.toDS(), 2L, cfg, state)
+    assert(IncrementalDedup.readChain(spark, state).get._1 == Seq("full_0", "inc_1", "inc_2"))
+    val all = (oldClips ++ newClips ++ batch2).map(_.clip_id).toSet
+    assert(IncrementalDedup.currentClusters(spark, state).collect().map(_.clip_id).toSet == all)
+    // neither pointer file over committed dirs: loud, never a re-bootstrap
+    lose()
+    val e = intercept[IllegalStateException](
+      IncrementalDedup.ingestStep(Seq(clip("z9", "zz yy xx ww")).toDS(), 3L, cfg, state))
+    assert(e.getMessage.contains("no chain.json") && e.getMessage.contains("inc_2"), e.getMessage)
   }
 
   test("every Spark job an increment starts carries an inc: phase label, commit included") {

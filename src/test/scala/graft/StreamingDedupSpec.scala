@@ -312,13 +312,11 @@ class StreamingDedupSpec extends AnyFunSuite {
           e.getMessage.contains(alternative), s"$site under $bound: ${e.getMessage}")
       }
     }
-    // rows and estimated bytes come from ONE aggregation action, checked
-    // before anything is collected: under AQE that is 3 Spark jobs (the
-    // persisted fingerprints' table-cache stage, the aggregation's map stage
-    // and its result stage)
+    // rows and estimated bytes come from ONE Spark job, checked before
+    // anything is collected (it also fills the persisted fingerprints' cache)
     val (_, jobs) = JobLog.of(spark)(intercept[IllegalArgumentException](
       StreamingDedup.audioEdgesAgainstCorpus(probe, corpus, cfg.copy(broadcastMaxBytes = 1))))
-    assert(jobs.size == 3, s"the audio guard started ${jobs.size} jobs: $jobs")
+    assert(jobs.size == 1, s"the audio guard started ${jobs.size} jobs: $jobs")
   }
 
   test("duplicate corpus clip_ids both stay in the stream-static band index (TM semantics)") {
