@@ -1,5 +1,6 @@
 package graft.data
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 
 /** Table IO facade: Iceberg catalog tables in production, path-based
@@ -38,9 +39,36 @@ object TableIO {
   def exists(spark: SparkSession, ident: String): Boolean =
     if (useIceberg(spark)) spark.catalog.tableExists(ident)
     else {
-      val p = new org.apache.hadoop.fs.Path(ident, "_SUCCESS")
+      val p = new Path(ident, "_SUCCESS")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
+
+  /** Commit a chain or index pointer via `<path>.tmp`, delete, atomic rename. */
+  def writePointer(spark: SparkSession, path: Path, text: String): Unit = {
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(path.suffix(".tmp"), true)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
+    if (fs.exists(path)) fs.delete(path, false)
+    require(fs.rename(path.suffix(".tmp"), path), s"could not commit $path")
+  }
+
+  /** A [[writePointer]] pointer's committed text. A crash between the delete
+    * and the rename leaves only the tmp: a COMPLETE one (its text ends in
+    * `}`, which each pointer format puts only at the end) is the commit, and
+    * the rename is finished here; a torn one reads as no pointer. */
+  def readPointer(spark: SparkSession, path: Path): Option[String] = {
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def text(f: Path) = {
+      val in = fs.open(f)
+      try scala.io.Source.fromInputStream(in)(scala.io.Codec.UTF8).mkString finally in.close()
+    }
+    val tmp = path.suffix(".tmp")
+    if (fs.exists(path)) Some(text(path))
+    else if (!fs.exists(tmp)) None
+    else Some(text(tmp)).filter(_.trim.endsWith("}")).map { t =>
+      require(fs.rename(tmp, path), s"could not roll $path forward from $tmp"); t
+    }
+  }
 
   /** The input contract (`BASELINE.json` input_hint): a table of audio clip
     * + transcript pairs with columns

@@ -428,8 +428,7 @@ object CandidateStage {
     * Count-first (r6): take(cap+1) on a side with NO tiny rows — the common
     * case — pays up to 4 escalating limit-scan jobs before concluding
     * empty; one count() settles both the emptiness and the broadcast
-    * decision. `knownTinyCount` skips even that job when the caller already
-    * counted the tiny side's tiny rows. Two formulations by tiny-set size:
+    * decision. Two formulations by tiny-set size:
     *  - ≤ tinyPatternBroadcastCap: broadcast the tiny set and scan (exact,
     *    cheapest — tiny transcripts are rare);
     *  - beyond it: the tiny pattern's full-sequence hash equi-joins the
@@ -443,8 +442,7 @@ object CandidateStage {
       corpusSide: Dataset[TokRow],
       cfg: DedupConfig,
       cappedBuckets: LongAccumulator,
-      selfDedup: Boolean,
-      knownTinyCount: Long = -1L): DataFrame = {
+      selfDedup: Boolean): DataFrame = {
     val spark = tinySide.sparkSession
     import spark.implicits._
     val k = cfg.shingleK
@@ -452,7 +450,7 @@ object CandidateStage {
     val ec = cfg.editCosts
 
     val tinyRows = tinySide.filter(_.n_tokens < k)
-    val nTiny = if (knownTinyCount >= 0) knownTinyCount else tinyRows.count()
+    val nTiny = tinyRows.count()
     if (nTiny == 0)
       spark.emptyDataset[(String, String, Int, Int)].toDF("p", "c", "p_n", "c_n")
     else if (nTiny <= cfg.tinyPatternBroadcastCap) {
@@ -582,13 +580,12 @@ object CandidateStage {
       cappedShingleBuckets: LongAccumulator,
       cappedShinglePairs: LongAccumulator,
       cappedBandBuckets: LongAccumulator,
-      cappedTinyGramBuckets: LongAccumulator,
-      knownTinyCount: Long = -1L): Dataset[CandPair] = {
+      cappedTinyGramBuckets: LongAccumulator): Dataset[CandPair] = {
     val spark = toks.sparkSession
     import spark.implicits._
     (keyedPairs(toks, sigs, None, cfg, cappedShingleBuckets, Some(cappedShinglePairs),
       cappedBandBuckets) :+
-      tinyPairs(toks, toks, cfg, cappedTinyGramBuckets, selfDedup = true, knownTinyCount))
+      tinyPairs(toks, toks, cfg, cappedTinyGramBuckets, selfDedup = true))
       .map(_.select("p", "c")).reduce(_ union _).dropDuplicates("p", "c").as[CandPair]
   }
 

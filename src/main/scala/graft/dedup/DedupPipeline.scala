@@ -1,8 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.data.Clip
+import graft.data.{Clip, TableIO}
 
 /** Per-stage metric row (the reference's NMATCH/STEP counters recast as a
   * table, /root/reference/cli/src/FuzzyMatch-cli.cc:21-27,452-458). */
@@ -19,19 +19,25 @@ final case class DedupResult(
     edges: Dataset[Edge],
     metrics: Seq[MetricRow])
 
-/** Orchestration of the three-stage dedup with optional per-stage parquet
-  * checkpoints (resumable: any existing stage output is read back instead of
-  * recomputed — idempotent re-run from any stage).
-  *
-  * Scale design notes (the 100 TB plan):
-  *  - tokenize/signature stages are narrow (no shuffle);
-  *  - candidates shuffle once on shingle/band hash (groupByKey); hot buckets
-  *    are capped and counted, skew beyond the cap is the MinHash channel's
-  *    job plus AQE skew handling on the joins;
-  *  - verify shuffles candidate tokens once (hash join on candidate id) and
-  *    cogroups by pattern id — everything else is partition-local;
-  *  - connected components iterate small self-joins over the (much smaller)
-  *    edge set with per-iteration localCheckpoint.
+/** One stage sequence for every dedup run: [[DedupPipeline.run]] runs it
+  * over no prior state, [[IncrementalDedup.run]] over its chain's state.
+  * Each stage has its own job label and metric row:
+  *  - precheck (the input count) and tokenize (narrow, sized in one job);
+  *  - audio edges per channel on: the batch operator, plus with prior state
+  *    the committed fingerprints probed against a batch-sized broadcast;
+  *  - transcript edges: with prior state, the batch broadcast with its key
+  *    postings ([[IncrementalDedup.againstBatch]]); without, the auto /
+  *    broadcast / shuffle decision — the reference's one shared index
+  *    ([[BroadcastVerifyStage]]), or signatures → candidates (bucket
+  *    equi-joins, hot buckets capped and counted) → verify (candidate
+  *    tokens joined once, cogrouped by pattern);
+  *  - connected components over every input clip id, or over the
+  *    label-contracted touched subgraph, then the label remap;
+  *  - commit: `tokens`, `edges`, each audio channel's fingerprint and edge
+  *    tables, `metrics`, and `clusters` LAST (the commit marker).
+  * A run with no prior state writes each stage table as it completes and
+  * resumes from those that exist; an increment commits at the end, over any
+  * earlier attempt.
   */
 object DedupPipeline {
 
@@ -79,234 +85,272 @@ object DedupPipeline {
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
 
-  private def stagePath(dir: String, name: String) = s"$dir/$name"
-
-  private def exists(spark: SparkSession, path: String): Boolean =
-    graft.data.TableIO.exists(spark, path)
-
-  /** Run (or resume) the full pipeline. */
+  /** Run (or resume) the full pipeline: the stage sequence over no prior state. */
   def run(clips: Dataset[Clip], cfg: DedupConfig, checkpointDir: Option[String] = None): DedupResult = {
+    val r = sequence(clips, Nil, cfg, checkpointDir)
+    DedupResult(r.clusters, r.newEdges, r.metrics)
+  }
+
+  /** The stage sequence over `clips` and the prior state the chain
+    * `priorDirs` holds (none when empty), committed to `dir`. */
+  private[dedup] def sequence(clips: Dataset[Clip], priorDirs: Seq[String], cfg: DedupConfig,
+      dir: Option[String]): IncrementalResult = {
     val spark = clips.sparkSession
     import spark.implicits._
+    val sc = spark.sparkContext
+    val fresh = priorDirs.isEmpty
     val metrics = scala.collection.mutable.ListBuffer.empty[MetricRow]
 
-    def timed(stage: String, rowsIn: => Long, extra: => Map[String, String] = Map.empty)(body: => Long): Long = {
-      val t0 = System.nanoTime()
-      val rowsOut = body
-      metrics += MetricRow(stage, -1, rowsIn, rowsOut, (System.nanoTime() - t0) / 1000000L, extra)
-      rowsOut
+    // every Spark job carries `dedup:<stage>` or `inc:<stage>` in
+    // spark.job.description; the CALLER's description is restored, not null
+    // (under foreachBatch the streaming batch attribution must survive)
+    def phased[A](name: String)(body: => A): A = {
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"${if (fresh) "dedup" else "inc"}:$name")
+      try body finally sc.setJobDescription(prev)
     }
-
-    /** compute-or-restore a stage checkpoint; restored stages are tracked so
-      * metrics can say "restored" instead of reporting accumulators that
-      * never ran (a resumed run would otherwise falsely report zero capping). */
-    val restoredStages = scala.collection.mutable.Set.empty[String]
-    def checkpointed[T](name: String, compute: => Dataset[T])(
-        read: DataFrame => Dataset[T]): Dataset[T] = {
-      checkpointDir match {
-        case Some(dir) =>
-          val path = stagePath(dir, name)
-          if (!exists(spark, path))
-            graft.data.TableIO.write(compute.toDF(), path)
-          else restoredStages += name
-          read(graft.data.TableIO.read(spark, path))
-        case None => compute
+    def timed(stage: String, rowsIn: => Long, extra: => Map[String, String] = Map.empty)(
+        body: => Long): Long = {
+      val name = if (fresh) stage else s"inc_$stage"
+      phased(name) {
+        val t0 = System.nanoTime()
+        val rowsOut = body
+        metrics += MetricRow(name, -1, rowsIn, rowsOut, (System.nanoTime() - t0) / 1000000L, extra)
+        rowsOut
       }
     }
 
-    val nClips = clips.count()
+    // a full run persists its stage outputs (the caller owns the returned
+    // sets); an increment localCheckpoints its O(new) ones — a persisted plan
+    // over the whole chain was re-optimized per query stage per action
+    // (measured 343 jobs / 821 s of Catalyst CPU for a 300-clip batch)
+    def keep[T](ds: Dataset[T]): Dataset[T] = if (fresh) ds.persist() else ds.localCheckpoint(false)
+    // restored stages are tracked so metrics can say "restored" instead of
+    // reporting accumulators that never ran (phantom zero capping)
+    val restored = scala.collection.mutable.Set.empty[String]
+    def restoredMark(name: String) =
+      if (restored(name)) Map("restored" -> "true") else Map.empty[String, String]
+    val pending = scala.collection.mutable.ListBuffer.empty[(String, Dataset[_])]
+    def commit(name: String, ds: Dataset[_]): Unit = dir.foreach { d =>
+      if (!fresh) pending += name -> ds
+      else if (!TableIO.exists(spark, s"$d/$name")) TableIO.write(ds.toDF(), s"$d/$name")
+    }
+    def table[T](name: String, compute: => Dataset[T])(read: DataFrame => Dataset[T]): Dataset[T] =
+      dir.filter(_ => fresh) match {
+        case Some(d) =>
+          val path = s"$d/$name"
+          if (TableIO.exists(spark, path)) restored += name else TableIO.write(compute.toDF(), path)
+          keep(read(TableIO.read(spark, path)))
+        case None =>
+          val ds = keep(compute)
+          commit(name, ds)
+          ds
+      }
 
-    // Stage 1: tokenize (narrow) — persist: reused by shingles + verify sides.
-    // On the EXPLICIT shuffle path the token cache is right-sized from the
-    // row count (~4k rows/partition — the r5 incremental-path lesson): the
-    // persisted set is re-scanned by the signature stage, both keyed
-    // channels' entry generators + the batched hot-key stats, the tiny
-    // count and the two verify map sides, and source partitioning tuned for
-    // the clip READ (e.g. 64 splits of a 24k-row corpus) charges every one
-    // of those scans a wave of near-empty tasks. Only ever DOWNSIZES: at
-    // scale rows/4096 exceeds any sane source partitioning and this is a
-    // no-op (the repartition only fires on over-partitioned small inputs,
-    // where the extra exchange is by definition tiny). The broadcast path
-    // keeps source partitioning — its dominant narrow stage is the
-    // per-row matcher probe, which wants the parallelism.
+    // ---- precheck ----
+    // prior-state reads start jobs (parquet schema inference) and validate
+    // the chain eagerly: a chain without an audio channel on fails here
+    val prior = if (fresh) None
+      else Some(phased("prior_state")(IncrementalDedup.priorState(spark, priorDirs, cfg)))
+    val ids = clips.select($"clip_id")
+    val nClips = phased("precheck")(
+      prior.fold(clips.count())(p => IncrementalDedup.precheck(ids, p.clusters)))
+
+    // ---- tokenize (narrow) + size, one job ----
+    // the increment and the explicit shuffle path re-scan their token rows
+    // in several stages, so they only ever DOWNSIZE source partitioning to
+    // ~4k rows each; the full broadcast/auto path keeps it — its dominant
+    // narrow stage is the per-row matcher probe, which wants the parallelism
     val srcParts = clips.rdd.getNumPartitions
-    val tokParts = math.max(1L, math.min(nClips / 4096 + 1, srcParts.toLong)).toInt
-    val toksStage = {
-      val t = TokenizeStage(clips, cfg)
-      if (cfg.strategy == "shuffle" && tokParts < srcParts) t.repartition(tokParts) else t
-    }
-    val toks = checkpointed("tokens", toksStage)(_.as[TokRow])
-      .persist()
-    // forced strategies need only the row count; "auto" gets rows AND exact
-    // estimated bytes from the same single aggregation job
-    var estBytes = -1L
+    val parts = math.max(1L, math.min(nClips / 4096 + 1, srcParts.toLong)).toInt
+    var toks: Dataset[TokRow] = null
+    var tokBytes = 0L
     val nToks = timed("tokenize", nClips) {
-      if (cfg.strategy == "broadcast" || cfg.strategy == "shuffle") toks.count()
-      else {
-        val (n, b) = BroadcastCorpus.stats(toks, TokenizeStage.rowBytes())
-        estBytes = b
-        n
-      }
+      toks = table("tokens", {
+        val t = TokenizeStage(clips, cfg)
+        if (parts < srcParts && (!fresh || cfg.strategy == "shuffle")) t.repartition(parts) else t
+      })(_.as[TokRow])
+      val (n, bytes) = BroadcastCorpus.stats(toks, TokenizeStage.rowBytes())
+      tokBytes = bytes
+      n
     }
 
-    val useBroadcast = cfg.strategy match {
-      case "broadcast" => true
-      case "shuffle" => false
-      case _ =>
-        BroadcastCorpus.fits(nToks, estBytes, cfg)
-    }
-
-    var edgesV: Dataset[Edge] = null
-    // running count of the union edge set, accumulated from the per-stage
-    // counts below — the final nEdges recount action it replaces was one
-    // redundant job per run (every branch already counts its persisted set)
+    // ---- audio edges (optional channels) ----
+    // fingerprints are decoded once: they feed the pair operator, the batch
+    // broadcast and the committed fingerprint table, written BEFORE the
+    // pairs because the operator releases its fingerprint cache
     var nEdges = 0L
-    val edges =
-      if (useBroadcast) {
-        // fast path: global shared read-only index (reference architecture),
-        // candidate recall exact by construction — no LSH stage needed
-        nEdges += timed("verify", nToks, Map("strategy" -> "broadcast") ++
-            (if (restoredStages("edges")) Map("restored" -> "true") else Map.empty)) {
-          edgesV = checkpointed("edges", BroadcastVerifyStage(toks, cfg))(_.as[Edge]).persist()
-          edgesV.count()
+    def audio[F](stage: String, edgesTable: String, fpsTable: String, fingerprints: => Dataset[F])(
+        pairs: (Dataset[F], org.apache.spark.util.LongAccumulator) => Dataset[Edge])(
+        againstOld: (Dataset[F], DataFrame, org.apache.spark.util.LongAccumulator) => Dataset[Edge])
+        : Dataset[Edge] = {
+      val capped = sc.longAccumulator(stage)
+      var e: Dataset[Edge] = null
+      nEdges += timed(stage, nClips, if (restored(edgesTable)) restoredMark(edgesTable)
+          else Map("capped_audio_buckets" -> capped.value.toString)) {
+        e = table(edgesTable, {
+          val fps = keep(fingerprints)
+          commit(fpsTable, fps)
+          val own = pairs(fps, capped)
+          prior.fold(own)(p => own.union(againstOld(fps, p.fps(fpsTable), capped)))
+        })(_.as[Edge])
+        e.count()
+      }
+      e
+    }
+    // the broadcast side is the batch: guarded before collect, so an
+    // oversized batch never reaches the driver
+    val remedy = "a smaller ingest batch, or the full pipeline with audio on"
+    var audioEdges = Seq.empty[Dataset[Edge]]
+    if (cfg.useAudioChannel)
+      audioEdges :+= audio("audio_verify", "audio_edges", "audio_fps", AudioDedup.fingerprints(clips))(
+          (fps, capped) => AudioDedup.pairs(fps, cfg.audioMinCorr, cappedBuckets = capped)) {
+        (fps, old, capped) =>
+          val bc = BroadcastCorpus.broadcast(fps, AudioDedup.fpBytes, cfg,
+              "incremental audio channel batch", remedy) { rows =>
+            val (idx, n) = BroadcastCorpus.postings(rows.map(_.chunks), AudioDedup.defaultBucketCap)
+            capped.add(n)
+            (rows, idx)
+          }
+          val minCorr = cfg.audioMinCorr
+          old.as[AudioDedup.AudioFpRow].mapPartitions { it =>
+            val (rs, ix) = bc.value
+            it.flatMap(f => AudioDedup.probeChunkIndex(f, rs, ix, minCorr, AudioDedup.defaultFrameWindow)
+              .map { case (i, corr) => Edge(f.clip_id, rs(i).clip_id, corr, 0, "audio") })
+          }
+      }
+    if (cfg.useAudioContainment)
+      audioEdges :+= audio("audio_contain", "audio_contain_edges", "audio_ct_fps",
+          AudioContainment.fingerprints(clips))((fps, capped) =>
+        AudioContainment.pairs(fps, minCorr = cfg.audioContainMinCorr, cappedBuckets = capped)
+          .select($"inner".as("a"), $"outer".as("b"), $"corr".as("score"),
+            lit(0).as("lcs"), lit("audio_contain").as("kind")).as[Edge]) {
+        (fps, old, capped) =>
+          val bc = BroadcastCorpus.broadcast(fps, AudioContainment.fpBytes, cfg,
+              "incremental audio containment batch", remedy) { rows =>
+            val (idx, n) = AudioContainment.buildPosIndex(rows, AudioContainment.defaultBucketCap)
+            capped.add(n)
+            (rows, idx)
+          }
+          val minCorr = cfg.audioContainMinCorr
+          old.as[AudioContainment.AudioCtRow].mapPartitions { it =>
+            val (rs, ix) = bc.value
+            it.flatMap(f => AudioContainment.probePosIndex(f, rs, ix,
+                AudioContainment.defaultMinVotes, AudioContainment.defaultInnerStride, minCorr)
+              .map { case (ri, off, corr) => Edge(f.clip_id, rs(ri).clip_id, corr, off, "audio_contain") })
+          }
+      }
+
+    // ---- transcript edges ----
+    var edges: Dataset[Edge] = null
+    def verify(rowsIn: Long, extra: => Map[String, String])(compute: => Dataset[Edge]): Unit =
+      nEdges += timed("verify", rowsIn, extra ++ restoredMark("edges")) {
+        edges = table("edges", compute)(_.as[Edge])
+        edges.count()
+      }
+    prior match {
+      case Some(p) =>
+        // audio runs first, so an audio batch past the envelope names its channel
+        BroadcastCorpus.requireFits(nToks, tokBytes, cfg, "incremental batch",
+          "a smaller ingest batch, or the full pipeline")
+        var capped = Map.empty[String, String]
+        verify(nToks, capped) {
+          val (e, c) = IncrementalDedup.againstBatch(toks, p.toks, cfg)
+          capped = c
+          e
         }
-        edgesV
-      } else {
-        // beyond-memory path: signatures → LSH/shingle candidates → verify
-        // persisted: the minhash channel reads signatures twice (hot-bucket
-        // stats pre-pass + the bucket join itself). `sigsForced` tracks
-        // whether the lazy val ever initialized: on a resumed run whose
-        // candidates checkpoint was restored, CandidateStage never runs and
-        // unpersisting here would otherwise FORCE the full signature stage
-        // (compute + checkpoint write) just to throw it away.
+      case None if (cfg.strategy match {
+            case "broadcast" => true
+            case "shuffle" => false
+            case _ => BroadcastCorpus.fits(nToks, tokBytes, cfg)
+          }) =>
+        // the reference's shared read-only index: candidate recall exact by
+        // construction, no LSH stage
+        verify(nToks, Map("strategy" -> "broadcast"))(BroadcastVerifyStage(toks, cfg))
+      case None =>
+        // beyond-memory path. A resumed run whose candidates are restored
+        // never reads signatures; unpersisting them would FORCE the stage.
         var sigsForced = false
         lazy val sigs = {
           sigsForced = true
-          checkpointed("signatures", SignatureStage(toks, cfg))(_.as[SigRow]).persist()
+          table("signatures", SignatureStage(toks, cfg))(_.as[SigRow])
         }
-        val sc = spark.sparkContext
-        val cappedShingleBuckets = sc.longAccumulator("cappedShingleBuckets")
-        val cappedShinglePairs = sc.longAccumulator("cappedShinglePairsLost")
-        val cappedBandBuckets = sc.longAccumulator("cappedBandBuckets")
-        val cappedTinyGramBuckets = sc.longAccumulator("cappedTinyGramBuckets")
-        val cands = checkpointed("candidates",
-          CandidateStage(toks, sigs, cfg, cappedShingleBuckets, cappedShinglePairs,
-            cappedBandBuckets, cappedTinyGramBuckets))(_.as[CandPair])
-          .persist()
-        val nCands = timed("candidates", nToks, {
-          if (restoredStages("candidates"))
-            // stage read back from checkpoint: the capping accumulators never
-            // ran, so report the restore instead of phantom zero-cap values
-            Map("strategy" -> "shuffle", "restored" -> "true")
-          else Map(
-            "strategy" -> "shuffle",
-            "capped_shingle_buckets" -> cappedShingleBuckets.value.toString,
-            "capped_shingle_pairs_lost" -> cappedShinglePairs.value.toString,
-            "capped_band_buckets" -> cappedBandBuckets.value.toString,
-            "capped_tiny_gram_buckets" -> cappedTinyGramBuckets.value.toString)
-        })(cands.count())
-        nEdges += timed("verify", nCands,
-          if (restoredStages("edges")) Map("restored" -> "true") else Map.empty) {
-          edgesV = checkpointed("edges", VerifyStage(toks, cands, cfg, nToks))(_.as[Edge]).persist()
-          edgesV.count()
+        val acc = Seq.fill(4)(sc.longAccumulator)
+        var cands: Dataset[CandPair] = null
+        val nCands = timed("candidates", nToks, Map("strategy" -> "shuffle") ++ (
+          if (restored("candidates")) restoredMark("candidates")
+          else Seq("capped_shingle_buckets", "capped_shingle_pairs_lost", "capped_band_buckets",
+            "capped_tiny_gram_buckets").zip(acc.map(_.value.toString)))) {
+          cands = table("candidates",
+            CandidateStage(toks, sigs, cfg, acc(0), acc(1), acc(2), acc(3)))(_.as[CandPair])
+          cands.count()
         }
+        verify(nCands, Map.empty)(VerifyStage(toks, cands, cfg, nToks))
         cands.unpersist()
         if (sigsForced) sigs.unpersist()
-        edgesV
-      }
-    // optional multimodal channel: audio-fingerprint near-dups join the
-    // edge set, so same-audio/different-transcript clips cluster together
-    val allEdges =
-      if (!cfg.useAudioChannel) edges
-      else {
-        var audioE: Dataset[Edge] = null
-        nEdges += timed("audio_verify", nClips,
-          if (restoredStages("audio_edges")) Map("restored" -> "true") else Map.empty) {
-          val acc = spark.sparkContext.longAccumulator("audioCappedBuckets")
-          audioE = checkpointed("audio_edges", {
-            // decode once: the fingerprints feed the pair join AND (when
-            // checkpointing) the committed audio_fps table increments read;
-            // the table is written BEFORE pairs because pairs releases the
-            // shared fingerprint cache after its result materializes
-            val afps = AudioDedup.fingerprints(clips).persist()
-            checkpointDir.foreach { dir =>
-              if (!exists(spark, stagePath(dir, "audio_fps")))
-                graft.data.TableIO.write(afps.toDF(), stagePath(dir, "audio_fps"))
-            }
-            AudioDedup.pairs(afps, minCorr = cfg.audioMinCorr, cappedBuckets = acc)
-          })(_.as[Edge]).persist()
-          audioE.count()
-        }
-        edges.union(audioE)
-      }
-    // optional containment channel: an excerpt's active audio occurring
-    // inside a longer clip is redundant training content — its edge pulls
-    // the excerpt into the recording's cluster
-    val allEdgesCt =
-      if (!cfg.useAudioContainment) allEdges
-      else {
-        var containE: Dataset[Edge] = null
-        nEdges += timed("audio_contain", nClips,
-          if (restoredStages("audio_contain_edges")) Map("restored" -> "true") else Map.empty) {
-          val acc = spark.sparkContext.longAccumulator("audioCtCappedBuckets")
-          containE = checkpointed("audio_contain_edges", {
-            val ctfps = AudioContainment.fingerprints(clips).persist()
-            checkpointDir.foreach { dir =>
-              if (!exists(spark, stagePath(dir, "audio_ct_fps")))
-                graft.data.TableIO.write(ctfps.toDF(), stagePath(dir, "audio_ct_fps"))
-            }
-            AudioContainment.pairs(ctfps,
-              minCorr = cfg.audioContainMinCorr, cappedBuckets = acc)
-              .select($"inner".as("a"), $"outer".as("b"), $"corr".as("score"),
-                lit(0).as("lcs"), lit("audio_contain").as("kind"))
-              .as[Edge]
-          })(_.as[Edge]).persist()
-          containE.count()
-        }
-        allEdges.union(containE)
-      }
+    }
+    val allEdges = (audioEdges :+ edges).reduce(_ union _)
 
-    // Stage 3: connected components. The vertex universe is the INPUT clip
-    // table, not the tokenized rows: clips dropped by TokenizeStage (empty
-    // or over-length transcripts) still get singleton ClusterRows — and, when
-    // the
-    // audio channel is on, audio edges incident to tokenize-dropped clips
-    // keep their endpoints, so no input row ever silently vanishes from the
-    // clusters (or from the Survivors output built on them).
-    var clusters: Dataset[ClusterRow] = null
+    // ---- connected components ----
+    // vertices are the INPUT clip ids, so a clip TokenizeStage drops still
+    // gets its singleton row. With prior state, old endpoints collapse to
+    // their committed labels (each the old component's min clip_id, so
+    // min-id naming survives) and CC runs over the touched subgraph only.
+    val (ccEdges, vertices, touchedLabels) = prior match {
+      case None => (allEdges, ids, null)
+      case Some(p) =>
+        val endpoints =
+          allEdges.select($"a".as("clip_id")).union(allEdges.select($"b".as("clip_id"))).distinct()
+        val touched = phased("touched_labels")(
+          p.clusters.join(endpoints, Seq("clip_id"), "left_semi").localCheckpoint(false))
+        val contracted = allEdges.toDF()
+          .join(touched.toDF("a", "a_label"), Seq("a"), "left")
+          .join(touched.toDF("b", "b_label"), Seq("b"), "left")
+          .select(coalesce($"a_label", $"a").as("a"), coalesce($"b_label", $"b").as("b"),
+            $"score", $"lcs", $"kind")
+          .as[Edge]
+        val labels = touched.select($"cluster_id".as("clip_id")).distinct()
+        (contracted, ids.union(labels).distinct(), labels)
+    }
+    var cc: Dataset[ClusterRow] = null
     timed("cluster", nEdges) {
-      clusters = checkpointed("clusters",
-        ConnectedComponents(allEdgesCt, clips.select($"clip_id").toDF(), cfg.ccMaxIterations,
-          cfg.ccLocalEdgeCap, knownEdgeCount = nEdges))(_.as[ClusterRow])
-        .persist()
-      clusters.count()
+      // the label attach is a per-key-unique left join, so the contracted
+      // edges keep allEdges' count and CC skips its own edge-count job
+      cc = keep(ConnectedComponents(ccEdges, vertices, cfg.ccMaxIterations, cfg.ccLocalEdgeCap,
+        knownEdgeCount = nEdges))
+      cc.count()
+    }
+    // label remaps: a touched old label whose contracted component found a
+    // smaller min (a new clip's id, or another old label it merged with);
+    // the updated assignment is a narrow rewrite through a broadcast remap
+    val (clusters, mergedLabels) = prior match {
+      case None => (cc, Seq.empty[(String, String)].toDF("old_label", "new_label"))
+      case Some(p) =>
+        val merged = phased("merged_labels")(cc.toDF()
+          .join(touchedLabels.toDF("clip_id"), Seq("clip_id"), "left_semi")
+          .filter($"cluster_id" =!= $"clip_id")
+          .select($"clip_id".as("old_label"), $"cluster_id".as("new_label"))
+          .localCheckpoint(false)) // tiny: merges only
+        val updatedOld = p.clusters.toDF()
+          .join(broadcast(merged), p.clusters("cluster_id") === merged("old_label"), "left")
+          .select($"clip_id", coalesce($"new_label", $"cluster_id").as("cluster_id"))
+          .as[ClusterRow]
+        (updatedOld.union(cc.join(ids, Seq("clip_id"), "left_semi").as[ClusterRow]), merged)
     }
 
-    checkpointDir.foreach { dir =>
-      // commit signatures even on the broadcast path (which never computes
-      // them): a committed dir doubles as IncrementalDedup chain state, and
-      // without this table every increment re-runs the 96-perm MinHash
-      // kernel over the ENTIRE old corpus just to build its band frontier —
-      // an O(old) compute wall paid per batch forever. One narrow job at
-      // commit time buys a pruned parquet read per increment instead.
-      if (cfg.useMinhashChannel && !exists(spark, stagePath(dir, "signatures")))
-        graft.data.TableIO.write(SignatureStage(toks, cfg).toDF(), stagePath(dir, "signatures"))
-      // audio fingerprint backfill: the channel stages write these tables
-      // inline (decode once); this covers a dir whose channel checkpoint was
-      // restored from a run predating the inline write (re-decodes, once)
-      if (cfg.useAudioChannel && !exists(spark, stagePath(dir, "audio_fps")))
-        graft.data.TableIO.write(AudioDedup.fingerprints(clips).toDF(), stagePath(dir, "audio_fps"))
-      if (cfg.useAudioContainment && !exists(spark, stagePath(dir, "audio_ct_fps")))
-        graft.data.TableIO.write(AudioContainment.fingerprints(clips).toDF(), stagePath(dir, "audio_ct_fps"))
-      // per-partition lineage rows alongside the stage-level metrics
+    // ---- commit (clusters LAST) ----
+    // an increment's tables are written coalesced to the batch's partition
+    // count (the new↔old probes otherwise write one file per old partition)
+    dir.foreach(d => phased("commit") {
+      pending.foreach { case (name, ds) => TableIO.write(ds.coalesce(parts).toDF(), s"$d/$name") }
       metrics ++= Metrics.perPartition("tokens", toks)
-      metrics ++= Metrics.perPartition("edges", allEdgesCt)
-      graft.data.TableIO.write(metrics.toSeq.toDS().toDF(), stagePath(dir, "metrics"))
-    }
-    // edges/clusters are persisted AND materialized (counted) above, so the
-    // token cache has no remaining consumer — release it rather than pinning
-    // one tokenized corpus copy per pipeline run in a long-lived session
-    toks.unpersist()
-    DedupResult(clusters, allEdgesCt, metrics.toSeq)
+      metrics ++= Metrics.perPartition("edges", allEdges)
+      TableIO.write(metrics.toSeq.toDS().toDF(), s"$d/metrics")
+      TableIO.write(clusters.toDF(), s"$d/clusters")
+    })
+    // edges and clusters are materialized, so the token cache has no
+    // consumer left; checkpointed blocks go with the ContextCleaner
+    if (fresh) toks.unpersist()
+    IncrementalResult(clusters, allEdges, mergedLabels, metrics.toSeq)
   }
 }

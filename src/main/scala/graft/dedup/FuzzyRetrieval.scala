@@ -791,38 +791,24 @@ object FuzzyRetrieval {
   private def segmentName(i: Int): String = if (i == 0) "toks" else s"toks_$i"
 
   /** Write the meta file via temp + delete + rename (rename is atomic on
-    * local/HDFS; the delete→rename window can only make a concurrent reader
-    * fail LOUDLY on a missing meta — writers hold the index write lock). */
+    * local/HDFS; a reader in the delete→rename window rolls the complete
+    * tmp forward — writers hold the index write lock). */
   private def writeIndexMeta(spark: org.apache.spark.sql.SparkSession, dir: String,
       cfg: DedupConfig, names: Seq[String], next: Int,
-      retired: Seq[(String, Long)] = Nil): Unit = {
-    val p = metaPathOf(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(dir, "index_meta.json.tmp")
-    val meta = s"""{"version":$indexMetaVersion,"pt":${cfg.pt},""" +
-      s""""maxTokensInPattern":${cfg.maxTokensInPattern},"segments":${names.size},""" +
-      s""""names":[${names.map(n => "\"" + n + "\"").mkString(",")}],"next":$next,""" +
-      s""""retired":[${retired.map { case (n, t) => "\"" + n + "@" + t + "\"" }.mkString(",")}]}"""
-    val out = fs.create(tmp, true)
-    try out.write(meta.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    require(fs.rename(tmp, p), s"could not commit index meta at $p")
-  }
+      retired: Seq[(String, Long)] = Nil): Unit =
+    graft.data.TableIO.writePointer(spark, metaPathOf(dir),
+      s"""{"version":$indexMetaVersion,"pt":${cfg.pt},""" +
+        s""""maxTokensInPattern":${cfg.maxTokensInPattern},"segments":${names.size},""" +
+        s""""names":[${names.map(n => "\"" + n + "\"").mkString(",")}],"next":$next,""" +
+        s""""retired":[${retired.map { case (n, t) => "\"" + n + "@" + t + "\"" }.mkString(",")}]}""")
 
   /** Read + parse an index's meta file (shared by [[loadIndex]] and the
     * DumpCli introspection tool — ONE copy of the parsing contract). */
   private[graft] def readIndexMeta(
       spark: org.apache.spark.sql.SparkSession, dir: String): IndexMeta = {
-    val p = metaPathOf(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no retrieval index at $dir (index_meta.json missing) — build one with " +
-        "FuzzyRetrieval.saveIndex / MatchCli action=index")
-    val in = fs.open(p)
-    val meta =
-      try scala.io.Source.fromInputStream(in)(scala.io.Codec.UTF8).mkString
-      finally in.close()
+    val meta = graft.data.TableIO.readPointer(spark, metaPathOf(dir)).getOrElse(
+      throw new IllegalArgumentException(s"no retrieval index at $dir (index_meta.json " +
+        "missing) — build one with FuzzyRetrieval.saveIndex / MatchCli action=index"))
     def field(name: String, default: Int = Int.MinValue): Int =
       s""""$name":(-?\\d+)""".r.findFirstMatchIn(meta) match {
         case Some(m) => m.group(1).toInt
@@ -855,8 +841,9 @@ object FuzzyRetrieval {
 
   /** Tokenize the corpus once and persist it as a retrieval index at `dir`
     * (`dir/toks` table + `dir/index_meta.json`). Crash-safe ordering: the
-    * meta file is the COMMIT MARKER — any stale copy is deleted before the
-    * table write and the new one is written (temp + atomic rename) only
+    * meta file is the COMMIT MARKER — any stale copy (and its tmp) is
+    * deleted before the table write and the new one is written (temp +
+    * atomic rename) only
     * after the table commits, so a job killed mid-write leaves a dir that
     * [[loadIndex]] rejects rather than a stale meta over partial
     * part-files. */
@@ -864,7 +851,7 @@ object FuzzyRetrieval {
     val spark = corpus.sparkSession
     val p = metaPathOf(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, false)
+    Seq(p, p.suffix(".tmp")).foreach(f => if (fs.exists(f)) fs.delete(f, false))
     graft.data.TableIO.write(TokenizeStage(corpus, cfg).toDF(), s"$dir/${segmentName(0)}")
     writeIndexMeta(spark, dir, cfg, names = Seq(segmentName(0)), next = 1)
   }

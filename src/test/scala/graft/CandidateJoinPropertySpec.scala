@@ -245,38 +245,4 @@ class CandidateJoinPropertySpec extends AnyFunSuite {
     assert(got == selfAcross,
       s"missing=${(selfAcross -- got).take(5)} extra=${(got -- selfAcross).take(5)}")
   }
-
-  test("tiny routine with knownTinyCount = 0 starts no Spark job (self and cross forms)") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val cfg = DedupConfig()
-    val toks = TokenizeStage(Seq(graft.data.Clip("a", Array[Byte](), 16000, 1, "pcm_s16le",
-      "w1 w2 w3 w4")).toDS(), cfg)
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(started.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobDescription("tiny-known-zero")
-      for (self <- Seq(true, false))
-        CandidateStage.tinyPairs(toks, toks, cfg, sc.longAccumulator, selfDedup = self,
-          knownTinyCount = 0L)
-      sc.setJobDescription("tiny-sentinel")
-      spark.range(1).count()
-      // the listener bus delivers in order: once the sentinel job is seen,
-      // every job started before it has been seen too
-      val deadline = System.nanoTime() + 10000000000L
-      while (!started.contains("tiny-sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
-    } finally {
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
-    }
-    assert(started.contains("tiny-sentinel"), "sentinel job never seen — the gate counts nothing")
-    val n = started.toArray.count(_ == "tiny-known-zero")
-    assert(n == 0, s"tiny routine with a known zero tiny count started $n Spark jobs")
-  }
 }

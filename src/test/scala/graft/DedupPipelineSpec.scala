@@ -112,6 +112,21 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(viaSpark.transcript == clip.transcript)
   }
 
+  test("every job DedupPipeline.run starts carries a dedup: label; job counts pinned per strategy") {
+    // measured without a checkpoint dir on this fixture: 13 broadcast and 29
+    // shuffle jobs before the stage sequence was shared with increments
+    val clips = SynthCorpus.generate(spark, nRows)
+    for ((strategy, pin) <- Seq("broadcast" -> 13, "shuffle" -> 29)) {
+      val (r, jobs) = JobLog.of(spark)(DedupPipeline.run(clips, cfg.copy(strategy = strategy)))
+      r.edges.unpersist(); r.clusters.unpersist()
+      val unlabeled = jobs.filterNot(_._1.startsWith("dedup:"))
+      assert(unlabeled.isEmpty, s"$strategy: ${unlabeled.size} of ${jobs.size} jobs carry no " +
+        s"dedup: label: ${unlabeled.mkString("; ")}")
+      assert(jobs.map(_._1).contains("dedup:verify"), s"$strategy: ${jobs.mkString("; ")}")
+      assert(jobs.size <= pin, s"$strategy: ${jobs.size} jobs (pin $pin): ${jobs.map(_._1).mkString("; ")}")
+    }
+  }
+
   test("metrics rows cover every stage with non-negative wall times") {
     val stages = result.metrics.map(_.stage).toSet
     assert(Set("tokenize", "candidates", "verify", "cluster").subsetOf(stages))

@@ -93,10 +93,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
     res.newEdges.collect().foreach(e =>
       assert(newIds.contains(e.a) || newIds.contains(e.b), s"old↔old edge leaked: $e"))
 
-    // committed increment layout: clusters (the commit marker) last, readable
-    assert(graft.data.TableIO.exists(spark, s"$incDir/clusters"))
-    assert(graft.data.TableIO.exists(spark, s"$incDir/new_tokens"))
-    assert(graft.data.TableIO.exists(spark, s"$incDir/metrics"))
+    // committed increment layout — the full run's: clusters (the commit
+    // marker) last, readable
+    for (t <- Seq("tokens", "edges", "metrics", "clusters"))
+      assert(graft.data.TableIO.exists(spark, s"$incDir/$t"), t)
+    assert(!graft.data.TableIO.exists(spark, s"$incDir/new_tokens"))
     assert(clusterSet(spark.read.parquet(s"$incDir/clusters")
       .as[graft.dedup.ClusterRow].collect()) == want)
   }
@@ -141,7 +142,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val dir0 = freshDir("inc-hot-base")
     DedupPipeline.run(old.toDS(), hcfg, Some(dir0))
     val res = IncrementalDedup.run(batch.toDS(), Seq(dir0), hcfg)
-    val probe = res.metrics.find(_.stage == "inc_probe").get
+    val probe = res.metrics.find(_.stage == "inc_verify").get
     assert(probe.extra("capped_shingle_buckets") == "1", probe.toString)
 
     val got = res.newEdges.collect().toSet
@@ -178,7 +179,8 @@ class IncrementalDedupSpec extends AnyFunSuite {
     IncrementalDedup.compact(spark, Seq(dir0, inc1), cfg, head)
     // the head is shaped like a full-run checkpoint and holds the chain state
     assert(graft.data.TableIO.exists(spark, s"$head/tokens"))
-    assert(graft.data.TableIO.exists(spark, s"$head/signatures"))
+    // signatures are not chain state: no increment reads them
+    assert(!graft.data.TableIO.exists(spark, s"$head/signatures"))
     assert(clusterSet(spark.read.parquet(s"$head/clusters")
       .as[graft.dedup.ClusterRow].collect()) ==
       clusterSet(spark.read.parquet(s"$inc1/clusters")
@@ -191,6 +193,22 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val viaHead = IncrementalDedup.run(batch2.toDS(), Seq(head), cfg)
     val viaChain = IncrementalDedup.run(batch2.toDS(), Seq(dir0, inc1), cfg)
     assert(clusterSet(viaHead.clusters.collect()) == clusterSet(viaChain.clusters.collect()))
+  }
+
+  test("a chain whose increment dir uses the pre-layout new_tokens name still ingests") {
+    import spark.implicits._
+    val dir0 = freshDir("legacy-base")
+    DedupPipeline.run(oldClips.toDS(), cfg, Some(dir0))
+    val inc1 = freshDir("legacy-inc1")
+    IncrementalDedup.run(newClips.toDS(), Seq(dir0), cfg, Some(inc1))
+    // the increment dir as an older engine committed it
+    java.nio.file.Files.move(java.nio.file.Paths.get(inc1, "tokens"), java.nio.file.Paths.get(inc1, "new_tokens"))
+    val batch2 = Seq(
+      clip("n3", (W.dropRight(2) ++ Seq("aedit2", "aedit")).mkString(" ")),
+      clip("n4", words("r").mkString(" ")))
+    val got = IncrementalDedup.run(batch2.toDS(), Seq(dir0, inc1), cfg).clusters.collect()
+    val full = DedupPipeline.run((oldClips ++ newClips ++ batch2).toDS(), cfg)
+    assert(clusterSet(got) == clusterSet(full.clusters.collect()))
   }
 
   test("ingestStep: bootstrap, increment, batch-id replay skip, auto-compact, config pin") {

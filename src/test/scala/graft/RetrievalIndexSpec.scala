@@ -353,4 +353,26 @@ class RetrievalIndexSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](FuzzyRetrieval.loadIndex(spark, tmp, cfg))
     assert(e.getMessage.contains("this engine reads <= 3"), e.getMessage)
   }
+
+  test("index meta lost in the delete-rename window: a complete tmp rolls forward, a torn one fails") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("retr-idx-tmp").toString
+    FuzzyRetrieval.saveIndex(clipsOf(sents).toDS(), cfg, tmp)
+    val queries = Seq(Clip("q", Array.emptyByteArray, 16000, 0, "pcm_s16le", "aa bb cc dd")).toDS()
+    val want = rows(FuzzyRetrieval.topkIndexed(queries, FuzzyRetrieval.loadIndex(spark, tmp, cfg), cfg, 5))
+    assert(want.nonEmpty, "vacuous fixture: the query matches nothing")
+    val meta = java.nio.file.Paths.get(tmp, "index_meta.json")
+    val tmpMeta = java.nio.file.Paths.get(tmp, "index_meta.json.tmp")
+    java.nio.file.Files.move(meta, tmpMeta)
+    new java.io.File(tmp, ".index_meta.json.crc").delete() // the window: meta and checksum gone
+    assert(rows(FuzzyRetrieval.topkIndexed(queries, FuzzyRetrieval.loadIndex(spark, tmp, cfg), cfg, 5)) == want)
+    assert(java.nio.file.Files.exists(meta) && !java.nio.file.Files.exists(tmpMeta))
+    // a torn tmp with no meta is no commit: loud, never a partial parse
+    val text = new String(java.nio.file.Files.readAllBytes(meta), java.nio.charset.StandardCharsets.UTF_8)
+    java.nio.file.Files.write(tmpMeta, text.dropRight(3).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.delete(meta)
+    new java.io.File(tmp, ".index_meta.json.crc").delete()
+    val e = intercept[IllegalArgumentException](FuzzyRetrieval.loadIndex(spark, tmp, cfg))
+    assert(e.getMessage.contains("no retrieval index"), e.getMessage)
+  }
 }
