@@ -43,6 +43,17 @@ object TableIO {
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
 
+  /** The committed table at `ident`, written from `compute` first unless a
+    * committed copy already exists — the stage-resume rule: a rerun reads
+    * the committed stage back instead of recomputing it. Also returns
+    * whether the table was restored. */
+  def restoreOrWrite(spark: SparkSession, ident: String)(
+      compute: => DataFrame): (DataFrame, Boolean) = {
+    val restored = exists(spark, ident)
+    if (!restored) write(compute, ident)
+    (read(spark, ident), restored)
+  }
+
   /** Commit a chain or index pointer via `<path>.tmp`, delete, atomic rename. */
   def writePointer(spark: SparkSession, path: Path, text: String): Unit = {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)

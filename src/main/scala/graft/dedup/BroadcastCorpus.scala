@@ -13,19 +13,30 @@ import graft.kernel.{Doc, SuffixIndex}
   * as a Spark broadcast. Every consumer that collects a corpus to the driver
   * and broadcasts it — retrieval, decontamination, broadcast verify, the
   * stream-static probes and the incremental probes — goes through here:
-  *  - [[fits]]: the envelope (`broadcastMaxRows` / `broadcastMaxBytes`), also
-  *    the pipeline's auto-strategy decision;
+  *  - [[fits]]: the envelope (`broadcastMaxRows` / `broadcastMaxBytes`);
+  *  - [[picksBroadcast]]: the one path decision of dedup, retrieval and
+  *    decontamination (`cfg.strategy`, "auto" = [[fits]]);
   *  - [[broadcast]]: one job for rows + estimated bytes, the envelope check,
   *    and only then the collect and ONE broadcast of the rows together with
   *    any driver-built index over them;
-  *  - [[served]]: the token corpus broadcast, kept for as long as a
-  *    caller-cached input stays cached;
+  *  - [[served]]: the retrieval corpus's path decision and broadcast, kept
+  *    for as long as a caller-cached input stays cached;
   *  - [[indexFor]]: the executor-side suffix-array index, built once per
   *    broadcast. */
 private[graft] object BroadcastCorpus {
 
   def fits(n: Long, bytes: Long, cfg: DedupConfig): Boolean =
     n <= cfg.broadcastMaxRows && bytes <= cfg.broadcastMaxBytes
+
+  /** The path decision of every operation with a broadcast and a shuffle
+    * path: `cfg.strategy` "broadcast" / "shuffle" forces one, and "auto"
+    * broadcasts exactly when the input [[fits]]. `stats` (rows, estimated
+    * bytes) is read only under "auto". */
+  def picksBroadcast(cfg: DedupConfig)(stats: => (Long, Long)): Boolean = cfg.strategy match {
+    case "broadcast" => true
+    case "shuffle" => false
+    case _ => val (n, bytes) = stats; fits(n, bytes, cfg)
+  }
 
   /** Row count and summed per-row byte estimate of `ds` in ONE Spark job:
     * per-partition partials folded on the driver (a global `agg` runs as
@@ -61,54 +72,54 @@ private[graft] object BroadcastCorpus {
   def broadcastUnguarded[T, V: ClassTag](ds: Dataset[T])(payload: Array[T] => V): Broadcast[V] =
     ds.sparkSession.sparkContext.broadcast(payload(ds.collect()))
 
-  /** The broadcast of a token corpus. A caller-cached corpus is a snapshot:
-    * the first call collects and broadcasts it, and every later call on the
-    * same cache entry reuses that broadcast (and the executors' index built
-    * from it). The memo is keyed on the IDENTITY of the corpus's Spark cache
-    * entry (the CachedData whose InMemoryRelation `Dataset.storageLevel`
-    * reads), held weakly: `unpersist`, or a re-`cache()` of changed data,
-    * removes or replaces that entry, so it always misses, and an entry whose
-    * cache entry is gone is dropped on the next call, its broadcast left to
-    * the ContextCleaner. An uncached corpus is persisted for the guard and
-    * the collect, then released, on every call. The envelope is checked
-    * against each call's `cfg`, memo hit or not. */
+  /** A retrieval corpus's path: its broadcast, or None for the shuffle path
+    * ([[picksBroadcast]]). A forced broadcast past the envelope fails with
+    * an error naming `strategy = "shuffle"` before anything is collected.
+    *
+    * A `cached` corpus (cached by the caller) is a snapshot: the first call
+    * collects and broadcasts it, and every later call on the same cache
+    * entry decides from the stored row and byte counts (no Spark job) and
+    * reuses that broadcast (and the executors' index built from it). The
+    * memo is keyed on the IDENTITY of the corpus's Spark cache entry (the
+    * CachedData whose InMemoryRelation `Dataset.storageLevel` reads), held
+    * weakly: `unpersist`, or a re-`cache()` of changed data, removes or
+    * replaces that entry, so it always misses, and an entry whose cache
+    * entry is gone is dropped on the next call, its broadcast left to the
+    * ContextCleaner. Any other corpus is decided from one [[stats]] job and
+    * broadcast unmemoized — persist it first, since it is scanned twice.
+    * The envelope is checked against each call's `cfg`, memo hit or not. */
   private final case class Memo(entry: java.lang.ref.WeakReference[CachedData], n: Long,
       bytes: Long, bc: Broadcast[Array[TokRow]])
   private val memo = ArrayBuffer.empty[Memo]
 
-  def served(toks: Dataset[TokRow], cfg: DedupConfig, what: String,
-      alternative: String): Broadcast[Array[TokRow]] = {
-    val rowBytes = TokenizeStage.rowBytes()
-    val cached = toks match {
-      case ds: org.apache.spark.sql.classic.Dataset[_] =>
+  def served(toks: Dataset[TokRow], cfg: DedupConfig,
+      cached: Boolean): Option[Broadcast[Array[TokRow]]] = {
+    val entry = toks match {
+      case ds: org.apache.spark.sql.classic.Dataset[_] if cached =>
         ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
           .filter(_.cachedRepresentation.cacheBuilder.storageLevel != StorageLevel.NONE)
           .map(cd => (ds.sparkSession, cd))
       case _ => None
     }
-    cached match {
-      case None =>
-        val persisted = toks.persist()
-        try broadcast(persisted, rowBytes, cfg, what, alternative)(identity[Array[TokRow]])
-        finally persisted.unpersist()
-      case Some((session, entry)) =>
-        def live(cd: CachedData) =
-          session.sharedState.cacheManager.lookupCachedData(session, cd.plan).exists(_ eq cd)
-        val hit = memo.synchronized {
-          memo.filterInPlace(m => Option(m.entry.get).exists(live))
-          memo.find(_.entry.get eq entry)
+    val hit = entry.flatMap { case (session, cd) =>
+      def live(c: CachedData) =
+        session.sharedState.cacheManager.lookupCachedData(session, c.plan).exists(_ eq c)
+      memo.synchronized {
+        memo.filterInPlace(m => Option(m.entry.get).exists(live))
+        memo.find(_.entry.get eq cd)
+      }
+    }
+    lazy val (n, bytes) = hit.fold(stats(toks, TokenizeStage.rowBytes()))(m => (m.n, m.bytes))
+    if (!picksBroadcast(cfg)((n, bytes))) None
+    else {
+      requireFits(n, bytes, cfg, "corpus", "strategy = \"shuffle\" (the beyond-memory path)")
+      Some(hit.fold {
+        val bc = broadcastUnguarded(toks)(identity[Array[TokRow]])
+        entry.foreach { case (_, cd) =>
+          memo.synchronized(memo += Memo(new java.lang.ref.WeakReference(cd), n, bytes, bc))
         }
-        hit match {
-          case Some(m) =>
-            requireFits(m.n, m.bytes, cfg, what, alternative)
-            m.bc
-          case None =>
-            val (n, bytes) = stats(toks, rowBytes)
-            requireFits(n, bytes, cfg, what, alternative)
-            val bc = broadcastUnguarded(toks)(identity[Array[TokRow]])
-            memo.synchronized(memo += Memo(new java.lang.ref.WeakReference(entry), n, bytes, bc))
-            bc
-        }
+        bc
+      }(_.bc))
     }
   }
 
@@ -181,15 +192,8 @@ private[graft] object BroadcastCorpus {
       var built = builds.get(bc.id)
       if (built == null) {
         val rows = rowsOf(bc.value)
-        val index = new SuffixIndex
-        val docs = new Array[Doc](rows.length)
-        var i = 0
-        while (i < rows.length) {
-          index.add(rows(i).ids)
-          docs(i) = Doc(rows(i).ids, rows(i).reals, rows(i).itoks)
-          i += 1
-        }
-        index.sort() // eagerly, before publication — lookups are then read-only
+        // sorted eagerly, before publication — lookups are then read-only
+        val (index, docs) = TokenizeStage.suffixIndex(rows)
         built = new Built(index, docs, rows)
         builds.put(bc.id, built) // the LRU bound evicts the eldest
       }

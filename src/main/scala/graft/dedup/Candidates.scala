@@ -589,8 +589,8 @@ object CandidateStage {
       .map(_.select("p", "c")).reduce(_ union _).dropDuplicates("p", "c").as[CandPair]
   }
 
-  /** Cross candidates (queries vs corpus — the shuffle-path retrieval's
-    * generator, FuzzyRetrieval.topkShuffle): union of the enabled channels,
+  /** Cross candidates (queries vs corpus — the generator of
+    * FuzzyRetrieval.topkIndexed's shuffle path): union of the enabled channels,
     * deduplicated; p = query id, c = corpus id (self pairs KEPT — a query
     * present in the corpus legitimately matches itself, as in the
     * reference). */

@@ -61,10 +61,12 @@ final case class DedupConfig(
     /** rows with fewer tokens than shingleK are broadcast and matched by
       * containment (reference unigram/short-pattern semantics). */
     tinyPatternBroadcastCap: Int = 100000,
-    /** verify strategy: "auto" broadcasts the whole tokenized corpus (the
-      * reference's shared-read-only-index architecture, recall-exact) when it
-      * fits under broadcastMaxRows, else runs the three-stage LSH pipeline;
-      * "broadcast" / "shuffle" force a path. */
+    /** path strategy of every operation with a broadcast and a shuffle path
+      * (dedup verify, retrieval top-k and subsequence, decontamination):
+      * "auto" broadcasts the index side (the reference's shared read-only
+      * index, recall-exact) when it fits under broadcastMaxRows and
+      * broadcastMaxBytes, else runs the LSH / shuffle path; "broadcast" /
+      * "shuffle" force a path (BroadcastCorpus.picksBroadcast). */
     strategy: String = "auto",
     broadcastMaxRows: Long = 2000000L,
     /** byte-based companion gate for "auto": the broadcast path is taken only

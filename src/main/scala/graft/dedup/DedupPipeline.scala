@@ -138,9 +138,9 @@ object DedupPipeline {
     def table[T](name: String, compute: => Dataset[T])(read: DataFrame => Dataset[T]): Dataset[T] =
       dir.filter(_ => fresh) match {
         case Some(d) =>
-          val path = s"$d/$name"
-          if (TableIO.exists(spark, path)) restored += name else TableIO.write(compute.toDF(), path)
-          keep(read(TableIO.read(spark, path)))
+          val (df, wasRestored) = TableIO.restoreOrWrite(spark, s"$d/$name")(compute.toDF())
+          if (wasRestored) restored += name
+          keep(read(df))
         case None =>
           val ds = keep(compute)
           commit(name, ds)
@@ -259,11 +259,7 @@ object DedupPipeline {
           capped = c
           e
         }
-      case None if (cfg.strategy match {
-            case "broadcast" => true
-            case "shuffle" => false
-            case _ => BroadcastCorpus.fits(nToks, tokBytes, cfg)
-          }) =>
+      case None if BroadcastCorpus.picksBroadcast(cfg)((nToks, tokBytes)) =>
         // the reference's shared read-only index: candidate recall exact by
         // construction, no LSH stage
         verify(nToks, Map("strategy" -> "broadcast"))(BroadcastVerifyStage(toks, cfg))

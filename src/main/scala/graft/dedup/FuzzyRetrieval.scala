@@ -1,6 +1,8 @@
 package graft.dedup
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Dataset
+import org.apache.spark.storage.StorageLevel
 import graft.data.Clip
 import graft.kernel.{Doc, Hashing, Matcher}
 import graft.text.Tokenizer
@@ -19,137 +21,62 @@ final case class RetrievalRow(
 final case class SubseqRow(
     query_id: String, s_id: String, score: Double, max_subseq: Int, subseq_surface: String)
 
-/** Distributed top-k fuzzy retrieval — the reference's flagship user query
-  * (`FuzzyMatch-cli -a match`, /root/reference/cli/src/FuzzyMatch-cli.cc:219-233
-  * → /root/reference/src/fuzzy_match.cc:393-412): a query table probed
+/** Distributed fuzzy retrieval — the reference's flagship user query
+  * (`FuzzyMatch-cli -a match`, reference cli/src/FuzzyMatch-cli.cc:219-233
+  * → src/fuzzy_match.cc:393-412) and its `-a subseq`
+  * secondary query, plus eval-set decontamination: a query table probed
   * against an indexed corpus table, each query returning its top-n scored
   * matches with optional contrastive (MMR-style) rerank.
   *
-  * Architecture = the reference's own: ONE suffix-array index over the
-  * corpus, shared read-only by every worker, queries processed independently
-  * (FuzzyMatch-cli.cc:82-193's thread pool becomes Spark map partitions over
-  * the query table — embarrassingly parallel, no shuffle at all; the only
-  * exchange in the whole plan is the corpus collect+broadcast).
-  * [[BroadcastCorpus]] owns the envelope guard, the broadcast (one per
-  * caller-cached corpus for as long as it stays cached, see [[topkIndexed]])
-  * and the executor index, built once per executor JVM by broadcast id.
+  * One public entry per operation — [[topkIndexed]], [[subsequenceIndexed]]
+  * and [[decontaminate]]; [[topk]] and [[subsequence]] tokenize a raw
+  * corpus first — and each picks its path as the dedup pipeline does:
+  * `cfg.strategy` forces one, and "auto" asks [[BroadcastCorpus.fits]] of
+  * the index side's rows and estimated bytes ([[BroadcastCorpus.picksBroadcast]]).
   *
-  * Scale envelope: the corpus must fit in executor memory (the same
-  * condition as the reference's in-RAM `.fmi` index and as the dedup
-  * pipeline's broadcast decision, [[BroadcastCorpus.fits]] — a translation
-  * memory of millions of segments fits comfortably). The QUERY side is
-  * unbounded — 10^12 query rows stream through partition-parallel with zero
-  * shuffle, which is the axis that actually grows in a training-data
-  * pipeline (dedup-vs-reference-corpus, contamination checks against a
-  * fixed eval set, TM lookup for an unbounded translation stream). A
-  * beyond-memory CORPUS goes through [[topkShuffle]]: cross-table LSH/
-  * shingle candidate channels + the cogroup verify kernel, never holding
-  * the corpus in one place.
+  *  - Broadcast path, the reference's own architecture: ONE suffix-array
+  *    index over the corpus, shared read-only by every worker, queries
+  *    processed independently (FuzzyMatch-cli.cc:82-193's thread pool
+  *    becomes Spark map partitions over the query table — no shuffle at
+  *    all; the only exchange is the corpus collect+broadcast).
+  *    [[BroadcastCorpus]] owns the envelope guard, the broadcast (one per
+  *    caller-cached corpus for as long as it stays cached, see
+  *    [[topkIndexed]]) and the executor index, built once per executor JVM.
+  *    The corpus must fit in executor memory (the reference's in-RAM `.fmi`
+  *    index has the same condition — a translation memory of millions of
+  *    segments fits comfortably); the QUERY side is unbounded: 10^12 query
+  *    rows stream through partition-parallel with zero shuffle, the axis
+  *    that actually grows in a training-data pipeline.
+  *  - Shuffle path, for a corpus past the envelope: cross-table LSH /
+  *    shingle candidate channels + the cogroup verify kernel, never holding
+  *    the corpus in one place. Rank ties break by s_id there vs corpus
+  *    insertion order in the broadcast path.
   */
 object FuzzyRetrieval {
 
-  /** The shuffle alternative the broadcast-path envelope error names. */
-  private val beyondMemory = "FuzzyRetrieval.topkShuffle (the beyond-memory path)"
-
-  /** Top-k fuzzy match of every query row against the corpus.
-    *
-    * @param numberOfMatches top-n per query (0 = unlimited, reference `-n`)
-    * @param noPerfect drop exact matches (reference `-P`)
-    * @param contrastiveFactor λ > 0 enables contrastive rerank R1
-    *        (reference `-c`, fuzzy_match.cc:613-669)
-    */
-  def topk(
-      queries: Dataset[Clip],
-      corpus: Dataset[Clip],
-      cfg: DedupConfig,
-      numberOfMatches: Int = 5,
-      noPerfect: Boolean = false,
-      contrastiveFactor: Float = 0f,
-      contrastReduce: Matcher.ContrastReduce = Matcher.Mean,
-      contrastBuffer: Int = -1): Dataset[RetrievalRow] =
-    // index side: tokenize with the reference's insert-side filters (P2/P3)
-    topkIndexed(queries, TokenizeStage(corpus, cfg), cfg, numberOfMatches, noPerfect,
-      contrastiveFactor, contrastReduce, contrastBuffer)
-
-  /** [[topk]] against a PREBUILT tokenized index (from [[loadIndex]] or any
-    * TokRow dataset) — repeated match jobs skip the corpus TokenizeStage,
-    * the reference's index/match job split.
-    *
-    * Served-index contract: a caller-cached `corpusToks`
-    * (`loadIndex(...).cache()`) is served as a SNAPSHOT — the first call
-    * collects and broadcasts it, and every later broadcast-path call on the
-    * same cache entry reuses that broadcast and the executors' index, so it
-    * runs only the query scan. `unpersist` releases the snapshot: the next
-    * call on a re-cached corpus (e.g. after [[appendIndex]]) indexes the
-    * new data. An uncached corpus is collected and broadcast per call. */
-  def topkIndexed(
-      queries: Dataset[Clip],
-      corpusToks: Dataset[TokRow],
-      cfg: DedupConfig,
-      numberOfMatches: Int = 5,
-      noPerfect: Boolean = false,
-      contrastiveFactor: Float = 0f,
-      contrastReduce: Matcher.ContrastReduce = Matcher.Mean,
-      contrastBuffer: Int = -1): Dataset[RetrievalRow] = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-
-    val bc = BroadcastCorpus.served(corpusToks, cfg, "corpus", beyondMemory)
-    val params = cfg.matchParams(numberOfMatches, noPerfect).copy(
-      contrastiveFactor = contrastiveFactor,
-      contrastReduce = contrastReduce,
-      contrastBuffer = contrastBuffer)
-    val useIdf = cfg.vocabIdfPenalty != 0f
-    val pt = cfg.pt
-
-    queries.mapPartitions { it =>
-      val (index, docs, rows, df) = BroadcastCorpus.indexFor(bc, useIdf)
-      val n = rows.length
-      val idfMax = if (useIdf) math.log(n.toDouble).toFloat else 0.01f
-      it.flatMap { q =>
-        val ts = Tokenizer.tokenize(q.transcript, pt)
-        if (ts.norm.isEmpty) Iterator.empty
-        else {
-          val pids = Hashing.tokenIds(ts.norm)
-          val pattern = Doc(pids, ts.real, ts.itoks)
-          // query tokens absent from the corpus carry 0 idf penalty, the
-          // reference's unknown-word default (fuzzy_match.cc:367-390)
-          val idf = if (useIdf) BroadcastCorpus.idf(pids, df, n, unknown = 0f) else null
-          Matcher.matchPattern(index, docs(_), pattern, params, idf, idfMax)
-            .iterator.zipWithIndex.map { case (m, r) =>
-              RetrievalRow(q.clip_id, r + 1, rows(m.sIdx).clip_id, m.score, m.maxSubseq)
-            }
-        }
-      }
+  /** Run a retrieval call on the corpus's path: `broadcastPath` with the
+    * served broadcast, or `shufflePath` with the corpus token rows and their
+    * release. A corpus the caller has not cached is persisted here (the
+    * decision's stats job fills the cache that the collect or the shuffle
+    * path reads) and released when its path is done; a cache the caller
+    * owns (a prebuilt index serving many match jobs) is never evicted. */
+  private def onPath[T](corpusToks: Dataset[TokRow], cfg: DedupConfig)(
+      shufflePath: (Dataset[TokRow], () => Unit) => T)(
+      broadcastPath: Broadcast[Array[TokRow]] => T): T = {
+    val owned = corpusToks.storageLevel == StorageLevel.NONE
+    val cToks = if (owned) corpusToks.persist() else corpusToks
+    val release: () => Unit = () => if (owned) cToks.unpersist()
+    val bc = try BroadcastCorpus.served(cToks, cfg, cached = !owned)
+      catch { case e: Throwable => release(); throw e }
+    bc match {
+      case Some(b) => release(); broadcastPath(b)
+      case None => shufflePath(cToks, release)
     }
   }
 
-  /** Beyond-memory top-k fuzzy retrieval — the scale path when the CORPUS
-    * does not fit in executor memory: instead of one broadcast index,
-    * candidate pairs come from the cross-table shingle + MinHash LSH
-    * channels ([[CandidateStage.cross]], hot buckets capped AND counted)
-    * and each query's candidate group is verified by the same reference
-    * matcher kernel as the dedup verify stage
-    * ([[VerifyStage.scoreGroups]]: per-group suffix-array index, coverage
-    * rejection, weighted DP, quantized score). All matches ≥ threshold are
-    * scored per candidate independently, then ranked:
-    *  - default: `row_number` window per query on (score desc, s_id asc) —
-    *    fully distributed top-k;
-    *  - contrastive (λ > 0): the per-query result set (already small — only
-    *    above-threshold matches) is reranked by the reference's exact
-    *    MMR-style selection in a `mapGroups` over the query id.
-    * Candidate recall vs the broadcast path is the LSH channels' recall —
-    * the same ≥ 0.99 envelope as the dedup pipeline (exact for pairs
-    * sharing any cold k-shingle; FuzzyRetrievalSpec pins set equality on
-    * the synthetic corpus). Rank ties break by s_id here vs corpus
-    * insertion order in the broadcast path.
-    *
-    * `checkpointDir` makes the job resumable like the dedup pipeline: the
-    * candidate-pair and scored-match stages are written as committed tables
-    * and re-read on a rerun instead of recomputed (a 10^12-row query table
-    * is a long job; a died ranking step must not re-pay candidate
-    * generation + verification). */
-  def topkShuffle(
+  /** [[topkIndexed]] against a raw corpus, tokenized with the reference's
+    * insert-side filters (P2/P3). */
+  def topk(
       queries: Dataset[Clip],
       corpus: Dataset[Clip],
       cfg: DedupConfig,
@@ -159,12 +86,42 @@ object FuzzyRetrieval {
       contrastReduce: Matcher.ContrastReduce = Matcher.Mean,
       contrastBuffer: Int = -1,
       checkpointDir: Option[String] = None): Dataset[RetrievalRow] =
-    topkShuffleIndexed(queries, TokenizeStage(corpus, cfg), cfg, numberOfMatches,
-      noPerfect, contrastiveFactor, contrastReduce, contrastBuffer, checkpointDir)
+    topkIndexed(queries, TokenizeStage(corpus, cfg), cfg, numberOfMatches, noPerfect,
+      contrastiveFactor, contrastReduce, contrastBuffer, checkpointDir)
 
-  /** [[topkShuffle]] against a PREBUILT tokenized index — see
-    * [[topkIndexed]]. */
-  def topkShuffleIndexed(
+  /** Top-k fuzzy match of every query row against a tokenized corpus (from
+    * [[loadIndex]] or any TokRow dataset — repeated match jobs skip the
+    * corpus TokenizeStage, the reference's index/match job split).
+    *
+    * Served-index contract (broadcast path): a caller-cached `corpusToks`
+    * (`loadIndex(...).cache()`) is served as a SNAPSHOT — the first call
+    * collects and broadcasts it, and every later call on the same cache
+    * entry decides its path and reuses that broadcast and the executors'
+    * index without a Spark job, so it runs only the query scan. `unpersist`
+    * releases the snapshot: the next call on a re-cached corpus (e.g. after
+    * [[appendIndex]]) indexes the new data. An uncached corpus is collected
+    * and broadcast per call.
+    *
+    * Shuffle path: candidate pairs come from the cross-table shingle +
+    * MinHash LSH channels ([[CandidateStage.cross]], hot buckets capped AND
+    * counted) and each query's candidate group is verified by the dedup
+    * verify kernel ([[VerifyStage.scoreGroups]]). Every match ≥ threshold
+    * is scored per candidate, then ranked by a `row_number` window per
+    * query on (score desc, s_id asc), or, with λ > 0, by the reference's
+    * exact MMR-style selection in a `mapGroups` over the query id. Candidate
+    * recall is the LSH channels' — the dedup pipeline's ≥ 0.99 envelope
+    * (exact for pairs sharing any cold k-shingle). `checkpointDir` makes
+    * this path resumable like the dedup pipeline: the candidate-pair and
+    * scored-match stages are committed tables, re-read on a rerun (a 10^12-
+    * row query table is a long job; a died ranking step must not re-pay
+    * candidate generation + verification). The broadcast path ignores it.
+    *
+    * @param numberOfMatches top-n per query (0 = unlimited, reference `-n`)
+    * @param noPerfect drop exact matches (reference `-P`)
+    * @param contrastiveFactor λ > 0 enables contrastive rerank R1
+    *        (reference `-c`, fuzzy_match.cc:613-669)
+    */
+  def topkIndexed(
       queries: Dataset[Clip],
       corpusToks: Dataset[TokRow],
       cfg: DedupConfig,
@@ -173,7 +130,46 @@ object FuzzyRetrieval {
       contrastiveFactor: Float = 0f,
       contrastReduce: Matcher.ContrastReduce = Matcher.Mean,
       contrastBuffer: Int = -1,
-      checkpointDir: Option[String] = None): Dataset[RetrievalRow] = {
+      checkpointDir: Option[String] = None): Dataset[RetrievalRow] =
+    onPath(corpusToks, cfg)(shuffleTopk(queries, _, _, cfg, numberOfMatches, noPerfect,
+        contrastiveFactor, contrastReduce, contrastBuffer, checkpointDir)) { bc =>
+      val spark = queries.sparkSession
+      import spark.implicits._
+      val params = cfg.matchParams(numberOfMatches, noPerfect).copy(
+        contrastiveFactor = contrastiveFactor,
+        contrastReduce = contrastReduce,
+        contrastBuffer = contrastBuffer)
+      val useIdf = cfg.vocabIdfPenalty != 0f
+      val pt = cfg.pt
+
+      queries.mapPartitions { it =>
+        val (index, docs, rows, df) = BroadcastCorpus.indexFor(bc, useIdf)
+        val n = rows.length
+        val idfMax = if (useIdf) math.log(n.toDouble).toFloat else 0.01f
+        it.flatMap { q =>
+          val ts = Tokenizer.tokenize(q.transcript, pt)
+          if (ts.norm.isEmpty) Iterator.empty
+          else {
+            val pids = Hashing.tokenIds(ts.norm)
+            val pattern = Doc(pids, ts.real, ts.itoks)
+            // query tokens absent from the corpus carry 0 idf penalty, the
+            // reference's unknown-word default (fuzzy_match.cc:367-390)
+            val idf = if (useIdf) BroadcastCorpus.idf(pids, df, n, unknown = 0f) else null
+            Matcher.matchPattern(index, docs(_), pattern, params, idf, idfMax)
+              .iterator.zipWithIndex.map { case (m, r) =>
+                RetrievalRow(q.clip_id, r + 1, rows(m.sIdx).clip_id, m.score, m.maxSubseq)
+              }
+          }
+        }
+      }
+    }
+
+  /** [[topkIndexed]]'s shuffle path over the corpus token rows `cToks`;
+    * `releaseCToks` drops them once nothing reads them. */
+  private def shuffleTopk(queries: Dataset[Clip], cToks: Dataset[TokRow], releaseCToks: () => Unit,
+      cfg: DedupConfig, numberOfMatches: Int, noPerfect: Boolean = false,
+      contrastiveFactor: Float = 0f, contrastReduce: Matcher.ContrastReduce = Matcher.Mean,
+      contrastBuffer: Int = -1, checkpointDir: Option[String] = None): Dataset[RetrievalRow] = {
     val spark = queries.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, row_number}
@@ -181,28 +177,18 @@ object FuzzyRetrieval {
 
     def checkpointed[T](name: String, compute: => Dataset[T])(
         read: org.apache.spark.sql.DataFrame => Dataset[T]): Dataset[T] =
-      checkpointDir match {
-        case Some(dir) =>
-          val path = s"$dir/$name"
-          if (!graft.data.TableIO.exists(spark, path))
-            graft.data.TableIO.write(compute.toDF(), path)
-          else
-            // same discipline as the pipeline's restoredStages tracking;
-            // only the candidates stage owns capping accumulators, so only
-            // its restore carries the zeros-are-not-real-metrics caveat
-            System.err.println(s"[retrieval] restored checkpoint '$name' — not recomputed" +
-              (if (name == "retrieval_candidates") "; capping accumulators did not run" else ""))
-          read(graft.data.TableIO.read(spark, path))
-        case None => compute
+      checkpointDir.fold(compute) { dir =>
+        val (df, restored) = graft.data.TableIO.restoreOrWrite(spark, s"$dir/$name")(compute.toDF())
+        // same discipline as the pipeline's restoredStages tracking; only
+        // the candidates stage owns capping accumulators, so only its
+        // restore carries the zeros-are-not-real-metrics caveat
+        if (restored)
+          System.err.println(s"[retrieval] restored checkpoint '$name' — not recomputed" +
+            (if (name == "retrieval_candidates") "; capping accumulators did not run" else ""))
+        read(df)
       }
 
     val qToks = TokenizeStage(queries, cfg).persist()
-    // never evict a cache the caller owns (a cached prebuilt index serving
-    // many match jobs)
-    val cTokCallerCached =
-      corpusToks.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val cToks = if (cTokCallerCached) corpusToks else corpusToks.persist()
-    def releaseCToks(): Unit = if (!cTokCallerCached) cToks.unpersist()
     lazy val qSigs = SignatureStage(qToks, cfg)
     lazy val cSigs = SignatureStage(cToks, cfg)
     val sc = spark.sparkContext
@@ -249,92 +235,81 @@ object FuzzyRetrieval {
     qToks.unpersist()
     candToksSrc.unpersist()
 
-    val ranked =
-      if (contrastiveFactor <= 0f) {
-        releaseCToks()
-        val w = Window.partitionBy(col("a")).orderBy(col("score").desc, col("b").asc)
-        val top = scored.toDF()
-          .withColumn("rank", row_number().over(w))
-        val limited =
-          if (numberOfMatches > 0) top.filter(col("rank") <= numberOfMatches) else top
-        limited.select(col("a").as("query_id"), col("rank").cast("int").as("rank"),
-          col("b").as("s_id"), col("score"), col("lcs").as("max_subseq"))
-          .as[RetrievalRow]
-      } else {
-        // contrastive rerank: per-query result sets are small (only
-        // above-threshold matches), so collect each group and run the
-        // reference's exact selection (Matcher.contrastiveRerank) locally.
-        // Before reranking, the broadcast path's contrastBuffer admission is
-        // REPLAYED: matchPattern evaluates candidates in consolidation order
-        // (longest match desc — A2) keeping a heap of the `buffer` lowest
-        // costs and skipping candidates above its max. Here the edge's lcs
-        // stands in for the consolidation key (ties by s_id — the reference
-        // ties by insertion order) and 1−score for the raw DP cost (monotone
-        // through quantization; admission can differ only within one 1e-4
-        // quantization step of the boundary).
-        val rerankParams = params.copy(
-          numberOfMatches = numberOfMatches,
-          contrastiveFactor = contrastiveFactor,
-          contrastReduce = contrastReduce,
-          contrastBuffer = contrastBuffer)
-        val buffer = if (contrastBuffer == -1) numberOfMatches else contrastBuffer
-        // materialize the (edge, corpus ids) join while cToks is still
-        // cached, THEN release it: the joined set is as small as `scored`
-        // (above-threshold matches only) and is what the rerank groups over
-        val withIds = scored
-          .joinWith(cToks, scored("b") === cToks("clip_id"))
-          .map { case (e, t) => (e.a, e.b, e.score, e.lcs, t.ids) }
-          .persist()
-        withIds.count()
-        releaseCToks()
-        val reranked = withIds
-          .groupByKey(_._1)
-          .flatMapGroups { (qid, it) =>
-            val all = it.toArray.sortBy(m => (-m._4, m._2))
-            val ms =
-              if (buffer <= 0) all
-              else {
-                val heap = scala.collection.mutable.PriorityQueue.empty[Double]
-                heap.enqueue(Double.MaxValue)
-                val admitted = Array.newBuilder[(String, String, Double, Int, Array[Long])]
-                for (m <- all) {
-                  val cost = 1.0 - m._3
-                  if (cost <= heap.head) {
-                    admitted += m
-                    heap.enqueue(cost)
-                    if (heap.size > buffer) heap.dequeue()
-                  }
-                }
-                admitted.result()
-              }
-            val docs = ms.map(m => Doc(m._5, Array.empty, Array.empty))
-            implicit val ord: Ordering[graft.kernel.MatchResult] =
-              Ordering.by(m => (m.score, -m.sIdx))
-            val queue = scala.collection.mutable.PriorityQueue.empty[graft.kernel.MatchResult]
-            ms.zipWithIndex.foreach { case (m, i) =>
-              queue.enqueue(graft.kernel.MatchResult(m._3, 0.0, m._4, i, m._5.length))
+    if (contrastiveFactor <= 0f) {
+      releaseCToks()
+      val w = Window.partitionBy(col("a")).orderBy(col("score").desc, col("b").asc)
+      val top = scored.toDF()
+        .withColumn("rank", row_number().over(w))
+      val limited =
+        if (numberOfMatches > 0) top.filter(col("rank") <= numberOfMatches) else top
+      limited.select(col("a").as("query_id"), col("rank").cast("int").as("rank"),
+        col("b").as("s_id"), col("score"), col("lcs").as("max_subseq"))
+        .as[RetrievalRow]
+    } else {
+      // contrastive rerank: per-query result sets are small (only
+      // above-threshold matches), so collect each group and run the
+      // reference's exact selection (Matcher.contrastiveRerank) locally.
+      // Before reranking, the broadcast path's contrastBuffer admission is
+      // REPLAYED: matchPattern evaluates candidates in consolidation order
+      // (longest match desc — A2) keeping a heap of the `buffer` lowest
+      // costs and skipping candidates above its max. Here the edge's lcs
+      // stands in for the consolidation key (ties by s_id — the reference
+      // ties by insertion order) and 1−score for the raw DP cost (monotone
+      // through quantization; admission can differ only within one 1e-4
+      // quantization step of the boundary).
+      val rerankParams = params.copy(
+        numberOfMatches = numberOfMatches,
+        contrastiveFactor = contrastiveFactor,
+        contrastReduce = contrastReduce,
+        contrastBuffer = contrastBuffer)
+      val buffer = if (contrastBuffer == -1) numberOfMatches else contrastBuffer
+      // materialize the (edge, corpus ids) join while cToks is still
+      // cached, THEN release it: the joined set is as small as `scored`
+      // (above-threshold matches only) and is what the rerank groups over
+      val withIds = scored
+        .joinWith(cToks, scored("b") === cToks("clip_id"))
+        .map { case (e, t) => (e.a, e.b, e.score, e.lcs, t.ids) }
+        .persist()
+      withIds.count()
+      releaseCToks()
+      val reranked = withIds
+        .groupByKey(_._1)
+        .flatMapGroups { (qid, it) =>
+          val all = it.toArray.sortBy(m => (-m._4, m._2))
+          val heap = scala.collection.mutable.PriorityQueue(Double.MaxValue)
+          val ms = if (buffer <= 0) all else all.filter { m => // in order: admission is stateful
+            val cost = 1.0 - m._3
+            cost <= heap.head && {
+              heap.enqueue(cost)
+              if (heap.size > buffer) heap.dequeue()
+              true
             }
-            Matcher.contrastiveRerank(queue, docs, rerankParams)
-              .iterator.zipWithIndex.map { case (m, r) =>
-                RetrievalRow(qid, r + 1, ms(m.sIdx)._2, m.score, m.maxSubseq)
-              }
           }
-        // the reranked set is top-k per query — result-sized; materialize it
-        // (eager localCheckpoint, lineage truncated) so withIds' cache is
-        // released HERE instead of pinning one copy per invocation for the
-        // session lifetime (the release-upstream-caches discipline this
-        // branch already applies to every other cache it creates)
-        val out = reranked.localCheckpoint()
-        withIds.unpersist()
-        scored.unpersist() // nothing downstream reads the edge cache either
-        out
-      }
-    ranked
+          val docs = ms.map(m => Doc(m._5, Array.empty, Array.empty))
+          implicit val ord: Ordering[graft.kernel.MatchResult] =
+            Ordering.by(m => (m.score, -m.sIdx))
+          val queue = scala.collection.mutable.PriorityQueue.empty[graft.kernel.MatchResult]
+          ms.zipWithIndex.foreach { case (m, i) =>
+            queue.enqueue(graft.kernel.MatchResult(m._3, 0.0, m._4, i, m._5.length))
+          }
+          Matcher.contrastiveRerank(queue, docs, rerankParams)
+            .iterator.zipWithIndex.map { case (m, r) =>
+              RetrievalRow(qid, r + 1, ms(m.sIdx)._2, m.score, m.maxSubseq)
+            }
+        }
+      // the reranked set is top-k per query — result-sized; materialize it
+      // (eager localCheckpoint, lineage truncated) so withIds' cache is
+      // released HERE instead of pinning one copy per invocation for the
+      // session lifetime (the release-upstream-caches discipline this
+      // branch already applies to every other cache it creates)
+      val out = reranked.localCheckpoint()
+      withIds.unpersist()
+      scored.unpersist() // nothing downstream reads the edge cache either
+      out
+    }
   }
 
-  /** Best-subsequence retrieval of every query row against the corpus
-    * (reference `-a subseq`): at most one row per query — the corpus
-    * sentence best matching the heaviest verifiable query subsequence. */
+  /** [[subsequenceIndexed]] against a raw corpus (tokenized as in [[topk]]). */
   def subsequence(
       queries: Dataset[Clip],
       corpus: Dataset[Clip],
@@ -345,106 +320,77 @@ object FuzzyRetrieval {
     subsequenceIndexed(queries, TokenizeStage(corpus, cfg), cfg, numberOfMatches,
       noPerfect, idfWeighting)
 
-  /** [[subsequence]] against a PREBUILT tokenized index — see
-    * [[topkIndexed]], whose served-index contract applies here too (a
-    * cached corpus is a snapshot shared by both operations; `unpersist`
-    * releases it). */
+  /** Best-subsequence retrieval of every query row against a tokenized
+    * corpus (reference `-a subseq`): at most one row per query — the corpus
+    * sentence best matching the heaviest verifiable query subsequence. The
+    * broadcast path follows [[topkIndexed]]'s served-index contract (a
+    * cached corpus is one snapshot shared by both operations).
+    *
+    * Shuffle path (the reference's global in-RAM index has no beyond-memory
+    * form, reference src/fuzzy_match.cc:250-365): candidates come from
+    * the containment g-gram equi-join
+    * ([[CandidateStage.crossContainmentGramChannel]], g = min(shingleK,
+    * minSubseqLength)); every host of an admissible subsequence shares one,
+    * so recall is exact up to the hot-gram cap, which sits well above the
+    * dedup shingle cap and is COUNTED (`subseqCappedGramBuckets`). Each
+    * query's candidate group then runs the EXACT J4 kernel
+    * ([[Matcher.subsequence]]) over a per-group suffix-array index: the
+    * group holds every corpus row sharing the probed gram, so equal ranges
+    * and the first verified winner match the global index's. IDF (with the
+    * -1 corpus-unknown-word sentinel) comes from the distributed
+    * doc-frequency join. Ties break by clip_id. Eager: the result (≤ 1 row
+    * per query) is materialized and every internal cache released. */
   def subsequenceIndexed(
       queries: Dataset[Clip],
       corpusToks: Dataset[TokRow],
       cfg: DedupConfig,
       numberOfMatches: Int = 5,
       noPerfect: Boolean = false,
-      idfWeighting: Boolean = false): Dataset[SubseqRow] = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-
-    val bc = BroadcastCorpus.served(corpusToks, cfg, "corpus", beyondMemory)
-    val pt = cfg.pt
-    val minSubseqLength = cfg.minSubseqLength
-    val minSubseqRatio = cfg.minSubseqRatio
-
-    queries.mapPartitions { it =>
-      // df always needed: the -1 idf sentinel marks corpus-unknown query
-      // words as subsequence breakers (fuzzy_match.cc:281-291)
-      val (index, docs, rows, df) = BroadcastCorpus.indexFor(bc, true)
-      val n = rows.length
-      it.flatMap { q =>
-        val ts = Tokenizer.tokenize(q.transcript, pt)
-        if (ts.norm.isEmpty) Iterator.empty
-        else {
-          val pids = Hashing.tokenIds(ts.norm)
-          val pattern = Doc(pids, ts.real, ts.itoks)
-          val idf = BroadcastCorpus.idf(pids, df, n, unknown = -1f)
-          Matcher.subsequence(index, docs(_), pattern, numberOfMatches, noPerfect,
-              minSubseqLength, minSubseqRatio, idfWeighting, idf)
-            .map { case (m, pos, len) =>
-              SubseqRow(q.clip_id, rows(m.sIdx).clip_id, m.score, m.maxSubseq,
-                ts.detokenize(pos, len))
-            }.iterator
+      idfWeighting: Boolean = false): Dataset[SubseqRow] =
+    onPath(corpusToks, cfg)(
+        shuffleSubsequence(queries, _, _, cfg, numberOfMatches, noPerfect, idfWeighting)) { bc =>
+      val spark = queries.sparkSession
+      import spark.implicits._
+      queries.mapPartitions { it =>
+        // df always needed: the -1 idf sentinel marks corpus-unknown query
+        // words as subsequence breakers (fuzzy_match.cc:281-291)
+        val (index, docs, rows, df) = BroadcastCorpus.indexFor(bc, true)
+        val n = rows.length
+        it.flatMap { q =>
+          val ts = Tokenizer.tokenize(q.transcript, cfg.pt)
+          if (ts.norm.isEmpty) Iterator.empty
+          else {
+            val pids = Hashing.tokenIds(ts.norm)
+            val pattern = Doc(pids, ts.real, ts.itoks)
+            val idf = BroadcastCorpus.idf(pids, df, n, unknown = -1f)
+            Matcher.subsequence(index, docs(_), pattern, numberOfMatches, noPerfect,
+                cfg.minSubseqLength, cfg.minSubseqRatio, idfWeighting, idf)
+              .map { case (m, pos, len) =>
+                SubseqRow(q.clip_id, rows(m.sIdx).clip_id, m.score, m.maxSubseq,
+                  ts.detokenize(pos, len))
+              }.iterator
+          }
         }
       }
     }
-  }
 
-  /** Beyond-memory best-subsequence retrieval — [[subsequence]] for a
-    * CORPUS past the broadcast envelope. The reference's secondary query
-    * has no beyond-memory formulation at all (its global in-RAM index is
-    * the only one, /root/reference/src/fuzzy_match.cc:250-365); here
-    * candidates come from the containment g-gram channel
-    * ([[CandidateStage.crossContainmentGramChannel]] — an equi-join on
-    * shared g-grams, g = min(shingleK, minSubseqLength); every host of an
-    * admissible subsequence shares one, so candidate recall is exact up to
-    * the hot-gram cap, which is COUNTED via `cappedGramBuckets` and
-    * defaults well above the dedup shingle cap), then each query's
-    * candidate group runs the EXACT reference J4 kernel
-    * ([[Matcher.subsequence]]) over a per-group suffix-array index: same
-    * subsequence priority queue, same equal-range probe (the group holds
-    * every corpus row sharing the probed gram, so ranges match the global
-    * index's), same first-verified-winner semantics. IDF (with the -1
-    * corpus-unknown-word sentinel) comes from the distributed
-    * doc-frequency join — never a broadcast vocabulary. Result ties (equal
-    * DP cost at the winning subsequence) break by clip_id order here vs
-    * corpus insertion order in the broadcast path — the [[topkShuffle]]
-    * rank-tie caveat. Eager: the result (≤ 1 row per query) is
-    * materialized and every internal cache released before returning. */
-  def subsequenceShuffle(
-      queries: Dataset[Clip],
-      corpus: Dataset[Clip],
-      cfg: DedupConfig,
-      numberOfMatches: Int = 5,
-      noPerfect: Boolean = false,
-      idfWeighting: Boolean = false,
-      gramDfCap: Int = 1024,
-      cappedGramBuckets: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[SubseqRow] =
-    subsequenceShuffleIndexed(queries, TokenizeStage(corpus, cfg), cfg, numberOfMatches,
-      noPerfect, idfWeighting, gramDfCap, cappedGramBuckets)
+  /** Hot-gram cap of the subsequence shuffle path's containment channel. */
+  private val subseqGramDfCap = 1024
 
-  /** [[subsequenceShuffle]] against a PREBUILT tokenized index — see
-    * [[topkIndexed]]. */
-  def subsequenceShuffleIndexed(
-      queries: Dataset[Clip],
-      corpusToks: Dataset[TokRow],
-      cfg: DedupConfig,
-      numberOfMatches: Int = 5,
-      noPerfect: Boolean = false,
-      idfWeighting: Boolean = false,
-      gramDfCap: Int = 1024,
-      cappedGramBuckets: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[SubseqRow] = {
+  /** [[subsequenceIndexed]]'s shuffle path over the corpus token rows. */
+  private def shuffleSubsequence(queries: Dataset[Clip], cToks: Dataset[TokRow],
+      releaseCToks: () => Unit, cfg: DedupConfig, numberOfMatches: Int, noPerfect: Boolean,
+      idfWeighting: Boolean): Dataset[SubseqRow] = {
     val spark = queries.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.col
 
-    val cTokCallerCached =
-      corpusToks.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val cToks = if (cTokCallerCached) corpusToks else corpusToks.persist()
     // the kernel has no pattern-length cap (P3/P4 are match-side filters),
     // so the query side tokenizes WITHOUT the max-length drop
     val qToks = TokenizeStage(queries, cfg, enforceMax = false).persist()
-    val acc = cappedGramBuckets.getOrElse(
-      spark.sparkContext.longAccumulator("subseqCappedGramBuckets"))
     val cands = CandidateStage
-      .crossContainmentGramChannel(qToks, cToks, cfg, gramDfCap, acc)
+      .crossContainmentGramChannel(qToks, cToks, cfg, subseqGramDfCap,
+        spark.sparkContext.longAccumulator("subseqCappedGramBuckets"))
       .persist()
 
     val n = cToks.count()
@@ -467,12 +413,6 @@ object FuzzyRetrieval {
       .joinWith(cToks, cands("c") === cToks("clip_id"))
       .map { case (cp, t) => CandTok(cp.p, t) }
 
-    val pt = cfg.pt
-    val nom = numberOfMatches
-    val noPerf = noPerfect
-    val msl0 = cfg.minSubseqLength
-    val ratio = cfg.minSubseqRatio
-    val idfW = idfWeighting
     val out = pats.groupByKey(_._1).cogroup(candToks.groupByKey(_.p)) { (qid, pIt, cIt) =>
       if (!pIt.hasNext) Iterator.empty
       else {
@@ -486,17 +426,11 @@ object FuzzyRetrieval {
           // deterministic group order (the broadcast path's corpus
           // insertion order is not recoverable here — the tie caveat above)
           java.util.Arrays.sort(candRows, Ordering.by((t: TokRow) => t.clip_id))
-          val index = new graft.kernel.SuffixIndex
-          val docs = new Array[Doc](candRows.length)
-          var i = 0
-          while (i < candRows.length) {
-            index.add(candRows(i).ids)
-            docs(i) = Doc(candRows(i).ids, candRows(i).reals, candRows(i).itoks)
-            i += 1
-          }
-          val ts = Tokenizer.tokenize(transcript, pt)
+          val (index, docs) = TokenizeStage.suffixIndex(candRows)
+          val ts = Tokenizer.tokenize(transcript, cfg.pt)
           val pattern = Doc(Hashing.tokenIds(ts.norm), ts.real, ts.itoks)
-          Matcher.subsequence(index, docs, pattern, nom, noPerf, msl0, ratio, idfW, idf)
+          Matcher.subsequence(index, docs, pattern, numberOfMatches, noPerfect,
+              cfg.minSubseqLength, cfg.minSubseqRatio, idfWeighting, idf)
             .map { case (m, pos, len) =>
               SubseqRow(qid, candRows(m.sIdx).clip_id, m.score, m.maxSubseq,
                 ts.detokenize(pos, len))
@@ -506,47 +440,43 @@ object FuzzyRetrieval {
     }.localCheckpoint() // result-sized (≤ 1 row per query); then release
     qToks.unpersist()
     cands.unpersist()
-    if (!cTokCallerCached) cToks.unpersist()
+    releaseCToks()
     out
   }
 
-  /** Eval-index construction + the per-row contamination predicate shared
-    * by [[decontaminate]] (batch) and
-    * [[graft.streaming.StreamingDedup.decontaminateStream]]: tokenizes the
-    * eval set under the loud hygiene contract (ANY eval row dropped by the
-    * tokenize filters fails the call — a silently unprotected benchmark row
-    * is the worst failure mode), broadcasts it once, and returns a
-    * mapPartitions-ready flagger emitting `(clip, contaminated?)`. A row
-    * whose transcript tokenizes empty is clean by definition (nothing to
-    * probe — the P2 empty-segment filter); a corpus row beyond
-    * `cfg.maxTokensInPattern` skips the fuzzy DP (reference P4 cap, counted
-    * in `fuzzySkippedOverLength`) but its containment sweep still runs.
-    * The returned broadcast is owned by the caller: a streaming query
-    * shares it across every micro-batch for the query's lifetime; the
-    * batch path destroys it once its flagged-id set has collected. */
-  private[graft] def deconFlagger(
-      evalSet: Dataset[Clip],
-      cfg: DedupConfig,
-      alsoContained: Boolean,
-      fuzzySkippedOverLength: Option[org.apache.spark.util.LongAccumulator])
-      : (Iterator[Clip] => Iterator[(Clip, Boolean)],
-         org.apache.spark.broadcast.Broadcast[Array[TokRow]]) = {
+  /** The eval set tokenized and persisted (the caller releases it), with its
+    * row count and estimated bytes from one job, under the loud hygiene
+    * contract: ANY eval row dropped by the tokenize filters fails the call
+    * — a silently unprotected benchmark row is the worst failure mode. */
+  private def evalRows(evalSet: Dataset[Clip], cfg: DedupConfig): (Dataset[TokRow], Long, Long) = {
     val nEval = evalSet.count()
     val evalToks = TokenizeStage(evalSet, cfg).persist()
-    val bc = try BroadcastCorpus.broadcast(evalToks, TokenizeStage.rowBytes(), cfg, "eval set",
-        "FuzzyRetrieval.decontaminateShuffle (the beyond-memory path)") { evalRows =>
-      require(evalRows.length == nEval,
-        s"${nEval - evalRows.length} of $nEval eval rows were dropped by the tokenize " +
-          s"filters (empty transcript, or > maxTokensInPattern=${cfg.maxTokensInPattern} " +
-          "tokens) — decontamination must not silently unprotect benchmark rows; raise " +
-          "cfg.maxTokensInPattern or clean the eval table first")
-      evalRows
-    } finally evalToks.unpersist()
+    val (n, bytes) = BroadcastCorpus.stats(evalToks, TokenizeStage.rowBytes())
+    if (n != nEval) evalToks.unpersist()
+    require(n == nEval,
+      s"${nEval - n} of $nEval eval rows were dropped by the tokenize " +
+        s"filters (empty transcript, or > maxTokensInPattern=${cfg.maxTokensInPattern} " +
+        "tokens) — decontamination must not silently unprotect benchmark rows; raise " +
+        "cfg.maxTokensInPattern or clean the eval table first")
+    (evalToks, n, bytes)
+  }
 
+  /** The eval rows broadcast once (guarded by the envelope, naming
+    * `alternative`), and the mapPartitions-ready per-row contamination
+    * predicate over them, emitting `(clip, contaminated?)`. A row whose
+    * transcript tokenizes empty is clean by definition (nothing to probe —
+    * the P2 empty-segment filter); a corpus row beyond
+    * `cfg.maxTokensInPattern` skips the fuzzy DP (reference P4 cap, counted
+    * in `fuzzySkippedOverLength`) but its containment sweep still runs. */
+  private def flagger(evalToks: Dataset[TokRow], n: Long, bytes: Long, cfg: DedupConfig,
+      alsoContained: Boolean, fuzzySkippedOverLength: Option[org.apache.spark.util.LongAccumulator],
+      alternative: String)
+      : (Iterator[Clip] => Iterator[(Clip, Boolean)], Broadcast[Array[TokRow]]) = {
+    BroadcastCorpus.requireFits(n, bytes, cfg, "eval set", alternative)
+    val bc = BroadcastCorpus.broadcastUnguarded(evalToks)(identity[Array[TokRow]])
     val params = cfg.matchParams(numberOfMatches = 1, noPerfect = false) // any hit flags the row
     val useIdf = cfg.vocabIdfPenalty != 0f
     val pt = cfg.pt
-    val withContained = alsoContained
     val maxTok = cfg.maxTokensInPattern
 
     val fn = (it: Iterator[Clip]) => {
@@ -565,7 +495,7 @@ object FuzzyRetrieval {
           if (pids.length > maxTok) fuzzySkippedOverLength.foreach(_.add(1))
           val hit =
             Matcher.matchPattern(index, docs(_), pattern, params, idf, idfMax).nonEmpty || {
-              withContained &&
+              alsoContained &&
                 index.longestMatches(pids, minEvalLen, 0f, params.editCosts)
                   .exists { case (sIdx, len) => len >= index.sentenceLengthOf(sIdx) }
             }
@@ -576,40 +506,69 @@ object FuzzyRetrieval {
     (fn, bc)
   }
 
-  /** Decontamination — the training-data hygiene operator built directly on
-    * the broadcast retrieval path: drop every corpus row whose transcript
-    * fuzzy-matches ANY row of the (small) eval/benchmark table at
-    * `cfg.threshold`, so benchmark material never leaks into training data.
-    * The broadcast index is the EVAL SET (typically thousands of rows — far
-    * under the envelope), the corpus is the unbounded probe side: 10^12
-    * rows stream through in ONE partition-parallel pass with zero shuffle —
-    * the [[topk]] scale shape with the roles picked for the decontamination
-    * workload, and both probes (fuzzy match + containment) run against the
-    * same executor-cached index so the dominant per-row tokenize/probe cost
-    * is paid once even with `alsoContained` on.
+  /** [[decontaminate]]'s broadcast predicate for
+    * [[graft.streaming.StreamingDedup.decontaminateStream]] (a stream has no
+    * shuffle path), its broadcast shared by every micro-batch. */
+  private[graft] def deconFlagger(
+      evalSet: Dataset[Clip],
+      cfg: DedupConfig,
+      alsoContained: Boolean,
+      fuzzySkippedOverLength: Option[org.apache.spark.util.LongAccumulator])
+      : Iterator[Clip] => Iterator[(Clip, Boolean)] = {
+    val (evalToks, n, bytes) = evalRows(evalSet, cfg)
+    try flagger(evalToks, n, bytes, cfg, alsoContained, fuzzySkippedOverLength,
+      "the batch FuzzyRetrieval.decontaminate with strategy = \"shuffle\"")._1
+    finally evalToks.unpersist()
+  }
+
+  /** Hot 2-gram cap of the decontamination shuffle path's containment probe:
+    * a dropped bucket can hide a contaminated host, so it sits high and its
+    * drops are counted (`deconCappedContainmentBuckets`). */
+  private val containmentGramDfCap = 65536
+
+  /** Decontamination — the training-data hygiene operator: drop every corpus
+    * row whose transcript fuzzy-matches ANY row of the eval/benchmark table
+    * at `cfg.threshold`, so benchmark material never leaks into training
+    * data. The index side is the EVAL SET; its rows and estimated bytes pick
+    * the path ([[BroadcastCorpus.picksBroadcast]]). The corpus is the
+    * unbounded probe side on both.
     *
-    * Containment leaks (an eval sentence embedded verbatim inside a longer
-    * training document) use the J2 n-gram sweep
-    * ([[graft.kernel.SuffixIndex.longestMatches]]) with P5 disabled
-    * (containment is length-asymmetric by nature): eval row s is contained
-    * ⟺ the longest shared contiguous run with s covers ALL of s. This
-    * checks every eval row simultaneously in O(L·log) per document — NOT
-    * the reference `-a subseq` probe, whose single-best-result selection
+    * Broadcast path (typically thousands of eval rows — far under the
+    * envelope): 10^12 corpus rows stream through in ONE partition-parallel
+    * pass with zero shuffle — the [[topk]] scale shape with the roles picked
+    * for this workload — and both probes (fuzzy match + containment) run
+    * against the same executor-cached index, so the per-row tokenize/probe
+    * cost is paid once even with `alsoContained` on. Containment leaks (an
+    * eval sentence embedded verbatim inside a longer training document) use
+    * the J2 n-gram sweep ([[graft.kernel.SuffixIndex.longestMatches]]) with
+    * P5 disabled (containment is length-asymmetric by nature): eval row s is
+    * contained ⟺ the longest shared contiguous run with s covers ALL of s.
+    * This checks every eval row simultaneously in O(L·log) per document —
+    * NOT the reference `-a subseq` probe, whose single-best-result selection
     * and length-ratio span clamp answer a different (retrieval) question
     * and would silently under-flag long documents. Containment requires
-    * eval rows of ≥ 2 tokens (the reference registers no unigram ranges
-    * for multi-token patterns, README.md:140); a 1-token "sentence" would
-    * flag every document using that word, which is a vocabulary filter,
-    * not decontamination.
+    * eval rows of ≥ 2 tokens (the reference registers no unigram ranges for
+    * multi-token patterns, README.md:140); a 1-token "sentence" would flag
+    * every document using that word, which is a vocabulary filter, not
+    * decontamination.
     *
-    * Loudness guarantees of the hygiene contract: eval rows dropped by the
-    * tokenize filters (empty, or beyond `cfg.maxTokensInPattern`) FAIL the
-    * call — a silently unprotected benchmark row is the worst failure mode
-    * — and corpus rows too long for the fuzzy DP probe (reference P4 cap)
-    * are counted in `fuzzySkippedOverLength` (their containment probe
-    * still runs; the sweep has no length cap). Returns (clean corpus,
-    * flagged contaminated rows), both carrying their original columns
-    * untouched. */
+    * Shuffle path (an eval set past the envelope), every stage distributed:
+    *  - the fuzzy probe is [[topkIndexed]]'s shuffle path with patterns =
+    *    corpus rows, index = eval rows, numberOfMatches = 1 — any edge ≥
+    *    threshold flags;
+    *  - the containment probe joins each eval row's leading 2-gram against
+    *    the corpus's exploded 2-gram positions (2 = the containment minimum)
+    *    and verifies FULL-sequence containment per surviving pair — a
+    *    superset candidate channel verified exactly, so the flagged set
+    *    matches the broadcast J2-sweep semantics.
+    *
+    * Loudness guarantees of the hygiene contract, on both paths: eval rows
+    * dropped by the tokenize filters (empty, or beyond
+    * `cfg.maxTokensInPattern`) FAIL the call, and corpus rows too long for
+    * the fuzzy DP probe (reference P4 cap) are counted in
+    * `fuzzySkippedOverLength` (their containment probe still runs; it has
+    * no length cap). Returns (clean corpus, flagged contaminated rows), both
+    * carrying their original columns untouched. */
   def decontaminate(
       corpus: Dataset[Clip],
       evalSet: Dataset[Clip],
@@ -619,13 +578,60 @@ object FuzzyRetrieval {
       : (Dataset[Clip], Dataset[Clip]) = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val (flagFn, bc) = deconFlagger(evalSet, cfg, alsoContained, fuzzySkippedOverLength)
+    import org.apache.spark.sql.functions.{broadcast, col, lit}
+    val (evalToks, nEval, evalBytes) = evalRows(evalSet, cfg)
 
-    val flaggedIds = corpus.mapPartitions { it =>
-      flagFn(it).collect { case (c, true) => c.clip_id }
-    }.toDF("flagged_id").persist()
+    val (flaggedSrc, releaseIndex) =
+      if (BroadcastCorpus.picksBroadcast(cfg)((nEval, evalBytes))) {
+        val (flagFn, bc) = try flagger(evalToks, nEval, evalBytes, cfg, alsoContained,
+            fuzzySkippedOverLength, "strategy = \"shuffle\" (the beyond-memory path)")
+          catch { case e: Throwable => evalToks.unpersist(); throw e }
+        (corpus.mapPartitions(it => flagFn(it).collect { case (c, true) => c.clip_id })
+          .toDF("flagged_id"), () => bc.destroy())
+      } else {
+        // fuzzy probe: corpus rows as patterns against the eval index — any
+        // above-threshold match flags (numberOfMatches = 1)
+        val fuzzyIds = shuffleTopk(corpus, evalToks, () => (), cfg, numberOfMatches = 1)
+          .select(col("query_id").as("flagged_id")).distinct()
+        // the corpus tokenized unfiltered: over-length rows are counted here
+        // and still probed for containment
+        val maxTok = cfg.maxTokensInPattern
+        val cAll = TokenizeStage(corpus, cfg, enforceMax = false)
+        val cNoMax = if (alsoContained) cAll.persist() else cAll
+        fuzzySkippedOverLength.foreach(_.add(cNoMax.filter(_.n_tokens > maxTok).count()))
+        val containedIds =
+          if (!alsoContained) spark.emptyDataset[String].toDF("flagged_id")
+          else {
+            val gc = 2
+            val evalE = evalToks.filter(_.n_tokens >= gc)
+              .map(t => (Hashing.shingleHash(t.ids, 0, gc), t.clip_id, t.n_tokens))
+              .toDF("sh", "id", "n")
+            val pairs = CandidateStage
+              .bucketPairs(evalE, Some(CandidateStage.shingleEntries(cNoMax, gc)), lit(true),
+                containmentGramDfCap,
+                spark.sparkContext.longAccumulator("deconCappedContainmentBuckets"))
+              .select("p", "c").dropDuplicates("p", "c").as[CandPair]
+            val withEval = pairs
+              .joinWith(evalToks, pairs("p") === evalToks("clip_id"))
+              .map { case (cp, e) => (cp.c, e.ids) }
+            val flagged = withEval
+              .joinWith(cNoMax, withEval("_1") === cNoMax("clip_id"))
+              .flatMap { case ((_, eIds), h) =>
+                if (CandidateStage.containsSubsequence(h.ids, eIds)) Iterator.single(h.clip_id)
+                else Iterator.empty
+              }
+              .distinct().toDF("flagged_id")
+              // materialize (small: contaminated hosts only) so cNoMax releases
+              .localCheckpoint()
+            cNoMax.unpersist()
+            flagged
+          }
+        (fuzzyIds.union(containedIds).distinct(), () => ())
+      }
+
+    val flaggedIds = flaggedSrc.persist()
     val nFlagged = flaggedIds.count()
-
+    evalToks.unpersist()
     // release executor state for the common case: the flagged id set is
     // small (contaminated fraction), so collect it, swap the joins onto a
     // broadcast local relation, and drop the cache + eval broadcast. The
@@ -635,113 +641,8 @@ object FuzzyRetrieval {
       if (nFlagged <= 1000000L) {
         val ids = flaggedIds.as[String].collect().toSeq
         flaggedIds.unpersist()
-        bc.destroy()
-        org.apache.spark.sql.functions.broadcast(ids.toDF("flagged_id"))
-      } else flaggedIds
-
-    val clean = corpus
-      .join(flaggedRef, corpus("clip_id") === flaggedRef("flagged_id"), "left_anti")
-      .as[Clip]
-    val flagged = corpus
-      .join(flaggedRef, corpus("clip_id") === flaggedRef("flagged_id"), "left_semi")
-      .as[Clip]
-    (clean, flagged)
-  }
-
-  /** [[decontaminate]] for an EVAL SET past the broadcast envelope — the
-    * same hygiene contract with every stage distributed:
-    *
-    *  - the fuzzy probe composes the cross-table candidate channels + the
-    *    cogroup verify ([[topkShuffleIndexed]] with patterns = corpus rows,
-    *    index = eval rows, numberOfMatches = 1 — any edge ≥ threshold
-    *    flags);
-    *  - the containment probe (`alsoContained`) joins each eval row's
-    *    leading 2-gram against the corpus's exploded 2-gram positions
-    *    (2 = the containment minimum — eval rows must have ≥ 2 tokens, as
-    *    in the broadcast path) and verifies FULL-sequence containment per
-    *    surviving pair — a superset candidate channel verified exactly, so
-    *    the flagged set matches the broadcast J2-sweep semantics;
-    *  - loudness: eval rows dropped by the tokenize filters FAIL the call;
-    *    corpus rows beyond `maxTokensInPattern` are skipped by the fuzzy DP
-    *    (P4) and counted in `fuzzySkippedOverLength`, but their containment
-    *    probe STILL runs (the corpus tokenizes unfiltered on that channel).
-    *
-    * Hot 2-gram buckets are capped at `containmentGramDfCap` AND counted
-    * (`cappedContainmentBuckets`) — a dropped bucket can hide a
-    * contaminated host, so the cap defaults high and the count must be
-    * checked like every valve in this engine. */
-  def decontaminateShuffle(
-      corpus: Dataset[Clip],
-      evalSet: Dataset[Clip],
-      cfg: DedupConfig,
-      alsoContained: Boolean = false,
-      fuzzySkippedOverLength: Option[org.apache.spark.util.LongAccumulator] = None,
-      containmentGramDfCap: Int = 65536,
-      cappedContainmentBuckets: Option[org.apache.spark.util.LongAccumulator] = None)
-      : (Dataset[Clip], Dataset[Clip]) = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit}
-
-    val nEval = evalSet.count()
-    val evalToks = TokenizeStage(evalSet, cfg).persist()
-    val nEvalToks = evalToks.count()
-    require(nEvalToks == nEval,
-      s"${nEval - nEvalToks} of $nEval eval rows were dropped by the tokenize " +
-        s"filters (empty transcript, or > maxTokensInPattern=${cfg.maxTokensInPattern} " +
-        "tokens) — decontamination must not silently unprotect benchmark rows; raise " +
-        "cfg.maxTokensInPattern or clean the eval table first")
-
-    // fuzzy probe: corpus rows as patterns against the eval index — any
-    // above-threshold match flags (numberOfMatches = 1)
-    val fuzzyIds = topkShuffleIndexed(corpus, evalToks, cfg, numberOfMatches = 1)
-      .select(col("query_id").as("flagged_id")).distinct()
-
-    val maxTok = cfg.maxTokensInPattern
-    if (!alsoContained)
-      fuzzySkippedOverLength.foreach(_.add(
-        TokenizeStage(corpus, cfg, enforceMax = false).filter(_.n_tokens > maxTok).count()))
-    val containedIds =
-      if (!alsoContained) spark.emptyDataset[String].toDF("flagged_id")
-      else {
-        val cNoMax = TokenizeStage(corpus, cfg, enforceMax = false).persist()
-        fuzzySkippedOverLength.foreach(_.add(cNoMax.filter(_.n_tokens > maxTok).count()))
-        val gc = 2
-        val acc = cappedContainmentBuckets.getOrElse(
-          spark.sparkContext.longAccumulator("deconCappedContainmentBuckets"))
-        val evalE = evalToks.filter(_.n_tokens >= gc)
-          .map(t => (Hashing.shingleHash(t.ids, 0, gc), t.clip_id, t.n_tokens))
-          .toDF("sh", "id", "n")
-        val pairs = CandidateStage
-          .bucketPairs(evalE, Some(CandidateStage.shingleEntries(cNoMax, gc)), lit(true),
-            containmentGramDfCap, acc)
-          .select("p", "c").dropDuplicates("p", "c").as[CandPair]
-        val withEval = pairs
-          .joinWith(evalToks, pairs("p") === evalToks("clip_id"))
-          .map { case (cp, e) => (cp.c, e.ids) }
-        val flagged = withEval
-          .joinWith(cNoMax, withEval("_1") === cNoMax("clip_id"))
-          .flatMap { case ((_, eIds), h) =>
-            if (CandidateStage.containsSubsequence(h.ids, eIds)) Iterator.single(h.clip_id)
-            else Iterator.empty
-          }
-          .distinct().toDF("flagged_id")
-          // materialize (small: contaminated hosts only) so cNoMax releases
-          .localCheckpoint()
-        cNoMax.unpersist()
-        flagged
-      }
-
-    val flaggedIds = fuzzyIds.union(containedIds).distinct().persist()
-    val nFlagged = flaggedIds.count()
-    evalToks.unpersist()
-    // same bounded-collect escape as the broadcast path: swap the joins
-    // onto a broadcast local relation when the flagged set is small
-    val flaggedRef =
-      if (nFlagged <= 1000000L) {
-        val ids = flaggedIds.as[String].collect().toSeq
-        flaggedIds.unpersist()
-        org.apache.spark.sql.functions.broadcast(ids.toDF("flagged_id"))
+        releaseIndex()
+        broadcast(ids.toDF("flagged_id"))
       } else flaggedIds
 
     val clean = corpus
@@ -953,13 +854,7 @@ object FuzzyRetrieval {
         false
       } else {
         val merged = segmentName(m.next)
-        val parts = m.names.map { n =>
-          require(graft.data.TableIO.exists(spark, s"$dir/$n"),
-            s"index at $dir references segment $dir/$n with no COMMITTED table — " +
-              "rebuild with saveIndex / MatchCli action=index")
-          graft.data.TableIO.read(spark, s"$dir/$n")
-        }
-        graft.data.TableIO.write(parts.reduce(_.union(_)), s"$dir/$merged")
+        graft.data.TableIO.write(committedSegments(spark, dir, m), s"$dir/$merged")
         writeIndexMeta(spark, dir, cfg, names = Seq(merged), next = m.next + 1,
           retired = kept ++ m.names.map(n => (n, now)))
         sweep(keep = Set(merged) ++ kept.map(_._1) ++ m.names)
@@ -979,13 +874,18 @@ object FuzzyRetrieval {
     import spark.implicits._
     val m = readIndexMeta(spark, dir)
     requireConfigMatch(m, cfg, dir, "match")
-    val parts = m.names.map { n =>
+    committedSegments(spark, dir, m).as[TokRow]
+  }
+
+  /** The union of the segment tables `m` commits, failing loudly on a
+    * segment with no COMMITTED table (an index write that did not complete). */
+  private def committedSegments(spark: org.apache.spark.sql.SparkSession, dir: String,
+      m: IndexMeta): org.apache.spark.sql.DataFrame =
+    m.names.map { n =>
       val seg = s"$dir/$n"
       require(graft.data.TableIO.exists(spark, seg),
         s"index at $dir references segment $seg with no COMMITTED table — the " +
           "index write did not complete; rebuild with saveIndex / MatchCli action=index")
       graft.data.TableIO.read(spark, seg)
-    }
-    parts.reduce(_.union(_)).as[TokRow]
-  }
+    }.reduce(_.union(_))
 }

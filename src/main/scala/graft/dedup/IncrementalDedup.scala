@@ -192,9 +192,7 @@ object IncrementalDedup {
       CandidateStage.shorterFirst(s.n_tokens, s.clip_id, o.n_tokens, o.clip_id) &&
         !SuffixIndex.theoreticalRejection(s.n_tokens, o.n_tokens, ec, fuzzy))
     val asCandidate = if (patterns.isEmpty) Nil else {
-      val oIndex = new SuffixIndex
-      oIndex.add(o.ids)
-      oIndex.sort()
+      val (oIndex, _) = TokenizeStage.suffixIndex(Array(o))
       patterns.flatMap(s => Matcher.matchPattern(oIndex, _ => oDoc, Doc(s.ids, s.reals, s.itoks), params)
         .map(edge(s, o.clip_id, _)))
     }

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.functions.{aggregate, col, length, lit, size}
 import graft.data.Clip
-import graft.kernel.Hashing
+import graft.kernel.{Doc, Hashing, SuffixIndex}
 import graft.text.Tokenizer
 
 /** Tokenized row: the pipeline's working representation of one clip.
@@ -46,6 +46,15 @@ object TokenizeStage {
           TokRow(c.clip_id, ts.norm.length, Hashing.tokenIds(ts.norm), ts.real, ts.itoks))
       }
     }
+  }
+
+  /** A sorted suffix-array index over `rows` and their matcher docs, both in
+    * row order (sentence i of the index is `rows(i)`). */
+  def suffixIndex(rows: Array[TokRow]): (SuffixIndex, Array[Doc]) = {
+    val index = new SuffixIndex
+    val docs = rows.map { r => index.add(r.ids); Doc(r.ids, r.reals, r.itoks) }
+    index.sort()
+    (index, docs)
   }
 
   /** Estimated in-memory bytes of one [[TokRow]] (JVM-ish accounting: object

@@ -1,7 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.Dataset
-import graft.kernel.{Doc, Matcher, SuffixIndex}
+import graft.kernel.{Doc, Matcher}
 
 /** Verified duplicate edge. `kind` = "substring" when the pattern matched in
   * full inside the candidate (the reference's subsequence dup class,
@@ -150,8 +150,8 @@ object VerifyStage {
     }
   }
 
-  /** The scoring cogroup, shared with the shuffle-path retrieval
-    * ([[graft.dedup.FuzzyRetrieval.topkShuffle]]): per salted pattern group,
+  /** The scoring cogroup, shared with the shuffle branch of
+    * [[graft.dedup.FuzzyRetrieval.topkIndexed]]: per salted pattern group,
     * build a local suffix-array index over the candidate rows and run the
     * reference matcher end-to-end (J1/J2/A1/A2 + P6 + F5/O3 + F7 + P8). */
   private[graft] def scoreGroups(
@@ -178,14 +178,7 @@ object VerifyStage {
           if (candRows.isEmpty) Iterator.empty
           else {
             val patternId = saltedKey.substring(0, saltedKey.lastIndexOf('#'))
-            val index = new SuffixIndex
-            val docs = new Array[Doc](candRows.length)
-            var i = 0
-            while (i < candRows.length) {
-              index.add(candRows(i).ids)
-              docs(i) = Doc(candRows(i).ids, candRows(i).reals, candRows(i).itoks)
-              i += 1
-            }
+            val (index, docs) = TokenizeStage.suffixIndex(candRows)
             val pattern = Doc(pRow.ids, pRow.reals, pRow.itoks)
             val idfVec = if (pat.idf.nonEmpty) pat.idf else null
             Matcher.matchPattern(index, docs, pattern, params, idfVec, idfMax).iterator.map { m =>

@@ -487,7 +487,8 @@ object PipelineQueries {
   def qFuzzyTopkShuffle(spark: SparkSession, dir: String): DataFrame = {
     val corpus = documentsAsClips(spark, dir)
     val queries = corpus.filter(col("clip_id").cast("long") < 50)
-    FuzzyRetrieval.topkShuffle(queries, corpus, DedupConfig(threshold = 0.6f), numberOfMatches = 5)
+    FuzzyRetrieval.topk(queries, corpus, DedupConfig(threshold = 0.6f, strategy = "shuffle"),
+        numberOfMatches = 5)
       .toDF()
       .select(col("query_id"), col("rank").cast("bigint").as("rank"), col("s_id"),
         round(col("score"), 4).as("score"), col("max_subseq").cast("bigint").as("max_subseq"))
@@ -512,7 +513,7 @@ object PipelineQueries {
   def qSubseqRetrievalShuffle(spark: SparkSession, dir: String): DataFrame = {
     val corpus = documentsAsClips(spark, dir)
     val queries = corpus.filter(col("clip_id").cast("long") < 50)
-    FuzzyRetrieval.subsequenceShuffle(queries, corpus, DedupConfig(), numberOfMatches = 5)
+    FuzzyRetrieval.subsequence(queries, corpus, DedupConfig(strategy = "shuffle"), numberOfMatches = 5)
       .toDF()
       .select(col("query_id"), col("s_id"), round(col("score"), 4).as("score"),
         col("max_subseq").cast("bigint").as("max_subseq"), col("subseq_surface"))
@@ -538,8 +539,8 @@ object PipelineQueries {
   def qDecontaminateShuffle(spark: SparkSession, dir: String): DataFrame = {
     val corpus = documentsAsClips(spark, dir)
     val evalSet = corpus.filter(col("clip_id").cast("long") < 20)
-    val (_, flagged) = FuzzyRetrieval.decontaminateShuffle(
-      corpus, evalSet, DedupConfig(threshold = 0.8f), alsoContained = true)
+    val (_, flagged) = FuzzyRetrieval.decontaminate(
+      corpus, evalSet, DedupConfig(threshold = 0.8f, strategy = "shuffle"), alsoContained = true)
     flagged.toDF().select(col("clip_id"), col("transcript"))
   }
 

@@ -114,7 +114,7 @@ object StreamingDedup {
     * shared by every batch (append mode, no watermark), so the unbounded
     * axis is the stream, exactly the [[retrievalAgainstCorpus]] envelope;
     * a beyond-broadcast corpus takes the batch
-    * [[graft.dedup.FuzzyRetrieval.topkShuffle]] path instead.
+    * [[graft.dedup.FuzzyRetrieval.topk]] with `strategy = "shuffle"` instead.
     * Emits [[graft.dedup.Edge]] rows with a = stream clip, b = corpus clip
     * (self-id pairs excluded, as in the candidates channel). Works on both
     * streaming and batch Datasets (narrow ops only), so stream-vs-batch
@@ -144,8 +144,8 @@ object StreamingDedup {
     val corpusPairs = TokenizeStage(corpus, cfg)
       .mapPartitions(it => it.map(t => (t, SignatureStage.one(t, k, perms, bands, seed))))
       .persist()
-    val bc = BroadcastCorpus.broadcast(corpusPairs, TokenizeStage.rowBytes("_1."), cfg,
-        "corpus", "FuzzyRetrieval.topkShuffle (the batch beyond-memory path)") { collected =>
+    val bc = BroadcastCorpus.broadcast(corpusPairs, TokenizeStage.rowBytes("_1."), cfg, "corpus",
+        "FuzzyRetrieval.topk with strategy = \"shuffle\" (the batch path)") { collected =>
       val rows = collected.map(_._1)
       // hot-bucket valve, same discipline as every bucketed channel: a band
       // bucket above bandDfCap is dropped AND counted, never a linear scan
@@ -195,15 +195,7 @@ object StreamingDedup {
             }
             if (kept.isEmpty) Iterator.empty
             else {
-              val index = new graft.kernel.SuffixIndex
-              val docs = new Array[graft.kernel.Doc](kept.length)
-              var i = 0
-              while (i < kept.length) {
-                val r = corpusRows(kept(i))
-                index.add(r.ids)
-                docs(i) = graft.kernel.Doc(r.ids, r.reals, r.itoks)
-                i += 1
-              }
+              val (index, docs) = TokenizeStage.suffixIndex(kept.map(corpusRows).toArray)
               val pattern = graft.kernel.Doc(pids, ts.real, ts.itoks)
               // corpus-unknown pattern words carry 0 idf, the reference's
               // unknown-word default (fuzzy_match.cc:367-390)
@@ -332,15 +324,19 @@ object StreamingDedup {
     * micro-batch, queries map through it with zero shuffle (append mode,
     * no watermark needed), so the unbounded axis is the query stream —
     * exactly the broadcast-path scale envelope of
-    * [[graft.dedup.FuzzyRetrieval.topk]], which this delegates to (the
-    * operator is already streaming-safe: narrow mapPartitions only). */
+    * [[graft.dedup.FuzzyRetrieval.topk]], which this delegates to with
+    * `strategy = "broadcast"` (that path is streaming-safe: narrow
+    * mapPartitions only; the shuffle path counts and persists its query
+    * side, which a stream cannot do). A corpus past the envelope fails with
+    * the envelope error. */
   def retrievalAgainstCorpus(
       queryStream: Dataset[Clip],
       corpus: Dataset[Clip],
       cfg: DedupConfig,
       numberOfMatches: Int = 5,
       noPerfect: Boolean = false): Dataset[graft.dedup.RetrievalRow] =
-    graft.dedup.FuzzyRetrieval.topk(queryStream, corpus, cfg, numberOfMatches, noPerfect)
+    graft.dedup.FuzzyRetrieval.topk(queryStream, corpus, cfg.copy(strategy = "broadcast"),
+      numberOfMatches, noPerfect)
 
   /** Streaming eval-set decontamination — the hygiene operator on the
     * ingest path: every arriving clip is probed against the static eval
@@ -372,7 +368,7 @@ object StreamingDedup {
       : Dataset[(Clip, Boolean)] = {
     val spark = streamClips.sparkSession
     import spark.implicits._
-    val (flagFn, _) = graft.dedup.FuzzyRetrieval
+    val flagFn = graft.dedup.FuzzyRetrieval
       .deconFlagger(evalSet, cfg, alsoContained, fuzzySkippedOverLength)
     streamClips.mapPartitions { it =>
       flagFn(it).map { case (c, f) =>

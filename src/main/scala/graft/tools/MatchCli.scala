@@ -10,7 +10,8 @@ import graft.dedup.{DedupConfig, DedupPipeline, FuzzyRetrieval}
   *
   * Usage:
   *   MatchCli <corpus> <queries> <outDir|-> [threshold=0.8] [nmatch=5]
-  *            [noPerfect=false] [strategy=broadcast|shuffle] [action=match|subseq|index]
+  *            [noPerfect=false] [strategy=auto|broadcast|shuffle]
+  *            [action=match|subseq|index|append|compact|decon]
   *
   * `corpus` / `queries`: a clip parquet path (input_hint schema), a text
   * file (`.txt`/`.gz`, one sentence per line — ids are 1-based line numbers,
@@ -20,9 +21,12 @@ import graft.dedup.{DedupConfig, DedupPipeline, FuzzyRetrieval}
   * FuzzyMatch-cli.cc:435-443/417-420): match jobs then skip the corpus
   * TokenizeStage entirely. `outDir` `-` prints the first rows instead of
   * writing. Emits the reference's `NMATCH nonempty/total` counter line
-  * (FuzzyMatch-cli.cc:452-458). `action=subseq` runs the best-subsequence
-  * retrieval (`-a subseq`, both strategies — shuffle for a beyond-memory
-  * corpus) and emits one row per query with the detokenized matched span.
+  * (FuzzyMatch-cli.cc:452-458). `strategy` sets `DedupConfig.strategy`:
+  * `auto` (the default) broadcasts the index side when it fits the
+  * envelope and runs the shuffle path otherwise; `broadcast` / `shuffle`
+  * force a path. `action=subseq` runs the best-subsequence retrieval
+  * (`-a subseq`) and emits one row per query with the detokenized matched
+  * span.
   * `action=index` tokenizes
   * `corpus` and writes the index to `outDir` (queries arg ignored, pass `-`).
   * `action=decon` runs eval-set decontamination: `queries` is the
@@ -33,13 +37,15 @@ import graft.dedup.{DedupConfig, DedupPipeline, FuzzyRetrieval}
 object MatchCli {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: MatchCli <corpus|index:DIR> <queries> <outDir|-> " +
-      "[threshold] [nmatch] [noPerfect] [broadcast|shuffle] " +
+      "[threshold] [nmatch] [noPerfect] [auto|broadcast|shuffle] " +
       "[match|subseq|index|append|compact|decon]")
     val Array(corpusArg, queriesArg, outDir) = args.take(3)
     val threshold = if (args.length > 3) args(3).toFloat else 0.8f
     val nmatch = if (args.length > 4) args(4).toInt else 5
     val noPerfect = args.length > 5 && args(5).toBoolean
-    val strategy = if (args.length > 6) args(6) else "broadcast"
+    val strategy = if (args.length > 6) args(6) else "auto"
+    require(Set("auto", "broadcast", "shuffle")(strategy),
+      s"unknown strategy '$strategy' (use auto|broadcast|shuffle)")
     val action = if (args.length > 7) args(7) else "match"
 
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
@@ -47,7 +53,7 @@ object MatchCli {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    val cfg = DedupConfig(threshold = threshold)
+    val cfg = DedupConfig(threshold = threshold, strategy = strategy)
 
     if (action == "index" || action == "append" || action == "compact") {
       require(outDir != "-", s"action=$action takes the index dir as <outDir>")
@@ -70,15 +76,8 @@ object MatchCli {
       val nTotal = trainCorpus.count()
       val evalSet = load(spark, queriesArg)
       val skipped = spark.sparkContext.longAccumulator("deconFuzzySkippedOverLength")
-      // broadcast: eval set inside the executor-memory envelope (the common
-      // case — benchmarks are small); shuffle: the beyond-broadcast path
-      val (clean, flagged) =
-        if (strategy == "shuffle")
-          FuzzyRetrieval.decontaminateShuffle(trainCorpus, evalSet, cfg,
-            alsoContained = true, fuzzySkippedOverLength = Some(skipped))
-        else
-          FuzzyRetrieval.decontaminate(trainCorpus, evalSet, cfg,
-            alsoContained = true, fuzzySkippedOverLength = Some(skipped))
+      val (clean, flagged) = FuzzyRetrieval.decontaminate(trainCorpus, evalSet, cfg,
+        alsoContained = true, fuzzySkippedOverLength = Some(skipped))
       val nFlagged = flagged.count()
       if (outDir == "-") {
         flagged.toDF().select("clip_id", "transcript")
@@ -101,18 +100,13 @@ object MatchCli {
     val queries = load(spark, queriesArg)
     val nQueries = queries.count()
 
-    val (results, rankCol) = (action, strategy) match {
-      case ("match", "shuffle") =>
-        (FuzzyRetrieval.topkShuffleIndexed(queries, corpusToks, cfg, nmatch, noPerfect).toDF(), "rank")
-      case ("match", "broadcast") =>
+    val (results, rankCol) = action match {
+      case "match" =>
         (FuzzyRetrieval.topkIndexed(queries, corpusToks, cfg, nmatch, noPerfect).toDF(), "rank")
-      case ("subseq", "broadcast") =>
+      case "subseq" =>
         (FuzzyRetrieval.subsequenceIndexed(queries, corpusToks, cfg, nmatch, noPerfect).toDF(), "s_id")
-      case ("subseq", "shuffle") =>
-        (FuzzyRetrieval.subsequenceShuffleIndexed(queries, corpusToks, cfg, nmatch, noPerfect).toDF(), "s_id")
-      case (a, s) =>
-        sys.error(s"unknown action/strategy '$a'/'$s' " +
-          "(use match|subseq|index|append|compact|decon, broadcast|shuffle)")
+      case a =>
+        sys.error(s"unknown action '$a' (use match|subseq|index|append|compact|decon)")
     }
 
     val persisted = results.persist()

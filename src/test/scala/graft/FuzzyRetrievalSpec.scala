@@ -49,6 +49,9 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
   private def cfg(fuzzy: Float) =
     DedupConfig(threshold = fuzzy, minSubseqLength = 2, minSubseqRatio = 0f, shingleK = 2)
 
+  /** `c` with the shuffle (beyond-memory) path forced. */
+  private def shuffled(c: DedupConfig) = c.copy(strategy = "shuffle")
+
   private def check(
       fuzzy: Float,
       noPerfect: Boolean,
@@ -188,7 +191,7 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
       (r.query_id, r.s_id, r.score, r.max_subseq, r.subseq_surface)
     val c = cfg(0.5f)
     val bc = FuzzyRetrieval.subsequence(queries, corpusDs, c, 5).collect().map(key).toSet
-    val sh = FuzzyRetrieval.subsequenceShuffle(queries, corpusDs, c, 5).collect().map(key).toSet
+    val sh = FuzzyRetrieval.subsequence(queries, corpusDs, shuffled(c), 5).collect().map(key).toSet
     assert(bc.nonEmpty, "vacuous: broadcast subsequence returned nothing")
     assert(sh == bc, s"missing=${(bc -- sh).take(5)} extra=${(sh -- bc).take(5)}")
     assert(sh.exists(r => r._1 == "qz" && r._5 == "aa bb cc dd"),
@@ -202,12 +205,34 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
     def key(r: graft.dedup.SubseqRow) =
       (r.query_id, r.s_id, r.score, r.max_subseq, r.subseq_surface)
     val bc = FuzzyRetrieval.subsequence(queries, corpus, c, 5).collect().map(key).toSet
-    val sh = FuzzyRetrieval.subsequenceShuffle(queries, corpus, c, 5).collect().map(key).toSet
+    val sh = FuzzyRetrieval.subsequence(queries, corpus, shuffled(c), 5).collect().map(key).toSet
     assert(bc.nonEmpty, "vacuous: broadcast subsequence returned nothing")
     assert(sh == bc, s"missing=${(bc -- sh).take(5)} extra=${(sh -- bc).take(5)}")
   }
 
   // ---- the beyond-memory (shuffle/LSH) path ----
+
+  test("auto past the envelope takes the shuffle path: each entry equals its forced-shuffle call") {
+    import spark.implicits._
+    val queries = (clips(tm1, i => "q" + (i + 1)) ++
+      clips(Seq("zz aa bb cc dd zz"), _ => "qz")).toDS()
+    val toks = graft.dedup.TokenizeStage(corpusDs, cfg(0.5f))
+    val evalSet = clips(Seq("aa bb cc dd", "aa bb 13 dd"), i => "ev" + i).toDS()
+    val entries: Seq[(String, DedupConfig => Set[Any])] = Seq(
+      ("topkIndexed", c => FuzzyRetrieval.topkIndexed(queries, toks, c, 0).collect().toSet),
+      ("subsequenceIndexed", c => FuzzyRetrieval.subsequenceIndexed(queries, toks, c, 5)
+        .collect().toSet),
+      ("decontaminate", c => FuzzyRetrieval.decontaminate(corpusDs, evalSet, c,
+        alsoContained = true)._2.collect().map(_.clip_id).toSet))
+    // 1 row is below every index side here: 8 corpus rows, 2 eval rows
+    val auto = cfg(0.5f).copy(broadcastMaxRows = 1)
+    for ((entry, run) <- entries) {
+      val got = run(auto)
+      val want = run(shuffled(auto))
+      assert(want.nonEmpty && got == want,
+        s"$entry: missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
+    }
+  }
 
   test("shuffle path equals broadcast path on the synthetic near-dup corpus (all matches)") {
     val corpus = graft.data.SynthCorpus.generate(spark, 400)
@@ -216,7 +241,7 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
     def key(r: graft.dedup.RetrievalRow) = (r.query_id, r.s_id, r.score, r.max_subseq)
     val bc = FuzzyRetrieval.topk(queries, corpus, c, numberOfMatches = 0)
       .collect().map(key).toSet
-    val sh = FuzzyRetrieval.topkShuffle(queries, corpus, c, numberOfMatches = 0)
+    val sh = FuzzyRetrieval.topk(queries, corpus, shuffled(c), numberOfMatches = 0)
       .collect().map(key).toSet
     assert(bc.nonEmpty, "vacuous: broadcast path returned nothing")
     assert(sh == bc, s"missing=${(bc -- sh).take(5)} extra=${(sh -- bc).take(5)}")
@@ -229,7 +254,7 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
     def key(r: graft.dedup.RetrievalRow) = (r.query_id, r.s_id)
     val truth = FuzzyRetrieval.topk(queries, corpus, c, numberOfMatches = 0)
       .collect().map(key).toSet
-    val got = FuzzyRetrieval.topkShuffle(queries, corpus, c, numberOfMatches = 0)
+    val got = FuzzyRetrieval.topk(queries, corpus, shuffled(c), numberOfMatches = 0)
       .collect().map(key).toSet
     assert(truth.size > 400, s"vacuous truth set: ${truth.size}") // at least the self matches
     // the broadcast index IS the full candidate generator, so the LSH path
@@ -243,7 +268,7 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
   test("shuffle path: tm1 NOLIMIT match set (set equality; ranks by score)") {
     import spark.implicits._
     val queries = clips(Seq("aa bb cc dd"), _ => "q").toDS()
-    val got = FuzzyRetrieval.topkShuffle(queries, corpusDs, cfg(0.5f), 0, noPerfect = true)
+    val got = FuzzyRetrieval.topk(queries, corpusDs, shuffled(cfg(0.5f)), 0, noPerfect = true)
       .collect().sortBy(_.rank)
     val want = Seq((0.99, "3"), (0.80, "6"), (0.80, "7"), (0.75, "4"), (0.75, "5"), (0.66, "2"))
     assert(got.map(_.s_id).toSet == want.map(_._2).toSet,
@@ -260,7 +285,7 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
     // "." tokenizes to a single token; its candidates must come from the
     // tiny-query broadcast channel (no shingles exist)
     val queries = clips(Seq("."), _ => "q").toDS()
-    val got = FuzzyRetrieval.topkShuffle(queries, corpusDs, cfg(0.9f), 0).collect()
+    val got = FuzzyRetrieval.topk(queries, corpusDs, shuffled(cfg(0.9f)), 0).collect()
     assert(got.exists(r => r.s_id == "8" && r.score == 1.0),
       s"tiny query missed its perfect corpus match: ${got.mkString(",")}")
   }
@@ -274,7 +299,7 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
       shingleK = 2)
     for ((name, path) <- Seq(
         "broadcast" -> FuzzyRetrieval.topk(queries, corpus, c, numberOfMatches = 10),
-        "shuffle" -> FuzzyRetrieval.topkShuffle(queries, corpus, c, numberOfMatches = 10))) {
+        "shuffle" -> FuzzyRetrieval.topk(queries, corpus, shuffled(c), numberOfMatches = 10))) {
       val got = path.collect().sortBy(_.rank)
       assert(got.map(_.s_id).toSeq == Seq("0", "1"), s"$name ids: ${got.map(_.s_id).mkString(",")}")
       assert(math.abs(got(0).score - 0.6706515) <= 1e-4, s"$name score0 ${got(0).score}")
@@ -286,7 +311,7 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("retr-ckpt").toString
     val queries = clips(Seq("aa bb cc dd"), _ => "q").toDS()
-    val run1 = FuzzyRetrieval.topkShuffle(queries, corpusDs, cfg(0.5f), 0,
+    val run1 = FuzzyRetrieval.topk(queries, corpusDs, shuffled(cfg(0.5f)), 0,
         noPerfect = true, checkpointDir = Some(dir))
       .collect().map(r => (r.query_id, r.rank, r.s_id, r.score)).toSet
     assert(run1.nonEmpty)
@@ -294,7 +319,7 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
     // dir: identical results prove the scored stage was restored, not
     // recomputed from the new input
     val otherCorpus = clips(Seq("zz yy xx"), _ => "other").toDS()
-    val run2 = FuzzyRetrieval.topkShuffle(queries, otherCorpus, cfg(0.5f), 0,
+    val run2 = FuzzyRetrieval.topk(queries, otherCorpus, shuffled(cfg(0.5f)), 0,
         noPerfect = true, checkpointDir = Some(dir))
       .collect().map(r => (r.query_id, r.rank, r.s_id, r.score)).toSet
     assert(run2 == run1, s"resume diverged: ${(run1 -- run2).take(3)} / ${(run2 -- run1).take(3)}")
@@ -306,7 +331,7 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
     val queries = clips(Seq("a b c d e f"), _ => "q").toDS()
     val c = DedupConfig(threshold = 0f, minSubseqLength = 0, minSubseqRatio = 0f,
       pt = PT.none, editCosts = EditCosts(1f, 1f, 1f))
-    val got = FuzzyRetrieval.topkShuffle(queries, corpus, c, numberOfMatches = 10,
+    val got = FuzzyRetrieval.topk(queries, corpus, shuffled(c), numberOfMatches = 10,
       contrastiveFactor = 1f, contrastReduce = Matcher.Mean)
       .collect().sortBy(_.rank)
     assert(got.map(_.s_id).toSeq == Seq("0", "2", "1"),
@@ -394,21 +419,23 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
     def ids(r: (org.apache.spark.sql.Dataset[Clip], org.apache.spark.sql.Dataset[Clip])) =
       (r._1.collect().map(_.clip_id).toSet, r._2.collect().map(_.clip_id).toSet)
     val bc = ids(FuzzyRetrieval.decontaminate(corpus, evalSet, dcfg, alsoContained = true))
-    val sh = ids(FuzzyRetrieval.decontaminateShuffle(corpus, evalSet, dcfg, alsoContained = true))
+    val sh = ids(FuzzyRetrieval.decontaminate(corpus, evalSet, shuffled(dcfg),
+      alsoContained = true))
     assert(bc._2 == Set("t1", "long1"), s"vacuous/bad broadcast fixture: $bc")
     assert(sh == bc, s"shuffle=$sh broadcast=$bc")
     // fuzzy-only mode agrees too
     val bc1 = ids(FuzzyRetrieval.decontaminate(corpus, evalSet, dcfg))
-    val sh1 = ids(FuzzyRetrieval.decontaminateShuffle(corpus, evalSet, dcfg))
+    val sh1 = ids(FuzzyRetrieval.decontaminate(corpus, evalSet, shuffled(dcfg)))
     assert(sh1 == bc1 && bc1._2 == Set("t1"))
-    // the broadcast path REFUSES an eval set past the envelope; the shuffle
+    // a forced broadcast REFUSES an eval set past the envelope; the shuffle
     // path is the documented remedy and produces the identical partition
     val tiny = dcfg.copy(broadcastMaxRows = 1)
     val e = intercept[IllegalArgumentException] {
-      FuzzyRetrieval.decontaminate(corpus, evalSet, tiny, alsoContained = true)
+      FuzzyRetrieval.decontaminate(corpus, evalSet, tiny.copy(strategy = "broadcast"),
+        alsoContained = true)
     }
-    assert(e.getMessage.contains("decontaminateShuffle"), e.getMessage)
-    assert(ids(FuzzyRetrieval.decontaminateShuffle(corpus, evalSet, tiny,
+    assert(e.getMessage.contains("strategy = \"shuffle\""), e.getMessage)
+    assert(ids(FuzzyRetrieval.decontaminate(corpus, evalSet, shuffled(tiny),
       alsoContained = true)) == bc)
   }
 
@@ -426,7 +453,7 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
       clip("neg1", filler.take(18).mkString(" "))).toDS()
     val tight = DedupConfig(threshold = 0.8f, maxTokensInPattern = 20)
     val skipped = spark.sparkContext.longAccumulator
-    val (_, flagged) = FuzzyRetrieval.decontaminateShuffle(corpus, evalSet, tight,
+    val (_, flagged) = FuzzyRetrieval.decontaminate(corpus, evalSet, shuffled(tight),
       alsoContained = true, fuzzySkippedOverLength = Some(skipped))
     assert(flagged.collect().map(_.clip_id).toSet == Set("big1"))
     assert(skipped.value == 1L, s"over-length fuzzy skips not counted: ${skipped.value}")
@@ -448,7 +475,7 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("unprotect"), e.getMessage)
     val e2 = intercept[IllegalArgumentException] {
-      FuzzyRetrieval.decontaminateShuffle(corpus, Seq(longEval).toDS(), tight)
+      FuzzyRetrieval.decontaminate(corpus, Seq(longEval).toDS(), shuffled(tight))
     }
     assert(e2.getMessage.contains("unprotect"), e2.getMessage)
   }
@@ -467,7 +494,7 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
     val queries = clips(Seq("a b c d e f"), _ => "q").toDS()
     val c = DedupConfig(threshold = 0f, minSubseqLength = 0, minSubseqRatio = 0f,
       pt = PT.none, editCosts = EditCosts(1f, 1f, 1f))
-    FuzzyRetrieval.topkShuffle(queries, corpus, c, numberOfMatches = 10,
+    FuzzyRetrieval.topk(queries, corpus, shuffled(c), numberOfMatches = 10,
       contrastiveFactor = 1f, contrastReduce = Matcher.Mean).collect()
     assert(rowsTokenized.value == corpusRaw.length,
       s"corpus tokenized ${rowsTokenized.value}/${corpusRaw.length} row-passes — " +

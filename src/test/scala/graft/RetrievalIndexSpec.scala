@@ -27,6 +27,7 @@ class RetrievalIndexSpec extends AnyFunSuite {
 
   private def cfg = DedupConfig(threshold = 0.5f, minSubseqLength = 2,
     minSubseqRatio = 0f, shingleK = 2)
+  private def shuffleCfg = cfg.copy(strategy = "shuffle")
 
   private def rows(ds: org.apache.spark.sql.Dataset[graft.dedup.RetrievalRow]) =
     ds.collect().map(r => (r.query_id, r.rank, r.s_id, r.score, r.max_subseq)).toSet
@@ -53,7 +54,7 @@ class RetrievalIndexSpec extends AnyFunSuite {
 
     // direct-path results, materialized BEFORE the corpus is deleted
     val direct = rows(FuzzyRetrieval.topk(queries, corpus, cfg, 5))
-    val directShuffle = rows(FuzzyRetrieval.topkShuffle(queries, corpus, cfg, 5))
+    val directShuffle = rows(FuzzyRetrieval.topk(queries, corpus, shuffleCfg, 5))
     assert(direct.nonEmpty, "direct path empty — vacuous round-trip")
 
     FuzzyRetrieval.saveIndex(corpus, cfg, idxDir)
@@ -70,7 +71,7 @@ class RetrievalIndexSpec extends AnyFunSuite {
     val loaded = FuzzyRetrieval.loadIndex(spark, idxDir, cfg)
     assert(rows(FuzzyRetrieval.topkIndexed(queries, loaded, cfg, 5)) == direct,
       "broadcast path diverged from the prebuilt index")
-    assert(rows(FuzzyRetrieval.topkShuffleIndexed(queries, loaded, cfg, 5)) == directShuffle,
+    assert(rows(FuzzyRetrieval.topkIndexed(queries, loaded, shuffleCfg, 5)) == directShuffle,
       "shuffle path diverged from the prebuilt index")
     // subsequence retrieval serves from the index too — pinned against the
     // direct path, not just non-emptiness
@@ -248,7 +249,7 @@ class RetrievalIndexSpec extends AnyFunSuite {
     assert(FuzzyRetrieval.topkIndexed(queries, idx, cfg, 5).collect().nonEmpty)
     assert(idx.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
       "broadcast-path match job evicted the caller's index cache")
-    assert(FuzzyRetrieval.topkShuffleIndexed(queries, idx, cfg, 5).collect().nonEmpty)
+    assert(FuzzyRetrieval.topkIndexed(queries, idx, shuffleCfg, 5).collect().nonEmpty)
     assert(idx.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
       "shuffle-path match job evicted the caller's index cache")
     idx.unpersist()
@@ -324,11 +325,21 @@ class RetrievalIndexSpec extends AnyFunSuite {
     val n = idx.count()
     val queries = Seq(Clip("q", Array.emptyByteArray, 16000, 0, "pcm_s16le", "aa bb cc dd")).toDS()
     assert(rows(FuzzyRetrieval.topkIndexed(queries, idx, cfg, 5)).nonEmpty)
+    val tight = cfg.copy(broadcastMaxRows = n - 1)
     val (e, jobs) = JobLog.of(spark)(intercept[IllegalArgumentException] {
-      FuzzyRetrieval.topkIndexed(queries, idx, cfg.copy(broadcastMaxRows = n - 1), 5)
+      FuzzyRetrieval.topkIndexed(queries, idx, tight.copy(strategy = "broadcast"), 5)
     })
-    assert(e.getMessage.contains("use FuzzyRetrieval.topkShuffle"), e.getMessage)
+    assert(e.getMessage.contains("use strategy = \"shuffle\""), e.getMessage)
     assert(jobs.isEmpty, s"the guard on a memo hit started ${jobs.size} jobs — not a memo hit")
+    // auto decides from the memo too: past the envelope it runs the shuffle
+    // path with no extra job
+    val (autoRows, autoJobs) =
+      JobLog.of(spark)(rows(FuzzyRetrieval.topkIndexed(queries, idx, tight, 5)))
+    val (shuffleRows, shuffleJobs) = JobLog.of(spark)(
+      rows(FuzzyRetrieval.topkIndexed(queries, idx, tight.copy(strategy = "shuffle"), 5)))
+    assert(autoRows.nonEmpty && autoRows == shuffleRows)
+    assert(autoJobs.size == shuffleJobs.size,
+      s"auto past the envelope started ${autoJobs.size} jobs, forced shuffle ${shuffleJobs.size}")
     idx.unpersist()
   }
 

@@ -296,8 +296,10 @@ class StreamingDedupSpec extends AnyFunSuite {
       (words.drop(i) :+ s"e$i").mkString(" "))).toDS()
     val probe = corpus.limit(1)
     val sites: Seq[(String, DedupConfig => Any, String)] = Seq(
-      ("edgesAgainstCorpus",
-        c => StreamingDedup.edgesAgainstCorpus(probe, corpus, c), "use FuzzyRetrieval.topkShuffle"),
+      ("edgesAgainstCorpus", c => StreamingDedup.edgesAgainstCorpus(probe, corpus, c),
+        "use FuzzyRetrieval.topk with strategy = \"shuffle\""),
+      ("retrievalAgainstCorpus", c => StreamingDedup.retrievalAgainstCorpus(probe, corpus, c),
+        "use strategy = \"shuffle\""),
       ("audioEdgesAgainstCorpus",
         c => StreamingDedup.audioEdgesAgainstCorpus(probe, corpus, c), "use the batch AudioDedup.pairs"),
       ("audioContainmentAgainstCorpus",
