@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 import graft.kernel.{EditCosts, Hashing, SuffixIndex}
+import graft.obs.JobLedger
 
 /** Candidate pair, oriented: `p` is the pattern side — the member with fewer
   * tokens (tie: lexicographically smaller clip_id). With the default
@@ -221,11 +222,11 @@ object CandidateStage {
 
     val parted = entries.repartition(col("sh"))
     if (hotArr.length <= broadcastBound) {
-      cappedBuckets.add(hotArr.length)
+      JobLedger.add(cappedBuckets, hotArr.length)
       cappedPairsLost.foreach { acc =>
         var pairs = 0L
         hotArr.foreach { r => val df = r.getLong(1); pairs += df * (df - 1) / 2 }
-        acc.add(pairs)
+        JobLedger.add(acc, pairs)
       }
       if (hotArr.isEmpty) parted
       else {
@@ -239,8 +240,8 @@ object CandidateStage {
         .filter($"df" > effCap)
         .agg(count(lit(1)).as("buckets"),
           coalesce(sum(expr("df * (df - 1) DIV 2")), lit(0L)).as("pairs")).head()
-      cappedBuckets.add(stats.getLong(0))
-      cappedPairsLost.foreach(_.add(stats.getLong(1)))
+      JobLedger.add(cappedBuckets, stats.getLong(0))
+      cappedPairsLost.foreach(JobLedger.add(_, stats.getLong(1)))
       val hot0 = parted.groupBy("sh").agg(count(lit(1)).as("df"))
         .filter($"df" > effCap).select("sh")
       parted.join(hot0, Seq("sh"), "left_anti")
@@ -277,11 +278,11 @@ object CandidateStage {
     val byTag = hotArr.groupBy(_.getInt(0))
     specs.zipWithIndex.map { case ((_, _, cappedBuckets, cappedPairsLost), i) =>
       val rows = byTag.getOrElse(i, Array.empty)
-      cappedBuckets.add(rows.length)
+      JobLedger.add(cappedBuckets, rows.length)
       cappedPairsLost.foreach { acc =>
         var pairs = 0L
         rows.foreach { r => val df = r.getLong(2); pairs += df * (df - 1) / 2 }
-        acc.add(pairs)
+        JobLedger.add(acc, pairs)
       }
       Some(rows.map(_.getLong(1)))
     }

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.data.{Clip, TableIO}
+import graft.obs.JobLedger.withStage
 
 /** Per-stage metric row (the reference's NMATCH/STEP counters recast as a
   * table, /root/reference/cli/src/FuzzyMatch-cli.cc:21-27,452-458). */
@@ -101,18 +102,12 @@ object DedupPipeline {
     val fresh = priorDirs.isEmpty
     val metrics = scala.collection.mutable.ListBuffer.empty[MetricRow]
 
-    // every Spark job carries `dedup:<stage>` or `inc:<stage>` in
-    // spark.job.description; the CALLER's description is restored, not null
-    // (under foreachBatch the streaming batch attribution must survive)
-    def phased[A](name: String)(body: => A): A = {
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"${if (fresh) "dedup" else "inc"}:$name")
-      try body finally sc.setJobDescription(prev)
-    }
+    // every Spark job carries a `dedup:<stage>` or `inc:<stage>` label
+    val tag = if (fresh) "dedup" else "inc"
     def timed(stage: String, rowsIn: => Long, extra: => Map[String, String] = Map.empty)(
         body: => Long): Long = {
       val name = if (fresh) stage else s"inc_$stage"
-      phased(name) {
+      withStage(sc, s"$tag:$name") {
         val t0 = System.nanoTime()
         val rowsOut = body
         metrics += MetricRow(name, -1, rowsIn, rowsOut, (System.nanoTime() - t0) / 1000000L, extra)
@@ -151,9 +146,9 @@ object DedupPipeline {
     // prior-state reads start jobs (parquet schema inference) and validate
     // the chain eagerly: a chain without an audio channel on fails here
     val prior = if (fresh) None
-      else Some(phased("prior_state")(IncrementalDedup.priorState(spark, priorDirs, cfg)))
+      else Some(withStage(sc, "inc:prior_state")(IncrementalDedup.priorState(spark, priorDirs, cfg)))
     val ids = clips.select($"clip_id")
-    val nClips = phased("precheck")(
+    val nClips = withStage(sc, s"$tag:precheck")(
       prior.fold(clips.count())(p => IncrementalDedup.precheck(ids, p.clusters)))
 
     // ---- tokenize (narrow) + size, one job ----
@@ -261,7 +256,10 @@ object DedupPipeline {
         }
       case None if BroadcastCorpus.picksBroadcast(cfg)((nToks, tokBytes)) =>
         // the reference's shared read-only index: candidate recall exact by
-        // construction, no LSH stage
+        // construction, no LSH stage. A forced broadcast honours the envelope
+        // too, checked on the tokenize job's stats before anything is collected
+        BroadcastCorpus.requireFits(nToks, tokBytes, cfg, "corpus",
+          "strategy = \"shuffle\" (the beyond-memory path)")
         verify(nToks, Map("strategy" -> "broadcast"))(BroadcastVerifyStage(toks, cfg))
       case None =>
         // beyond-memory path. A resumed run whose candidates are restored
@@ -297,7 +295,7 @@ object DedupPipeline {
       case Some(p) =>
         val endpoints =
           allEdges.select($"a".as("clip_id")).union(allEdges.select($"b".as("clip_id"))).distinct()
-        val touched = phased("touched_labels")(
+        val touched = withStage(sc, s"$tag:touched_labels")(
           p.clusters.join(endpoints, Seq("clip_id"), "left_semi").localCheckpoint(false))
         val contracted = allEdges.toDF()
           .join(touched.toDF("a", "a_label"), Seq("a"), "left")
@@ -322,7 +320,7 @@ object DedupPipeline {
     val (clusters, mergedLabels) = prior match {
       case None => (cc, Seq.empty[(String, String)].toDF("old_label", "new_label"))
       case Some(p) =>
-        val merged = phased("merged_labels")(cc.toDF()
+        val merged = withStage(sc, s"$tag:merged_labels")(cc.toDF()
           .join(touchedLabels.toDF("clip_id"), Seq("clip_id"), "left_semi")
           .filter($"cluster_id" =!= $"clip_id")
           .select($"clip_id".as("old_label"), $"cluster_id".as("new_label"))
@@ -337,7 +335,7 @@ object DedupPipeline {
     // ---- commit (clusters LAST) ----
     // an increment's tables are written coalesced to the batch's partition
     // count (the new↔old probes otherwise write one file per old partition)
-    dir.foreach(d => phased("commit") {
+    dir.foreach(d => withStage(sc, s"$tag:commit") {
       pending.foreach { case (name, ds) => TableIO.write(ds.coalesce(parts).toDF(), s"$d/$name") }
       metrics ++= Metrics.perPartition("tokens", toks)
       metrics ++= Metrics.perPartition("edges", allEdges)

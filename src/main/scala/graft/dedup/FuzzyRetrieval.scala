@@ -5,6 +5,7 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
 import graft.data.Clip
 import graft.kernel.{Doc, Hashing, Matcher}
+import graft.obs.JobLedger.withStage
 import graft.text.Tokenizer
 
 /** One top-k retrieval result row — the reference `Match` as a table
@@ -51,6 +52,9 @@ final case class SubseqRow(
   *    shingle candidate channels + the cogroup verify kernel, never holding
   *    the corpus in one place. Rank ties break by s_id there vs corpus
   *    insertion order in the broadcast path.
+  *
+  * The jobs an entry or index operation starts itself carry `retrieval:<op>`
+  * labels; a caller's action on a returned lazy Dataset keeps its own.
   */
 object FuzzyRetrieval {
 
@@ -131,8 +135,9 @@ object FuzzyRetrieval {
       contrastReduce: Matcher.ContrastReduce = Matcher.Mean,
       contrastBuffer: Int = -1,
       checkpointDir: Option[String] = None): Dataset[RetrievalRow] =
-    onPath(corpusToks, cfg)(shuffleTopk(queries, _, _, cfg, numberOfMatches, noPerfect,
-        contrastiveFactor, contrastReduce, contrastBuffer, checkpointDir)) { bc =>
+    withStage(queries.sparkSession.sparkContext, "retrieval:topk")(onPath(corpusToks, cfg)(
+        shuffleTopk(queries, _, _, cfg, numberOfMatches, noPerfect,
+          contrastiveFactor, contrastReduce, contrastBuffer, checkpointDir)) { bc =>
       val spark = queries.sparkSession
       import spark.implicits._
       val params = cfg.matchParams(numberOfMatches, noPerfect).copy(
@@ -162,7 +167,7 @@ object FuzzyRetrieval {
           }
         }
       }
-    }
+    })
 
   /** [[topkIndexed]]'s shuffle path over the corpus token rows `cToks`;
     * `releaseCToks` drops them once nothing reads them. */
@@ -347,7 +352,7 @@ object FuzzyRetrieval {
       numberOfMatches: Int = 5,
       noPerfect: Boolean = false,
       idfWeighting: Boolean = false): Dataset[SubseqRow] =
-    onPath(corpusToks, cfg)(
+    withStage(queries.sparkSession.sparkContext, "retrieval:subsequence")(onPath(corpusToks, cfg)(
         shuffleSubsequence(queries, _, _, cfg, numberOfMatches, noPerfect, idfWeighting)) { bc =>
       val spark = queries.sparkSession
       import spark.implicits._
@@ -372,7 +377,7 @@ object FuzzyRetrieval {
           }
         }
       }
-    }
+    })
 
   /** Hot-gram cap of the subsequence shuffle path's containment channel. */
   private val subseqGramDfCap = 1024
@@ -514,12 +519,13 @@ object FuzzyRetrieval {
       cfg: DedupConfig,
       alsoContained: Boolean,
       fuzzySkippedOverLength: Option[org.apache.spark.util.LongAccumulator])
-      : Iterator[Clip] => Iterator[(Clip, Boolean)] = {
-    val (evalToks, n, bytes) = evalRows(evalSet, cfg)
-    try flagger(evalToks, n, bytes, cfg, alsoContained, fuzzySkippedOverLength,
-      "the batch FuzzyRetrieval.decontaminate with strategy = \"shuffle\"")._1
-    finally evalToks.unpersist()
-  }
+      : Iterator[Clip] => Iterator[(Clip, Boolean)] =
+    withStage(evalSet.sparkSession.sparkContext, "retrieval:decontaminate") {
+      val (evalToks, n, bytes) = evalRows(evalSet, cfg)
+      try flagger(evalToks, n, bytes, cfg, alsoContained, fuzzySkippedOverLength,
+        "the batch FuzzyRetrieval.decontaminate with strategy = \"shuffle\"")._1
+      finally evalToks.unpersist()
+    }
 
   /** Hot 2-gram cap of the decontamination shuffle path's containment probe:
     * a dropped bucket can hide a contaminated host, so it sits high and its
@@ -575,7 +581,8 @@ object FuzzyRetrieval {
       cfg: DedupConfig,
       alsoContained: Boolean = false,
       fuzzySkippedOverLength: Option[org.apache.spark.util.LongAccumulator] = None)
-      : (Dataset[Clip], Dataset[Clip]) = {
+      : (Dataset[Clip], Dataset[Clip]) =
+      withStage(corpus.sparkSession.sparkContext, "retrieval:decontaminate") {
     val spark = corpus.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.{broadcast, col, lit}
@@ -753,7 +760,8 @@ object FuzzyRetrieval {
     val p = metaPathOf(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq(p, p.suffix(".tmp")).foreach(f => if (fs.exists(f)) fs.delete(f, false))
-    graft.data.TableIO.write(TokenizeStage(corpus, cfg).toDF(), s"$dir/${segmentName(0)}")
+    withStage(spark.sparkContext, "retrieval:save_index")(
+      graft.data.TableIO.write(TokenizeStage(corpus, cfg).toDF(), s"$dir/${segmentName(0)}"))
     writeIndexMeta(spark, dir, cfg, names = Seq(segmentName(0)), next = 1)
   }
 
@@ -800,7 +808,7 @@ object FuzzyRetrieval {
     * automatically past its threshold). */
   def appendIndex(newClips: Dataset[Clip], cfg: DedupConfig, dir: String): Unit = {
     val spark = newClips.sparkSession
-    withIndexWriteLock(spark, dir) {
+    withStage(spark.sparkContext, "retrieval:append_index")(withIndexWriteLock(spark, dir) {
       val m = readIndexMeta(spark, dir)
       requireConfigMatch(m, cfg, dir, "append")
       require(m.names.forall(n => graft.data.TableIO.exists(spark, s"$dir/$n")),
@@ -809,7 +817,7 @@ object FuzzyRetrieval {
       val name = segmentName(m.next)
       graft.data.TableIO.write(TokenizeStage(newClips, cfg).toDF(), s"$dir/$name")
       writeIndexMeta(spark, dir, cfg, names = m.names :+ name, next = m.next + 1)
-    }
+    })
   }
 
   /** Merge all committed segments into ONE — the remedy for unbounded
@@ -830,8 +838,8 @@ object FuzzyRetrieval {
     * its segments intact for at least the grace window, or the new one.
     * Returns true when a merge happened. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, cfg: DedupConfig,
-      dir: String, graceMs: Long = defaultRetireGraceMs): Boolean = {
-    withIndexWriteLock(spark, dir) {
+      dir: String, graceMs: Long = defaultRetireGraceMs): Boolean =
+    withStage(spark.sparkContext, "retrieval:compact_index")(withIndexWriteLock(spark, dir) {
       val m = readIndexMeta(spark, dir)
       requireConfigMatch(m, cfg, dir, "compact")
       val fs = metaPathOf(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -860,8 +868,7 @@ object FuzzyRetrieval {
         sweep(keep = Set(merged) ++ kept.map(_._1) ++ m.names)
         true
       }
-    }
-  }
+    })
 
   /** Load a prebuilt retrieval index, failing loudly when `dir` holds no
     * index, an UNCOMMITTED index (killed mid-write), or one indexed under a
@@ -870,7 +877,7 @@ object FuzzyRetrieval {
     * README.md:18). Reads exactly the segments the meta commits — orphan
     * segment dirs from a killed append are ignored. */
   def loadIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      cfg: DedupConfig): Dataset[TokRow] = {
+      cfg: DedupConfig): Dataset[TokRow] = withStage(spark.sparkContext, "retrieval:load_index") {
     import spark.implicits._
     val m = readIndexMeta(spark, dir)
     requireConfigMatch(m, cfg, dir, "match")

@@ -245,7 +245,7 @@ object IncrementalDedup {
     * compaction leaves an ignorable orphan dir, and the caller swaps the
     * chain pointer only after this returns. */
   def compact(spark: SparkSession, priorDirs: Seq[String], cfg: DedupConfig,
-      outDir: String): Unit = {
+      outDir: String): Unit = graft.obs.JobLedger.withStage(spark.sparkContext, "inc:compact") {
     require(priorDirs.nonEmpty, "nothing to compact")
     val clusters = readIf(spark, priorDirs.last, "clusters").getOrElse(
       sys.error(s"no committed clusters table under ${priorDirs.last} — chain incomplete"))

@@ -1,15 +1,15 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import graft.dedup.DedupPipeline
+import graft.obs.JobLedger
 
 /** Round-6 measurement harness (guide §1: measure first; §1.4 noop sink;
   * §1.5 labeled jobs). SEPARATE from the frozen graft.Bench: times each
   * named SparkEntry query through the noop sink (computes every column,
   * no optimizer pruning), dumps `.explain("formatted")` to plans/r06/ and
   * prints per-query wall + summed executor task time + job/stage counts so
-  * fixed scheduling floors are distinguishable from real compute.
+  * fixed scheduling floors are distinguishable from real compute, then the
+  * best rep's per-label ledger rows (`LEDGER <query> label=…`).
   *
   * Usage: runMain graft.tools.BenchExtra <tag> [query ...]
   *   tag   — suffix for the plan dump files (e.g. "before", "after")
@@ -32,43 +32,8 @@ object BenchExtra {
         "q_minhash_sigs", "q_simhash_pairs", "q_ann_lsh", "q_fuzzy_topk",
         "q_audio_dup_pairs", "q_audio_contained")
 
-    val spark = DedupPipeline.sessionDefaults(
-      SparkSession.builder().master(s"local[$cpus]").appName("bench-extra"), cpus)
-      .getOrCreate()
+    val spark = DedupPipeline.sessionBuilder("bench-extra", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // per-query counters via listener: jobs, stages, summed task run time
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val stages = new java.util.concurrent.atomic.AtomicLong
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    val stageDetail = sys.env.get("SPARK_GRAFT_STAGE_DETAIL").contains("1")
-    val perStage = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Int)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        if (stageDetail) {
-          val m = perStage.getOrDefault(s.stageInfo.stageId, (0L, 0L, 0))
-          if (m._1 > 200)
-            println(f"  STAGE id=${s.stageInfo.stageId} tasks=${m._3} " +
-              f"sum_s=${m._1 / 1000.0}%.2f max_s=${m._2 / 1000.0}%.2f " +
-              f"name='${s.stageInfo.name.take(70)}'")
-        }
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) {
-          taskMs.addAndGet(t.taskMetrics.executorRunTime)
-          gcMs.addAndGet(t.taskMetrics.jvmGCTime)
-          if (stageDetail)
-            perStage.merge(t.stageId,
-              (t.taskMetrics.executorRunTime, t.taskMetrics.executorRunTime, 1),
-              (a, b) => (a._1 + b._1, math.max(a._2, b._2), a._3 + b._3))
-          if (t.taskMetrics.shuffleWriteMetrics != null)
-            shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        }
-    })
 
     spark.range(1000).selectExpr("sum(id)").collect() // warm session
 
@@ -84,24 +49,19 @@ object BenchExtra {
         }
         java.nio.file.Files.write(planDir.resolve(s"${name}_$tag.txt"), out.toByteArray)
       }
-      var best = Double.MaxValue
-      var bestTask = 0L; var bestJobs = 0L; var bestStages = 0L; var bestShuf = 0L
-      var bestGc = 0L
-      for (_ <- 1 to reps) {
-        jobs.set(0); stages.set(0); taskMs.set(0); shuffleBytes.set(0); gcMs.set(0)
-        spark.sparkContext.setJobDescription(s"bench-extra:$name")
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.setJobDescription(null)
-        if (sec < best) {
-          best = sec; bestTask = taskMs.get(); bestJobs = jobs.get()
-          bestStages = stages.get(); bestShuf = shuffleBytes.get(); bestGc = gcMs.get()
-        }
-      }
-      println(f"EXTRA $name%-22s wall=$best%7.3f task_s=${bestTask / 1000.0}%8.2f " +
-        f"gc_s=${bestGc / 1000.0}%6.2f jobs=$bestJobs%3d stages=$bestStages%3d " +
-        f"shuffle_mb=${bestShuf / 1e6}%8.2f")
+      // min-of-reps wall; its ledger gives the work columns and per-label rows
+      val (best, ledger) = (1 to reps).map { _ =>
+        JobLedger.of(spark)(JobLedger.withStage(spark.sparkContext, s"bench-extra:$name") {
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        })
+      }.minBy(_._1)
+      val t = ledger.total
+      println(f"EXTRA $name%-22s wall=$best%7.3f task_s=${t.taskS}%8.2f " +
+        f"gc_s=${t.gcS}%6.2f jobs=${t.jobs}%3d stages=${t.stages}%3d " +
+        f"shuffle_mb=${t.shuffleWriteBytes / 1e6}%8.2f")
+      ledger.rows.foreach(r => println(s"  LEDGER $name $r"))
     }
     spark.stop()
   }

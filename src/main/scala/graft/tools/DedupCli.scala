@@ -21,6 +21,11 @@ import graft.dedup._
   * SPARK_GRAFT_CPUS (default 4).
   */
 object DedupCli {
+  private val usage =
+    "usage: DedupCli <synth:N|parquet> <outDir|-> [threshold] [minhash:0|1] [audio:0|1] [contain:0|1]\n" +
+      "   or: DedupCli inc <synth:N[:firstId]|parquet> <outDir|-> <priorDirsCsv> " +
+      "[threshold] [minhash:0|1] [audio:0|1] [contain:0|1]"
+
   private def readClips(spark: SparkSession, arg: String, cpus: Int) =
     if (arg.startsWith("synth:")) {
       val parts = arg.stripPrefix("synth:").split(':')
@@ -28,29 +33,27 @@ object DedupCli {
         firstId = if (parts.length > 1) parts(1).toLong else 0L)
     } else graft.data.TableIO.readClips(spark, arg) // Iceberg ident or parquet path
 
+  /** The config from the trailing `[threshold] [minhash:0|1] [audio:0|1] [contain:0|1]`. */
+  private def config(opts: Array[String], cpus: Int) = DedupConfig(
+    threshold = opts.headOption.fold(0.8f)(_.toFloat),
+    useMinhashChannel = opts.lift(1).contains("minhash:1"),
+    useAudioChannel = opts.lift(2).contains("audio:1"),
+    useAudioContainment = opts.lift(3).contains("contain:1"),
+    shufflePartitions = cpus)
+
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     if (args.headOption.contains("inc")) { incremental(args.drop(1), cpus); return }
-    require(args.length >= 2,
-      "usage: DedupCli <synth:N|parquet> <outDir|-> [threshold] [minhash:0|1] [audio:0|1] [contain:0|1]\n" +
-      "   or: DedupCli inc <synth:N[:firstId]|parquet> <outDir|-> <priorDirsCsv> " +
-      "[threshold] [minhash:0|1] [audio:0|1] [contain:0|1]")
+    require(args.length >= 2, usage)
     val spark = DedupPipeline.sessionBuilder("graft-dedup", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     val clips = readClips(spark, args(0), cpus)
-
-    val cfg = DedupConfig(
-      threshold = if (args.length > 2) args(2).toFloat else 0.8f,
-      useMinhashChannel = args.length > 3 && args(3) == "minhash:1",
-      useAudioChannel = args.length > 4 && args(4) == "audio:1",
-      useAudioContainment = args.length > 5 && args(5) == "contain:1",
-      shufflePartitions = cpus)
+    val cfg = config(args.drop(2), cpus)
 
     val t0 = System.nanoTime()
-    val out = DedupPipeline.run(clips, cfg,
-      if (args(1) == "-") None else Some(args(1)))
+    val out = DedupPipeline.run(clips, cfg, Option(args(1)).filter(_ != "-"))
     val nClusters = out.clusters.select("cluster_id").distinct().count()
     val nRows = out.clusters.count()
     val nEdges = out.edges.count()
@@ -66,23 +69,15 @@ object DedupCli {
   }
 
   private def incremental(args: Array[String], cpus: Int): Unit = {
-    require(args.length >= 3,
-      "usage: DedupCli inc <synth:N[:firstId]|parquet> <outDir|-> <priorDirsCsv> " +
-        "[threshold] [minhash:0|1] [audio:0|1] [contain:0|1]")
+    require(args.length >= 3, usage)
     val spark = DedupPipeline.sessionBuilder("graft-dedup-inc", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val clips = readClips(spark, args(0), cpus)
     val priorDirs = args(2).split(',').toSeq
-    val cfg = DedupConfig(
-      threshold = if (args.length > 3) args(3).toFloat else 0.8f,
-      useMinhashChannel = args.length > 4 && args(4) == "minhash:1",
-      useAudioChannel = args.length > 5 && args(5) == "audio:1",
-      useAudioContainment = args.length > 6 && args(6) == "contain:1",
-      shufflePartitions = cpus)
+    val cfg = config(args.drop(3), cpus)
 
     val t0 = System.nanoTime()
-    val res = IncrementalDedup.run(clips, priorDirs, cfg,
-      if (args(1) == "-") None else Some(args(1)))
+    val res = IncrementalDedup.run(clips, priorDirs, cfg, Option(args(1)).filter(_ != "-"))
     val nNew = clips.count()
     val nRows = res.clusters.count()
     val nClusters = res.clusters.select("cluster_id").distinct().count()

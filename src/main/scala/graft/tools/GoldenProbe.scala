@@ -2,7 +2,9 @@ package graft.tools
 
 import graft.dedup.DedupPipeline
 
-/** Scratch: print the dedup-projection goldens for the driver oracle. */
+/** The dedup-projection goldens for the driver oracle (cluster sizes,
+  * survivor stats), and the audio pair queries checked against their
+  * oracle semantics re-run in Spark SQL (`AUDIO_PAIRS` / `AUDIO_CONTAINED`). */
 object GoldenProbe {
   def main(args: Array[String]): Unit = {
     val spark = DedupPipeline.sessionBuilder("graft-golden",

@@ -2,11 +2,13 @@ package graft.tools
 
 import graft.data.SynthCorpus
 import graft.dedup.{DedupConfig, DedupPipeline, IncrementalDedup}
+import graft.obs.JobLedger
 
 /** Steady-state ingest-chain benchmark: bootstrap committed state, then fold
   * `nBatches` successive batches through [[IncrementalDedup.ingestStep]] —
-  * the periodic-drop production loop — printing per-batch wall, chain length
-  * and the compaction trigger. The claim under test is the O(new) ingest
+  * the periodic-drop production loop — printing per-batch wall, chain length,
+  * the compaction trigger and the batch's per-label ledger rows
+  * (`INGEST_LEDGER batch=<i> label=inc:<stage> jobs=… task_s=…`). The claim under test is the O(new) ingest
   * story END TO END: per-batch wall must stay flat as the chain (and the
   * accumulated corpus) grows, and auto-compaction must bound chain length
   * without a visible wall cliff on the following batch.
@@ -36,12 +38,15 @@ object IngestBench {
     for (i <- 1 to nBatches) {
       val batch = SynthCorpus.generate(spark, nBatch, partitions = cpus * 2,
         firstId = nBase + (i - 1) * nBatch)
-      t0 = System.nanoTime()
-      IncrementalDedup.ingestStep(batch, i.toLong, cfg, state, compactAfter)
-      val wall = (System.nanoTime() - t0) / 1e9
+      val (wall, ledger) = JobLedger.of(spark) {
+        val t0 = System.nanoTime()
+        IncrementalDedup.ingestStep(batch, i.toLong, cfg, state, compactAfter)
+        (System.nanoTime() - t0) / 1e9
+      }
       val (chain, _) = IncrementalDedup.readChain(spark, state).get
       println(f"INGEST batch=$i kind=${if (chain.size == 1) "inc+compact" else "inc"} " +
         f"rows=$nBatch wall=$wall%.1fs chain=${chain.size} rate=${nBatch / wall}%.0f clips/s")
+      ledger.rows.foreach(r => println(s"INGEST_LEDGER batch=$i $r"))
     }
 
     val total = nBase + nBatches * nBatch

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.data.SynthCorpus
 import graft.dedup._
 import graft.kernel.Matcher
@@ -12,9 +11,7 @@ import graft.oracle.FuzzyMatcher
 object ProfileRecall {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 2400
-    val spark = DedupPipeline.sessionDefaults(
-      SparkSession.builder().master("local[8]").appName("graft-recall"), 8)
-      .getOrCreate()
+    val spark = DedupPipeline.sessionBuilder("graft-recall", 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val base = DedupConfig(threshold = 0.8f, strategy = "shuffle",

@@ -1,21 +1,21 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.data.SynthCorpus
 import graft.dedup.{DedupConfig, DedupPipeline}
+import graft.obs.JobLedger
 
 /** Two-cluster-size scaling evidence (sandbox proxy for the N vs 4N executor
   * criterion): run the IDENTICAL dedup job on the IDENTICAL input at two
   * local parallelism levels and report throughput at both. Invoke once per
   * level: `SPARK_GRAFT_CPUS=8|32 runMain graft.tools.ScalingBench [nClips]`.
-  * Efficiency = (throughput_32 / throughput_8) / 4 — computed in BASELINE.md. */
+  * Efficiency = (throughput_32 / throughput_8) / 4 — computed in BASELINE.md.
+  * `SCALING_LEDGER` rows split the run's cost by stage label (`dedup:<stage>`,
+  * the final count under `<none>`). */
 object ScalingBench {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val nClips = if (args.nonEmpty) args(0).toLong else 60000L
-    val spark = DedupPipeline.sessionDefaults(
-      SparkSession.builder().master(s"local[$cpus]").appName(s"graft-scaling-$cpus"), cpus)
-      .getOrCreate()
+    val spark = DedupPipeline.sessionBuilder(s"graft-scaling-$cpus", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // identical input at every parallelism: row i is a pure function of (seed, i);
@@ -49,30 +49,16 @@ object ScalingBench {
     // host-noise-robust: a job whose total task-seconds stay flat across
     // parallelism levels and whose max task ≪ total parallelizes on a real
     // cluster — wall there is ≈ total/cores + shuffle latency.
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong
-    val nTasks = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          taskMs.addAndGet(m.executorRunTime)
-          cpuNs.addAndGet(m.executorCpuTime)
-          gcMs.addAndGet(m.jvmGCTime)
-          maxTaskMs.getAndAccumulate(m.executorRunTime, math.max(_, _))
-          nTasks.incrementAndGet()
-        }
-      }
-    })
-
-    val t0 = System.nanoTime()
-    val out = DedupPipeline.run(clips, cfg)
-    val n = out.clusters.count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""SCALING {"cpus":$cpus,"clips":$nClips,"rows_out":$n,"sec":$sec%.2f,"clips_per_sec":${nClips / sec}%.1f,"task_sec_total":${taskMs.get / 1000.0}%.1f,"cpu_sec_total":${cpuNs.get / 1e9}%.1f,"gc_sec_total":${gcMs.get / 1000.0}%.1f,"max_task_sec":${maxTaskMs.get / 1000.0}%.2f,"n_tasks":${nTasks.get}}""")
+    val ((out, n, sec), ledger) = JobLedger.of(spark) {
+      val t0 = System.nanoTime()
+      val out = DedupPipeline.run(clips, cfg)
+      val n = out.clusters.count()
+      (out, n, (System.nanoTime() - t0) / 1e9)
+    }
+    val t = ledger.total
+    println(f"""SCALING {"cpus":$cpus,"clips":$nClips,"rows_out":$n,"sec":$sec%.2f,"clips_per_sec":${nClips / sec}%.1f,"task_sec_total":${t.taskS}%.1f,"cpu_sec_total":${t.cpuS}%.1f,"gc_sec_total":${t.gcS}%.1f,"max_task_sec":${t.maxTaskS}%.2f,"n_tasks":${t.tasks}}""")
     out.metrics.foreach(m => println(s"SCALING_METRIC cpus=$cpus stage=${m.stage} wall_ms=${m.wall_ms} rows_out=${m.rows_out}"))
+    ledger.rows.foreach(r => println(s"SCALING_LEDGER cpus=$cpus $r"))
     spark.stop()
   }
 }

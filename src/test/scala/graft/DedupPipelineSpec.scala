@@ -6,6 +6,7 @@ import graft.data.{AudioPcm, SynthCorpus}
 import graft.dedup._
 import graft.kernel.Matcher
 import graft.oracle.FuzzyMatcher
+import graft.obs.JobLedger
 
 /** The north-rule gate: the distributed pipeline's dup-pair decisions must
   * reproduce the single-node oracle's (exact reference semantics) with
@@ -117,14 +118,28 @@ class DedupPipelineSpec extends AnyFunSuite {
     // shuffle jobs before the stage sequence was shared with increments
     val clips = SynthCorpus.generate(spark, nRows)
     for ((strategy, pin) <- Seq("broadcast" -> 13, "shuffle" -> 29)) {
-      val (r, jobs) = JobLog.of(spark)(DedupPipeline.run(clips, cfg.copy(strategy = strategy)))
+      val (r, ledger) = JobLedger.of(spark)(DedupPipeline.run(clips, cfg.copy(strategy = strategy)))
       r.edges.unpersist(); r.clusters.unpersist()
-      val unlabeled = jobs.filterNot(_._1.startsWith("dedup:"))
+      val jobs = ledger.jobs
+      val unlabeled = jobs.filterNot(_.label.startsWith("dedup:"))
       assert(unlabeled.isEmpty, s"$strategy: ${unlabeled.size} of ${jobs.size} jobs carry no " +
         s"dedup: label: ${unlabeled.mkString("; ")}")
-      assert(jobs.map(_._1).contains("dedup:verify"), s"$strategy: ${jobs.mkString("; ")}")
-      assert(jobs.size <= pin, s"$strategy: ${jobs.size} jobs (pin $pin): ${jobs.map(_._1).mkString("; ")}")
+      assert(ledger.labels.contains("dedup:verify"), s"$strategy: ${jobs.mkString("; ")}")
+      assert(jobs.size <= pin, s"$strategy: ${jobs.size} jobs (pin $pin): ${ledger.labels.mkString("; ")}")
+      // reconciliation: the per-label sums attribute every task end once
+      val sums = ledger.byLabel.map(_._2).reduce(_ + _)
+      assert(ledger.total.tasks > 0 && sums.tasks == ledger.total.tasks &&
+        math.abs(sums.taskS - ledger.total.taskS) < 1e-9 && sums.jobs == jobs.size,
+        s"$strategy: per-label sums ${sums.row} vs window total ${ledger.total.row}")
     }
+  }
+
+  test("a forced broadcast past the envelope fails before anything is collected") {
+    val clips = SynthCorpus.generate(spark, nRows)
+    val e = intercept[IllegalArgumentException](DedupPipeline.run(clips,
+      cfg.copy(strategy = "broadcast", broadcastMaxBytes = 1)))
+    assert(e.getMessage.contains("past the broadcast envelope") &&
+      e.getMessage.contains("strategy = \"shuffle\""), e.getMessage)
   }
 
   test("metrics rows cover every stage with non-negative wall times") {
@@ -164,8 +179,8 @@ class DedupPipelineSpec extends AnyFunSuite {
     val toks = TokenizeStage(SynthCorpus.generate(spark, 120, partitions = 4), cfg).persist()
     try {
       val rows = toks.count()
-      val ((n, bytes), jobs) = JobLog.of(spark)(BroadcastCorpus.stats(toks, TokenizeStage.rowBytes()))
-      assert(jobs.size == 1, jobs.mkString("; "))
+      val ((n, bytes), ledger) = JobLedger.of(spark)(BroadcastCorpus.stats(toks, TokenizeStage.rowBytes()))
+      assert(ledger.jobs.size == 1, ledger.jobs.mkString("; "))
       assert(n == rows && bytes == toks.agg(sum(TokenizeStage.rowBytes())).head().getLong(0))
     } finally toks.unpersist()
   }

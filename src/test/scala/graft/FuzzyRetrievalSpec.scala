@@ -6,6 +6,7 @@ import graft.data.Clip
 import graft.dedup.{DedupConfig, FuzzyRetrieval}
 import graft.kernel.{EditCosts, Matcher}
 import graft.text.PT
+import graft.obs.JobLedger
 
 /** The reference's flagship top-k retrieval query (`-a match`) end-to-end
   * THROUGH SPARK: tm1 golden fixtures (/root/reference/test/data/test-tm1,
@@ -254,8 +255,10 @@ class FuzzyRetrievalSpec extends AnyFunSuite {
     def key(r: graft.dedup.RetrievalRow) = (r.query_id, r.s_id)
     val truth = FuzzyRetrieval.topk(queries, corpus, c, numberOfMatches = 0)
       .collect().map(key).toSet
-    val got = FuzzyRetrieval.topk(queries, corpus, shuffled(c), numberOfMatches = 0)
-      .collect().map(key).toSet
+    val (got, ledger) = JobLedger.of(spark)(
+      FuzzyRetrieval.topk(queries, corpus, shuffled(c), numberOfMatches = 0).collect().map(key).toSet)
+    assert(ledger.accumulator("retrievalCappedShingleBuckets") > 0,
+      "test corpus never triggered the cap — not exercising the scale path")
     assert(truth.size > 400, s"vacuous truth set: ${truth.size}") // at least the self matches
     // the broadcast index IS the full candidate generator, so the LSH path
     // can only miss, never invent: zero extras, recall ≥ 0.99 under caps

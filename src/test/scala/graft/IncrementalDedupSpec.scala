@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.data.Clip
 import graft.dedup.{DedupConfig, DedupPipeline, IncrementalDedup}
+import graft.obs.JobLedger
 
 /** Incremental dedup == the full pipeline re-run over the accumulated
   * corpus, on fixtures exercising every incremental case: join an existing
@@ -159,13 +160,14 @@ class IncrementalDedupSpec extends AnyFunSuite {
     import spark.implicits._
     val dir0 = freshDir("inc-guard-base")
     DedupPipeline.run(oldClips.toDS(), cfg, Some(dir0))
-    val (e, jobs) = JobLog.of(spark)(intercept[IllegalArgumentException](
+    val (e, ledger) = JobLedger.of(spark)(intercept[IllegalArgumentException](
       IncrementalDedup.run(newClips.toDS(), Seq(dir0), cfg.copy(broadcastMaxRows = 2))))
     assert(e.getMessage.contains("incremental batch has 6 rows") &&
       e.getMessage.contains("use a smaller ingest batch, or the full pipeline"), e.getMessage)
-    assert(jobs.nonEmpty && jobs.last._1 == "inc:inc_tokenize", jobs.mkString("; "))
-    assert(jobs.map(_._1).toSet.subsetOf(Set("inc:prior_state", "inc:precheck", "inc:inc_tokenize")),
-      jobs.mkString("; "))
+    val labels = ledger.labels
+    assert(labels.nonEmpty && labels.last == "inc:inc_tokenize", labels.mkString("; "))
+    assert(labels.toSet.subsetOf(Set("inc:prior_state", "inc:precheck", "inc:inc_tokenize")),
+      labels.mkString("; "))
   }
 
   test("compact merges a chain into one head; increments over it are unchanged") {
@@ -245,31 +247,21 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // an increment on this fixture is 23 jobs (59 with the candidate and
     // verify shuffles it replaced); the cap is that plus 5. Job WALLS are
     // host lottery, job COUNT is deterministic — so the count is the tripwire.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import spark.implicits._
     val base = freshDir("jobcount-base")
     DedupPipeline.run(spark.createDataset(oldClips), cfg, Some(base))
-    // count ONLY jobs carrying the increment's phase marker: the listener
-    // bus is async, so stale bootstrap events could otherwise be delivered
-    // to this listener after registration and flake the gate
-    val nJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties).map(_.getProperty("spark.job.description")).orNull
-        if (desc != null && desc.startsWith("inc:")) nJobs.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val res = IncrementalDedup.run(spark.createDataset(newClips), Seq(base), cfg)
-      res.clusters.count()
-      Thread.sleep(500) // listener bus drain (private API in Spark 4)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(nJobs.get() > 0, "phase markers missing — the gate is counting nothing")
-    assert(nJobs.get() <= 28,
-      s"one increment fired ${nJobs.get()} phased Spark jobs (23 expected) — a job-per-phase " +
+    // the ledger window covers the increment call only; every job in it
+    // carries the increment's phase label
+    val (_, ledger) = JobLedger.of(spark)(
+      IncrementalDedup.run(spark.createDataset(newClips), Seq(base), cfg))
+    val nJobs = ledger.jobs.size
+    assert(nJobs > 0, "no job in the window — the gate is counting nothing")
+    val unlabeled = ledger.labels.filterNot(_.startsWith("inc:"))
+    assert(unlabeled.isEmpty, s"${unlabeled.size} of $nJobs increment jobs carry no inc: label")
+    assert(nJobs <= 28,
+      s"one increment fired $nJobs phased Spark jobs (23 expected) — a job-per-phase " +
         "regression, or the lineage-truncation discipline (localCheckpoint per O(new) " +
-        "intermediate) has regressed")
+        "intermediate) has regressed: " + ledger.rows.mkString("; "))
   }
 
   test("a chain.json lost in writeChain's delete-rename window rolls forward from the tmp") {
@@ -299,10 +291,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
     import spark.implicits._
     val base = freshDir("label-base")
     DedupPipeline.run(oldClips.toDS(), cfg, Some(base))
-    val (_, jobs) = JobLog.of(spark)(
+    val (_, ledger) = JobLedger.of(spark)(
       IncrementalDedup.run(newClips.toDS(), Seq(base), cfg, Some(freshDir("label-inc"))))
+    val jobs = ledger.jobs
     assert(jobs.size > 10, s"only ${jobs.size} jobs seen — the gate counts nothing")
-    val unlabeled = jobs.filterNot(_._1.startsWith("inc:"))
+    val unlabeled = jobs.filterNot(_.label.startsWith("inc:"))
     assert(unlabeled.isEmpty,
       s"${unlabeled.size} of ${jobs.size} increment jobs carry no inc: label: ${unlabeled.mkString("; ")}")
   }

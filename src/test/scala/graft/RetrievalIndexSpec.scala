@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.data.{Clip, TableIO}
 import graft.dedup.{DedupConfig, FuzzyRetrieval}
 import graft.text.PT
+import graft.obs.JobLedger
 
 /** The persisted distributed retrieval index (the reference's `-a index` →
   * `-i CORPUS.fmi` job split, /root/reference/src/fuzzy_matcher_binarization.cc:16-51):
@@ -255,6 +256,35 @@ class RetrievalIndexSpec extends AnyFunSuite {
     idx.unpersist()
   }
 
+  test("no unlabelled retrieval job: each entry and index operation labels the jobs it starts") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("retr-idx-labels").toString
+    val clips = clipsOf(sents).toDS()
+    val queries = Seq(Clip("q", Array.emptyByteArray, 16000, 0, "pcm_s16le", "aa bb cc dd")).toDS()
+    lazy val idx = FuzzyRetrieval.loadIndex(spark, tmp, cfg)
+    val indexOps: Seq[(String, String, () => Any)] = Seq(
+      ("saveIndex", "save_index", () => FuzzyRetrieval.saveIndex(clips, cfg, tmp)),
+      ("appendIndex", "append_index",
+        () => FuzzyRetrieval.appendIndex(clipsOf(Seq("aa bb cc ff")).toDS(), cfg, tmp)),
+      ("compactIndex", "compact_index", () => FuzzyRetrieval.compactIndex(spark, cfg, tmp)),
+      ("loadIndex", "load_index", () => idx))
+    val entries = Seq(cfg.copy(strategy = "broadcast"), shuffleCfg).flatMap { c =>
+      Seq[(String, String, () => Any)](
+        (s"topkIndexed ${c.strategy}", "topk", () => FuzzyRetrieval.topkIndexed(queries, idx, c, 5)),
+        (s"subsequenceIndexed ${c.strategy}", "subsequence",
+          () => FuzzyRetrieval.subsequenceIndexed(queries, idx, c, 5)),
+        (s"decontaminate ${c.strategy}", "decontaminate",
+          () => FuzzyRetrieval.decontaminate(clips, queries, c, alsoContained = true)))
+    }
+    for ((call, op, run) <- indexOps ++ entries) {
+      val (_, ledger) = JobLedger.of(spark)(run())
+      assert(ledger.jobs.nonEmpty, s"$call started no job — the gate checks nothing")
+      val off = ledger.labels.filterNot(_ == s"retrieval:$op")
+      assert(off.isEmpty, s"$call: ${off.size} of ${ledger.jobs.size} jobs not labelled " +
+        s"retrieval:$op: ${off.mkString("; ")}")
+    }
+  }
+
   test("served index: a cached index answers its second topkIndexed with ONE job, same rows") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("retr-idx-served").toString
@@ -263,10 +293,10 @@ class RetrievalIndexSpec extends AnyFunSuite {
     idx.count()
     val queries = Seq(Clip("q", Array.emptyByteArray, 16000, 0, "pcm_s16le", "aa bb cc dd")).toDS()
     val first = rows(FuzzyRetrieval.topkIndexed(queries, idx, cfg, 5))
-    val (second, jobs) = JobLog.of(spark)(rows(FuzzyRetrieval.topkIndexed(queries, idx, cfg, 5)))
+    val (second, ledger) = JobLedger.of(spark)(rows(FuzzyRetrieval.topkIndexed(queries, idx, cfg, 5)))
     assert(first.nonEmpty && second == first, s"reused index diverged: $second vs $first")
-    assert(jobs.size == 1,
-      s"second call on a cached index started ${jobs.size} jobs, want 1 (the query scan): $jobs")
+    assert(ledger.jobs.size == 1,
+      s"second call on a cached index started ${ledger.jobs.size} jobs, want 1 (the query scan): ${ledger.jobs}")
     idx.unpersist()
   }
 
@@ -279,8 +309,8 @@ class RetrievalIndexSpec extends AnyFunSuite {
     // the envelope stats job (which also fills the guard's own persist),
     // collect, query scan
     for (i <- 1 to 2) {
-      val (_, jobs) = JobLog.of(spark)(rows(FuzzyRetrieval.topkIndexed(queries, idx, cfg, 5)))
-      assert(jobs.size == 3, s"call $i on an uncached index started ${jobs.size} jobs, want 3")
+      val (_, ledger) = JobLedger.of(spark)(rows(FuzzyRetrieval.topkIndexed(queries, idx, cfg, 5)))
+      assert(ledger.jobs.size == 3, s"call $i on an uncached index started ${ledger.jobs.size} jobs, want 3")
     }
     assert(idx.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
@@ -326,20 +356,20 @@ class RetrievalIndexSpec extends AnyFunSuite {
     val queries = Seq(Clip("q", Array.emptyByteArray, 16000, 0, "pcm_s16le", "aa bb cc dd")).toDS()
     assert(rows(FuzzyRetrieval.topkIndexed(queries, idx, cfg, 5)).nonEmpty)
     val tight = cfg.copy(broadcastMaxRows = n - 1)
-    val (e, jobs) = JobLog.of(spark)(intercept[IllegalArgumentException] {
+    val (e, guard) = JobLedger.of(spark)(intercept[IllegalArgumentException] {
       FuzzyRetrieval.topkIndexed(queries, idx, tight.copy(strategy = "broadcast"), 5)
     })
     assert(e.getMessage.contains("use strategy = \"shuffle\""), e.getMessage)
-    assert(jobs.isEmpty, s"the guard on a memo hit started ${jobs.size} jobs — not a memo hit")
+    assert(guard.jobs.isEmpty, s"the guard on a memo hit started ${guard.jobs.size} jobs — not a memo hit")
     // auto decides from the memo too: past the envelope it runs the shuffle
     // path with no extra job
-    val (autoRows, autoJobs) =
-      JobLog.of(spark)(rows(FuzzyRetrieval.topkIndexed(queries, idx, tight, 5)))
-    val (shuffleRows, shuffleJobs) = JobLog.of(spark)(
+    val (autoRows, auto) =
+      JobLedger.of(spark)(rows(FuzzyRetrieval.topkIndexed(queries, idx, tight, 5)))
+    val (shuffleRows, shuffle) = JobLedger.of(spark)(
       rows(FuzzyRetrieval.topkIndexed(queries, idx, tight.copy(strategy = "shuffle"), 5)))
     assert(autoRows.nonEmpty && autoRows == shuffleRows)
-    assert(autoJobs.size == shuffleJobs.size,
-      s"auto past the envelope started ${autoJobs.size} jobs, forced shuffle ${shuffleJobs.size}")
+    assert(auto.jobs.size == shuffle.jobs.size,
+      s"auto past the envelope started ${auto.jobs.size} jobs, forced shuffle ${shuffle.jobs.size}")
     idx.unpersist()
   }
 

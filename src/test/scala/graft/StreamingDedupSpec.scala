@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.data.SynthCorpus
 import graft.dedup.{DedupConfig, DedupPipeline, SignatureStage, TokenizeStage}
 import graft.streaming.StreamingDedup
+import graft.obs.JobLedger
 
 class StreamingDedupSpec extends AnyFunSuite {
 
@@ -316,9 +317,9 @@ class StreamingDedupSpec extends AnyFunSuite {
     }
     // rows and estimated bytes come from ONE Spark job, checked before
     // anything is collected (it also fills the persisted fingerprints' cache)
-    val (_, jobs) = JobLog.of(spark)(intercept[IllegalArgumentException](
+    val (_, ledger) = JobLedger.of(spark)(intercept[IllegalArgumentException](
       StreamingDedup.audioEdgesAgainstCorpus(probe, corpus, cfg.copy(broadcastMaxBytes = 1))))
-    assert(jobs.size == 1, s"the audio guard started ${jobs.size} jobs: $jobs")
+    assert(ledger.jobs.size == 1, s"the audio guard started ${ledger.jobs.size} jobs: ${ledger.jobs}")
   }
 
   test("duplicate corpus clip_ids both stay in the stream-static band index (TM semantics)") {
