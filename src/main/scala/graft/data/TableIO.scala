@@ -1,7 +1,13 @@
 package graft.data
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Table IO facade: Iceberg catalog tables in production, path-based
   * Parquet in environments without an Iceberg runtime (this sandbox ships
@@ -30,6 +36,39 @@ object TableIO {
     if (useIceberg(spark)) spark.read.format("iceberg").load(ident)
     else spark.read.parquet(ident)
 
+  /** The committed table at `ident` read with the schema of its row type
+    * `T`, so no schema-inference job starts. Corruption stays loud: the
+    * table's schema — one Parquet footer read on the driver, or the Iceberg
+    * catalog's — must hold every column of `T` with `T`'s type, or the read
+    * fails naming the table and the column (a missing or retyped column
+    * would otherwise read back as nulls). */
+  def readAs[T: Encoder](spark: SparkSession, ident: String): Dataset[T] = {
+    val want = implicitly[Encoder[T]].schema
+    val (df, found) =
+      if (useIceberg(spark)) { val d = read(spark, ident); (d, d.schema) }
+      else (spark.read.schema(want).parquet(ident), footerSchema(spark, ident))
+    want.fields.foreach { f =>
+      val got = found.find(_.name == f.name).getOrElse(throw new IllegalStateException(
+        s"table $ident has no column ${f.name} — it is not a committed table of this row type"))
+      if (got.dataType.catalogString != f.dataType.catalogString)
+        throw new IllegalStateException(s"table $ident holds column ${f.name} as " +
+          s"${got.dataType.catalogString}, expected ${f.dataType.catalogString}")
+    }
+    df.select(want.fieldNames.map(col).toSeq: _*).as[T]
+  }
+
+  /** The Spark schema of one data file's footer under a Parquet table dir. */
+  private def footerSchema(spark: SparkSession, ident: String): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(ident)
+    val part = dir.getFileSystem(conf).listStatus(dir).map(_.getPath)
+      .find(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      .getOrElse(throw new IllegalStateException(s"table $ident holds no data file"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(part, conf))
+    try new ParquetToSparkSchemaConverter(SQLConf.get).convert(reader.getFileMetaData.getSchema)
+    finally reader.close()
+  }
+
   def write(df: DataFrame, ident: String, mode: SaveMode = SaveMode.Overwrite): Unit =
     if (useIceberg(df.sparkSession)) df.write.format("iceberg").mode(mode).save(ident)
     else df.write.mode(mode).parquet(ident)
@@ -47,11 +86,11 @@ object TableIO {
     * committed copy already exists — the stage-resume rule: a rerun reads
     * the committed stage back instead of recomputing it. Also returns
     * whether the table was restored. */
-  def restoreOrWrite(spark: SparkSession, ident: String)(
-      compute: => DataFrame): (DataFrame, Boolean) = {
+  def restoreOrWrite[T: Encoder](spark: SparkSession, ident: String)(
+      compute: => Dataset[T]): (Dataset[T], Boolean) = {
     val restored = exists(spark, ident)
-    if (!restored) write(compute, ident)
-    (read(spark, ident), restored)
+    if (!restored) write(compute.toDF(), ident)
+    (readAs[T](spark, ident), restored)
   }
 
   /** Commit a chain or index pointer via `<path>.tmp`, delete, atomic rename. */

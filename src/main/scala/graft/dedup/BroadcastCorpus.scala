@@ -42,11 +42,15 @@ private[graft] object BroadcastCorpus {
     * per-partition partials folded on the driver (a global `agg` runs as
     * two jobs under AQE — its exchange's map stage, then the final one). */
   def stats(ds: Dataset[_], rowBytes: Column): (Long, Long) =
+    partitionStats(ds, rowBytes).foldLeft((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
+
+  /** [[stats]]' partials: (rows, estimated bytes) of each partition of `ds`. */
+  def partitionStats(ds: Dataset[_], rowBytes: Column): Array[(Long, Long)] =
     ds.toDF().select(rowBytes.cast("long")).rdd.mapPartitions { it =>
       var n, bytes = 0L
       it.foreach { r => n += 1; if (!r.isNullAt(0)) bytes += r.getLong(0) }
       Iterator.single((n, bytes))
-    }.fold((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
+    }.collect()
 
   def requireFits(n: Long, bytes: Long, cfg: DedupConfig, what: String,
       alternative: String): Unit =

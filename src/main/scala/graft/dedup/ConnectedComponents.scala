@@ -10,7 +10,8 @@ final case class ClusterRow(clip_id: String, cluster_id: String)
   * Two paths, mirroring the verify stage's strategy split:
   *  - **local**: when the edge set fits on the driver (it is orders of
   *    magnitude smaller than the corpus — only dup pairs), a union-find over
-  *    the collected edges + a broadcast-joined label map. O(E α(E)) and two
+  *    the collected edges ([[unionFind]], which an increment's driver-side
+  *    label contraction shares) + a broadcast label map. O(E α(E)) and two
   *    narrow jobs.
   *  - **distributed**: iterative min-label propagation (hash-min) via
   *    DataFrame self-joins with `localCheckpoint` per iteration and a
@@ -41,8 +42,18 @@ object ConnectedComponents {
   def local(edges: Dataset[Edge], allIds: DataFrame): Dataset[ClusterRow] = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val pairs = edges.select("a", "b").as[(String, String)].collect()
+    val bc = spark.sparkContext.broadcast(unionFind(edges.select("a", "b").as[(String, String)].collect()))
+    allIds.select(col("clip_id")).as[String].mapPartitions { it =>
+      val m = bc.value
+      it.map(id => ClusterRow(id, m.getOrDefault(id, id)))
+    }
+  }
 
+  /** Union-find over `pairs` on the driver: the component root of every
+    * endpoint that is not itself a root (look ids up with `getOrDefault(id,
+    * id)`). The smaller id wins each union, so a root is its component's min
+    * id. Shared by [[local]] and the increment's contracted touched graph. */
+  def unionFind(pairs: IterableOnce[(String, String)]): java.util.HashMap[String, String] = {
     val parent = new java.util.HashMap[String, String]()
     def find(x0: String): String = {
       var x = x0
@@ -53,19 +64,13 @@ object ConnectedComponents {
       while (y != x) { val n = parent.get(y); parent.put(y, x); y = n }
       x
     }
-    pairs.foreach { case (a, b) =>
+    pairs.iterator.foreach { case (a, b) =>
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
     }
-    val labels = new java.util.HashMap[String, String]()
-    pairs.foreach { case (a, b) =>
-      labels.put(a, find(a)); labels.put(b, find(b))
-    }
-    val bc = spark.sparkContext.broadcast(labels)
-    allIds.select(col("clip_id")).as[String].mapPartitions { it =>
-      val m = bc.value
-      it.map(id => ClusterRow(id, m.getOrDefault(id, id)))
-    }
+    val roots = new java.util.HashMap[String, String](parent.size * 2)
+    parent.forEach((id, _) => roots.put(id, find(id)))
+    roots
   }
 
   /** Iterative hash-min label propagation (the beyond-driver path). */

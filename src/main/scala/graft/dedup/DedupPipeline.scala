@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.data.{Clip, TableIO}
 import graft.obs.JobLedger.withStage
@@ -22,8 +22,10 @@ final case class DedupResult(
 
 /** One stage sequence for every dedup run: [[DedupPipeline.run]] runs it
   * over no prior state, [[IncrementalDedup.run]] over its chain's state.
-  * Each stage has its own job label and metric row:
-  *  - precheck (the input count) and tokenize (narrow, sized in one job);
+  * Each stage has its own job label and metric row, and each stage output
+  * is materialized by one job that counts its rows per partition:
+  *  - precheck (the input count; with prior state the batch's ids checked
+  *    on the driver) and tokenize (narrow, sized in one job);
   *  - audio edges per channel on: the batch operator, plus with prior state
   *    the committed fingerprints probed against a batch-sized broadcast;
   *  - transcript edges: with prior state, the batch broadcast with its key
@@ -33,9 +35,11 @@ final case class DedupResult(
   *    equi-joins, hot buckets capped and counted) → verify (candidate
   *    tokens joined once, cogrouped by pattern);
   *  - connected components over every input clip id, or over the
-  *    label-contracted touched subgraph, then the label remap;
-  *  - commit: `tokens`, `edges`, each audio channel's fingerprint and edge
-  *    tables, `metrics`, and `clusters` LAST (the commit marker).
+  *    label-contracted touched subgraph (on the driver below
+  *    `ccLocalEdgeCap`), then the label remap;
+  *  - commit, one write per table: `tokens`, `edges`, each audio channel's
+  *    fingerprint and edge tables, `metrics`, and `clusters` LAST (the
+  *    commit marker).
   * A run with no prior state writes each stage table as it completes and
   * resumes from those that exist; an increment commits at the end, over any
   * earlier attempt.
@@ -130,44 +134,66 @@ object DedupPipeline {
       if (!fresh) pending += name -> ds
       else if (!TableIO.exists(spark, s"$d/$name")) TableIO.write(ds.toDF(), s"$d/$name")
     }
-    def table[T](name: String, compute: => Dataset[T])(read: DataFrame => Dataset[T]): Dataset[T] =
+    def table[T: Encoder](name: String, compute: => Dataset[T]): Dataset[T] =
       dir.filter(_ => fresh) match {
         case Some(d) =>
-          val (df, wasRestored) = TableIO.restoreOrWrite(spark, s"$d/$name")(compute.toDF())
+          val (ds, wasRestored) = TableIO.restoreOrWrite(spark, s"$d/$name")(compute)
           if (wasRestored) restored += name
-          keep(read(df))
+          keep(ds)
         case None =>
           val ds = keep(compute)
           commit(name, ds)
           ds
       }
 
+    // every stage output is materialized by ONE job that returns its
+    // per-partition row counts; the token and edge counts become the
+    // committed per-partition metric rows
+    var edgeCounts = Seq.empty[Long]
+    def counted(ds: Dataset[_]): Long = Metrics.partitionCounts(ds).sum
+    def countedEdges(e: Dataset[Edge]): Long = {
+      val c = Metrics.partitionCounts(e)
+      edgeCounts ++= c
+      c.sum
+    }
+
     // ---- precheck ----
-    // prior-state reads start jobs (parquet schema inference) and validate
-    // the chain eagerly: a chain without an audio channel on fails here
+    // prior-state reads are typed (no job) and validate the chain eagerly:
+    // a chain without an audio channel on fails here
     val prior = if (fresh) None
       else Some(withStage(sc, "inc:prior_state")(IncrementalDedup.priorState(spark, priorDirs, cfg)))
     val ids = clips.select($"clip_id")
-    val nClips = withStage(sc, s"$tag:precheck")(
-      prior.fold(clips.count())(p => IncrementalDedup.precheck(ids, p.clusters)))
+    // an increment holds its batch's ids on the driver from here on
+    val (nClips, batchIds) = withStage(sc, s"$tag:precheck")(prior match {
+      case None => (counted(clips), None)
+      case Some(p) =>
+        val batch = IncrementalDedup.precheck(clips, p.clusters)
+        (batch.length.toLong, Some(batch))
+    })
 
     // ---- tokenize (narrow) + size, one job ----
     // the increment and the explicit shuffle path re-scan their token rows
     // in several stages, so they only ever DOWNSIZE source partitioning to
-    // ~4k rows each; the full broadcast/auto path keeps it — its dominant
+    // ~4k rows each (an increment by a narrow coalesce, so the sizing job is
+    // its only job); the full broadcast/auto path keeps it — its dominant
     // narrow stage is the per-row matcher probe, which wants the parallelism
     val srcParts = clips.rdd.getNumPartitions
     val parts = math.max(1L, math.min(nClips / 4096 + 1, srcParts.toLong)).toInt
     var toks: Dataset[TokRow] = null
+    var tokCounts = Seq.empty[Long]
     var tokBytes = 0L
     val nToks = timed("tokenize", nClips) {
       toks = table("tokens", {
         val t = TokenizeStage(clips, cfg)
-        if (parts < srcParts && (!fresh || cfg.strategy == "shuffle")) t.repartition(parts) else t
-      })(_.as[TokRow])
-      val (n, bytes) = BroadcastCorpus.stats(toks, TokenizeStage.rowBytes())
-      tokBytes = bytes
-      n
+        if (parts >= srcParts) t
+        else if (!fresh) t.coalesce(parts)
+        else if (cfg.strategy == "shuffle") t.repartition(parts)
+        else t
+      })
+      val st = BroadcastCorpus.partitionStats(toks, TokenizeStage.rowBytes())
+      tokCounts = st.map(_._1).toSeq
+      tokBytes = st.map(_._2).sum
+      tokCounts.sum
     }
 
     // ---- audio edges (optional channels) ----
@@ -188,8 +214,8 @@ object DedupPipeline {
           commit(fpsTable, fps)
           val own = pairs(fps, capped)
           prior.fold(own)(p => own.union(againstOld(fps, p.fps(fpsTable), capped)))
-        })(_.as[Edge])
-        e.count()
+        })
+        countedEdges(e)
       }
       e
     }
@@ -240,8 +266,8 @@ object DedupPipeline {
     var edges: Dataset[Edge] = null
     def verify(rowsIn: Long, extra: => Map[String, String])(compute: => Dataset[Edge]): Unit =
       nEdges += timed("verify", rowsIn, extra ++ restoredMark("edges")) {
-        edges = table("edges", compute)(_.as[Edge])
-        edges.count()
+        edges = table("edges", compute)
+        countedEdges(edges)
       }
     prior match {
       case Some(p) =>
@@ -267,7 +293,7 @@ object DedupPipeline {
         var sigsForced = false
         lazy val sigs = {
           sigsForced = true
-          table("signatures", SignatureStage(toks, cfg))(_.as[SigRow])
+          table("signatures", SignatureStage(toks, cfg))
         }
         val acc = Seq.fill(4)(sc.longAccumulator)
         var cands: Dataset[CandPair] = null
@@ -275,9 +301,8 @@ object DedupPipeline {
           if (restored("candidates")) restoredMark("candidates")
           else Seq("capped_shingle_buckets", "capped_shingle_pairs_lost", "capped_band_buckets",
             "capped_tiny_gram_buckets").zip(acc.map(_.value.toString)))) {
-          cands = table("candidates",
-            CandidateStage(toks, sigs, cfg, acc(0), acc(1), acc(2), acc(3)))(_.as[CandPair])
-          cands.count()
+          cands = table("candidates", CandidateStage(toks, sigs, cfg, acc(0), acc(1), acc(2), acc(3)))
+          counted(cands)
         }
         verify(nCands, Map.empty)(VerifyStage(toks, cands, cfg, nToks))
         cands.unpersist()
@@ -289,10 +314,43 @@ object DedupPipeline {
     // vertices are the INPUT clip ids, so a clip TokenizeStage drops still
     // gets its singleton row. With prior state, old endpoints collapse to
     // their committed labels (each the old component's min clip_id, so
-    // min-id naming survives) and CC runs over the touched subgraph only.
-    val (ccEdges, vertices, touchedLabels) = prior match {
-      case None => (allEdges, ids, null)
-      case Some(p) =>
+    // min-id naming survives) and CC runs over the touched subgraph only:
+    // below `ccLocalEdgeCap` on the driver, past it through joins and the
+    // distributed CC. Touched old labels whose component found a smaller
+    // min (a new clip's id, or another old label it merged with) are the
+    // label remaps; the updated assignment is a narrow rewrite of the
+    // committed one through a broadcast remap, plus the batch's rows.
+    val (clusters, mergedLabels) = (prior, batchIds) match {
+      case (Some(p), Some(batch)) if nEdges <= cfg.ccLocalEdgeCap =>
+        // batch-sized: the endpoint pairs and their committed labels come to
+        // the driver, which contracts the edges and runs the union-find
+        val (pairs, oldLabel) = withStage(sc, s"$tag:touched_labels") {
+          val pairs = allEdges.select($"a", $"b").as[(String, String)].collect()
+          val inBatch = batch.toSet
+          (pairs, IncrementalDedup.committedLabels(p.clusters,
+            pairs.iterator.flatMap(e => Iterator(e._1, e._2)).filterNot(inBatch).toSet))
+        }
+        val touched = oldLabel.values.toSet
+        var root: java.util.HashMap[String, String] = null
+        timed("cluster", nEdges) {
+          def label(id: String) = oldLabel.getOrElse(id, id)
+          root = ConnectedComponents.unionFind(pairs.iterator.map(e => (label(e._1), label(e._2))))
+          nClips + touched.size // vertices: the batch ids and the touched labels
+        }
+        withStage(sc, s"$tag:merged_labels") {
+          val merged = touched.toSeq.sorted.map(l => (l, root.getOrDefault(l, l)))
+            .filter(m => m._1 != m._2)
+          val updatedOld = if (merged.isEmpty) p.clusters else {
+            val remap = sc.broadcast(merged.toMap)
+            p.clusters.mapPartitions { it =>
+              val m = remap.value
+              it.map(r => ClusterRow(r.clip_id, m.getOrElse(r.cluster_id, r.cluster_id)))
+            }
+          }
+          val batchRows = batch.toSeq.map(id => ClusterRow(id, root.getOrDefault(id, id))).toDS()
+          (updatedOld.union(batchRows.coalesce(parts)), merged.toDF("old_label", "new_label"))
+        }
+      case (Some(p), _) =>
         val endpoints =
           allEdges.select($"a".as("clip_id")).union(allEdges.select($"b".as("clip_id"))).distinct()
         val touched = withStage(sc, s"$tag:touched_labels")(
@@ -304,24 +362,16 @@ object DedupPipeline {
             $"score", $"lcs", $"kind")
           .as[Edge]
         val labels = touched.select($"cluster_id".as("clip_id")).distinct()
-        (contracted, ids.union(labels).distinct(), labels)
-    }
-    var cc: Dataset[ClusterRow] = null
-    timed("cluster", nEdges) {
-      // the label attach is a per-key-unique left join, so the contracted
-      // edges keep allEdges' count and CC skips its own edge-count job
-      cc = keep(ConnectedComponents(ccEdges, vertices, cfg.ccMaxIterations, cfg.ccLocalEdgeCap,
-        knownEdgeCount = nEdges))
-      cc.count()
-    }
-    // label remaps: a touched old label whose contracted component found a
-    // smaller min (a new clip's id, or another old label it merged with);
-    // the updated assignment is a narrow rewrite through a broadcast remap
-    val (clusters, mergedLabels) = prior match {
-      case None => (cc, Seq.empty[(String, String)].toDF("old_label", "new_label"))
-      case Some(p) =>
+        var cc: Dataset[ClusterRow] = null
+        timed("cluster", nEdges) {
+          // the label attach is a per-key-unique left join, so the contracted
+          // edges keep allEdges' count and CC skips its own edge-count job
+          cc = keep(ConnectedComponents(contracted, ids.union(labels).distinct(), cfg.ccMaxIterations,
+            cfg.ccLocalEdgeCap, knownEdgeCount = nEdges))
+          counted(cc)
+        }
         val merged = withStage(sc, s"$tag:merged_labels")(cc.toDF()
-          .join(touchedLabels.toDF("clip_id"), Seq("clip_id"), "left_semi")
+          .join(labels, Seq("clip_id"), "left_semi")
           .filter($"cluster_id" =!= $"clip_id")
           .select($"clip_id".as("old_label"), $"cluster_id".as("new_label"))
           .localCheckpoint(false)) // tiny: merges only
@@ -330,15 +380,24 @@ object DedupPipeline {
           .select($"clip_id", coalesce($"new_label", $"cluster_id").as("cluster_id"))
           .as[ClusterRow]
         (updatedOld.union(cc.join(ids, Seq("clip_id"), "left_semi").as[ClusterRow]), merged)
+      case _ =>
+        var cc: Dataset[ClusterRow] = null
+        timed("cluster", nEdges) {
+          cc = keep(ConnectedComponents(allEdges, ids, cfg.ccMaxIterations, cfg.ccLocalEdgeCap,
+            knownEdgeCount = nEdges))
+          counted(cc)
+        }
+        (cc, Seq.empty[(String, String)].toDF("old_label", "new_label"))
     }
 
     // ---- commit (clusters LAST) ----
-    // an increment's tables are written coalesced to the batch's partition
+    // one write per table: the row counts are the stage jobs'. An
+    // increment's tables are written coalesced to the batch's partition
     // count (the new↔old probes otherwise write one file per old partition)
     dir.foreach(d => withStage(sc, s"$tag:commit") {
       pending.foreach { case (name, ds) => TableIO.write(ds.coalesce(parts).toDF(), s"$d/$name") }
-      metrics ++= Metrics.perPartition("tokens", toks)
-      metrics ++= Metrics.perPartition("edges", allEdges)
+      metrics ++= Metrics.perPartition("tokens", tokCounts)
+      metrics ++= Metrics.perPartition("edges", edgeCounts)
       TableIO.write(metrics.toSeq.toDS().toDF(), s"$d/metrics")
       TableIO.write(clusters.toDF(), s"$d/clusters")
     })

@@ -180,17 +180,16 @@ object FuzzyRetrieval {
     import org.apache.spark.sql.functions.{col, row_number}
     import org.apache.spark.sql.expressions.Window
 
-    def checkpointed[T](name: String, compute: => Dataset[T])(
-        read: org.apache.spark.sql.DataFrame => Dataset[T]): Dataset[T] =
+    def checkpointed[T: org.apache.spark.sql.Encoder](name: String, compute: => Dataset[T]): Dataset[T] =
       checkpointDir.fold(compute) { dir =>
-        val (df, restored) = graft.data.TableIO.restoreOrWrite(spark, s"$dir/$name")(compute.toDF())
+        val (ds, restored) = graft.data.TableIO.restoreOrWrite(spark, s"$dir/$name")(compute)
         // same discipline as the pipeline's restoredStages tracking; only
         // the candidates stage owns capping accumulators, so only its
         // restore carries the zeros-are-not-real-metrics caveat
         if (restored)
           System.err.println(s"[retrieval] restored checkpoint '$name' — not recomputed" +
             (if (name == "retrieval_candidates") "; capping accumulators did not run" else ""))
-        read(df)
+        ds
       }
 
     val qToks = TokenizeStage(queries, cfg).persist()
@@ -201,7 +200,7 @@ object FuzzyRetrieval {
       CandidateStage.cross(qToks, cToks, qSigs, cSigs, cfg,
         sc.longAccumulator("retrievalCappedShingleBuckets"),
         sc.longAccumulator("retrievalCappedBandBuckets"),
-        sc.longAccumulator("retrievalCappedTinyGramBuckets")))(_.as[CandPair])
+        sc.longAccumulator("retrievalCappedTinyGramBuckets")))
 
     // verify: patterns = queries with ≥1 candidate; candidates = corpus rows
     // all above-threshold matches; ranked below
@@ -234,8 +233,7 @@ object FuzzyRetrieval {
     // unpersisting here would re-run the whole corpus TokenizeStage for the
     // rerank (the r3 verdict's measured recompute).
     val scored = checkpointed("retrieval_scored",
-      VerifyStage.scoreGroups(patternKeyed, candToks, params, idfMax))(_.as[Edge])
-      .persist()
+      VerifyStage.scoreGroups(patternKeyed, candToks, params, idfMax)).persist()
     scored.count()
     qToks.unpersist()
     candToksSrc.unpersist()
@@ -862,7 +860,7 @@ object FuzzyRetrieval {
         false
       } else {
         val merged = segmentName(m.next)
-        graft.data.TableIO.write(committedSegments(spark, dir, m), s"$dir/$merged")
+        graft.data.TableIO.write(committedSegments(spark, dir, m).toDF(), s"$dir/$merged")
         writeIndexMeta(spark, dir, cfg, names = Seq(merged), next = m.next + 1,
           retired = kept ++ m.names.map(n => (n, now)))
         sweep(keep = Set(merged) ++ kept.map(_._1) ++ m.names)
@@ -878,21 +876,22 @@ object FuzzyRetrieval {
     * segment dirs from a killed append are ignored. */
   def loadIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       cfg: DedupConfig): Dataset[TokRow] = withStage(spark.sparkContext, "retrieval:load_index") {
-    import spark.implicits._
     val m = readIndexMeta(spark, dir)
     requireConfigMatch(m, cfg, dir, "match")
-    committedSegments(spark, dir, m).as[TokRow]
+    committedSegments(spark, dir, m)
   }
 
   /** The union of the segment tables `m` commits, failing loudly on a
     * segment with no COMMITTED table (an index write that did not complete). */
   private def committedSegments(spark: org.apache.spark.sql.SparkSession, dir: String,
-      m: IndexMeta): org.apache.spark.sql.DataFrame =
+      m: IndexMeta): Dataset[TokRow] = {
+    import spark.implicits._
     m.names.map { n =>
       val seg = s"$dir/$n"
       require(graft.data.TableIO.exists(spark, seg),
         s"index at $dir references segment $seg with no COMMITTED table — the " +
           "index write did not complete; rebuild with saveIndex / MatchCli action=index")
-      graft.data.TableIO.read(spark, seg)
+      graft.data.TableIO.readAs[TokRow](spark, seg)
     }.reduce(_.union(_))
+  }
 }

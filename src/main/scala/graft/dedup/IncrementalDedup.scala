@@ -1,7 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import scala.jdk.CollectionConverters._
 import graft.data.{Clip, TableIO}
 import graft.kernel.{Doc, Hashing, MatchResult, Matcher, SuffixIndex}
@@ -30,15 +29,19 @@ final case class IncrementalResult(
   * connectivity and min-id naming, so CC over the contracted new-incident
   * edges alone gives the full run's assignment plus the label merges.
   *
-  * Work per increment: a precheck job and a tokenize job that also sizes the
-  * batch; ONE collect + broadcast of the batch's token rows with their
-  * shingle, band and tiny-row postings (the reference's shared read-only
-  * index, batch-sized; a batch past the envelope fails loudly); new↔new
-  * through the executor index; new↔old as ONE narrow scan of the old token
-  * rows, each matched against the batch in both orientations ([[probeOld]]),
-  * so no row shuffles (the audio channels likewise probe the committed
-  * fingerprints against a batch-sized broadcast); CC on the contracted
-  * touched subgraph; an O(old) narrow label rewrite.
+  * Work per increment: the chain's tables read typed (no job); a precheck
+  * of the batch's ids (a collect and one narrow scan of the assignment) and
+  * a tokenize job that also sizes the batch; ONE collect + broadcast of the
+  * batch's token rows with their shingle, band and tiny-row postings (the
+  * reference's shared read-only index, batch-sized; a batch past the
+  * envelope fails loudly); new↔new through the executor index; new↔old as
+  * ONE narrow scan of the old token rows, each matched against the batch in
+  * both orientations ([[probeOld]]), so no row shuffles (the audio channels
+  * likewise probe the committed fingerprints against a batch-sized
+  * broadcast); CC on the contracted touched subgraph — below
+  * `ccLocalEdgeCap` on the driver, after one collect of the edges' endpoints
+  * and one narrow lookup of their committed labels; an O(old) narrow label
+  * rewrite, written with the other tables in one job per table.
   *
   * Equality caveats: only BATCH-side buckets are capped (`shingleDfCap` /
   * `bandDfCap` over the batch's dfs, counted in the `capped_*` metric
@@ -59,9 +62,10 @@ final case class IncrementalResult(
   */
 object IncrementalDedup {
 
-  private def readIf(spark: SparkSession, dir: String, names: String*): Option[DataFrame] =
+  /** The first committed table of `names` under `dir`, read typed: no job. */
+  private def readIf[T: Encoder](spark: SparkSession, dir: String, names: String*): Option[Dataset[T]] =
     names.collectFirst {
-      case n if TableIO.exists(spark, s"$dir/$n") => TableIO.read(spark, s"$dir/$n")
+      case n if TableIO.exists(spark, s"$dir/$n") => TableIO.readAs[T](spark, s"$dir/$n")
     }
 
   /** The tables a chain carries forward, with the fix for a dir lacking one
@@ -73,11 +77,22 @@ object IncrementalDedup {
 
   /** A carried table accumulated across the chain (the pre-layout `new_*`
     * name is read too), failing loudly when a dir lacks it. */
-  private def accumulated(spark: SparkSession, priorDirs: Seq[String], name: String): DataFrame =
+  private def accumulated[T: Encoder](spark: SparkSession, priorDirs: Seq[String],
+      name: String): Dataset[T] =
     priorDirs.map { d =>
-      readIf(spark, d, name, s"new_$name").getOrElse(
+      readIf[T](spark, d, name, s"new_$name").getOrElse(
         sys.error(s"no committed $name table under $d — ${carried.toMap.apply(name)}"))
     }.reduce(_ union _)
+
+  /** [[accumulated]] for each carried table, read with its row type. */
+  private def carriedTable(spark: SparkSession, priorDirs: Seq[String], name: String): DataFrame = {
+    import spark.implicits._
+    name match {
+      case "tokens" => accumulated[TokRow](spark, priorDirs, name).toDF()
+      case "audio_fps" => accumulated[AudioDedup.AudioFpRow](spark, priorDirs, name).toDF()
+      case _ => accumulated[AudioContainment.AudioCtRow](spark, priorDirs, name).toDF()
+    }
+  }
 
   /** What an increment reads from its chain: the current assignment, the
     * accumulated token rows and the fingerprints of each audio channel on. */
@@ -86,30 +101,47 @@ object IncrementalDedup {
 
   private[dedup] def priorState(spark: SparkSession, priorDirs: Seq[String], cfg: DedupConfig): Prior = {
     import spark.implicits._
-    val clusters = readIf(spark, priorDirs.last, "clusters").getOrElse(sys.error(
-      s"no committed clusters table under ${priorDirs.last} — prior state incomplete")).as[ClusterRow]
-    Prior(clusters, accumulated(spark, priorDirs, "tokens").as[TokRow],
+    Prior(clusters(spark, priorDirs.last, "prior state incomplete"),
+      accumulated[TokRow](spark, priorDirs, "tokens"),
       Seq(cfg.useAudioChannel -> "audio_fps", cfg.useAudioContainment -> "audio_ct_fps")
-        .collect { case (true, t) => t -> accumulated(spark, priorDirs, t) }.toMap)
+        .collect { case (true, t) => t -> carriedTable(spark, priorDirs, t) }.toMap)
   }
 
-  /** The batch's row count, in ONE job that also rejects null, duplicate
-    * and committed clip ids (count(lit(1)) counts nulls, count/count_distinct
-    * of the column skip them — a null key would silently vanish). */
-  private[dedup] def precheck(newIds: DataFrame, priorClusters: Dataset[ClusterRow]): Long = {
-    val stats = newIds.agg(count(lit(1)), count(col("clip_id")), count_distinct(col("clip_id")))
-    val coll = priorClusters.join(newIds, Seq("clip_id"), "left_semi").agg(count(lit(1)))
-    val r = stats.crossJoin(coll).head()
-    val Seq(nNew, nNonNull, nDistinct, collisions) = (0 to 3).map(r.getLong)
-    require(nNonNull == nNew,
-      s"${nNew - nNonNull} rows in the new batch have null clip_id — every row needs a key")
-    require(nDistinct == nNew,
+  /** The committed assignment of `dir`; `missing` says what its absence means. */
+  private def clusters(spark: SparkSession, dir: String, missing: String): Dataset[ClusterRow] = {
+    import spark.implicits._
+    readIf[ClusterRow](spark, dir, "clusters").getOrElse(
+      sys.error(s"no committed clusters table under $dir — $missing"))
+  }
+
+  /** The batch's clip ids, checked in two jobs: one collects them, and the
+    * driver rejects null and duplicate ids; one narrow scan of the committed
+    * assignment ([[committedLabels]]) rejects ids it already holds. A batch
+    * whose ids pass `spark.driver.maxResultSize` fails in the collect; the
+    * envelope check of its token rows comes later, before they are collected. */
+  private[dedup] def precheck(clips: Dataset[Clip], priorClusters: Dataset[ClusterRow]): Array[String] = {
+    import clips.sparkSession.implicits._
+    val ids = clips.select($"clip_id").as[String].collect()
+    val nulls = ids.count(_ == null)
+    require(nulls == 0, s"$nulls rows in the new batch have null clip_id — every row needs a key")
+    require(ids.distinct.length == ids.length,
       "duplicate clip_ids within the new batch — clip ids must be unique")
+    val collisions = committedLabels(priorClusters, ids.toSet).size
     require(collisions == 0,
       s"$collisions new clip_ids already exist in the prior assignment — an increment " +
         "adds NEW rows; re-ingesting an id would leave two assignment rows for it")
-    nNew
+    ids
   }
+
+  /** The committed label of each of `ids` the assignment holds, in ONE
+    * narrow scan filtered by a broadcast of `ids` (no job when it is empty). */
+  private[dedup] def committedLabels(assignment: Dataset[ClusterRow],
+      ids: Set[String]): Map[String, String] =
+    if (ids.isEmpty) Map.empty else {
+      val wanted = assignment.sparkSession.sparkContext.broadcast(ids)
+      assignment.filter(r => wanted.value.contains(r.clip_id)).collect()
+        .map(r => r.clip_id -> r.cluster_id).toMap
+    }
 
   /** The batch broadcast's key postings (positions into the batch rows):
     * every k-shingle bucket, the MinHash band buckets (channel on) and the
@@ -247,14 +279,13 @@ object IncrementalDedup {
   def compact(spark: SparkSession, priorDirs: Seq[String], cfg: DedupConfig,
       outDir: String): Unit = graft.obs.JobLedger.withStage(spark.sparkContext, "inc:compact") {
     require(priorDirs.nonEmpty, "nothing to compact")
-    val clusters = readIf(spark, priorDirs.last, "clusters").getOrElse(
-      sys.error(s"no committed clusters table under ${priorDirs.last} — chain incomplete"))
+    val assignment = clusters(spark, priorDirs.last, "chain incomplete")
     // fingerprint tables are carried when the head has them (they cannot be
     // recomputed — committed state has no clip bytes)
     for ((name, _) <- carried if name == "tokens" ||
          Seq(name, s"new_$name").exists(n => TableIO.exists(spark, s"${priorDirs.head}/$n")))
-      TableIO.write(accumulated(spark, priorDirs, name), s"$outDir/$name")
-    TableIO.write(clusters, s"$outDir/clusters")
+      TableIO.write(carriedTable(spark, priorDirs, name), s"$outDir/$name")
+    TableIO.write(assignment.toDF(), s"$outDir/clusters")
   }
 
   private def chainPathOf(stateDir: String) =
@@ -364,11 +395,9 @@ object IncrementalDedup {
   /** The chain's current full cluster assignment (the last committed dir's
     * `clusters` table). */
   def currentClusters(spark: SparkSession, stateDir: String): Dataset[ClusterRow] = {
-    import spark.implicits._
     val (names, _) = readChain(spark, stateDir).getOrElse(
       sys.error(s"no chain state at $stateDir — nothing ingested yet"))
-    readIf(spark, s"$stateDir/${names.last}", "clusters").getOrElse(
-      sys.error(s"chain state at $stateDir names ${names.last} but its clusters " +
-        "table is missing — state corrupted")).as[ClusterRow]
+    clusters(spark, s"$stateDir/${names.last}",
+      s"chain state at $stateDir names ${names.last} but its clusters table is missing — state corrupted")
   }
 }

@@ -9,20 +9,21 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.LongAccumulator
 
-/** What a set of Spark tasks cost: task-s is summed `executorRunTime`, the
-  * longest task is the serial floor, `stages` counts the stages that ran
-  * tasks. */
+/** What a set of Spark tasks cost: task-s is summed `executorRunTime`, dur-s
+  * summed task wall time (`taskInfo.duration`, launch to finish as the
+  * scheduler saw it — fmbench's `task_s`), the longest task is the serial
+  * floor, `stages` counts the stages that ran tasks. */
 final case class Cost(jobs: Int = 0, stages: Int = 0, tasks: Int = 0, failedTasks: Int = 0,
-    taskS: Double = 0, cpuS: Double = 0, gcS: Double = 0, maxTaskS: Double = 0,
+    taskS: Double = 0, durS: Double = 0, cpuS: Double = 0, gcS: Double = 0, maxTaskS: Double = 0,
     shuffleWriteBytes: Long = 0, spillBytes: Long = 0) {
   def +(o: Cost): Cost = Cost(jobs + o.jobs, stages + o.stages, tasks + o.tasks,
-    failedTasks + o.failedTasks, taskS + o.taskS, cpuS + o.cpuS, gcS + o.gcS,
+    failedTasks + o.failedTasks, taskS + o.taskS, durS + o.durS, cpuS + o.cpuS, gcS + o.gcS,
     math.max(maxTaskS, o.maxTaskS), shuffleWriteBytes + o.shuffleWriteBytes,
     spillBytes + o.spillBytes)
 
   def row: String =
     f"jobs=$jobs%3d stages=$stages%3d tasks=$tasks%5d failed=$failedTasks task_s=$taskS%.2f " +
-      f"cpu_s=$cpuS%.2f gc_s=$gcS%.2f max_task_s=$maxTaskS%.2f " +
+      f"dur_s=$durS%.2f cpu_s=$cpuS%.2f gc_s=$gcS%.2f max_task_s=$maxTaskS%.2f " +
       f"shuffle_write_bytes=$shuffleWriteBytes spill_bytes=$spillBytes"
 }
 
@@ -148,8 +149,9 @@ object JobLedger {
         val ok = e.taskInfo.successful
         val runS = m.fold(0L)(_.executorRunTime) / 1e3
         val c = Cost(tasks = 1, failedTasks = if (ok) 0 else 1, taskS = runS,
-          cpuS = m.fold(0L)(_.executorCpuTime) / 1e9, gcS = m.fold(0L)(_.jvmGCTime) / 1e3,
-          maxTaskS = runS, shuffleWriteBytes = m.fold(0L)(_.shuffleWriteMetrics.bytesWritten),
+          durS = e.taskInfo.duration / 1e3, cpuS = m.fold(0L)(_.executorCpuTime) / 1e9,
+          gcS = m.fold(0L)(_.jvmGCTime) / 1e3, maxTaskS = runS,
+          shuffleWriteBytes = m.fold(0L)(_.shuffleWriteMetrics.bytesWritten),
           spillBytes = m.fold(0L)(_.diskBytesSpilled))
         total += c
         job.foreach { j =>

@@ -8,10 +8,16 @@ import graft.obs.JobLedger
   * `nBatches` successive batches through [[IncrementalDedup.ingestStep]] —
   * the periodic-drop production loop — printing per-batch wall, chain length,
   * the compaction trigger and the batch's per-label ledger rows
-  * (`INGEST_LEDGER batch=<i> label=inc:<stage> jobs=… task_s=…`). The claim under test is the O(new) ingest
-  * story END TO END: per-batch wall must stay flat as the chain (and the
-  * accumulated corpus) grows, and auto-compaction must bound chain length
-  * without a visible wall cliff on the following batch.
+  * (`INGEST_LEDGER batch=<i> label=inc:<stage> jobs=… task_s=… dur_s=…`;
+  * task_s sums executor run time, dur_s task wall time). The claim under
+  * test is the O(new) ingest story END TO END: per-batch wall must stay
+  * flat as the chain (and the accumulated corpus) grows, and
+  * auto-compaction must bound chain length without a visible wall cliff on
+  * the following batch. A batch of 150 into 1,500 clips with compaction
+  * (`IngestBench 1500 150 3 1`, local[4]) runs 13 jobs: `inc:precheck` 2,
+  * `inc:inc_tokenize` 1, `inc:inc_verify` 2, `inc:touched_labels` 2,
+  * `inc:commit` 4, `inc:compact` 2; `inc:prior_state`, `inc:inc_cluster`
+  * and `inc:merged_labels` start none below `ccLocalEdgeCap`.
   *
   * Usage: IngestBench [nBase] [nBatch] [nBatches] [compactAfter]
   * (env SPARK_GRAFT_CPUS). Finishes with a full-pipeline re-run over the

@@ -131,6 +131,11 @@ class DedupPipelineSpec extends AnyFunSuite {
       assert(ledger.total.tasks > 0 && sums.tasks == ledger.total.tasks &&
         math.abs(sums.taskS - ledger.total.taskS) < 1e-9 && sums.jobs == jobs.size,
         s"$strategy: per-label sums ${sums.row} vs window total ${ledger.total.row}")
+      // a task's launch-to-finish wall time holds its executor run time
+      assert(ledger.total.durS > 0, s"$strategy: no task wall time recorded: ${ledger.total.row}")
+      ledger.byLabel.foreach { case (l, c) =>
+        assert(c.durS >= c.taskS, s"$strategy: label $l has dur_s < task_s: ${c.row}")
+      }
     }
   }
 

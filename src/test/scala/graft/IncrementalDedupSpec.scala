@@ -243,10 +243,12 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // Regression gate for the round-5 finding: persisted (not checkpointed)
     // intermediates kept the full lineage plan alive and AQE re-optimized it
     // per query stage per action — a 300-clip increment fired 343 jobs and
-    // spent 821 s of driver CPU in Catalyst. With the broadcast-batch probe
-    // an increment on this fixture is 23 jobs (59 with the candidate and
-    // verify shuffles it replaced); the cap is that plus 5. Job WALLS are
-    // host lottery, job COUNT is deterministic — so the count is the tripwire.
+    // spent 821 s of driver CPU in Catalyst. With typed table reads, the
+    // two-job precheck and the driver-side label contraction an increment on
+    // this fixture is 6 jobs (23 before them, 59 with the candidate and
+    // verify shuffles the broadcast-batch probe replaced); the cap is that
+    // plus 2. Job WALLS are host lottery, job COUNT is deterministic — so the
+    // count is the tripwire.
     import spark.implicits._
     val base = freshDir("jobcount-base")
     DedupPipeline.run(spark.createDataset(oldClips), cfg, Some(base))
@@ -258,10 +260,55 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(nJobs > 0, "no job in the window — the gate is counting nothing")
     val unlabeled = ledger.labels.filterNot(_.startsWith("inc:"))
     assert(unlabeled.isEmpty, s"${unlabeled.size} of $nJobs increment jobs carry no inc: label")
-    assert(nJobs <= 28,
-      s"one increment fired $nJobs phased Spark jobs (23 expected) — a job-per-phase " +
+    assert(nJobs <= 8,
+      s"one increment fired $nJobs phased Spark jobs (6 expected) — a job-per-phase " +
         "regression, or the lineage-truncation discipline (localCheckpoint per O(new) " +
         "intermediate) has regressed: " + ledger.rows.mkString("; "))
+  }
+
+  test("an ingestStep with commit and compaction fires a bounded number of Spark jobs, per label") {
+    import spark.implicits._
+    val state = freshDir("jobcount-step")
+    IncrementalDedup.ingestStep(oldClips.toDS(), 0L, cfg, state, compactAfterIncrements = 1)
+    val (_, ledger) = JobLedger.of(spark)(
+      IncrementalDedup.ingestStep(newClips.toDS(), 1L, cfg, state, compactAfterIncrements = 1))
+    assert(IncrementalDedup.readChain(spark, state).get._1 == Seq("compact_1"))
+    val jobs = ledger.byLabel.toMap.map { case (l, c) => l -> c.jobs }.withDefaultValue(0)
+    val detail = ledger.rows.mkString("; ")
+    // typed reads: the chain's tables are read with no schema-inference job
+    assert(jobs("inc:prior_state") == 0, detail)
+    assert(jobs("inc:precheck") <= 2, detail)
+    assert(jobs("inc:compact") <= 2, detail)
+    // measured: 12 jobs (36 before typed reads, the two-job precheck and the
+    // driver-side contraction); the cap is that plus 2
+    assert(ledger.jobs.size <= 14, s"${ledger.jobs.size} jobs (12 measured): $detail")
+  }
+
+  test("both contraction paths agree: driver union-find and joins + distributed CC") {
+    import spark.implicits._
+    // the chained fixture: nb bridges the old clusters cx and cy, ne
+    // tokenizes empty, nt remaps an old label to a new id, n3 joins a
+    // cluster that increment 1 grew
+    def chain(c: DedupConfig) = {
+      val state = freshDir("paths-state")
+      DedupPipeline.run(oldClips.toDS(), c, Some(s"$state/full_0"))
+      val r1 = IncrementalDedup.run(newClips.toDS(), Seq(s"$state/full_0"), c, Some(s"$state/inc_1"))
+      val batch2 = Seq(
+        clip("n3", (W.dropRight(2) ++ Seq("aedit2", "aedit")).mkString(" ")),
+        clip("n4", words("r").mkString(" ")))
+      val r2 = IncrementalDedup.run(batch2.toDS(), Seq(s"$state/full_0", s"$state/inc_1"), c,
+        Some(s"$state/inc_2"))
+      IncrementalDedup.writeChain(spark, state, Seq("full_0", "inc_1", "inc_2"), c, expectPrev = None)
+      def merges(r: graft.dedup.IncrementalResult) =
+        r.mergedLabels.collect().map(m => (m.getString(0), m.getString(1))).toSet
+      (clusterSet(IncrementalDedup.currentClusters(spark, state).collect()), merges(r1), merges(r2))
+    }
+    val onDriver = chain(cfg)
+    val distributed = chain(cfg.copy(ccLocalEdgeCap = 0))
+    assert(onDriver == distributed, s"driver $onDriver\ndistributed $distributed")
+    assert(onDriver._2 == Set(("cy", "cx"), ("t1", "nt")), onDriver._2.toString)
+    val m = onDriver._1.toMap
+    assert(m("nb") == "cx" && m("cy") == "cx" && m("ne") == "ne" && m("n3") == "a1", m.toString)
   }
 
   test("a chain.json lost in writeChain's delete-rename window rolls forward from the tmp") {
@@ -294,7 +341,9 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val (_, ledger) = JobLedger.of(spark)(
       IncrementalDedup.run(newClips.toDS(), Seq(base), cfg, Some(freshDir("label-inc"))))
     val jobs = ledger.jobs
-    assert(jobs.size > 10, s"only ${jobs.size} jobs seen — the gate counts nothing")
+    // the gate sees the commit: one write per table (tokens, edges, metrics, clusters)
+    assert(jobs.count(_.label == "inc:commit") == 4,
+      s"the commit's table writes are not all in the window: ${ledger.rows.mkString("; ")}")
     val unlabeled = jobs.filterNot(_.label.startsWith("inc:"))
     assert(unlabeled.isEmpty,
       s"${unlabeled.size} of ${jobs.size} increment jobs carry no inc: label: ${unlabeled.mkString("; ")}")
@@ -381,6 +430,38 @@ class IncrementalDedupSpec extends AnyFunSuite {
       assert(e.getMessage.contains(s"$what has 2 rows") &&
         e.getMessage.contains("past the broadcast envelope") &&
         e.getMessage.contains("use a smaller ingest batch"), s"$site under $bound: ${e.getMessage}")
+    }
+  }
+
+  test("loud guards: a batch with a null or a duplicate clip_id fails in the precheck") {
+    import spark.implicits._
+    val dir0 = freshDir("inc-base-ids")
+    DedupPipeline.run(oldClips.toDS(), cfg, Some(dir0))
+    val e1 = intercept[IllegalArgumentException](
+      IncrementalDedup.run((newClips :+ clip(null, "aa bb cc dd")).toDS(), Seq(dir0), cfg))
+    assert(e1.getMessage.contains("1 rows in the new batch have null clip_id"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      IncrementalDedup.run((newClips :+ clip("n1", "aa bb cc dd")).toDS(), Seq(dir0), cfg))
+    assert(e2.getMessage.contains("clip ids must be unique"), e2.getMessage)
+  }
+
+  test("typed reads fail loudly on a clusters table without cluster_id, or with it retyped") {
+    import spark.implicits._
+    val state = freshDir("typed-state")
+    IncrementalDedup.ingestStep(oldClips.toDS(), 0L, cfg, state)
+    val head = s"$state/full_0"
+    for ((bad, what) <- Seq(Seq(("a1", "x")).toDF("clip_id", "label") -> "has no column cluster_id",
+         Seq(("a1", 1)).toDF("clip_id", "cluster_id") -> "holds column cluster_id as int")) {
+      bad.write.mode("overwrite").parquet(s"$head/clusters")
+      val calls = Seq[(String, () => Any)](
+        "priorState" -> (() => IncrementalDedup.run(newClips.toDS(), Seq(head), cfg)),
+        "compact" -> (() => IncrementalDedup.compact(spark, Seq(head), cfg, freshDir("typed-compact"))),
+        "currentClusters" -> (() => IncrementalDedup.currentClusters(spark, state).collect()))
+      for ((call, run) <- calls) {
+        val e = intercept[IllegalStateException](run())
+        assert(e.getMessage.contains(s"$head/clusters") && e.getMessage.contains(what),
+          s"$call: ${e.getMessage}")
+      }
     }
   }
 
